@@ -41,7 +41,12 @@ DEFAULT_K = 5
 
 
 def _positions(key: Column, m_bits: int, k: int) -> list[Column]:
-    """k independent bit positions in [0, m_bits)."""
+    """k independent bit positions in [0, m_bits). Build and probe both
+    come through here, so this is where the bitmap's word layout is
+    enforced: m_bits/64 whole words, or the tail bits would be dropped
+    on build and read past the array end on probe (false negatives)."""
+    if m_bits % 64:
+        raise ValueError(f"m_bits must be a multiple of 64, got {m_bits}")
     return [
         F.pmod(F.xxhash64(key, F.lit(i)), F.lit(m_bits)) for i in range(k)
     ]

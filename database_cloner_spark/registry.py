@@ -12,9 +12,11 @@ harness; tests iterate it to run the same comparison locally.
 from __future__ import annotations
 
 import hashlib
+import importlib
 import inspect
 import json
 import os
+import types
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -122,10 +124,9 @@ def sig_of(
     q_dedup_embedding* sigs, so the round's second-biggest behavioral
     rewrite never re-entered the driver window): helper_sources()
     walks every package-defined function the builder reaches through
-    module globals and feeds their sources into the hash, so a helper
-    rewrite re-queues every key that executes it.
-    scripts/backfill_ledger_sigs.py replicates this definition against
-    historical round-boundary trees; keep the two in sync."""
+    module globals and function-local package imports and feeds their
+    sources into the hash, so a helper rewrite re-queues every key that
+    executes it."""
     h = hashlib.sha256()
     h.update(builder_src.encode())
     h.update(b"\x00")
@@ -136,22 +137,34 @@ def sig_of(
     return h.hexdigest()[:16]
 
 
-_PKG_PREFIX = __name__.split(".")[0] + "."
+# Literal, not derived from __name__: scripts/backfill_ledger_sigs.py
+# loads this file under a private module name inside historical trees.
+_PKG = "database_cloner_spark"
+
+
+def _in_pkg(modname: str) -> bool:
+    return modname == _PKG or modname.startswith(_PKG + ".")
+
+
+def _package_module(dotted: str):
+    try:
+        return importlib.import_module(dotted)
+    except ImportError:
+        return None
 
 
 def _helper_walk(builder: Callable) -> tuple[list[str], set[str]]:
     """Walk every package-defined function/class the builder reaches
-    TRANSITIVELY through module globals (plus any UPPER_CASE
-    simple-valued module constant referenced). Returns (sources sorted
-    by (module, qualname) for determinism, defining-file set). Name
-    resolution is static — co_names of the function's code object and
-    every nested code object — so dynamic dispatch through containers
-    is invisible; the full-registry parity run still covers that
-    residual class. scripts/backfill_ledger_sigs.py carries an inline
-    copy of the source walk for historical trees; keep them in sync."""
-    import types
-
-    simple = (int, float, str, bytes, bool, frozenset, tuple)
+    TRANSITIVELY through module globals or function-local package
+    imports, plus every UPPER_CASE constant referenced (simple values by
+    repr; dict/list values as sorted-key JSON when they are plain data,
+    so a registry of objects, whose repr carries addresses, is skipped).
+    Returns (sources sorted by (module, qualname) for determinism,
+    defining-file set). Name resolution is static — co_names of the
+    function's code object and every nested code object — so dynamic
+    dispatch through containers is invisible; the full-registry parity
+    run still covers that residual class."""
+    consts = (int, float, str, bytes, bool, frozenset, tuple, dict, list)
     found: dict[tuple[str, str], str] = {}
     files: set[str] = set()
     seen: set[int] = {id(builder)}
@@ -170,26 +183,31 @@ def _helper_walk(builder: Callable) -> tuple[list[str], set[str]]:
             for const in c.co_consts:
                 if isinstance(const, types.CodeType):
                     codes.append(const)
-        # `pkgmod.attr` references: co_names holds both the module name
-        # and the attribute name but not their pairing — resolve every
-        # referenced name against every referenced package module
-        # (conservative over-approximation; extra matches only make the
-        # signature MORE sensitive, never blind).
+        # Package modules arrive as module globals or as the dotted
+        # IMPORT_NAME target of a function-local `from pkg.mod import x`.
+        # co_names holds module and attribute names but not their
+        # pairing, so every package module (including submodules found
+        # this way — the list grows while it is scanned) is paired with
+        # every referenced name: a conservative over-approximation;
+        # extra matches only make the signature MORE sensitive.
         candidates: list = [(nm, g.get(nm)) for nm in names]
-        for _, obj in list(candidates):
-            if isinstance(obj, types.ModuleType) and (
-                obj.__name__.startswith(_PKG_PREFIX)
-                or obj.__name__ == _PKG_PREFIX[:-1]
+        candidates += [
+            (nm, _package_module(nm)) for nm in names if "." in nm and _in_pkg(nm)
+        ]
+        expanded: set[str] = set()
+        for _, obj in candidates:
+            if (
+                isinstance(obj, types.ModuleType)
+                and _in_pkg(obj.__name__)
+                and obj.__name__ not in expanded
             ):
-                candidates.extend(
-                    (nm, getattr(obj, nm, None)) for nm in names
-                )
+                expanded.add(obj.__name__)
+                candidates.extend((nm, getattr(obj, nm, None)) for nm in names)
         for nm, obj in candidates:
             if obj is None or id(obj) in seen:
                 continue
             mod = getattr(obj, "__module__", None) or ""
-            in_pkg = mod.startswith(_PKG_PREFIX) or mod == _PKG_PREFIX[:-1]
-            if isinstance(obj, types.FunctionType) and in_pkg:
+            if isinstance(obj, (types.FunctionType, type)) and _in_pkg(mod):
                 seen.add(id(obj))
                 try:
                     src = inspect.getsource(obj)
@@ -200,21 +218,19 @@ def _helper_walk(builder: Callable) -> tuple[list[str], set[str]]:
                     files.add(os.path.abspath(inspect.getfile(obj)))
                 except (OSError, TypeError):
                     pass
-                stack.append(obj)
-            elif isinstance(obj, type) and in_pkg:
-                seen.add(id(obj))
+                if isinstance(obj, types.FunctionType):
+                    stack.append(obj)
+            elif nm.isupper() and isinstance(obj, consts):
                 try:
-                    src = inspect.getsource(obj)
-                except (OSError, TypeError):
-                    src = obj.__qualname__
-                found[(mod, obj.__qualname__)] = src
-                try:
-                    files.add(os.path.abspath(inspect.getfile(obj)))
-                except (OSError, TypeError):
-                    pass
-            elif nm.isupper() and isinstance(obj, simple):
+                    text = (
+                        json.dumps(obj, sort_keys=True)
+                        if isinstance(obj, (dict, list))
+                        else repr(obj)
+                    )
+                except TypeError:
+                    continue
                 owner = getattr(fn, "__module__", "") or ""
-                found[(owner, f"const:{nm}")] = f"{nm}={obj!r}"
+                found[(owner, f"const:{nm}")] = f"{nm}={text}"
     return [found[k] for k in sorted(found)], files
 
 

@@ -1,15 +1,16 @@
-"""One-time backfill of content signatures into driver_ledger.json.
+"""Backfill content signatures into driver_ledger.json.
 
 Each ledger entry records the ROUND whose driver run verified the key.
 The code the driver saw is the repo tree at that round's boundary
 commit ("round N: verdict/advice/correctness/bench"). This script
-materializes each needed boundary tree in a temporary git worktree,
-extracts every registered key's (builder source, oracle SQL) signature
-there via a subprocess (the historical trees predate
-registry.content_sig, so the subprocess carries its own copy of the
-inspection — the HASH ITSELF is computed by the current repo's
-registry.sig_of so the definition cannot fork), and writes the sig for
-each entry's own round into the ledger.
+extracts each needed boundary tree into a temporary directory (git
+archive) and, in a subprocess there, reads every registered key's
+builder source and oracle SQL from that tree while the CURRENT
+registry's helper walker collects the helper sources. The hash is
+computed here by the current registry.sig_of, so there is one
+signature definition for every round. The sig for each entry's own
+round is written into the ledger. Rerun it whenever the signature
+definition changes.
 
 A key whose historical source cannot be recovered (registered later
 than its ledger round claims, import failure in the old tree) keeps no
@@ -28,78 +29,32 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REGISTRY_PY = os.path.join(REPO, "database_cloner_spark", "registry.py")
 sys.path.insert(0, REPO)
 
 from database_cloner_spark.registry import sig_of  # noqa: E402
 from scripts.update_ledger import LEDGER, load_ledger  # noqa: E402
 
-# Runs inside each historical tree: emit
-# {key: [builder_source, oracle, [helper sources...]]} as JSON. Sources
-# only — hashing happens in THIS process via sig_of. The helper walk is
-# carried INLINE (historical trees predate registry.helper_sources) but
-# must stay semantically identical to registry.helper_sources so the
-# definition cannot fork.
+# Runs inside each historical tree (PYTHONPATH = that tree): the tree's
+# registry supplies builders and oracles, and the CURRENT registry.py,
+# loaded by file path under a private name (argv[1]; registered in
+# sys.modules before it runs, because its dataclass looks itself up
+# there), walks their helpers. Emits {key: [builder_source, oracle, [helper sources...]]};
+# hashing happens in THIS process via sig_of.
 _EXTRACT = r"""
-import inspect, json, sys, types
-sys.path.insert(0, ".")
+import importlib.util, inspect, json, sys
+spec = importlib.util.spec_from_file_location("_current_registry", sys.argv[1])
+walker = sys.modules[spec.name] = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(walker)
 from database_cloner_spark import registry
 
-_PKG = "database_cloner_spark."
-
-def _helpers(builder):
-    simple = (int, float, str, bytes, bool, frozenset, tuple)
-    found, seen, stack = {}, {id(builder)}, [builder]
-    while stack:
-        fn = stack.pop()
-        code = getattr(fn, "__code__", None)
-        g = getattr(fn, "__globals__", None)
-        if code is None or g is None:
-            continue
-        names, codes = set(), [code]
-        while codes:
-            c = codes.pop()
-            names.update(c.co_names)
-            for const in c.co_consts:
-                if isinstance(const, types.CodeType):
-                    codes.append(const)
-        candidates = [(nm, g.get(nm)) for nm in names]
-        for _, obj in list(candidates):
-            if isinstance(obj, types.ModuleType) and (
-                obj.__name__.startswith(_PKG) or obj.__name__ == _PKG[:-1]
-            ):
-                candidates.extend((nm, getattr(obj, nm, None)) for nm in names)
-        for nm, obj in candidates:
-            if obj is None or id(obj) in seen:
-                continue
-            mod = getattr(obj, "__module__", None) or ""
-            in_pkg = mod.startswith(_PKG) or mod == _PKG[:-1]
-            if isinstance(obj, types.FunctionType) and in_pkg:
-                seen.add(id(obj))
-                try:
-                    src = inspect.getsource(obj)
-                except (OSError, TypeError):
-                    src = obj.__qualname__
-                found[(mod, obj.__qualname__)] = src
-                stack.append(obj)
-            elif isinstance(obj, type) and in_pkg:
-                seen.add(id(obj))
-                try:
-                    src = inspect.getsource(obj)
-                except (OSError, TypeError):
-                    src = obj.__qualname__
-                found[(mod, obj.__qualname__)] = src
-            elif nm.isupper() and isinstance(obj, simple):
-                owner = getattr(fn, "__module__", "") or ""
-                found[(owner, "const:" + nm)] = "%s=%r" % (nm, obj)
-    return [found[k] for k in sorted(found)]
-
 out = {}
-for name, spec in registry.specs().items():
+for name, qs in registry.specs().items():
     try:
-        src = inspect.getsource(spec.builder)
+        src = inspect.getsource(qs.builder)
     except (OSError, TypeError):
-        src = spec.builder.__qualname__
-    out[name] = [src, spec.oracle, _helpers(spec.builder)]
+        src = qs.builder.__qualname__
+    out[name] = [src, qs.oracle, walker.helper_sources(qs.builder)]
 print(json.dumps(out))
 """
 
@@ -116,27 +71,20 @@ def _boundary_commit(rnd: int) -> str | None:
 
 
 def _sources_at(commit: str) -> dict[str, list]:
-    with tempfile.TemporaryDirectory(prefix="dcs_sig_") as td:
-        wt = os.path.join(td, "tree")
-        subprocess.run(
-            ["git", "worktree", "add", "--detach", wt, commit],
-            cwd=REPO, check=True, capture_output=True,
+    with tempfile.TemporaryDirectory(prefix="dcs_sig_") as tree:
+        archive = subprocess.run(
+            ["git", "archive", commit], cwd=REPO, check=True, capture_output=True
+        ).stdout
+        subprocess.run(["tar", "-x", "-C", tree], input=archive, check=True)
+        proc = subprocess.run(
+            [sys.executable, "-c", _EXTRACT, REGISTRY_PY],
+            cwd=tree, capture_output=True, text=True, timeout=600,
+            env={**os.environ, "PYTHONPATH": tree},
         )
-        try:
-            proc = subprocess.run(
-                [sys.executable, "-c", _EXTRACT],
-                cwd=wt, capture_output=True, text=True, timeout=600,
-                env={**os.environ, "PYTHONPATH": wt},
-            )
-            if proc.returncode != 0:
-                print(f"  extract failed at {commit[:8]}: {proc.stderr[-400:]}")
-                return {}
-            return json.loads(proc.stdout.strip().splitlines()[-1])
-        finally:
-            subprocess.run(
-                ["git", "worktree", "remove", "--force", wt],
-                cwd=REPO, capture_output=True,
-            )
+        if proc.returncode != 0:
+            print(f"  extract failed at {commit[:8]}: {proc.stderr[-400:]}")
+            return {}
+        return json.loads(proc.stdout.strip().splitlines()[-1])
 
 
 def main() -> None:

@@ -37,15 +37,16 @@ python -m pytest tests/test_survey_registry.py tests/test_table_usage.py -q
 
 # r7 lesson (q_text_bm25): a key that lands without the deterministic
 # plan/parity suites can ship a red test into the snapshot. If the
-# working tree touches query/operator code, run both gates here too
-# (the installed git pre-commit hook enforces the same bar at commit
-# time — scripts/install_hooks.sh).
+# working tree touches query/operator code, run the plan, parity and
+# shuffle-budget gates here too (the installed git pre-commit hook
+# enforces the same bar at commit time — scripts/install_hooks.sh);
+# the budget suite reuses the plan suite's cached plans.
 # capture-then-grep: a `git | grep -q` pipeline under pipefail can
 # exit 141 on SIGPIPE and silently skip the gate
 CHANGED="$(git diff HEAD --name-only)"
 if grep -qE \
   '^(database_cloner_spark/(queries|functions|llm|streaming)/|database_cloner_spark/(registry|table_usage)\.py|__spark_entry__\.py)' \
   <<<"$CHANGED"; then
-  echo "[precommit_check] query/operator diff detected -> plan + parity gates (sf0.001)"
-  python -m pytest tests/test_plans.py tests/test_oracle_parity.py -q
+  echo "[precommit_check] query/operator diff detected -> plan + parity + shuffle-budget gates (sf0.001)"
+  python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py -q
 fi

@@ -21,3 +21,13 @@ def plan_of(spark, name: str, sf_dir: str) -> str:
         df = all_queries()[name](spark, sf_dir)
         _CACHE[key] = df._jdf.queryExecution().executedPlan().toString()
     return _CACHE[key]
+
+
+def exchange_counts(plan: str) -> tuple[int, int, int]:
+    """(hash, range, single) Exchange counts of a physical-plan string —
+    the triple tests/shuffle_budgets.json budgets per key."""
+    return (
+        plan.count("Exchange hashpartitioning"),
+        plan.count("Exchange rangepartitioning"),
+        plan.count("Exchange SinglePartition"),
+    )

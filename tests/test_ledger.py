@@ -215,14 +215,33 @@ def test_helper_module_edit_changes_content_sig():
         assert any(f.endswith("llm/dedup.py") for f in files), key
 
 
-def test_helper_walk_reaches_module_attribute_helpers():
+def test_helper_walk_reaches_module_attribute_helpers(monkeypatch):
     """`pkgmod.attr` call sites (the dominant builder idiom) must
     resolve: q_graph_pagerank reaches _pagerank_ranks via the joins
     module's own globals, q_text_langid reaches language_id via the
-    llmtext module alias."""
+    llmtext module alias. Function-local package imports resolve too
+    (`from database_cloner_spark.functions.bloom import build_bloom`
+    inside q_join_bloom_semi; `from database_cloner_spark.llm import
+    dedup as _dedup` inside q_graph_degree), and a dict constant's
+    value is part of the signature."""
     from database_cloner_spark import registry
+    from database_cloner_spark.queries import dataquality
 
-    pr = registry.helper_sources(registry.get_query("q_graph_pagerank").builder)
-    assert any("def _pagerank_ranks" in h for h in pr)
-    lid = registry.helper_sources(registry.get_query("q_text_langid").builder)
-    assert any("def language_id" in h for h in lid)
+    def reaches(key: str, needle: str) -> bool:
+        helpers = registry.helper_sources(registry.get_query(key).builder)
+        return any(needle in h for h in helpers)
+
+    assert reaches("q_graph_pagerank", "def _pagerank_ranks")
+    assert reaches("q_text_langid", "def language_id")
+    assert reaches("q_join_bloom_semi", "def build_bloom")
+    assert reaches("q_graph_degree", "def _pair_intersections")
+
+    def benford_sig() -> str:
+        spec = registry.get_query("q_dq_benford")
+        return registry.sig_of(
+            "", spec.oracle, registry.helper_sources(spec.builder)
+        )
+
+    base = benford_sig()
+    monkeypatch.setitem(dataquality._BENFORD_PPM, 1, dataquality._BENFORD_PPM[1] + 1)
+    assert benford_sig() != base

@@ -1021,7 +1021,8 @@ def test_cos_pairs_in_group_huge_and_dense_survivors():
             "role": ["b"] * 3,
         }
     )
-    out = fn(rows)
+    with np.errstate(over="ignore", invalid="ignore"):  # the overflow is the point
+        out = fn(rows)
     got = {
         (int(a), int(b)): c
         for a, b, c in zip(out["vec_a"], out["vec_b"], out["cosine"])

@@ -1,67 +1,46 @@
-"""SCALE.md shuffle-budget lockstep (r8 VERDICT item 5).
+"""Shuffle-budget lockstep (r8 VERDICT item 5).
 
-SCALE.md's "Shuffle-budget inventory" table documents, per registered
-key, an upper bound on each Exchange flavor visible in the sf0.001
-physical plan. This suite keeps doc and code in lockstep BOTH ways:
+tests/shuffle_budgets.json holds, per registered key, an upper bound on
+each Exchange flavor visible in the sf0.001 physical plan
+(`[hash, range, single]`). This suite keeps budgets and code in
+lockstep BOTH ways:
 
-- every registered key must have a table row, and every row a key
-  (a new operator cannot land undocumented; a deleted one cannot leave
-  a stale row);
+- every registered key must have a budget, and every budget a key
+  (a new operator cannot land unbudgeted; a deleted one cannot leave
+  a stale entry);
 - every key's BUILT plan must fit inside its budgeted counts — the
   "document one shuffle, plan three" regression fails here, next to the
   diff that caused it, not in a 100x scale-up.
 
 Budgets are ≤ bounds: a plan that IMPROVES passes silently (tighten the
-row when noticed); only growth is an error. Regenerate rows with
-scripts/gen_shuffle_budget.py.
+entry when noticed); only growth is an error.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import re
-
-import pytest
 
 from database_cloner_spark.registry import all_queries
-from tests.plan_cache import plan_of
+from tests.plan_cache import exchange_counts, plan_of
 
 SF_DIR = "/root/testdata/sf0.001"
-SCALE_MD = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md")
+REGENERATE = "python scripts/gen_shuffle_budget.py --key <key> ..."
 
-_ROW = re.compile(r"^\| `(q_[a-z0-9_]+|q\d+[a-z0-9_]*)` \| (\d+) \| (\d+) \| (\d+) \|\s*$")
-
-
-def _budgets() -> dict[str, tuple[int, int, int]]:
-    out: dict[str, tuple[int, int, int]] = {}
-    in_section = False
-    with open(SCALE_MD) as f:
-        for line in f:
-            if line.startswith("## "):
-                in_section = line.startswith("## Shuffle-budget inventory")
-                continue
-            if not in_section:
-                continue
-            m = _ROW.match(line)
-            if m:
-                out[m.group(1)] = (
-                    int(m.group(2)),
-                    int(m.group(3)),
-                    int(m.group(4)),
-                )
-    return out
-
-
-_BUDGETS = _budgets()
+_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "shuffle_budgets.json")
+with open(_PATH) as f:
+    _BUDGETS = {k: tuple(v) for k, v in json.load(f).items()}
 
 
 def test_inventory_lockstep_with_registry():
     registered = set(all_queries())
-    documented = set(_BUDGETS)
-    missing = registered - documented
-    stale = documented - registered
-    assert not missing, f"keys with no SCALE.md shuffle-budget row: {sorted(missing)}"
-    assert not stale, f"SCALE.md shuffle-budget rows for unregistered keys: {sorted(stale)}"
+    budgeted = set(_BUDGETS)
+    missing = registered - budgeted
+    stale = budgeted - registered
+    assert not missing, (
+        f"keys with no shuffle budget: {sorted(missing)}; add them with {REGENERATE}"
+    )
+    assert not stale, f"shuffle budgets for unregistered keys: {sorted(stale)}"
 
 
 def test_plans_fit_shuffle_budgets(spark):
@@ -69,12 +48,7 @@ def test_plans_fit_shuffle_budgets(spark):
     must not exceed its budgeted Exchange counts."""
     offenders = {}
     for name in all_queries():
-        plan = plan_of(spark, name, SF_DIR)
-        got = (
-            plan.count("Exchange hashpartitioning"),
-            plan.count("Exchange rangepartitioning"),
-            plan.count("Exchange SinglePartition"),
-        )
+        got = exchange_counts(plan_of(spark, name, SF_DIR))
         budget = _BUDGETS.get(name)
         if budget is None:
             continue  # the lockstep test reports this separately
@@ -84,13 +58,7 @@ def test_plans_fit_shuffle_budgets(spark):
                 "budget": budget,
             }
     assert not offenders, (
-        f"plans exceeding their SCALE.md shuffle budgets "
-        f"(fix the plan or consciously raise the row): {offenders}"
+        f"plans exceeding their shuffle budgets in tests/shuffle_budgets.json "
+        f"(fix the plan, or consciously raise the budget with {REGENERATE}): "
+        f"{offenders}"
     )
-
-
-@pytest.mark.parametrize("probe", ["q1_pricing_summary", "q_dedup_exact"])
-def test_budget_parser_sees_known_keys(probe):
-    """Guard the regex against a table reformat silently emptying the
-    suite (the keys_reading_only lesson from the adversarial suites)."""
-    assert probe in _BUDGETS, sorted(_BUDGETS)[:5]

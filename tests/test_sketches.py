@@ -6,6 +6,7 @@ registered verdict queries.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from database_cloner_spark.functions.bloom import bloom_contains, build_bloom
@@ -44,6 +45,15 @@ def test_bloom_fp_rate_within_sizing_bound(spark):
     fp = probe.filter(bloom_contains(F.col("k"), F.col("bloom"))).count()
     # m=2^20, k=5, n=100k -> theoretical ~0.2%; allow 10x headroom.
     assert fp / len(non_members) < 0.02, f"FP rate {fp / len(non_members)}"
+
+
+def test_bloom_rejects_partial_word_sizes(spark):
+    """m_bits must fill whole 64-bit words: a tail of bits beyond the
+    last word would be dropped on build and missed on probe."""
+    with pytest.raises(ValueError, match="multiple of 64"):
+        build_bloom(_keyed(spark, [1, 2, 3]), "k", m_bits=100)
+    with pytest.raises(ValueError, match="multiple of 64"):
+        bloom_contains(F.col("k"), F.col("bloom"), m_bits=100)
 
 
 # ------------------------------------------------------------------ cms
@@ -139,8 +149,10 @@ def test_es_rank_boundary_margin_vs_ulp(spark):
     from database_cloner_spark.sources import load
 
     docs = load(spark, "/root/testdata/sf0.01", "documents")
+    # k = row count ranks every row; a larger k only grows the top-k
+    # buffer (k=10**9 allocated ~8 GB of driver heap for the same rows)
     ranked = (
-        es_sample(docs, "doc_id", "n_chars", 10**9)  # no truncation
+        es_sample(docs, "doc_id", "n_chars", docs.count())
         .select("__es_key")
         .collect()
     )
