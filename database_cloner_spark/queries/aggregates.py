@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from database_cloner_spark.functions import ranks
 from database_cloner_spark.registry import register
 from database_cloner_spark.sources import load
 
@@ -552,15 +553,8 @@ def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-# Exact lower median via cumulative counts over the per-group VALUE
-# COUNT TABLE (the q_anomaly_mad/q_agg_mode shape as a standalone
-# aggregate): the heavy pass is an ordinary two-phase count keyed
-# (group, value), so the exchange ships value-cardinality-bounded
-# triples and the only sort runs over the tiny count table — never a
-# per-group total-order sort of raw rows (the low-card window guard
-# forbids that shape). The median is a rank PICK of an existing value
-# (no interpolation arithmetic), so the double passes through verbatim
-# and both engines hash-agree with zero rounding.
+# Exact lower median: a rank pick over the per-group value-count table
+# (the contract is stated once in functions/ranks.py).
 _ORACLE_MEDIAN_EXACT = """
 WITH v AS (
   SELECT l_returnflag AS flag, l_extendedprice AS price
@@ -583,15 +577,11 @@ FROM r GROUP BY flag, n
 def q_agg_median_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT lower median per group (returnflag x extendedprice) — the
     exact companion of q_agg_approx_percentile for when an SLA needs
-    the true quantile, not a t-digest estimate. Shape: two-phase
-    `groupBy(flag, price).count()` (map-side partials; exchange volume
-    bounded by DISTINCT price cardinality, not row count), then the
-    median is the first value whose cumulative count reaches rank
-    (n+1) div 2 over the count table — same rank convention as the
-    oracle's row_number form, in-partition after one tiny flag
-    exchange. The oracle total-order sorts raw rows because at toy
-    scale that is the clearest spec; the ENGINE plan never does (plan
-    guard: count agg below every window)."""
+    the true quantile, not a t-digest estimate. Shape: the
+    functions/ranks.py pick at rank (n+1) div 2 over the (flag, price)
+    count table — the oracle's row_number convention. The oracle
+    total-order sorts raw rows because at toy scale that is the
+    clearest spec; the engine plan never does."""
     v = load(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isNotNull() & F.col("l_extendedprice").isNotNull()
     )
@@ -599,21 +589,11 @@ def q_agg_median_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("flag"),
         F.col("l_extendedprice").alias("price"),
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    from pyspark.sql import Window as W
-
-    by_flag = W.partitionBy("flag")
-    w_cum = by_flag.orderBy("price").rowsBetween(
-        W.unboundedPreceding, W.currentRow
+    cum, n = ranks.running("cnt", ["flag"], "price")
+    c = counts.select("flag", "price", cum.alias("cum"), n.alias("n"))
+    med = ranks.pick(
+        F.col("price"), F.col("cum") >= F.expr("(n + 1) div 2"), ["flag"]
     )
-    c = counts.select(
-        "flag",
-        "price",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(by_flag).alias("n"),
-    )
-    med = F.min(
-        F.when(F.col("cum") >= F.expr("(n + 1) div 2"), F.col("price"))
-    ).over(by_flag)
     return (
         c.select("flag", "n", med.alias("median_price"))
         .groupBy("flag")
@@ -625,13 +605,13 @@ def q_agg_median_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Weighted lower median: the smallest price whose cumulative weight
-# reaches half the total. Same count-table shape as q_agg_median_exact,
-# with SUM(weight) in place of COUNT(*). Weights must be exact integers
-# for the rank comparison to be engine-identical: l_quantity is a whole
-# double, and the two engines CAST doubles to ints differently (Spark
-# truncates, DuckDB rounds) — FLOOR first makes them agree, TRY_CAST
-# maps non-finite/overflow to NULL identically, and wt > 0 drops
-# degenerate weights on both sides.
+# reaches half the total (a functions/ranks.py pick with SUM(weight) as
+# the weight). Weights must be exact integers for the rank comparison
+# to be engine-identical: l_quantity is a whole double, and the two
+# engines CAST doubles to ints differently (Spark truncates, DuckDB
+# rounds) — FLOOR first makes them agree, TRY_CAST maps
+# non-finite/overflow to NULL identically, and wt > 0 drops degenerate
+# weights on both sides.
 _ORACLE_WEIGHTED_MEDIAN = """
 WITH w AS (
   SELECT l_linestatus AS status, l_extendedprice AS price,
@@ -659,20 +639,15 @@ FROM r GROUP BY status, tot
 def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT weighted lower median per group: the extendedprice at which
     half the shipped QUANTITY sits below — the volume-weighted price
-    midpoint (a row-median over-weights small orders). Shape: identical
-    to q_agg_median_exact's count-table rank pick, with the two-phase
-    aggregate carrying SUM(weight) instead of COUNT(*): the exchange
-    ships (status, price, partial-weight) triples bounded by distinct
-    price cardinality, the cumulative window runs over the tiny count
-    table, and the answer is a PICK of an existing double (no
-    interpolation), so both engines hash-agree with zero rounding.
-    Weight semantics: NULL on NaN/overflow, floor otherwise, wt > 0 —
-    floor before any cast because Spark truncates and DuckDB ROUNDS
-    double->int casts (engine trap: CAST(2.7 AS BIGINT) is 2 vs 3);
-    the NULL-on-overflow half is DuckDB TRY_CAST on one side and an
-    explicit NaN/2^63 guard on the other, because Spark's
-    floor(double) SATURATES to Long.MAX instead of failing (see the
-    inline comment)."""
+    midpoint (a row-median over-weights small orders). Shape: the
+    functions/ranks.py pick at rank 2*cum >= tot, weighted by
+    SUM(weight) instead of COUNT(*). Weight semantics: NULL on
+    NaN/overflow, floor otherwise, wt > 0 — floor before any cast
+    because Spark truncates and DuckDB ROUNDS double->int casts
+    (engine trap: CAST(2.7 AS BIGINT) is 2 vs 3); the NULL-on-overflow
+    half is DuckDB TRY_CAST on one side and an explicit NaN/2^63 guard
+    on the other, because Spark's floor(double) SATURATES to Long.MAX
+    instead of failing (see the inline comment)."""
     v = load(spark, sf_dir, "lineitem").filter(
         F.col("l_linestatus").isNotNull()
         & F.col("l_extendedprice").isNotNull()
@@ -702,21 +677,11 @@ def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = w.groupBy("status", "price").agg(
         F.sum(F.col("wt").cast("decimal(38,0)")).alias("cw")
     )
-    from pyspark.sql import Window as W
-
-    by_status = W.partitionBy("status")
-    w_cum = by_status.orderBy("price").rowsBetween(
-        W.unboundedPreceding, W.currentRow
+    cum, tot = ranks.running("cw", ["status"], "price")
+    c = counts.select("status", "price", cum.alias("cum"), tot.alias("tot"))
+    med = ranks.pick(
+        F.col("price"), F.lit(2) * F.col("cum") >= F.col("tot"), ["status"]
     )
-    c = counts.select(
-        "status",
-        "price",
-        F.sum("cw").over(w_cum).alias("cum"),
-        F.sum("cw").over(by_status).alias("tot"),
-    )
-    med = F.min(
-        F.when(F.lit(2) * F.col("cum") >= F.col("tot"), F.col("price"))
-    ).over(by_status)
     return (
         c.select("status", "tot", med.alias("wmedian_price"))
         .groupBy("status")
@@ -804,9 +769,8 @@ def q_agg_argminmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Exact quartiles as THREE rank picks over the same count table one
-# cumulative pass builds — the q_agg_median_exact machinery generalized
-# to any rank list. Lower-quantile convention: rank_q = ceil(q * n),
+# Exact quartiles as three functions/ranks.py picks off one cumulative
+# pass. Lower-quantile convention: rank_q = ceil(q * n),
 # expressed in exact integer arithmetic ((n+3) div 4, (n+1) div 2,
 # (3n+3) div 4). The IQR is ONE IEEE754 subtraction of two picked
 # doubles — identical operands, identical result, both engines.
@@ -836,17 +800,9 @@ FROM r GROUP BY flag, n
 def q_agg_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT p25/p50/p75 + IQR per group — the spread profile behind
     q_agg_winsorize's clamp and every outlier rule, exact where
-    approx_percentile is a t-digest estimate. Shape: ONE two-phase
-    (group, value) count (exchange bounded by distinct-value
-    cardinality), then all three quantiles are rank picks off the SAME
-    cumulative-count pass over the tiny count table — adding a
-    quantile costs one projection, not another shuffle or sort. Picks
-    are existing doubles (no interpolation); ranks use ceil(q*n) in
-    exact integer arithmetic; the oracle total-order sorts raw rows as
-    the spec, the engine never does (plan guard: count agg below the
-    window)."""
-    from pyspark.sql import Window as W
-
+    approx_percentile is a t-digest estimate. Shape: three
+    functions/ranks.py picks off the same cumulative pass — adding a
+    quantile costs one projection, not another shuffle or sort."""
     v = load(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isNotNull()
         & F.col("l_extendedprice").isNotNull()
@@ -855,28 +811,20 @@ def q_agg_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("flag"),
         F.col("l_extendedprice").alias("price"),
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    by_flag = W.partitionBy("flag")
-    w_cum = by_flag.orderBy("price").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    c = counts.select(
-        "flag",
-        "price",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(by_flag).alias("n"),
-    )
-
-    def pick(rank_expr: str) -> F.Column:
-        return F.min(
-            F.when(F.col("cum") >= F.expr(rank_expr), F.col("price"))
-        ).over(by_flag)
-
+    cum, n = ranks.running("cnt", ["flag"], "price")
+    c = counts.select("flag", "price", cum.alias("cum"), n.alias("n"))
+    rank_of = {
+        "p25": "(n + 3) div 4",
+        "p50": "(n + 1) div 2",
+        "p75": "(3 * n + 3) div 4",
+    }
     out = c.select(
         "flag",
         "n",
-        pick("(n + 3) div 4").alias("p25"),
-        pick("(n + 1) div 2").alias("p50"),
-        pick("(3 * n + 3) div 4").alias("p75"),
+        *[
+            ranks.pick(F.col("price"), F.col("cum") >= F.expr(r), ["flag"]).alias(q)
+            for q, r in rank_of.items()
+        ],
     )
     return out.groupBy("flag").agg(
         F.max("n").alias("n"),

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from database_cloner_spark.functions import ranks
 from database_cloner_spark.llm import text as llmtext
 from database_cloner_spark.registry import register
 from database_cloner_spark.sources import load
@@ -810,17 +811,11 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape (r8 rebuild, closing the r7 scale-killer): event_type
     has a HANDFUL of distinct values, so any total-order sort
     partitioned by it puts multi-TB groups on single tasks at 100 TB.
-    Instead the heavy pass is `groupBy(event_type, value).count()` —
-    an ordinary TWO-PHASE hash aggregate (map-side partials, the
-    exchange ships (group, value, count) triples bounded by VALUE
-    CARDINALITY, not row count — the q_agg_mode trick). Both medians
-    are then rank-picks from cumulative counts over that tiny count
-    table: one event_type exchange for the windows, with the dev
-    re-aggregation and the final groupBy riding the same partitioning
-    (their keys contain event_type, so no further exchange). Exact
-    lower-median by rank (first value whose cumulative count reaches
-    (n+1) div 2) keeps both engines bit-identical — same convention as
-    _ORACLE_ANOMALY_MAD's row_number formulation; dev = |value - med|
+    Instead both medians are functions/ranks.py picks at rank
+    (n+1) div 2 over the (event_type, value) count table: one
+    event_type exchange for the windows, with the dev re-aggregation
+    and the final groupBy riding the same partitioning (their keys
+    contain event_type, so no further exchange). dev = |value - med|
     is computed once per DISTINCT value (weighted by its count), the
     identical IEEE subtraction the per-row form did."""
     ev = load(spark, sf_dir, "events").filter(
@@ -829,22 +824,13 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = ev.groupBy("event_type", "value").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    by_type = W.partitionBy("event_type")
-    w_cum = by_type.orderBy("value").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
+    cum, total = ranks.running("cnt", ["event_type"], "value")
     c = counts.select(
-        "event_type",
-        "value",
-        "cnt",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(by_type).alias("total"),
+        "event_type", "value", "cnt", cum.alias("cum"), total.alias("total")
     )
-    # lower median = first value whose cumulative count reaches rank
-    # (total+1) div 2 (== the value at row_number (n+1) div 2)
-    med = F.min(
-        F.when(F.col("cum") >= F.expr("(total + 1) div 2"), F.col("value"))
-    ).over(by_type)
+    # lower median = rank (total+1) div 2 (== row_number (n+1) div 2)
+    half = F.expr("(total + 1) div 2")
+    med = ranks.pick(F.col("value"), F.col("cum") >= half, ["event_type"])
     d = c.select(
         "event_type",
         "cnt",
@@ -859,20 +845,9 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("total").alias("total"),
         F.max("med").alias("med"),
     )
-    w_dcum = by_type.orderBy("dev").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    dc = dd.select(
-        "event_type",
-        "dev",
-        "wcnt",
-        "total",
-        "med",
-        F.sum("wcnt").over(w_dcum).alias("cumd"),
-    )
-    mad = F.min(
-        F.when(F.col("cumd") >= F.expr("(total + 1) div 2"), F.col("dev"))
-    ).over(by_type)
+    cumd = ranks.running("wcnt", ["event_type"], "dev")[0]
+    dc = dd.select("event_type", "dev", "wcnt", "total", "med", cumd.alias("cumd"))
+    mad = ranks.pick(F.col("dev"), F.col("cumd") >= half, ["event_type"])
     dm = dc.select("event_type", "wcnt", "total", "med", "dev", mad.alias("mad"))
     return dm.groupBy("event_type").agg(
         F.max("total").alias("n"),
@@ -2077,36 +2052,25 @@ def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     earliest-hour tie-break; only the reported magnitude |T_k|/n is
     rationally rounded (6 digits), and cusum_sign tells a rate DROP
     (-1, cumulative running below the line) from a rate RISE (+1).
-    Shape: the only data-sized pass is the two-phase groupBy(type,
-    hour) count; the cumulative/argmax windows partition by event_type
-    — a LOW-cardinality key, admissible ONLY because their input is
-    the aggregated count table (calendar-bounded rows per type), the
-    exact shape the low-card window guard requires (the same
-    aggregate-first trick as q_anomaly_mad's count-table medians).
-    sign convention: T_k < 0 means the prefix mean runs below the
-    overall mean up to k."""
+    Shape: the cumulative windows (functions/ranks.py) and the argmax
+    ride the (type, hour) count table, never raw rows. sign
+    convention: T_k < 0 means the prefix mean runs below the overall
+    mean up to k."""
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isNotNull() & F.col("ts").isNotNull()
     )
     h = ev.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
     ).agg(F.count(F.lit(1)).alias("c"))
-    w_ord = (
-        W.partitionBy("event_type")
-        .orderBy("hr")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    w_all = W.partitionBy("event_type")
-    c = F.col("c").cast(_DEC)
+    pk, tot = ranks.running(F.col("c").cast(_DEC), ["event_type"], "hr")
+    k = F.row_number().over(ranks.cumulative(["event_type"], "hr"))
     t = h.select(
         "event_type",
         "hr",
-        F.sum(c).over(w_ord).alias("pk"),
-        F.row_number().over(
-            W.partitionBy("event_type").orderBy("hr")
-        ).cast(_DEC).alias("k"),
-        F.sum(c).over(w_all).alias("tot"),
-        F.count(F.lit(1)).over(w_all).alias("n"),
+        pk.alias("pk"),
+        k.cast(_DEC).alias("k"),
+        tot.alias("tot"),
+        F.count(F.lit(1)).over(ranks.whole(["event_type"])).alias("n"),
     )
     d = t.select(
         "event_type",
@@ -2478,19 +2442,13 @@ def q_stats_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     does the click value distribution drift from the purchase value
     distribution, and when? (The distribution-shift alarm for a
     training-data source; chi2 compares categories, KS compares
-    continuous shapes.) Shape: the only data-sized pass is the
-    two-phase (hod, value) conditional count — the exchange ships
-    value-cardinality-bounded triples; the ECDF windows ride that
-    aggregated count table inside 24 bounded hod partitions (the
-    median_exact-class admissible shape — never a global or raw-row
-    sort). D's numerator |cum1*n2 - cum2*n1| stays an exact decimal
-    integer, so the argmax is an exact comparison (value ties break
-    low via MAX(struct(dnum, -v))), and ONE rational rounding
-    (_rr_dec, 9 digits) produces the bit-identical double. Hours with
-    either sample empty are omitted (D is undefined), identically on
-    both engines."""
-    from pyspark.sql import Window as W
-
+    continuous shapes.) Shape: the two ECDFs are functions/ranks.py
+    running sums over the (hod, value) conditional count table. D's
+    numerator |cum1*n2 - cum2*n1| stays an exact decimal integer, so
+    the argmax is an exact comparison (value ties break low via
+    MAX(struct(dnum, -v))), and ONE rational rounding (_rr_dec, 9
+    digits) produces the bit-identical double. Hours with either sample
+    empty are omitted (D is undefined), identically on both engines."""
     e = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
         & F.col("value").isNotNull()
@@ -2508,17 +2466,15 @@ def q_stats_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast(_DEC)
         .alias("c2"),
     )
-    by_hod = W.partitionBy("hod")
-    w_cum = by_hod.orderBy("v").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
+    cum1, n1 = ranks.running("c1", ["hod"], "v")
+    cum2, n2 = ranks.running("c2", ["hod"], "v")
     w = c.select(
         "hod",
         "v",
-        F.sum("c1").over(w_cum).alias("cum1"),
-        F.sum("c2").over(w_cum).alias("cum2"),
-        F.sum("c1").over(by_hod).alias("n1"),
-        F.sum("c2").over(by_hod).alias("n2"),
+        cum1.alias("cum1"),
+        cum2.alias("cum2"),
+        n1.alias("n1"),
+        n2.alias("n2"),
     )
     d = w.filter((F.col("n1") > 0) & (F.col("n2") > 0)).select(
         "hod",
@@ -2587,17 +2543,15 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend-concentration measure (0 = all orders equal, ->1 = one order
     dominates) that tells a sampling strategy whether value-weighted
     selection will collapse onto a few records. Shape: money enters the
-    integer domain as cents (round(x*100) — see q_dq_benford), the
-    heavy pass is the two-phase (prio, cents) count, and the rank
-    machinery rides that count table inside priority partitions: a
-    value run occupying ranks (cum-c+1..cum) contributes
-    v*c*(2*cum-c+1) to 2*sum(rank*x) as ONE exact decimal term —
-    no per-row rank explosion, value cardinality bounds everything.
+    integer domain as cents (round(x*100) — see q_dq_benford), and
+    ranks are a functions/ranks.py running count over the (prio,
+    cents) count table: a value run occupying ranks (cum-c+1..cum)
+    contributes v*c*(2*cum-c+1) to 2*sum(rank*x) as ONE exact decimal
+    term — no per-row rank explosion, value cardinality bounds
+    everything.
     G = (2*sum(i*x) - (n+1)*sum(x)) / (n*sum(x)) with a single
     rational rounding; numerator is provably >= 0 (Chebyshev sum
     inequality), so the unsigned form cannot hide a sign."""
-    from pyspark.sql import Window as W
-
     cts = load(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority").isNotNull()
         & F.col("o_totalprice").isNotNull()
@@ -2611,19 +2565,15 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
     )
     c = cts.groupBy("prio", "cents").agg(F.count(F.lit(1)).alias("cnt"))
-    by_prio = W.partitionBy("prio")
-    w_cum = by_prio.orderBy("cents").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
+    cum, n = ranks.running("cnt", ["prio"], "cents")
+    sx = F.sum(F.col("cents").cast(_DEC) * F.col("cnt"))
     w = c.select(
         "prio",
         F.col("cents").cast(_DEC).alias("cents_d"),
         F.col("cnt").cast(_DEC).alias("cnt_d"),
-        F.sum("cnt").over(w_cum).cast(_DEC).alias("cum"),
-        F.sum("cnt").over(by_prio).cast(_DEC).alias("n"),
-        F.sum(F.col("cents").cast(_DEC) * F.col("cnt"))
-        .over(by_prio)
-        .alias("sx"),
+        cum.cast(_DEC).alias("cum"),
+        n.cast(_DEC).alias("n"),
+        sx.over(ranks.whole(["prio"])).alias("sx"),
     )
     term = F.col("cents_d") * F.col("cnt_d") * (
         F.lit(2).cast(_DEC) * F.col("cum") - F.col("cnt_d") + F.lit(1)
@@ -2793,17 +2743,14 @@ def q_stats_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U per weekday as the common-language effect size
     P(click value > purchase value) + 0.5 P(tie) — the location-shift
     alarm beside q_stats_ks's shape alarm (a medians-apart drift that
-    KS smears, MWU pins). Shape: identical machinery to KS — the only
-    data-sized pass is the two-phase (dow, value) conditional count;
-    rank windows ride that aggregated table in 7 bounded weekday
-    partitions. Tied values fold as whole runs: doubled midrank sums
+    KS smears, MWU pins). Shape: as KS, a functions/ranks.py running
+    count over the (dow, value) conditional count table. Tied values
+    fold as whole runs: doubled midrank sums
     2*R1 = sum c1*(2*cumprev + run + 1) stay exact integers, so
     U1/(n1*n2) is ONE rational rounding. Weekday = Spark weekday(ts)
     == DuckDB isodow(ts)-1 (0 = Monday); Spark dayofweek() and DuckDB
     dow() index Sunday differently and are both avoided. Weekdays
     missing either sample are omitted identically."""
-    from pyspark.sql import Window as W
-
     e = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
         & F.col("value").isNotNull()
@@ -2821,16 +2768,14 @@ def q_stats_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast(_DEC)
         .alias("c2"),
     )
-    by_dow = W.partitionBy("dow")
-    w_cum = by_dow.orderBy("v").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
     run = F.col("c1") + F.col("c2")
+    cum_run = ranks.running(run, ["dow"], "v")[0]
+    by_dow = ranks.whole(["dow"])
     w = c.select(
         "dow",
         "c1",
         "c2",
-        (F.sum(run).over(w_cum) - run).alias("cumprev"),
+        (cum_run - run).alias("cumprev"),
         F.sum("c1").over(by_dow).alias("n1"),
         F.sum("c2").over(by_dow).alias("n2"),
     )

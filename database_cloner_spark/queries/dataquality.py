@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from database_cloner_spark.functions import ranks
 from database_cloner_spark.registry import register
 from database_cloner_spark.sources import load
 
@@ -500,17 +501,14 @@ def q_dq_outlier_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tukey IQR fence audit per group: exact quartiles, the 1.5*IQR
     fences, and how many rows sit outside them — the outlier census a
     pipeline reads before choosing a winsorize clamp (q_agg_winsorize
-    applies one; this reports what it would touch). Shape: ONE raw
-    scan into the two-phase (flag, price) count; quartile picks,
-    fences, AND outlier tallies all ride the same cumulative pass over
-    the value-cardinality-bounded count table — the oracle re-joins
-    the raw rows against the fences as the readable spec, the engine
-    never does (conditional sums of cnt over the count table ARE the
-    row tallies). Fences are two IEEE ops on exactly-picked doubles:
+    applies one; this reports what it would touch). Shape: quartile
+    picks (functions/ranks.py), fences AND outlier tallies all ride one
+    (flag, price) count table — the oracle re-joins the raw rows
+    against the fences as the readable spec, the engine never does
+    (conditional sums of cnt over the count table ARE the row
+    tallies). Fences are two IEEE ops on exactly-picked doubles:
     identical operands, identical doubles, both engines; rows EQUAL to
     a fence are inliers on both sides (strict < / >)."""
-    from pyspark.sql import Window as W
-
     v = load(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isNotNull()
         & F.col("l_extendedprice").isNotNull()
@@ -519,23 +517,13 @@ def q_dq_outlier_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("flag"),
         F.col("l_extendedprice").alias("price"),
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    by_flag = W.partitionBy("flag")
-    w_cum = by_flag.orderBy("price").rowsBetween(
-        W.unboundedPreceding, W.currentRow
+    cum, n = ranks.running("cnt", ["flag"], "price")
+    c = counts.select("flag", "price", "cnt", cum.alias("cum"), n.alias("n"))
+    price = F.col("price")
+    p25 = ranks.pick(price, F.col("cum") >= F.expr("(n + 3) div 4"), ["flag"])
+    p75 = ranks.pick(
+        price, F.col("cum") >= F.expr("(3 * n + 3) div 4"), ["flag"]
     )
-    c = counts.select(
-        "flag",
-        "price",
-        "cnt",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(by_flag).alias("n"),
-    )
-    p25 = F.min(
-        F.when(F.col("cum") >= F.expr("(n + 3) div 4"), F.col("price"))
-    ).over(by_flag)
-    p75 = F.min(
-        F.when(F.col("cum") >= F.expr("(3 * n + 3) div 4"), F.col("price"))
-    ).over(by_flag)
     with_q = c.select(
         "flag", "price", "cnt", "n", p25.alias("p25"), p75.alias("p75")
     )

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from database_cloner_spark.functions import ranks
 from database_cloner_spark.functions.vector import Q_CLAMP, Q_SCALE, quantize
 from database_cloner_spark.llm.text import round4_ratio
 from database_cloner_spark.registry import register
@@ -189,12 +190,8 @@ def q_emb_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     squared norm of the scorable rows. All outputs are exact BIGINTs
     (norms fold in LONG on the integer grid — no float aggregation, no
     libm), so the key carries a full hash oracle. The median is the
-    lower median picked from a COUNT TABLE (the q_agg_median_exact
-    discipline): group to (label, normsq, cnt) first, run the
-    cumulative window over that bounded table, and take the smallest
-    normsq whose running count reaches (n+1) div 2 — the label-keyed
-    window never sees raw rows, so the low-cardinality partition rides
-    an aggregated input (plan-guarded registry-wide). Shape: one
+    smallest normsq whose functions/ranks.py running count over the
+    (label, normsq) count table reaches (n+1) div 2. Shape: one
     map-side projection feeding two label-keyed partial-aggregated
     exchanges (census + count table); the census/median join is
     null-safe so the NULL-label group keeps its median."""
@@ -236,17 +233,10 @@ def q_emb_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("label", "normsq")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    wl = W.partitionBy("label")
-    cum = vc.select(
-        "label",
-        "normsq",
-        F.sum("cnt")
-        .over(wl.orderBy("normsq").rowsBetween(W.unboundedPreceding, 0))
-        .alias("cum"),
-        F.sum("cnt").over(wl).alias("n_sc"),
-    )
+    cum, n_sc = ranks.running("cnt", ["label"], "normsq")
     med = (
-        cum.filter(
+        vc.select("label", "normsq", cum.alias("cum"), n_sc.alias("n_sc"))
+        .filter(
             F.col("cum")
             >= F.call_function("div", F.col("n_sc") + 1, F.lit(2).cast("long"))
         )

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from database_cloner_spark.functions import ranks
 from database_cloner_spark.registry import register
 from database_cloner_spark.sources import load
 
@@ -257,9 +258,9 @@ def q_win_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     pathology as q_anomaly_mad's r7 form; the low-card window guard in
     test_plans.py now forbids it). Instead the global position is
     decomposed: rank = base + rn, where `base` (# docs in the language
-    with a strictly smaller length) and the group total n come from
-    cumulative counts over a tiny groupBy(lang, n_chars) COUNT TABLE
-    (two-phase, value-cardinality-bounded), and `rn` is a row_number
+    with a strictly smaller length) and the group total n are a
+    functions/ranks.py running count over the (lang, n_chars) count
+    table, and `rn` is a row_number
     tie-break within (lang, n_chars) — a HIGH-cardinality partition
     whose groups stay task-sized. The count table joins back broadcast
     (distinct lengths x langs; if the length domain ever explodes, drop
@@ -271,19 +272,13 @@ def q_win_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = docs.groupBy("lang", "n_chars").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    w_lang = W.partitionBy("lang")
     # NULLS LAST explicitly: Spark default-sorts NULLs FIRST in ASC
     # while DuckDB sorts them LAST — with NULL n_chars rows present the
     # base offsets of every non-NULL row would diverge cross-engine
     # (r8 ADVICE); the oracle pins NULLS LAST on its ORDER BY too
-    w_cum = w_lang.orderBy(F.asc_nulls_last("n_chars")).rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
+    cum, n = ranks.running("cnt", ["lang"], F.asc_nulls_last("n_chars"))
     base = counts.select(
-        "lang",
-        "n_chars",
-        (F.sum("cnt").over(w_cum) - F.col("cnt")).alias("base"),
-        F.sum("cnt").over(w_lang).alias("n"),
+        "lang", "n_chars", (cum - F.col("cnt")).alias("base"), n.alias("n")
     )
     w_tie = W.partitionBy("lang", "n_chars").orderBy("doc_id")
     ranked = docs.select(

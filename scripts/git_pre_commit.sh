@@ -45,6 +45,6 @@ if grep -qE "$TRIGGER" <<<"$CHANGED"; then
     echo "Stage them (git add) or stash them, then retry."
     exit 1
   fi
-  echo "[pre-commit] staged diff touches query/operator code -> running plan + parity + shuffle-budget gates (sf0.001, ~5 min)"
-  python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py -q
+  echo "[pre-commit] staged diff touches query/operator code -> running plan + parity + shuffle-budget + ledger gates (sf0.001, ~5 min)"
+  python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py tests/test_ledger.py -q
 fi

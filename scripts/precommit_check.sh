@@ -40,13 +40,15 @@ python -m pytest tests/test_survey_registry.py tests/test_table_usage.py -q
 # working tree touches query/operator code, run the plan, parity and
 # shuffle-budget gates here too (the installed git pre-commit hook
 # enforces the same bar at commit time — scripts/install_hooks.sh);
-# the budget suite reuses the plan suite's cached plans.
+# the budget suite reuses the plan suite's cached plans. The ledger
+# suite (no Spark, ~2 s) rides along because builder edits change
+# content signatures.
 # capture-then-grep: a `git | grep -q` pipeline under pipefail can
 # exit 141 on SIGPIPE and silently skip the gate
 CHANGED="$(git diff HEAD --name-only)"
 if grep -qE \
   '^(database_cloner_spark/(queries|functions|llm|streaming)/|database_cloner_spark/(registry|table_usage)\.py|__spark_entry__\.py)' \
   <<<"$CHANGED"; then
-  echo "[precommit_check] query/operator diff detected -> plan + parity + shuffle-budget gates (sf0.001)"
-  python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py -q
+  echo "[precommit_check] query/operator diff detected -> plan + parity + shuffle-budget + ledger gates (sf0.001)"
+  python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py tests/test_ledger.py -q
 fi

@@ -222,8 +222,9 @@ def test_helper_walk_reaches_module_attribute_helpers(monkeypatch):
     llmtext module alias. Function-local package imports resolve too
     (`from database_cloner_spark.functions.bloom import build_bloom`
     inside q_join_bloom_semi; `from database_cloner_spark.llm import
-    dedup as _dedup` inside q_graph_degree), and a dict constant's
-    value is part of the signature."""
+    dedup as _dedup` inside q_graph_degree), the count-table keys
+    reach functions/ranks.py through its module alias, and a dict
+    constant's value is part of the signature."""
     from database_cloner_spark import registry
     from database_cloner_spark.queries import dataquality
 
@@ -235,6 +236,8 @@ def test_helper_walk_reaches_module_attribute_helpers(monkeypatch):
     assert reaches("q_text_langid", "def language_id")
     assert reaches("q_join_bloom_semi", "def build_bloom")
     assert reaches("q_graph_degree", "def _pair_intersections")
+    assert reaches("q_agg_quartiles", "def pick")
+    assert reaches("q_stats_mannwhitney", "def running")
 
     def benford_sig() -> str:
         spec = registry.get_query("q_dq_benford")

@@ -387,6 +387,9 @@ LOW_CARD_COLS = {
     # emb_quality tier so its label-keyed windows must ride count
     # tables / WindowGroupLimit, not raw rows
     "label",
+    # weekday alias (7 values): q_stats_mannwhitney's rank windows
+    # partition by it alone and must keep riding its count table
+    "dow",
 }
 
 # Audited windows over low-card/global partitions whose input is bounded
