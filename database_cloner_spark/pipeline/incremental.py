@@ -34,9 +34,12 @@ parallel and column-pruned to the key + hashed columns.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from database_cloner_spark.pipeline.verify import row_hash
 
 CHUNK_COL = "__chunk"
 
@@ -50,15 +53,12 @@ def with_chunk(df: DataFrame, key_col: str, n_chunks: int) -> DataFrame:
 
 def chunk_fingerprints(df: DataFrame, key_col: str, n_chunks: int) -> DataFrame:
     """(chunk, n_rows, hash_sum) — the verify.py fingerprint per chunk.
-    Columns are hashed in sorted-name order so source and read-back
-    clone fingerprint identically regardless of schema order."""
-    cols = sorted(c for c in df.columns if c != CHUNK_COL)
-    chunked = with_chunk(df.select(*cols), key_col, n_chunks)
-    return chunked.groupBy(CHUNK_COL).agg(
+    The row hash takes columns in sorted-name order, so source and
+    read-back clone fingerprint identically regardless of schema order."""
+    body = df.drop(CHUNK_COL)
+    return with_chunk(body, key_col, n_chunks).groupBy(CHUNK_COL).agg(
         F.count("*").alias("n_rows"),
-        F.sum(F.xxhash64(*[F.col(c) for c in cols]).cast("decimal(38,0)")).alias(
-            "hash_sum"
-        ),
+        F.sum(row_hash(body)).alias("hash_sum"),
     )
 
 
@@ -78,6 +78,31 @@ def changed_chunks(
         | (F.col("s.hash_sum") != F.col("d.hash_sum"))
     ).select(CHUNK_COL)
     return sorted(r[CHUNK_COL] for r in diff.collect())
+
+
+def rewrite_chunks(
+    rows: DataFrame, target_path: str, chunks: list[int], write: bool = True
+) -> None:
+    """Replace the target's `chunks` with `rows` (chunk-tagged, holding
+    rows of those chunks only). mode=overwrite under dynamic partition
+    overwrite replaces ONLY the partitions present in `rows`; a chunk
+    left with no rows stays stale unless its directory is removed
+    explicitly (control-plane op, bytes not rows). `write=False` skips
+    the write for a caller that already knows `rows` is empty."""
+    spark = rows.sparkSession
+    if write:
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            rows.write.mode("overwrite").partitionBy(CHUNK_COL).parquet(target_path)
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    present = {r[CHUNK_COL] for r in rows.select(CHUNK_COL).distinct().collect()}
+    for c in chunks:
+        if c not in present:
+            shutil.rmtree(
+                os.path.join(target_path, f"{CHUNK_COL}={c}"), ignore_errors=True
+            )
 
 
 def incremental_clone(
@@ -134,26 +159,7 @@ def incremental_clone(
         F.col(CHUNK_COL).isin([int(c) for c in chunks])
     )
     n = delta.count()
-    if n > 0:
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # mode=overwrite + dynamic: ONLY the partitions present in
-            # `delta` (== the changed chunks) are replaced.
-            delta.write.mode("overwrite").partitionBy(CHUNK_COL).parquet(target_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    # Dynamic overwrite only touches partitions PRESENT in the delta: a
-    # chunk whose source rows were all deleted stays stale unless its
-    # directory is removed explicitly (control-plane op, bytes not rows).
-    import shutil
-
-    present = {r[CHUNK_COL] for r in delta.select(CHUNK_COL).distinct().collect()}
-    for c in chunks:
-        if c not in present:
-            shutil.rmtree(
-                os.path.join(target_path, f"{CHUNK_COL}={c}"), ignore_errors=True
-            )
+    rewrite_chunks(delta, target_path, chunks, write=n > 0)
     return {
         "mode": "incremental",
         "n_chunks": n_chunks,

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -39,6 +39,12 @@ def _hashable_cols(df: DataFrame) -> list:
     return [F.col(name) for name in sorted(df.columns)]
 
 
+def row_hash(df: DataFrame) -> Column:
+    """Per-row xxhash64 over all of `df`'s columns, as DECIMAL(38,0) so a
+    sum of it is overflow-free."""
+    return F.xxhash64(*_hashable_cols(df)).cast("decimal(38,0)")
+
+
 def fingerprint(df: DataFrame) -> TableFingerprint:
     """One-pass content fingerprint. The row hash is xxhash64 over all
     columns, summed as DECIMAL(38,0): order-insensitive, overflow-free,
@@ -47,7 +53,7 @@ def fingerprint(df: DataFrame) -> TableFingerprint:
     per partition regardless of table size."""
     row = df.agg(
         F.count("*").alias("__n"),
-        F.sum(F.xxhash64(*_hashable_cols(df)).cast("decimal(38,0)")).alias("__h"),
+        F.sum(row_hash(df)).alias("__h"),
     ).collect()[0]
     return TableFingerprint(n_rows=row["__n"], row_hash_sum=str(row["__h"]))
 

@@ -16,6 +16,7 @@ import importlib
 import inspect
 import json
 import os
+import re
 import types
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -38,75 +39,6 @@ Builder = Callable[[SparkSession, str], DataFrame]
 # ---------------------------------------------------------------------------
 
 _LEDGER_PATH = os.path.join(os.path.dirname(__file__), "driver_ledger.json")
-
-# Hand-prioritized front of the rotation for keys not yet driver-green:
-# previously-FAILED events readers first (prove the nanosAsLong fix), then
-# one full sweep across the never-checked families. Keys absent from this
-# list but not yet green follow in registration order.
-_ROTATION_PRIORITY = [
-    # 11 events-readers that crashed in round 1 (PARQUET_TYPE_ILLEGAL)
-    "q_scan_document",
-    "q_filter_neq",
-    "q_filter_conj",
-    "q_filter_notpid",
-    "q_project",
-    "q_agg_count_filtered",
-    "q_agg_count_by_group",
-    "q_agg_sum_scalar",
-    "q_json_extract",
-    "q_struct_access",
-    "q_pandas_udf_norm",
-    # sampling tier (q_pivot_events also reads events)
-    "q_sample_split",
-    "q_sample_stratified",
-    "q_shuffle_deterministic",
-    "q_pivot_events",
-    "q_agg_cube",
-    "q_corr_subquery",
-    # streaming (batch twins read events)
-    "q_stream_tumbling",
-    "q_stream_sliding",
-    "q_stream_session",
-    "q_stream_watermark_late",
-    "q_stream_dedup",
-    "q_stream_stateful_totals",
-    "q_stream_interval_join",
-    # joins
-    "q_join_anti",
-    "q_join_semi",
-    "q_join_inner",
-    "q_join_outer_diff",
-    "q_join_broadcast",
-    "q_join_multiway",
-    "q_join_range",
-    "q_join_asof",
-    # windows
-    "q_win_rownum_dedup",
-    "q_win_rank",
-    "q_win_lag_gap",
-    "q_win_running_sum",
-    "q_win_ntile",
-    # analytics extensions + new document source
-    "q_agg_percentile",
-    "q_merge_upsert",
-    "q_text_tfidf",
-    "q_text_pii_scrub",
-    "q_scan_json",
-    # LLM tier core (remaining LLM keys rotate in the next round)
-    "q_dedup_exact",
-    "q_dedup_fuzzy",
-    "q_dedup_minhash",
-    "q_dedup_embedding_bucketed",
-    "q_sim_topk",
-    "q_sim_ivf_topk",
-    "q_text_tokens",
-    "q_text_langid",
-    # Round-2 additions (positions 51+: rotate in as slots free up)
-    "q_win_moving_avg",
-    "q_agg_grouping_sets",
-    "q_dedup_ngram",
-    "q_curate_corpus",
-]
 
 
 def sig_of(
@@ -262,6 +194,67 @@ def content_sig(name: str) -> str:
     return _SIG_CACHE[name]
 
 
+# ---------------------------------------------------------------------------
+# Table usage.
+#
+# The adversarial parity suites (tests/test_adversarial_*.py) pick the keys
+# a nasty-twin fixture dir can run by the fixture tables each key reads —
+# builder AND oracle, so a constant-output oracle (`SELECT TRUE ...`) still
+# records the builder's real input. The sets are derived from the code the
+# content signature already walks; tests/test_plans.py checks them against
+# the tables each executed plan scans.
+# ---------------------------------------------------------------------------
+
+_LOAD_LITERAL = re.compile(r'\bload\(\s*spark\s*,\s*\w+\s*,\s*"(\w+)"\s*\)')
+
+# Keys whose input neither a load() literal nor the oracle names:
+# q_scan_binary's binaryFile scan lists every file under sf_dir.
+_READS_WHOLE_DIR = frozenset({"q_scan_binary"})
+
+_TABLES_CACHE: dict[str, frozenset[str]] = {}
+
+
+def tables_used(name: str) -> frozenset[str]:
+    """Fixture tables a registered key reads (cached per process): every
+    `load(spark, <dir>, "<table>")` literal in the builder and its
+    transitive package helpers, plus every fixture table named as a word
+    in the oracle SQL. Over-matching (a comment naming a table) only
+    makes a suite's selection more conservative."""
+    # Function-local: scripts/backfill_ledger_sigs.py imports this file
+    # inside historical trees, which need only the signature walker.
+    from database_cloner_spark.sources.parquet import TABLES
+
+    _ensure_loaded()
+    if name not in _TABLES_CACHE:
+        spec = _REGISTRY[name]
+        try:
+            srcs = [inspect.getsource(spec.builder)]
+        except (OSError, TypeError):
+            srcs = []
+        srcs += helper_sources(spec.builder)
+        used = {t for src in srcs for t in _LOAD_LITERAL.findall(src)}
+        if spec.oracle:
+            used |= {t for t in TABLES if re.search(rf"\b{t}\b", spec.oracle)}
+        if name in _READS_WHOLE_DIR:
+            used |= set(TABLES)
+        _TABLES_CACHE[name] = frozenset(used)
+    return _TABLES_CACHE[name]
+
+
+def keys_reading_only(tables: set[str], oracled_only: bool = True) -> list[str]:
+    """Registered keys whose table set is a non-empty subset of `tables`
+    — a fixture dir providing exactly `tables` satisfies every input the
+    key (builder AND oracle) needs."""
+    out = []
+    for name, spec in specs().items():
+        if oracled_only and spec.oracle is None:
+            continue
+        used = tables_used(name)
+        if used and used <= tables:
+            out.append(name)
+    return sorted(out)
+
+
 def _driver_green() -> dict[str, dict]:
     """Ledger entries: key -> {"round": last-verified round, "mode":
     "hash" | "rows"}. A legacy flat-list ledger loads as round-0 hash
@@ -289,8 +282,8 @@ def _rotation_order(keys: list[str]) -> list[str]:
 
     Pending = never driver-green, OR ledgered rows-only but now carrying
     a DuckDB oracle (an upgraded key must earn a fresh HASH row — the
-    rows-only pass no longer certifies it; VERDICT r8 items 1/3). Within
-    pending: hand-priority list, then registration order.
+    rows-only pass no longer certifies it; VERDICT r8 items 1/3). Pending
+    keys keep registration order.
 
     Edited = ledger-green but the ledgered content signature no longer
     matches the current builder+oracle source (or the entry predates
@@ -300,7 +293,6 @@ def _rotation_order(keys: list[str]) -> list[str]:
     ascending last-verified round, registration order breaking ties, so
     the driver's ~50-key sample rotates true full coverage over rounds."""
     green = _driver_green()
-    rank = {k: i for i, k in enumerate(_ROTATION_PRIORITY)}
 
     def _pending(k: str) -> bool:
         entry = green.get(k)
@@ -309,7 +301,6 @@ def _rotation_order(keys: list[str]) -> list[str]:
         return entry["mode"] == "rows" and _REGISTRY[k].oracle is not None
 
     pending = [k for k in keys if _pending(k)]
-    pending.sort(key=lambda k: rank.get(k, len(rank)))  # stable: reg order ties
     done = [k for k in keys if not _pending(k)]
     edited = [k for k in done if green[k].get("sig") != content_sig(k)]
     fresh = [k for k in done if green[k].get("sig") == content_sig(k)]

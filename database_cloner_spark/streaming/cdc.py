@@ -28,13 +28,16 @@ Scale mechanics, per micro-batch:
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from database_cloner_spark.pipeline.incremental import CHUNK_COL, with_chunk
+from database_cloner_spark.pipeline.incremental import (
+    CHUNK_COL,
+    rewrite_chunks,
+    with_chunk,
+)
 
 
 def latest_change_per_key(batch: DataFrame, key_col: str) -> DataFrame:
@@ -84,21 +87,7 @@ def apply_cdc_batch(
     else:
         merged = upserts
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(CHUNK_COL).parquet(target_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    present = {
-        r[CHUNK_COL] for r in merged.select(CHUNK_COL).distinct().collect()
-    }
-    for c in touched:
-        if c not in present:
-            shutil.rmtree(
-                os.path.join(target_path, f"{CHUNK_COL}={c}"), ignore_errors=True
-            )
+    rewrite_chunks(merged, target_path, touched)
     return {"touched": touched, "upserts": n_up, "deletes": n_del}
 
 

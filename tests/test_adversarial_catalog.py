@@ -1,7 +1,8 @@
 """Adversarial parity for keys that need the WHOLE namespace.
 
 The four table-tier suites (docs / events / embeddings / relational)
-cover every oracled key whose declared tables fit their fixture dir.
+cover every oracled key whose tables (registry.tables_used) fit their
+fixture dir.
 Keys that scan all ten tables (q_scan_catalog — the `pg_tables`
 analogue) need a composite nasty dir: every tier's nasty twin in one
 namespace. This suite builds that dir by composing the other suites'
@@ -15,8 +16,8 @@ from __future__ import annotations
 
 import pytest
 
-from database_cloner_spark.registry import specs
-from database_cloner_spark.table_usage import ALL_TABLES, keys_reading_only
+from database_cloner_spark.registry import keys_reading_only, specs
+from database_cloner_spark.sources.parquet import TABLES
 from tests.oracle_harness import compare_query
 from tests.test_adversarial_docs import write_fixture as write_docs
 from tests.test_adversarial_embeddings import write_fixture as write_embs
@@ -35,7 +36,7 @@ def _leftover_keys() -> list[str]:
     tiered = set()
     for s in _TIER_SETS:
         tiered |= set(keys_reading_only(s))
-    return sorted(set(keys_reading_only(set(ALL_TABLES))) - tiered)
+    return sorted(set(keys_reading_only(set(TABLES))) - tiered)
 
 
 _KEYS = _leftover_keys()

@@ -22,7 +22,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from database_cloner_spark.registry import specs
-from database_cloner_spark.table_usage import keys_reading_only
+from database_cloner_spark.registry import keys_reading_only
 from tests.oracle_harness import compare_query
 
 # doc_id, text, lang, source — n_chars derived. Mix of edge classes:

@@ -80,7 +80,7 @@ def nasty_dir(tmp_path_factory):
     return d
 
 
-from database_cloner_spark.table_usage import keys_reading_only
+from database_cloner_spark.registry import keys_reading_only
 
 _KEYS = keys_reading_only({"embeddings"})
 

@@ -25,9 +25,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from database_cloner_spark.registry import specs
+from database_cloner_spark.registry import specs, tables_used
 from database_cloner_spark.sources.parquet import TABLES
-from database_cloner_spark.table_usage import TABLES_BY_KEY
 
 _SRC = "/root/testdata/sf0.001"
 _MAXI = 9223372036854775807
@@ -66,11 +65,7 @@ def extreme_dir(tmp_path_factory):
     return d
 
 
-_KEYS = sorted(
-    name
-    for name, tabs in TABLES_BY_KEY.items()
-    if set(tabs) & set(_ID_COLS)
-)
+_KEYS = sorted(name for name in specs() if tables_used(name) & set(_ID_COLS))
 
 
 @pytest.mark.parametrize("name", _KEYS)

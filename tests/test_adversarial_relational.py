@@ -244,10 +244,10 @@ _EXEMPT: dict[str, str] = {
 }
 
 
-# Declared-usage selection (table_usage.py): includes the
+# Table-usage selection (registry.tables_used): includes the
 # tolerance-verdict keys automatically — their oracle is a literal TRUE
-# but their declared tables record the builder's lineitem input.
-from database_cloner_spark.table_usage import keys_reading_only
+# but their builder's load() literals record the lineitem input.
+from database_cloner_spark.registry import keys_reading_only
 
 _KEYS = keys_reading_only(set(_REL))
 

@@ -11,9 +11,11 @@ documented behavior.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
-from database_cloner_spark.registry import all_queries, get_query
+from database_cloner_spark.registry import all_queries, get_query, tables_used
 from tests.plan_cache import plan_of
 
 # Queries whose plans legitimately contain BroadcastNestedLoopJoin:
@@ -75,6 +77,21 @@ def test_no_cartesian_products_anywhere(spark):
             offenders[name] = "CartesianProduct"
         elif "BroadcastNestedLoopJoin" in plan and name not in BNLJ_ALLOWED:
             offenders[name] = "unexpected BroadcastNestedLoopJoin"
+    assert not offenders, offenders
+
+
+def test_scanned_tables_within_tables_used(spark):
+    """Every fixture table a key's executed plan scans is in
+    registry.tables_used(key), the set the adversarial suites select
+    on — a key reading a table its derived set misses would run against
+    a fixture dir lacking that table."""
+    scan = re.compile(re.escape(SF_DIR) + r"/(\w+)\.parquet")
+    offenders = {}
+    for name in all_queries():
+        scanned = set(scan.findall(plan_of(spark, name, SF_DIR)))
+        missing = scanned - tables_used(name)
+        if missing:
+            offenders[name] = sorted(missing)
     assert not offenders, offenders
 
 
@@ -301,8 +318,6 @@ def test_anomaly_mad_windows_ride_count_table(spark):
     exchanges: the (event_type, value) count shuffle and one event_type
     exchange for the windows; the dev re-agg and final groupBy ride the
     latter. Join-free throughout."""
-    import re
-
     plan = _plan(spark, "q_anomaly_mad")
     assert "Join" not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 2, plan
@@ -417,8 +432,6 @@ def _window_partition_sets(plan: str) -> list[tuple]:
     specifiedwindowframe; every base attribute inside a partition
     expression contributes its name (conservative: date_trunc(month,
     ts) reports {ts})."""
-    import re
-
     out = []
     needle = "windowspecdefinition("
     i = 0
@@ -538,8 +551,6 @@ def test_chi2_heavy_pass_is_two_phase_count(spark):
     dim-sized (broadcast joins / audited tiny BNLJs)."""
     plan = _plan(spark, "q_stats_chi2")
     assert "partial_count" in plan, plan
-    import re
-
     assert re.search(r"Exchange hashpartitioning\(lang#\d+, source#\d+", plan), plan
 
 
@@ -579,8 +590,6 @@ def test_median_exact_windows_ride_count_table(spark):
     (flag, price) count — partial_count below every window — and the
     wide exchange keyed on the count pair, never a raw-row sort per
     flag (the q_anomaly_mad guard class)."""
-    import re
-
     plan = _plan(spark, "q_agg_median_exact")
     assert "Join" not in plan, plan
     assert re.search(
@@ -594,8 +603,6 @@ def test_median_exact_windows_ride_count_table(spark):
 def test_corr_matrix_heavy_pass_is_hourly_count(spark):
     """q_stats_corr_matrix: one two-phase (type, hour) count feeds
     everything; the pair join and stats agg run over the count table."""
-    import re
-
     plan = _plan(spark, "q_stats_corr_matrix")
     assert "partial_count" in plan, plan
     # the hourly count table is checkpointed once and reused for both
@@ -653,8 +660,6 @@ def test_weighted_median_windows_ride_weight_table(spark):
     q_agg_median_exact contract with SUM in place of COUNT). Join-free;
     two exchanges: the (status, price) agg shuffle + one status
     exchange shared by the windows and the final groupBy."""
-    import re
-
     plan = _plan(spark, "q_agg_weighted_median")
     assert "Join" not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 2, plan
@@ -696,8 +701,6 @@ def test_quartiles_windows_ride_count_table(spark):
     window rides the value-cardinality-bounded count table; adding
     quantiles must NOT add exchanges (still two: the count shuffle +
     one flag exchange shared by all windows and the final groupBy)."""
-    import re
-
     plan = _plan(spark, "q_agg_quartiles")
     assert "Join" not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 2, plan
@@ -765,8 +768,6 @@ def test_ks_ecdf_windows_ride_conditional_count_table(spark):
     conditional count — partial_sum map-side before the wide exchange —
     and the ECDF/total windows consume that aggregated table after one
     hod exchange. Join-free; two exchanges."""
-    import re
-
     plan = _plan(spark, "q_stats_ks")
     assert "Join" not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 2, plan
@@ -822,8 +823,6 @@ def test_crosscorr_shifted_key_plans_equi_join(spark):
     and the only nested-loop join is the audited 4-row lag dim. A
     CartesianProduct or a second BNLJ is the 80 GB-spill class this
     pins."""
-    import re
-
     plan = _plan(spark, "q_ts_crosscorr")
     assert "CartesianProduct" not in plan, plan
     assert plan.count("BroadcastNestedLoopJoin") == 1, plan
@@ -837,8 +836,6 @@ def test_mannwhitney_rank_windows_ride_conditional_count_table(spark):
     """q_stats_mannwhitney: the KS contract — partial_sum before the
     wide (dow, value) exchange, rank windows over that aggregated
     table after one dow exchange. Join-free; two exchanges."""
-    import re
-
     plan = _plan(spark, "q_stats_mannwhitney")
     assert "Join" not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 2, plan
@@ -904,8 +901,6 @@ def test_outlier_fences_everything_rides_count_table(spark):
     partial_count below every window, conditional cnt-sums instead of
     the oracle's raw-row re-join. Join-free; two exchanges (the wide
     count shuffle + one flag exchange)."""
-    import re
-
     plan = _plan(spark, "q_dq_outlier_fences")
     assert "Join" not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 2, plan
@@ -1256,8 +1251,6 @@ def test_quantized_unit_binds_norm_outside_lambda(spark, sf_dir):
     (2) the norm fold must appear exactly once, as its own projection
         (a filter over the computed column would re-derive it around
         the predicate)."""
-    import re
-
     from database_cloner_spark.llm import similarity as S
     from database_cloner_spark.sources import load
 
@@ -1285,8 +1278,6 @@ def test_pq_codebooks_input_filter_stays_off_computed_column(spark, sf_dir):
     plan = valid._jdf.queryExecution().optimizedPlan().toString()
     # the quantize CASE appears once (single projection); the Filter
     # node must not contain the quantize clamp constant
-    import re
-
     filters = re.findall(r"Filter (.*)", plan)
     assert filters, plan[:800]
     leaked = [f[:100] for f in filters if "8388608" in f]

@@ -1,61 +1,22 @@
-"""table_usage.TABLES_BY_KEY must stay in lockstep with the code.
+"""registry.tables_used drives adversarial-suite selection.
 
-The declared map drives adversarial-suite selection (ADVICE r4 replaced
-regex-scraping of oracle SQL). Two invariants keep it honest:
-
-1. COMPLETE: every registered key has an entry (a new operator cannot
-   silently skip adversarial coverage), and no entry is stale.
-2. ACCURATE: the declared set covers both derivations — every table the
-   builder's source loads and every fixture-table word the oracle SQL
-   mentions. Over-matching oracle mentions (a comment naming a table)
-   would surface here as a WIDER declared set, which only makes a suite
-   more conservative, never silently excluded.
+The sets are derived from builder/helper load() literals and oracle SQL;
+tests/test_plans.py checks them against the tables each executed plan
+scans. This guards the shape: every key reads something, only known
+fixture tables, and the one declared whole-dir override holds.
 """
 
 from __future__ import annotations
 
-import inspect
-import re
-
-from database_cloner_spark.registry import specs
+from database_cloner_spark.registry import specs, tables_used
 from database_cloner_spark.sources.parquet import TABLES
-from database_cloner_spark.table_usage import ALL_TABLES, TABLES_BY_KEY
 
 
-def test_all_tables_constant_matches_loader():
-    assert set(ALL_TABLES) == set(TABLES)
-
-
-def test_map_is_complete_and_not_stale():
-    registered = set(specs())
-    declared = set(TABLES_BY_KEY)
-    assert registered - declared == set(), (
-        f"keys missing a table_usage entry: {sorted(registered - declared)}"
-    )
-    assert declared - registered == set(), (
-        f"stale table_usage entries: {sorted(declared - registered)}"
-    )
-
-
-def test_declared_tables_cover_builder_and_oracle():
-    problems = {}
-    for name, spec in specs().items():
-        declared = set(TABLES_BY_KEY[name])
-        builder_src = inspect.getsource(spec.builder)
-        from_builder = set(
-            re.findall(r'load\(spark, sf_dir, "(\w+)"\)', builder_src)
-        )
-        from_oracle = (
-            {t for t in TABLES if re.search(rf"\b{t}\b", spec.oracle)}
-            if spec.oracle
-            else set()
-        )
-        missing = (from_builder | from_oracle) - declared
-        if missing:
-            problems[name] = sorted(missing)
-    assert not problems, f"declared tables narrower than code: {problems}"
-
-
-def test_declared_tables_are_known():
-    for name, tabs in TABLES_BY_KEY.items():
-        assert set(tabs) <= set(ALL_TABLES), (name, tabs)
+def test_every_key_reads_known_tables():
+    bad = {
+        name: sorted(tables_used(name))
+        for name in specs()
+        if not tables_used(name) or not tables_used(name) <= set(TABLES)
+    }
+    assert not bad, f"empty or unknown table usage: {bad}"
+    assert tables_used("q_scan_binary") == frozenset(TABLES)
