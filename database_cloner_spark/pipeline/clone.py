@@ -163,7 +163,7 @@ class ClonePipeline:
     def __init__(self, spark: SparkSession, config: CloneConfig):
         self.spark = spark
         self.cfg = config
-        self.log = reports.LogSink(spark, os.path.join(config.target_dir, "_clone_log"))
+        self.log = reports.LogSink(os.path.join(config.target_dir, "_clone_log"))
 
     # -- single table ------------------------------------------------------
 
@@ -262,7 +262,9 @@ class ClonePipeline:
                         table, tgt_name, "failed", rows=report["dst_rows"],
                         verified=False, error=f"fingerprint mismatch: {report}",
                     )
-            n = dst.count()
+                n = report["dst_rows"]
+            else:
+                n = dst.count()
             self.log.success(f"Successfully cloned {table} -> {tgt_name} ({n} rows)")
             return TableResult(table, tgt_name, "cloned", rows=n, verified=verified)
         except Exception as ex:  # noqa: BLE001 — per-db error isolation (CS:1057-1059)
@@ -299,7 +301,9 @@ class ClonePipeline:
                     table, tgt_name, "failed", rows=report["dst_rows"],
                     verified=False, error=f"fingerprint mismatch: {report}",
                 )
-        n = src.count()
+            n = report["src_rows"]
+        else:
+            n = src.count()
         self.log.success(f"Successfully cloned {table} -> {tgt_name} ({n} rows)")
         return TableResult(table, tgt_name, "cloned", rows=n, verified=verified)
 
@@ -341,70 +345,31 @@ class ClonePipeline:
                 p = prin.make_principals(r.target_table, cfg.db_prefix, seed=cfg.seed)
                 result.principals.append(p)
 
-        # Metadata tables (queryable ACL model) + per-db password files
-        # + credential summary. Each sink is a tiny independent Spark
-        # job; submitted CONCURRENTLY from the same pool as the table
-        # clones so N dbs cost ~1 job latency, not N (the sequential
-        # loop was ~40% of bench clone wall-clock at sf0.1 — pure
-        # driver-side job-submission latency, invisible at 100 TB but
-        # also pointless there).
+        # Metadata tables (queryable ACL model), per-db password files and
+        # the credential summary: a few rows each, written by the driver
+        # (no Spark job), then the post-clone principal probes (CS:473
+        # calls test_user_connections right after provisioning). A failed
+        # connect-severity probe fails that db's result, mirroring the
+        # function's `return 1`.
         if result.principals:
-            def _write_password_file(p: prin.DbPrincipals) -> None:
+            ps = result.principals
+            for name, columns, rows in (
+                ("_principals", prin.PRINCIPAL_COLUMNS, prin.principal_rows(ps)),
+                ("_grants", prin.GRANT_COLUMNS, prin.grant_rows(ps)),
+                # Ownership-transfer record (clone_databases.sh:406-438).
+                ("_ownership", prin.OWNERSHIP_COLUMNS, prin.ownership_rows(ps)),
+            ):
+                reports.write_rows(os.path.join(cfg.target_dir, name), columns, rows)
+            for p in ps:
                 reports.write_text_report(
-                    self.spark,
                     reports.password_file_lines(p, cfg.host, cfg.port, now),
                     os.path.join(cfg.target_dir, f"_passwords_{p.target_db}"),
                 )
+            reports.write_text_report(
+                reports.credential_summary_lines(ps, cfg.host, cfg.port, now),
+                os.path.join(cfg.target_dir, "_credential_summary"),
+            )
 
-            def _write_principals() -> None:
-                # repartition(1), not coalesce(1): these frames are driver-
-                # parallelized, and coalescing one makes a single task fetch
-                # every pickled slice (~5s each, measured — reports.py note).
-                prin.principals_df(self.spark, result.principals).repartition(
-                    1
-                ).write.mode("overwrite").parquet(
-                    os.path.join(cfg.target_dir, "_principals")
-                )
-
-            def _write_grants() -> None:
-                prin.grants_df(self.spark, result.principals).repartition(
-                    1
-                ).write.mode("overwrite").parquet(
-                    os.path.join(cfg.target_dir, "_grants")
-                )
-
-            def _write_ownership() -> None:
-                # Ownership-transfer record (clone_databases.sh:406-438).
-                prin.ownership_df(self.spark, result.principals).repartition(
-                    1
-                ).write.mode("overwrite").parquet(
-                    os.path.join(cfg.target_dir, "_ownership")
-                )
-
-            def _write_summary() -> None:
-                reports.write_text_report(
-                    self.spark,
-                    reports.credential_summary_lines(
-                        result.principals, cfg.host, cfg.port, now
-                    ),
-                    os.path.join(cfg.target_dir, "_credential_summary"),
-                )
-
-            with ThreadPoolExecutor(max_workers=cfg.parallelism) as pool:
-                futures = [pool.submit(_write_password_file, p) for p in result.principals]
-                futures += [
-                    pool.submit(_write_principals),
-                    pool.submit(_write_grants),
-                    pool.submit(_write_ownership),
-                    pool.submit(_write_summary),
-                ]
-                for f in futures:
-                    f.result()  # surface the first failure, if any
-
-        # Post-clone principal probes (CS:473 calls test_user_connections
-        # right after provisioning). A failed connect-severity probe
-        # fails that db's result, mirroring the function's `return 1`.
-        if result.principals:
             report = probe.test_user_connections(
                 self.spark,
                 cfg.target_dir,
@@ -415,13 +380,10 @@ class ClonePipeline:
             if report.skipped:
                 self.log.info(report.skip_reason)
             else:
-                # The probe DAG ran exactly once (report.rows); persist
-                # and log from the collected rows rather than
-                # re-evaluating the joins per consumer.
-                self.spark.createDataFrame(
-                    report.rows, report.frame.schema
-                ).repartition(1).write.mode("overwrite").parquet(
-                    os.path.join(cfg.target_dir, "_principal_probes")
+                reports.write_rows(
+                    os.path.join(cfg.target_dir, "_principal_probes"),
+                    probe.ProbeRow._fields,
+                    report.rows,
                 )
                 failed_rows = [r for r in report.rows if r.status == "failed"]
                 for row in failed_rows:

@@ -2,9 +2,12 @@
 
 Spark has no native GRANT machinery, so the reference's ACL provisioning
 (clone_databases.sh:292-477 for PostgreSQL, :828-888 for MongoDB) is
-modeled as engine-maintained metadata TABLES — queryable like any other
-DataFrame, which is exactly how the reference itself asserts its grants
-(probe queries, clone_databases.sh:510-543).
+modeled as engine-maintained metadata TABLES: small all-string parquet
+tables (`_principals`, `_grants`, `_ownership`) that the driver writes
+(pipeline/reports.write_rows) and that read back like any other
+DataFrame. The reference asserts its grants with probe queries
+(clone_databases.sh:510-543); pipeline/probe.py asserts them over these
+tables.
 
 Naming fidelity (clone_databases.sh:303-316):
   owner user = "{DB_PREFIX}{base}_user_owner"
@@ -22,8 +25,6 @@ Grant matrix fidelity (clone_databases.sh:351-404):
 from __future__ import annotations
 
 from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, SparkSession
 
 from database_cloner_spark.queries.udfs import _CHARSET
 
@@ -131,19 +132,23 @@ def make_principals(
     )
 
 
-def principals_df(spark: SparkSession, sets: list[DbPrincipals]) -> DataFrame:
+# Column order of each metadata table; every column is a string.
+PRINCIPAL_COLUMNS = ("target_db", "user_name", "user_kind", "granted_role", "password")
+GRANT_COLUMNS = ("target_db", "role_name", "object_kind", "privilege")
+OWNERSHIP_COLUMNS = ("target_db", "object_kind", "object_name", "owner")
+
+
+def principal_rows(sets: list[DbPrincipals]) -> list[tuple[str, ...]]:
     """`pg_user`-style metadata table: one row per user, role membership
     included (the GRANT role TO user step, clone_databases.sh:408-414)."""
     rows = []
     for p in sets:
         rows.append((p.target_db, p.owner_user, "owner", p.owner_role, p.owner_password))
         rows.append((p.target_db, p.app_user, "app", p.app_role, p.app_password))
-    return spark.createDataFrame(
-        rows, "target_db string, user_name string, user_kind string, granted_role string, password string"
-    )
+    return rows
 
 
-def grants_df(spark: SparkSession, sets: list[DbPrincipals]) -> DataFrame:
+def grant_rows(sets: list[DbPrincipals]) -> list[tuple[str, ...]]:
     """`information_schema.role_table_grants`-style table: one row per
     (role, object_kind, privilege) — the matrix of clone_databases.sh:351-404."""
     rows = []
@@ -154,22 +159,14 @@ def grants_df(spark: SparkSession, sets: list[DbPrincipals]) -> DataFrame:
             rows.append((p.target_db, p.app_role, kind, priv))
         for kind, priv in OWNER_GRANTS:
             rows.append((p.target_db, p.owner_role, kind, priv))
-    return spark.createDataFrame(
-        rows, "target_db string, role_name string, object_kind string, privilege string"
-    )
+    return rows
 
 
-def ownership_df(spark: SparkSession, sets: list[DbPrincipals]) -> DataFrame:
+def ownership_rows(sets: list[DbPrincipals]) -> list[tuple[str, ...]]:
     """Object-ownership metadata — the reference's post-clone ownership
     transfer (clone_databases.sh:406-438: ALTER TABLE/SEQUENCE/VIEW …
     OWNER TO the schema owner, looped over information_schema). In this
     engine each cloned namespace entry is one table object; sequences
-    and views have no parquet analogue, so the frame records the table
+    and views have no parquet analogue, so the table records the table
     rows and the loop shape generalizes if such objects appear."""
-    rows = [
-        (p.target_db, "table", p.target_db, p.owner_user) for p in sets
-    ]
-    return spark.createDataFrame(
-        rows,
-        "target_db string, object_kind string, object_name string, owner string",
-    )
+    return [(p.target_db, "table", p.target_db, p.owner_user) for p in sets]

@@ -9,26 +9,27 @@ the whole thing behind TEST_USER_CONNECTIONS (:880-884) and routes via
 MONGO_USER_CONNSTRING_TEMPLATE when set (:904-916).
 
 Spark has no auth endpoint, and this engine models grants as DATA
-(pipeline/principals.py). So "can principal X do Y" is a QUERY over the
-written `_principals` / `_grants` metadata joined with the cloned
+(pipeline/principals.py). So "can principal X do Y" is a lookup in the
+written `_principals` / `_grants` metadata tables plus the cloned
 namespace catalog — the same assertion the reference makes, answered
 from the grant matrix instead of a live socket. Failure semantics
 mirror the reference: a failed connect probe is an ERROR (fails the
 test, :519/:538 `return 1`), a failed DML/DDL/search-path probe is a
 WARNING (:513/:532/:547 log_warning, no early return).
 
-All probes run in ONE Spark job over the two tiny metadata frames
-(broadcast-joined); nothing here scales with data volume, so the probe
-cost is constant whether the clone was 10 MB or 100 TB.
+The metadata tables hold a few rows per database, so the probes read
+them with pyarrow and evaluate in one driver-side loop: no Spark job,
+and a cost that is constant whether the clone was 10 MB or 100 TB.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
 
 from database_cloner_spark.sources.parquet import table_names
 
@@ -46,103 +47,76 @@ PROBES = (
 )
 
 
+class ProbeRow(NamedTuple):
+    """One probe outcome; the fields are the `_principal_probes` columns."""
+
+    target_db: str
+    user_name: str
+    user_kind: str
+    probe: str
+    severity: str
+    status: str  # passed | failed
+
+
 @dataclass
 class ProbeReport:
     ok: bool  # False iff any error-severity probe failed
-    frame: DataFrame  # one row per (target_db, user_name, probe, status)
-    rows: list | None = None  # the frame, collected ONCE (bounded: ~5/db)
+    rows: list[ProbeRow] = field(default_factory=list)
     skipped: bool = False
     skip_reason: str | None = None
 
 
-def principal_probe_frame(
-    spark: SparkSession, target_dir: str, db_prefix: str = "clone_"
-) -> DataFrame:
-    """One row per (target_db, user_name, probe) with status passed /
-    failed — the queryable analogue of the reference's per-user probe
-    log lines. Pure DataFrame ops over the metadata tables:
+def _read_rows(target_dir: str, name: str) -> list[dict]:
+    return pq.read_table(os.path.join(target_dir, name)).to_pylist()
 
-      principals ⋈ grants on (target_db, granted_role=role_name)
-      ⟕ expected-probe matrix, missing grant row => failed.
 
-    The DML probe additionally requires the cloned table to actually be
-    present in the namespace (the reference's information_schema.tables
-    count, :511): a grant on a table that never landed is a failure.
+def probe_rows(target_dir: str, db_prefix: str = "clone_") -> list[ProbeRow]:
+    """Every probe, as rows: one per (target_db, user_name, probe) with
+    status passed / failed — the queryable analogue of the reference's
+    per-user probe log lines. Read from the WRITTEN metadata tables, so a
+    grant removed on disk fails its probe.
+
+    - PROBES: the principal's role (granted_role) must hold the probe's
+      (object_kind, privilege) on the principal's own target_db in
+      `_grants`. The DML probe also requires the cloned table to be
+      present in the namespace (the reference's information_schema.tables
+      count, :511): a grant on a table that never landed is a failure.
+    - search_path (`SHOW search_path`, :544-548; warning): the app user's
+      implied schema "<app user>_owner" (the reference's schema-per-owner
+      layout) must be a provisioned owner principal of the SAME target_db.
     """
-    pr = spark.read.parquet(os.path.join(target_dir, "_principals"))
-    gr = spark.read.parquet(os.path.join(target_dir, "_grants"))
-
+    principals = _read_rows(target_dir, "_principals")
+    granted = {
+        (g["target_db"], g["role_name"], g["object_kind"], g["privilege"])
+        for g in _read_rows(target_dir, "_grants")
+    }
     # Which target dbs actually materialized in the namespace (catalog
     # scan, the information_schema analogue).
-    present = {
-        t for t in table_names(target_dir) if t.startswith(db_prefix)
+    present = {t for t in table_names(target_dir) if t.startswith(db_prefix)}
+    owners = {
+        (p["target_db"], p["user_name"]) for p in principals if p["user_kind"] == "owner"
     }
-    probes = spark.createDataFrame(
-        list(PROBES), "probe string, user_kind string, object_kind string, privilege string, severity string"
-    )
 
-    # Every (principal, applicable probe) pair, then left-join the grant
-    # matrix; a missing grant row means the probe fails.
-    expected = pr.join(F.broadcast(probes), on="user_kind", how="inner")
-    # A left join keeps `privilege` from the left side either way, so the
-    # miss is detected via a marker column carried on the right:
-    granted = expected.join(
-        F.broadcast(
-            gr.withColumnRenamed("role_name", "granted_role").withColumn(
-                "grant_ok", F.lit(True)
-            )
-        ),
-        on=["target_db", "granted_role", "object_kind", "privilege"],
-        how="left_outer",
-    ).fillna(False, subset=["grant_ok"])
+    def row(p: dict, probe: str, severity: str, passed: bool) -> ProbeRow:
+        return ProbeRow(
+            p["target_db"], p["user_name"], p["user_kind"], probe, severity,
+            "passed" if passed else "failed",
+        )
 
-    table_present = F.col("target_db").isin(list(present)) if present else F.lit(False)
-    status = F.when(
-        F.col("grant_ok") & (
-            (F.col("probe") != F.lit("dml_select")) | table_present
-        ),
-        F.lit("passed"),
-    ).otherwise(F.lit("failed"))
-    return granted.select(
-        "target_db",
-        "user_name",
-        "user_kind",
-        "probe",
-        "severity",
-        status.alias("status"),
-    )
-
-
-def search_path_probe_frame(spark: SparkSession, target_dir: str) -> DataFrame:
-    """`SHOW search_path` analogue (:544-548): the app user's implied
-    schema (the owner user's name, per the reference's schema-per-owner
-    layout) must belong to a provisioned owner principal of the SAME
-    target db. Warning-severity."""
-    pr = spark.read.parquet(os.path.join(target_dir, "_principals"))
-    apps = pr.filter(F.col("user_kind") == "app")
-    owners = pr.filter(F.col("user_kind") == "owner").select(
-        "target_db", F.col("user_name").alias("schema_name")
-    )
-    # app user "<db>_user" resolves schema "<db>_user_owner"
-    expected_schema = F.concat(F.col("user_name"), F.lit("_owner"))
-    joined = apps.withColumn("want_schema", expected_schema).join(
-        F.broadcast(owners).withColumn("schema_ok", F.lit(True)),
-        on=[
-            apps.target_db == owners.target_db,
-            expected_schema == owners.schema_name,
-        ],
-        how="left_outer",
-    )
-    return joined.select(
-        apps.target_db.alias("target_db"),
-        apps.user_name.alias("user_name"),
-        F.lit("app").alias("user_kind"),
-        F.lit("search_path").alias("probe"),
-        F.lit("warning").alias("severity"),
-        F.when(F.col("schema_ok"), F.lit("passed"))
-        .otherwise(F.lit("failed"))
-        .alias("status"),
-    )
+    rows = [
+        row(p, probe, severity,
+            (p["target_db"], p["granted_role"], kind, priv) in granted
+            and (probe != "dml_select" or p["target_db"] in present))
+        for p in principals
+        for probe, user_kind, kind, priv, severity in PROBES
+        if user_kind == p["user_kind"]
+    ]
+    rows += [
+        row(p, "search_path", "warning", (p["target_db"], f"{p['user_name']}_owner") in owners)
+        for p in principals
+        if p["user_kind"] == "app"
+    ]
+    return rows
 
 
 def test_user_connections(
@@ -154,25 +128,18 @@ def test_user_connections(
 ) -> ProbeReport:
     """Run every probe; the reference's skip semantics are preserved:
     TEST_USER_CONNECTIONS=false (:880-884) and unset LB_HOST (:495-498)
-    both skip cleanly with a log line, succeeding."""
+    both skip cleanly with a log line, succeeding. `spark` is not used:
+    the probes run on the driver and start no Spark job."""
     if not enabled:
         return ProbeReport(
-            ok=True, frame=None, skipped=True,
+            ok=True, skipped=True,
             skip_reason="User connection testing skipped (TEST_USER_CONNECTIONS=false)",
         )
     if not lb_host:
         return ProbeReport(
-            ok=True, frame=None, skipped=True,
+            ok=True, skipped=True,
             skip_reason="Load balancer not configured. Skipping user connection testing.",
         )
-    frame = principal_probe_frame(spark, target_dir, db_prefix).unionByName(
-        search_path_probe_frame(spark, target_dir)
-    )
-    # Evaluate the probe DAG exactly ONCE: ~5 rows per cloned db, so the
-    # collect is bounded metadata; ok/logging/persistence all derive
-    # from these rows instead of re-running the joins per consumer.
-    rows = frame.collect()
-    n_errors = sum(
-        1 for r in rows if r.status == "failed" and r.severity == "error"
-    )
-    return ProbeReport(ok=n_errors == 0, frame=frame, rows=rows)
+    rows = probe_rows(target_dir, db_prefix)
+    n_errors = sum(1 for r in rows if r.status == "failed" and r.severity == "error")
+    return ProbeReport(ok=n_errors == 0, rows=rows)

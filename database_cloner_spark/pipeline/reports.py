@@ -4,18 +4,25 @@ The reference's text artifacts: per-database password files
 (clone_databases.sh:447-470), the credential summary (:554-609 PG,
 :952-1005 Mongo), and the append-only timestamped log (:24-34).
 
-Report files are small and format-exact, so they are composed driver-side
-and written through a single-partition text sink (repartition(1)); the LOG
-is the scalable one — an append parquet sink that Structured Streaming
-can also feed (the [X] streaming tier shares it via foreachBatch).
+Every artefact here is tens of lines, so it is composed AND written on
+the driver: no Spark job, one part file per directory plus `_SUCCESS`,
+the layout `spark.read.parquet` / `spark.read.text` expect. The same
+writer stores the principals/grants metadata tables (pipeline/clone.py).
+The log is an append parquet table; Structured Streaming can also feed
+that layout (streaming/ops.stream_to_log, via foreachBatch).
 """
 
 from __future__ import annotations
 
 import os
+import pathlib
+import shutil
+import uuid
+from collections.abc import Callable, Sequence
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from database_cloner_spark.pipeline.principals import DbPrincipals
 
@@ -47,30 +54,51 @@ def password_file_lines(p: DbPrincipals, host: str, port: int, generated_on: str
     ]
 
 
-def credential_record(p: DbPrincipals) -> str:
-    """The 5-field `:`-record (clone_databases.sh:476)."""
-    return f"{p.target_db}:{p.owner_user}:{p.owner_password}:{p.app_user}:{p.app_password}"
+def _write_part(path: str, suffix: str, write: Callable[[str], None], append: bool) -> None:
+    """Put one part file into the artefact directory `path`, then
+    `_SUCCESS` — the layout Spark's writers leave, so `spark.read` and
+    pyarrow read it back unchanged. Overwrite replaces the directory;
+    append adds a uniquely named part. The part is written under a
+    hidden name (readers skip `.`-files) and renamed into place, so a
+    concurrent reader never lists a half-written file."""
+    if not append and os.path.exists(path):
+        shutil.rmtree(path)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}{suffix}" if append else f"part-00000{suffix}"
+    tmp = os.path.join(path, f".{name}")
+    write(tmp)
+    os.replace(tmp, os.path.join(path, name))
+    open(os.path.join(path, "_SUCCESS"), "wb").close()
 
 
-def write_text_report(spark: SparkSession, lines: list[str], path: str, append: bool = False) -> None:
-    """Text-report sink. Single logical file (reports are human-read);
-    mode append accumulates across runs like `>>`."""
-    df = spark.createDataFrame([(l,) for l in lines], "value string")
-    # repartition(1), NOT coalesce(1): coalescing a driver-parallelized
-    # frame makes ONE task fetch every pickled slice from the driver
-    # (~5s for a 25-line file, measured); the single-round shuffle is
-    # ~8x faster and the file is identical.
-    df.repartition(1).write.mode("append" if append else "overwrite").text(path)
+def write_rows(
+    path: str, columns: Sequence[str], rows: Sequence[Sequence[str]], append: bool = False
+) -> None:
+    """Metadata-table sink: `rows` as one parquet part file whose columns
+    are all strings, in `columns` order."""
+    table = pa.table(
+        {c: pa.array([r[i] for r in rows], pa.string()) for i, c in enumerate(columns)}
+    )
+    _write_part(path, ".parquet", lambda f: pq.write_table(table, f), append)
+
+
+def write_text_report(lines: list[str], path: str) -> None:
+    """Text-report sink: one newline-terminated line per entry in a
+    single part file — the bytes Spark's text writer produces for the
+    same lines."""
+    data = "".join(f"{line}\n" for line in lines).encode("utf-8")
+    _write_part(path, ".txt", lambda f: pathlib.Path(f).write_bytes(data), append=False)
 
 
 class LogSink:
     """Append-only timestamped log (clone_databases.sh:24-34) as a
-    parquet sink: (ts, level, message). Buffered per flush so each batch
-    is one small append job; readable back as a DataFrame for the
-    §2.1 write_log surface."""
+    parquet table (ts, level, message). Buffered; each flush appends one
+    part file, readable with `spark.read.parquet` like the stream-fed log
+    of streaming/ops.stream_to_log."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
+    COLUMNS = ("ts", "level", "message")
+
+    def __init__(self, path: str):
         self.path = path
         self._buf: list[tuple[str, str, str]] = []
 
@@ -93,14 +121,8 @@ class LogSink:
     def flush(self) -> None:
         if not self._buf:
             return
-        df = self.spark.createDataFrame(self._buf, "ts string, level string, message string")
-        # repartition, not coalesce — see write_text_report.
-        df.repartition(1).write.mode("append").parquet(self.path)
+        write_rows(self.path, self.COLUMNS, self._buf, append=True)
         self._buf = []
-
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
-
 
 def credential_summary_lines(
     sets: list[DbPrincipals], host: str, port: int, generated_on: str

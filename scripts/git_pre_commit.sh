@@ -10,9 +10,9 @@
 #
 # Scope: fires only when the STAGED diff touches query/operator code —
 # database_cloner_spark/{queries,functions,llm,streaming}/, registry.py,
-# or __spark_entry__.py. Cost: ~3.5 min at sf0.001
-# (plans ~50s + 144-key parity ~160s). Plain doc/test/bench commits pay
-# nothing. `git commit --no-verify` bypasses for WIP snapshots ONLY —
+# or __spark_entry__.py (plan + parity gates, ~5 min at sf0.001) — or
+# the clone pipeline, database_cloner_spark/pipeline/ (the clone suite,
+# ~1 min). Plain doc/test/bench commits pay nothing. `git commit --no-verify` bypasses for WIP snapshots ONLY —
 # never for a commit that adds or edits a registered key.
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
@@ -20,12 +20,15 @@ cd "$(git rev-parse --show-toplevel)"
 # capture first, then grep: `git diff | grep -q` under pipefail can
 # report 141 (SIGPIPE) when grep exits at the first match, silently
 # skipping the gate this hook exists to enforce
-# ONE base pattern: TRIGGER (query/operator code that makes the gate
-# fire) and GATED (everything the refusal below must also cover —
-# trigger paths plus tests/) both derive from it so the two scopes
-# cannot drift apart when a path is added.
-TRIGGER='^(database_cloner_spark/(queries|functions|llm|streaming)/|database_cloner_spark/registry\.py|__spark_entry__\.py)'
-GATED="${TRIGGER%)}|tests/)"
+# ONE pair of base patterns: QUERY (query/operator code) and PIPELINE
+# (the clone pipeline). TRIGGER (what makes a gate fire) and GATED
+# (everything the refusal below must also cover — trigger paths plus
+# tests/) both derive from them so the scopes cannot drift apart when a
+# path is added.
+QUERY='database_cloner_spark/(queries|functions|llm|streaming)/|database_cloner_spark/registry\.py|__spark_entry__\.py'
+PIPELINE='database_cloner_spark/pipeline/'
+TRIGGER="^($QUERY|$PIPELINE)"
+GATED="^($QUERY|$PIPELINE|tests/)"
 CHANGED="$(git diff --cached --name-only)"
 if grep -qE "$TRIGGER" <<<"$CHANGED"; then
   # The gate runs pytest against the WORKING TREE, so a partially
@@ -45,6 +48,12 @@ if grep -qE "$TRIGGER" <<<"$CHANGED"; then
     echo "Stage them (git add) or stash them, then retry."
     exit 1
   fi
-  echo "[pre-commit] staged diff touches query/operator code -> running plan + parity + shuffle-budget + ledger gates (sf0.001, ~5 min)"
-  python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py tests/test_ledger.py -q
+  if grep -qE "^($QUERY)" <<<"$CHANGED"; then
+    echo "[pre-commit] staged diff touches query/operator code -> running plan + parity + shuffle-budget + ledger gates (sf0.001, ~5 min)"
+    python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py tests/test_ledger.py -q
+  fi
+  if grep -qE "^$PIPELINE" <<<"$CHANGED"; then
+    echo "[pre-commit] staged diff touches the clone pipeline -> running the clone suite (~1 min)"
+    python -m pytest tests/test_clone_pipeline.py -q
+  fi
 fi

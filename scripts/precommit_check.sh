@@ -53,3 +53,9 @@ if grep -qE \
   echo "[precommit_check] query/operator diff detected -> plan + parity + shuffle-budget + ledger gates (sf0.001)"
   python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py tests/test_ledger.py -q
 fi
+# A pipeline-only diff changes no key, but it can break the clone,
+# its metadata tables, reports and probes: run the clone suite.
+if grep -qE '^database_cloner_spark/pipeline/' <<<"$CHANGED"; then
+  echo "[precommit_check] clone-pipeline diff detected -> clone suite"
+  python -m pytest tests/test_clone_pipeline.py -q
+fi

@@ -297,8 +297,120 @@ def test_principal_probe_fails_when_grant_row_missing(spark, tmp_path):
         spark, cfg.target_dir, enabled=True, lb_host="pg-lb.internal"
     )
     assert not report.ok
-    failed = report.frame.filter("status = 'failed'").collect()
+    failed = [r for r in report.rows if r.status == "failed"]
     assert any(r.probe == "connect" and r.severity == "error" for r in failed)
+
+
+def test_search_path_probe_is_per_database(spark, tmp_path):
+    """`SHOW search_path` (:544-548) resolves the app user's schema within
+    its OWN database: an owner row of that name filed under another
+    target_db must not satisfy it."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from database_cloner_spark.pipeline import probe
+
+    cfg = CloneConfig(
+        source_dir=SF,
+        target_dir=str(tmp_path / "probe_search_path"),
+        tables="region,nation",
+        parallelism=2,
+        lb_host="pg-lb.internal",
+    )
+    assert ClonePipeline(spark, cfg).run().ok
+
+    ppath = os.path.join(cfg.target_dir, "_principals")
+    rows = pq.read_table(ppath).to_pylist()
+    for r in rows:
+        if r["user_name"] == "clone_region_user_owner":
+            r["target_db"] = "clone_nation"
+    shutil.rmtree(ppath)
+    os.makedirs(ppath)
+    pq.write_table(pa.Table.from_pylist(rows), os.path.join(ppath, "part-00000.parquet"))
+
+    report = probe.test_user_connections(
+        spark, cfg.target_dir, enabled=True, lb_host="pg-lb.internal"
+    )
+    search_path = {r.user_name: r.status for r in report.rows if r.probe == "search_path"}
+    assert search_path == {"clone_region_user": "failed", "clone_nation_user": "passed"}
+
+
+@pytest.fixture(scope="module")
+def seeded_clone(spark, tmp_path_factory):
+    cfg = CloneConfig(
+        source_dir=SF,
+        target_dir=str(tmp_path_factory.mktemp("seeded_clone")),
+        tables="region",
+        parallelism=1,
+        lb_host="pg-lb.internal",
+        seed=11,
+    )
+    result = ClonePipeline(spark, cfg).run()
+    assert result.ok
+    return cfg, result
+
+
+def test_password_file_bytes(spark, seeded_clone):
+    """The password file (clone_databases.sh:447-470) is exactly the
+    formatted lines, each newline-terminated, and reads back as them."""
+    import glob
+
+    from database_cloner_spark.pipeline.reports import password_file_lines
+
+    cfg, result = seeded_clone
+    (p,) = result.principals
+    path = os.path.join(cfg.target_dir, f"_passwords_{p.target_db}")
+    (part,) = glob.glob(os.path.join(path, "part-*.txt"))
+    with open(part, "rb") as fh:
+        data = fh.read().decode("utf-8")
+    generated_on = data.split("\n")[1].removeprefix("Generated on: ")
+    lines = password_file_lines(p, cfg.host, cfg.port, generated_on)
+    assert data == "\n".join(lines) + "\n"
+    assert [r.value for r in spark.read.text(path).collect()] == lines
+
+
+def test_metadata_phase_starts_no_spark_job(spark, seeded_clone):
+    """Principals, grants, ownership, text reports, the log and the
+    probes are a few rows each: writing and probing them runs on the
+    driver and must not start a Spark job."""
+    from database_cloner_spark.pipeline import principals as prin
+    from database_cloner_spark.pipeline import probe, reports
+
+    cfg, result = seeded_clone
+    ps, target = result.principals, cfg.target_dir
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    group = "test-metadata-phase"
+
+    def jobs() -> list:
+        bus.waitUntilEmpty()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    sc.setJobGroup(group, "metadata phase")
+    try:
+        for name, columns, rows in (
+            ("_principals", prin.PRINCIPAL_COLUMNS, prin.principal_rows(ps)),
+            ("_grants", prin.GRANT_COLUMNS, prin.grant_rows(ps)),
+            ("_ownership", prin.OWNERSHIP_COLUMNS, prin.ownership_rows(ps)),
+        ):
+            reports.write_rows(os.path.join(target, name), columns, rows)
+        reports.write_text_report(
+            reports.credential_summary_lines(ps, cfg.host, cfg.port, "2026-01-01 00:00:00"),
+            os.path.join(target, "_credential_summary"),
+        )
+        log = reports.LogSink(os.path.join(target, "_clone_log"))
+        log.info("metadata phase probe")
+        log.flush()
+        report = probe.test_user_connections(spark, target, lb_host="pg-lb.internal")
+        assert report.ok and len(report.rows) == 5
+        assert jobs() == []
+        spark.range(1).count()  # control: jobs from this thread are seen
+        assert jobs()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_principal_probe_skip_semantics(spark, tmp_path):
