@@ -11,11 +11,11 @@ Delta/Databricks OPTIMIZE ZORDER and ClickHouse/DuckDB morton
 encodings — all public; Morton 1966).
 
 Spark-first: the code is a pure JVM-side bit expression (shift / and /
-or over longs — whole-stage-codegen friendly, no UDF), and the layout
-step is `repartitionByRange(z)` + `sortWithinPartitions(z)`: one range
-shuffle at write time buys min/max-prunable files on every interleaved
-dimension forever after. tests/test_zorder.py quantifies it: per-file
-span of the SECOND dimension collapses vs a single-key sort.
+or over longs — whole-stage-codegen friendly, no UDF); a writer lays
+files out with `repartitionByRange(z)` + `sortWithinPartitions(z)`, one
+range shuffle that buys min/max-prunable files on every interleaved
+dimension. q_sort_zorder sorts by the code and checks every value
+against the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from __future__ import annotations
 from functools import reduce
 from operator import add
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DEFAULT_BITS = 8
@@ -53,20 +53,3 @@ def z_value_sql(a: str, b: str, bits: int = DEFAULT_BITS) -> str:
         f"((({b} >> {i}) & 1) * {1 << (2 * i + 1)})" for i in range(bits)
     ]
     return "(" + " + ".join(terms) + ")"
-
-
-def zorder_layout(
-    df: DataFrame, col_a: str, col_b: str, n_files: int, bits: int = DEFAULT_BITS
-) -> DataFrame:
-    """Re-layout df into `n_files` range-partitioned, z-sorted splits:
-    write each partition as one file and its (col_a, col_b) min/max
-    stats bound a Morton rectangle. The helper returns the arranged
-    DataFrame (callers add .write); `__z` is dropped — layout is not
-    schema."""
-    z = z_value(F.col(col_a), F.col(col_b), bits).alias("__z")
-    return (
-        df.select("*", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )

@@ -344,23 +344,6 @@ def shingle_hash_sql(shingle_sql: str, split_fn: str = "split_part") -> str:
     )
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
-    """64-perm MinHash signature per doc. Each 'permutation' is
-    (a_i * h(shingle) + b_i) mod MH_MOD over the portable polynomial
-    shingle hash; the signature is the per-permutation minimum.
-
-    Computed by exploding shingles to rows and taking 64 plain `min`
-    aggregates over codegen'd xxhash64 columns — NOT via nested
-    higher-order-function lambdas, which are interpreted per element
-    (measured 30x slower at sf0.1). The explode stays cheap because each
-    row is (doc_id, shingle); partial aggregation combines to per-doc
-    mins map-side before the shuffle."""
-    sh = _shingle_sets(docs, n, text_col)
-    mins = _minhash_min_columns(sh)
-    sig = F.expr("array(" + ", ".join(f"m{i}" for i in range(N_PERM)) + ")")
-    return sh.join(mins, "doc_id").select("doc_id", "sh", sig.alias("sig"))
-
-
 def _shingle_sets(docs: DataFrame, n: int, text_col: str) -> DataFrame:
     # Two-step projection: tokens materialized BEFORE shingling so the
     # split regex runs once per doc, not once per shingle position.

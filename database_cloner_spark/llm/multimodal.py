@@ -1,10 +1,10 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
-The real decode libraries (PIL/ffmpeg/torchaudio) are not in this
-container, so the DECODE step is stubbed (clearly-marked
-NotImplementedError or a deterministic fake) — but everything Spark-side
-is real and tested: the asset schema, binary payload handling, Arrow
-batch shapes through mapInPandas, and the partitioning contract.
+No decode library (PIL/ffmpeg/torchaudio) ships with the engine, so the
+DECODE step is a deterministic fake (`fake_features`) — but everything
+Spark-side is real and tested: the asset schema, binary payload
+handling, Arrow batch shapes through mapInPandas, and the partitioning
+contract. A deployment with a codec swaps it in at the same seam.
 
 At 100 TB the rules encoded here:
 - payloads travel as `binary` columns inside parquet (no tiny-file
@@ -50,17 +50,6 @@ def assets_from_documents(docs: DataFrame) -> DataFrame:
             F.col("doc_id").alias("source_doc"),
             F.hex(F.substring(payload, 1, 4)).alias("magic"),
         ).alias("meta"),
-    )
-
-
-def decode_image(payload: bytes) -> "object":
-    """STUB — real implementation requires an image codec (e.g. PIL),
-    which is not available in this environment. The Spark-side plumbing
-    (schema, batching, partitioning) is exercised with
-    fake_features() instead."""
-    raise NotImplementedError(
-        "image decode requires a codec library not present in this container; "
-        "swap in PIL.Image.open(io.BytesIO(payload)) in a full deployment"
     )
 
 

@@ -203,66 +203,6 @@ def ivf_assign(
     )
 
 
-def build_ivf_index(
-    embs: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    centroids: DataFrame | None = None,
-) -> None:
-    """Materialize the IVF index at `path`: the inverted file written
-    PARTITIONED BY cell_id (so a probe's cell filter becomes parquet
-    partition pruning — only nprobe/n_cells of the bytes are ever read
-    from storage), plus the tiny centroid table alongside. Build cost is
-    one assignment pass; every subsequent probe pays only its cells.
-    This is the index-reuse story `ivf_topk` (which re-assigns per call)
-    trades away for statelessness. Pass `centroids=kmeans_centroids(...)`
-    to build on refined (cell-balanced) centroids."""
-    import os
-
-    cents = centroids if centroids is not None else seed_centroids(embs, n_cells)
-    inverted = ivf_assign(embs, n_cells, centroids=cents)
-    inverted.write.mode("overwrite").partitionBy("cell_id").parquet(
-        os.path.join(path, "inverted")
-    )
-    cents.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centroids")
-    )
-
-
-def ivf_topk_indexed(
-    spark, index_path: str, probe: DataFrame, k: int = 10, nprobe: int = 4
-) -> DataFrame:
-    """Probe a persisted IVF index. Cell routing is driver-side on the
-    centroid table (n_cells rows — the one legitimate collect in any ANN
-    system); the literal cell_id IN (...) predicate then prunes the
-    partitioned inverted file AT THE SCAN (PartitionFilters,
-    plan-asserted in tests), so storage reads scale with nprobe/n_cells,
-    not corpus size."""
-    import os
-
-    cents = spark.read.parquet(os.path.join(index_path, "centroids"))
-    ranked = (
-        cents.crossJoin(F.broadcast(probe))
-        .select(
-            "cell_id",
-            _cosine(F.col("centroid"), F.col("probe")).alias("sim"),
-        )
-        .orderBy(F.desc("sim"), F.asc("cell_id"))
-        .limit(nprobe)
-    )
-    cells = [r.cell_id for r in ranked.collect()]
-    inverted = spark.read.parquet(os.path.join(index_path, "inverted"))
-    candidates = inverted.filter(F.col("cell_id").isin(cells))
-    cos = _cosine(F.col("embedding"), F.col("probe"))
-    return (
-        candidates.crossJoin(F.broadcast(probe))
-        .select("vec_id", cos.alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", F.round("cosine", 4).alias("cosine"))
-    )
-
-
 def ivf_topk(
     embs: DataFrame,
     probe: DataFrame,

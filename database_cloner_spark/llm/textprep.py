@@ -64,17 +64,6 @@ def shingles_of_tokens(toks: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles, order-sensitive. With a tiny vocabulary
-    (the documents table has ~31 words) token SETS are degenerate —
-    nearly all pairs share the full vocab — so near-dup detection must
-    shingle. Built with sequence+slice: no UDF, stays in codegen.
-
-    NOTE: single-expression form; for hot paths prefer projecting
-    tokens first and calling shingles_of_tokens (see its docstring)."""
-    return shingles_of_tokens(tokens(text), n)
-
-
 def normalized(text: Column) -> Column:
     """Exact-dedup normalization: lowercase, charset-trim, collapse
     whitespace runs to single spaces. Same WS_CHARS/WS_CLASS literals

@@ -18,8 +18,6 @@ Design notes:
   is a create, release is a delete — no shared-file rewrite, so
   concurrent holders never race each other's entries. Lock files are
   control-plane metadata (bytes, not data), hence plain driver-side IO.
-- The registry doubles as a queryable metadata table
-  (`active_writers_df`), same pattern as the principals/grants tables.
 - Stale locks: entries carry `acquired_at`; operators clear crashed
   holders explicitly (`release`), mirroring the reference's "terminate
   the session, then re-run" advice — the engine never auto-breaks a
@@ -32,8 +30,6 @@ import json
 import os
 import re
 from datetime import datetime, timezone
-
-from pyspark.sql import DataFrame, SparkSession
 
 LOCKS_DIR = "_active_writers"
 
@@ -102,18 +98,6 @@ def active_writers(target_dir: str, table: str | None = None) -> list[dict]:
         if table is None or e.get("table") == table:
             out.append(e)
     return out
-
-
-def active_writers_df(spark: SparkSession, target_dir: str) -> DataFrame:
-    """The registry as a queryable metadata table (principals.py
-    pattern): holder, table, acquired_at, pid."""
-    rows = [
-        (e.get("holder"), e.get("table"), e.get("acquired_at"), e.get("pid"))
-        for e in active_writers(target_dir)
-    ]
-    return spark.createDataFrame(
-        rows, "holder string, table string, acquired_at string, pid bigint"
-    )
 
 
 def kill_advice(entries: list[dict]) -> str:

@@ -29,7 +29,7 @@ from __future__ import annotations
 import os
 import shutil
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
@@ -91,7 +91,6 @@ class CloneConfig:
     # target table while the active-writers registry holds entries for it.
     # force=True mirrors the operator choosing to proceed anyway after
     # reading the kill advice — it does NOT clear the registry.
-    admission_control: bool = True
     force: bool = False
     host: str = "pg-lb.internal"
     port: int = 5432
@@ -222,7 +221,7 @@ class ClonePipeline:
                 return TableResult(table, tgt_name, "skipped")
             # Admission gate (clone_databases.sh:645): refuse while the
             # target table has registered active writers.
-            if self.cfg.admission_control and not self.cfg.force:
+            if not self.cfg.force:
                 writers = admission.active_writers(self.cfg.target_dir, tgt_name)
                 if writers:
                     advice = admission.kill_advice(writers)
@@ -307,6 +306,18 @@ class ClonePipeline:
         self.log.success(f"Successfully cloned {table} -> {tgt_name} ({n} rows)")
         return TableResult(table, tgt_name, "cloned", rows=n, verified=verified)
 
+    def _recorded_passwords(self, results: list[TableResult]) -> dict[str, dict[str, str]]:
+        """{target_db: {"owner_password": ..., "app_password": ...}} from
+        the `_principals` table an earlier run wrote; read only when some
+        table was skipped."""
+        path = os.path.join(self.cfg.target_dir, "_principals")
+        if not any(r.status == "skipped" for r in results) or not os.path.exists(path):
+            return {}
+        recorded: dict[str, dict[str, str]] = {}
+        for row in reports.read_rows(path):
+            recorded.setdefault(row["target_db"], {})[f"{row['user_kind']}_password"] = row["password"]
+        return recorded
+
     # -- run ---------------------------------------------------------------
 
     def run(self) -> CloneRunResult:
@@ -338,11 +349,16 @@ class ClonePipeline:
             for r in pool.map(self._clone_table, work):
                 result.results.append(r)
 
-        # Principals/grants for every successfully-present target db.
+        # Principals/grants for every successfully-present target db. A
+        # skipped db keeps the passwords recorded when it was cloned;
+        # only a db with no recorded principals gets new ones.
         now = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
+        recorded = self._recorded_passwords(result.results)
         for r in result.results:
             if r.status in ("cloned", "skipped"):
                 p = prin.make_principals(r.target_table, cfg.db_prefix, seed=cfg.seed)
+                if r.status == "skipped" and r.target_table in recorded:
+                    p = replace(p, **recorded[r.target_table])
                 result.principals.append(p)
 
         # Metadata tables (queryable ACL model), per-db password files and
@@ -371,7 +387,6 @@ class ClonePipeline:
             )
 
             report = probe.test_user_connections(
-                self.spark,
                 cfg.target_dir,
                 db_prefix=cfg.db_prefix,
                 enabled=cfg.test_user_connections,

@@ -1,14 +1,9 @@
-"""Schema-drift reconciliation for re-clones.
+"""Schema-drift detection for re-clones.
 
 The reference cannot evolve a clone at all — a schema change on the
 source means drop + full re-dump (clone_databases.sh:795-818). Here the
-source schema is authoritative and an existing target is *conformed* to
-it before any comparison or incremental sync:
-
-- columns added on the source appear on the target as typed NULLs,
-- columns dropped from the source are dropped from the target,
-- compatibly retyped columns (int→bigint, float→double, the widenings
-  warehouses actually perform) are CAST to the source type.
+source schema is authoritative: `schema_drift` classifies columns the
+source added, dropped or retyped against an existing target.
 
 How the incremental pipeline uses this: `schema_drift` is checked from
 METADATA up front, and any drift routes to one explicit
@@ -16,20 +11,15 @@ METADATA up front, and any drift routes to one explicit
 content comparison — would misfire subtly: xxhash64 is type-sensitive
 (xxhash64(5::int) != xxhash64(5::bigint), the round-1 advisory bug in
 partitioned-clone verification), so a widening flags EVERY chunk
-changed and the sync silently degrades into an unplanned full rewrite.
+changed and the sync silently degrades into an unplanned full rewrite
+(pipeline/verify.py casts dst to the src schema for the same reason).
 A plain-parquet target also cannot hold mixed per-chunk physical
 schemas (Spark refuses to merge int/bigint file footers), so the
-migration rewrite is the correct move for this storage layer; `conform`
-is the read-path/cross-format adapter — verification of a drifted clone
-casts through it (pipeline/verify.py casts dst to src schema for the
-same reason), and table formats with per-file schema metadata would use
-it to keep even migrations incremental.
+migration rewrite is the correct move for this storage layer.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
@@ -48,18 +38,3 @@ def schema_drift(src_schema: StructType, dst_schema: StructType) -> dict:
             if n in dst and src[n] != dst[n]
         ),
     }
-
-
-def conform(dst: DataFrame, src_schema: StructType) -> DataFrame:
-    """Project/cast `dst` to exactly `src_schema` (source column order):
-    missing columns become typed NULLs, extra columns are dropped,
-    type-drifted columns are cast. Pure projection — map-side, no
-    shuffle, safe to interpose before any fingerprint/diff/merge."""
-    have = {f.name for f in dst.schema.fields}
-    cols = []
-    for f in src_schema.fields:
-        if f.name in have:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return dst.select(*cols)

@@ -131,8 +131,8 @@ def incremental_clone(
     # so ANY drift triggers one explicit migration rewrite — detected
     # up front from metadata, never discovered mid-sync as a hash storm
     # of spuriously-"changed" chunks (xxhash64 is type-sensitive).
-    # Table formats with per-file schema metadata would instead cast at
-    # read via evolve.conform and keep the rewrite incremental.
+    # Table formats with per-file schema metadata could instead cast at
+    # read time and keep the rewrite incremental.
     from database_cloner_spark.pipeline.evolve import schema_drift
 
     drift = schema_drift(src.schema, dst.schema)

@@ -28,9 +28,7 @@ import os
 from dataclasses import dataclass, field
 from typing import NamedTuple
 
-import pyarrow.parquet as pq
-from pyspark.sql import SparkSession
-
+from database_cloner_spark.pipeline.reports import read_rows
 from database_cloner_spark.sources.parquet import table_names
 
 # (probe name, user_kind it applies to, object_kind, privilege, severity
@@ -66,10 +64,6 @@ class ProbeReport:
     skip_reason: str | None = None
 
 
-def _read_rows(target_dir: str, name: str) -> list[dict]:
-    return pq.read_table(os.path.join(target_dir, name)).to_pylist()
-
-
 def probe_rows(target_dir: str, db_prefix: str = "clone_") -> list[ProbeRow]:
     """Every probe, as rows: one per (target_db, user_name, probe) with
     status passed / failed — the queryable analogue of the reference's
@@ -85,10 +79,10 @@ def probe_rows(target_dir: str, db_prefix: str = "clone_") -> list[ProbeRow]:
       implied schema "<app user>_owner" (the reference's schema-per-owner
       layout) must be a provisioned owner principal of the SAME target_db.
     """
-    principals = _read_rows(target_dir, "_principals")
+    principals = read_rows(os.path.join(target_dir, "_principals"))
     granted = {
         (g["target_db"], g["role_name"], g["object_kind"], g["privilege"])
-        for g in _read_rows(target_dir, "_grants")
+        for g in read_rows(os.path.join(target_dir, "_grants"))
     }
     # Which target dbs actually materialized in the namespace (catalog
     # scan, the information_schema analogue).
@@ -120,7 +114,6 @@ def probe_rows(target_dir: str, db_prefix: str = "clone_") -> list[ProbeRow]:
 
 
 def test_user_connections(
-    spark: SparkSession,
     target_dir: str,
     db_prefix: str = "clone_",
     enabled: bool = True,
@@ -128,8 +121,8 @@ def test_user_connections(
 ) -> ProbeReport:
     """Run every probe; the reference's skip semantics are preserved:
     TEST_USER_CONNECTIONS=false (:880-884) and unset LB_HOST (:495-498)
-    both skip cleanly with a log line, succeeding. `spark` is not used:
-    the probes run on the driver and start no Spark job."""
+    both skip cleanly with a log line, succeeding. The probes run on the
+    driver and start no Spark job."""
     if not enabled:
         return ProbeReport(
             ok=True, skipped=True,

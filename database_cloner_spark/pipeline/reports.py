@@ -8,8 +8,7 @@ Every artefact here is tens of lines, so it is composed AND written on
 the driver: no Spark job, one part file per directory plus `_SUCCESS`,
 the layout `spark.read.parquet` / `spark.read.text` expect. The same
 writer stores the principals/grants metadata tables (pipeline/clone.py).
-The log is an append parquet table; Structured Streaming can also feed
-that layout (streaming/ops.stream_to_log, via foreachBatch).
+The log is an append parquet table.
 """
 
 from __future__ import annotations
@@ -82,6 +81,11 @@ def write_rows(
     _write_part(path, ".parquet", lambda f: pq.write_table(table, f), append)
 
 
+def read_rows(path: str) -> list[dict]:
+    """A metadata table written by `write_rows`, as one dict per row."""
+    return pq.read_table(path).to_pylist()
+
+
 def write_text_report(lines: list[str], path: str) -> None:
     """Text-report sink: one newline-terminated line per entry in a
     single part file — the bytes Spark's text writer produces for the
@@ -93,8 +97,7 @@ def write_text_report(lines: list[str], path: str) -> None:
 class LogSink:
     """Append-only timestamped log (clone_databases.sh:24-34) as a
     parquet table (ts, level, message). Buffered; each flush appends one
-    part file, readable with `spark.read.parquet` like the stream-fed log
-    of streaming/ops.stream_to_log."""
+    part file, readable with `spark.read.parquet`."""
 
     COLUMNS = ("ts", "level", "message")
 

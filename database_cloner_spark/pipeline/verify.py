@@ -85,13 +85,12 @@ def diff_counts(src: DataFrame, dst: DataFrame) -> tuple[int, int]:
     return only_src, only_dst
 
 
-def verify_clone(src: DataFrame, dst: DataFrame, deep: bool = False) -> dict:
-    """Fingerprint compare; optional deep multiset diff.
+def verify_clone(src: DataFrame, dst: DataFrame) -> dict:
+    """Fingerprint compare; a deep multiset diff on a mismatch.
 
     The deep diff is AUTHORITATIVE: a clean two-way exceptAll with equal
     row counts IS multiset equality, so it overrides a fingerprint-only
-    mismatch (and, conversely, a dirty diff fails the clone even if a
-    hash collision made fingerprints agree)."""
+    mismatch."""
     if set(src.columns) != set(dst.columns):
         return {
             "match": False,
@@ -109,7 +108,7 @@ def verify_clone(src: DataFrame, dst: DataFrame, deep: bool = False) -> dict:
         "src_hash": fs.row_hash_sum,
         "dst_hash": fd.row_hash_sum,
     }
-    if deep or not ok:
+    if not ok:
         only_src, only_dst = diff_counts(src, dst)
         result["only_in_src"] = only_src
         result["only_in_dst"] = only_dst

@@ -6,7 +6,7 @@ files, clone_databases.sh:810-818, is the closest reference analogue of
 
 Scale notes:
 - one task per file; tiny-file corpora should be compacted upstream
-  (pipeline/compact.py) or read through a manifest + mapInPandas fetch.
+  or read through a manifest + mapInPandas fetch.
 - COLUMN PRUNING IS THE WHOLE GAME: `content` is only materialized if
   selected, so metadata passes (path/length filtering, sampling,
   dedup-by-size) read zero payload bytes. Filter on `length`/`path`
@@ -16,8 +16,6 @@ Scale notes:
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,12 +59,3 @@ def binary_manifest(
         )
         .orderBy("file_name")
     )
-
-
-def local_manifest(sf_dir: str, glob_suffix: str = ".parquet") -> dict[str, int]:
-    """Driver-side ground truth for tests: {basename: byte length}."""
-    return {
-        n: os.stat(os.path.join(sf_dir, n)).st_size
-        for n in os.listdir(sf_dir)
-        if n.endswith(glob_suffix)
-    }

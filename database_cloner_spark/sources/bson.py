@@ -1,136 +1,32 @@
-"""BSON (mongodump archive) ingestion seam.
+"""MongoDB dump ingestion: mongoexport extended JSON.
 
 The reference's Mongo path restores raw `mongodump` output — a
 directory tree `<dump_dir>/<db>/<collection>.bson` plus
 `<collection>.metadata.json` (clone_databases.sh:805-818: mktemp dump
-dir, mongodump --db, mongorestore --nsFrom/--nsTo). This engine models
-live collections as line-delimited JSON / parquet stand-ins
-(SURVEY.md §1.3: collection -> sources/json.py `load_json`, the
-mongoexport analogue), which covers every query the repo runs; a user
-holding actual BSON files lands HERE.
-
-Isolation pattern mirrors sources/jdbc.py: the layout/option contract
-is PURE functions, testable with no third-party dependency (this
-container ships none — decoding BSON needs `pymongo`'s `bson` or an
-equivalent, and the repo's rule is stub-behind-import-try, never a
-silent fake). `load_collection` is the ONLY function that needs the
-decoder; everything around it — file discovery, namespace mapping,
-distributed read shape — is real and tested (tests/test_jdbc.py).
+dir, mongodump --db, mongorestore --nsFrom/--nsTo). This engine reads
+the mongoexport form of the same collections instead: line-delimited
+Extended JSON, decoded to typed columns by `mongoexport_scan`. Raw
+`.bson` files are not read (no BSON decoder ships with the engine);
+convert them with mongoexport at the edge.
 
 Scale notes (100 TB):
 - One `.bson` file is a concatenation of length-prefixed documents with
   NO sync markers, so a single file is NOT splittable at arbitrary
-  offsets; parallelism comes from mongodump's per-collection files.
-  The distributed shape is therefore `spark.read.format("binaryFile")`
-  over the collection files -> one task per FILE -> a `mapInPandas`
-  decode walking the length prefixes (the exact multimodal-decode
-  plumbing of llm/multimodal.py: prune/filter BEFORE the Python
-  boundary, Arrow-batched after).
-- Prefer converting dumps to line-delimited JSON (mongoexport) or
-  parquet at the edge: both are splittable, so one huge collection
-  parallelizes WITHIN a file, not just across files.
+  offsets; parallelism would come only from mongodump's per-collection
+  files.
+- Line-delimited JSON (mongoexport) and parquet are both splittable, so
+  one huge collection parallelizes WITHIN a file, not just across files.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from database_cloner_spark.sources.json import load_json
-
-# Resolved lazily so the module imports cleanly in environments without
-# a BSON decoder (this container). Set by _decoder().
-_BSON_DECODER = None
-
-
-def _decoder():
-    global _BSON_DECODER
-    if _BSON_DECODER is None:
-        try:
-            import bson  # pymongo's decoder, or the standalone package
-
-            _BSON_DECODER = bson
-        except ImportError as ex:
-            raise NotImplementedError(
-                "BSON decoding needs pymongo's `bson` module, which this "
-                "environment does not ship. Convert the dump with "
-                "mongoexport (line-delimited JSON) and use "
-                "load_collection_json, or install pymongo where this "
-                "pipeline runs."
-            ) from ex
-    return _BSON_DECODER
-
-
-@dataclass(frozen=True)
-class BsonDump:
-    """A mongodump output tree: `<root>/<db>/<collection>.bson`."""
-
-    root: str
-
-    def collection_path(self, db: str, collection: str) -> str:
-        return os.path.join(self.root, db, f"{collection}.bson")
-
-    def metadata_path(self, db: str, collection: str) -> str:
-        return os.path.join(self.root, db, f"{collection}.metadata.json")
-
-    def collections(self, db: str) -> list[str]:
-        """Enumerate collections the way mongorestore does: every
-        `.bson` file in the db directory (clone_databases.sh:774
-        collection loop), sorted for a deterministic work list."""
-        return self._list(db, ".bson")
-
-    def collections_json(self, db: str) -> list[str]:
-        """Enumerate mongoexport'd collections: every `.json` file in
-        the db directory — the same discovery contract as
-        `collections`, over the splittable export format the engine
-        can actually decode (mongoexport_scan)."""
-        return self._list(db, ".json")
-
-    def _list(self, db: str, ext: str) -> list[str]:
-        d = os.path.join(self.root, db)
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            f[: -len(ext)] for f in os.listdir(d) if f.endswith(ext)
-        )
-
-
-def load_collection(
-    spark: SparkSession, dump: BsonDump, db: str, collection: str
-) -> DataFrame:
-    """Read one dumped collection as a DataFrame.
-
-    Shape (real, decoder-gated): binaryFile scan over the collection
-    file -> mapInPandas decode of the length-prefixed document stream
-    -> spark.read.json over the decoded JSON lines for schema
-    inference. Raises NotImplementedError in environments without a
-    BSON decoder — the documented deployment seam, like the real-codec
-    slot in llm/multimodal.py."""
-    _decoder()  # raises NotImplementedError without the dependency
-    raise NotImplementedError(
-        "wire the mapInPandas decode here when deploying with pymongo; "
-        "see module docstring for the binaryFile -> mapInPandas shape"
-    )
-
-
-def load_collection_json(
-    spark: SparkSession,
-    dump_root: str,
-    db: str,
-    collection: str,
-    schema=None,
-) -> DataFrame:
-    """The dependency-free path: a mongoexport'd collection
-    (`<root>/<db>/<collection>.json`, line-delimited) through the
-    engine's document source — splittable, schema-inferred, malformed
-    lines quarantined in _corrupt_record (sources/json.py)."""
-    return load_json(
-        spark, os.path.join(dump_root, db, f"{collection}.json"), schema=schema
-    )
 
 
 # --- mongoexport extended-JSON decoding (the executable BSON path) ----------
@@ -290,47 +186,6 @@ def decode_extended_json(df: DataFrame) -> DataFrame:
     and a plain scalar in another decodes correctly per-dataset."""
     return df.select(
         *[_decode_field(f.name, f.dataType) for f in df.schema.fields]
-    )
-
-
-# Byte orders for the three legacy-UUID conventions ($binary subType
-# 0x03 — the bytes are driver-dependent; 0x04 is always big-endian).
-# Values are the 0-based BYTE positions of the stored blob, listed in
-# canonical (big-endian) display order.
-_UUID_ORDERS = {
-    None: list(range(16)),                       # standard (0x04)
-    "standard": list(range(16)),
-    "java": [7, 6, 5, 4, 3, 2, 1, 0, 15, 14, 13, 12, 11, 10, 9, 8],
-    "csharp": [3, 2, 1, 0, 5, 4, 7, 6, 8, 9, 10, 11, 12, 13, 14, 15],
-    "python": list(range(16)),                   # PYTHON_LEGACY kept RFC order
-}
-
-
-def mongo_uuid_str(col: Column, legacy: str | None = None) -> Column:
-    """Render a decoded 16-byte $binary UUID (subType 0x04, or 0x03
-    with a declared legacy convention) as the canonical lowercase
-    8-4-4-4-12 string. subType 0x03's byte order is DRIVER-dependent
-    (pymongo's JAVA_LEGACY flips each 8-byte half, CSHARP_LEGACY is
-    GUID little-endian, PYTHON_LEGACY is RFC order), so the caller
-    names the convention — there is no in-band way to detect it.
-    Non-16-byte blobs return NULL rather than a garbage UUID. Pure
-    column expressions (hex + substrings), JVM-side."""
-    if legacy not in _UUID_ORDERS:
-        raise ValueError(
-            f"unknown legacy UUID convention {legacy!r}; "
-            f"one of {sorted(k for k in _UUID_ORDERS if k)}"
-        )
-    h = F.lower(F.hex(col))
-    pairs = [F.substring(h, 2 * b + 1, 2) for b in _UUID_ORDERS[legacy]]
-    groups = [
-        F.concat(*pairs[0:4]),
-        F.concat(*pairs[4:6]),
-        F.concat(*pairs[6:8]),
-        F.concat(*pairs[8:10]),
-        F.concat(*pairs[10:16]),
-    ]
-    return F.when(
-        F.length(col) == 16, F.concat_ws("-", *groups)
     )
 
 

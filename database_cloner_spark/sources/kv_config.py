@@ -2,8 +2,8 @@
 key inventory postgresql_db_clone.conf.example:6-45).
 
 Two consumers, like the reference:
-- driver-side dict (the engine's own configuration), with required-key
-  validation mirroring clone_databases.sh:76-99;
+- driver-side dict (the engine's own configuration; the CLI checks the
+  required keys per database type, `__main__._DB_TYPE_REQUIRED`);
 - a 2-column DataFrame (config as data, joinable/filterable).
 """
 
@@ -11,11 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-# Required keys per mode (clone_databases.sh:78-84 PG, :93-99 Mongo).
-PG_REQUIRED = ("PG_HOST", "PG_PORT", "PG_SUPERUSER", "PG_SUPERUSER_PASSWORD", "DATABASES_TO_CLONE", "DB_PREFIX")
-MONGO_REQUIRED = ("MONGO_URI", "DATABASES_TO_CLONE", "DB_PREFIX")
-
 
 def read_kv_df(spark: SparkSession, path: str) -> DataFrame:
     """Distributed parse: skip comments/blank lines, split on first '='.
@@ -36,10 +31,6 @@ def read_kv_df(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_config(spark: SparkSession, path: str, required: tuple[str, ...] = ()) -> dict[str, str]:
-    """Config as driver dict + validation (clone_databases.sh:76-99)."""
-    conf = {r.key: r.value for r in read_kv_df(spark, path).collect()}
-    missing = [k for k in required if not conf.get(k)]
-    if missing:
-        raise ValueError(f"missing required config keys: {missing}")
-    return conf
+def read_config(spark: SparkSession, path: str) -> dict[str, str]:
+    """Config as a driver dict (clone_databases.sh:62)."""
+    return {r.key: r.value for r in read_kv_df(spark, path).collect()}

@@ -97,73 +97,6 @@ def with_watermark_filter(events: DataFrame, tolerance: str = "10 minutes") -> D
     )
 
 
-def stream_to_log(sdf: DataFrame, path: str):
-    """Append a stream into the engine's log-sink layout (ts, level,
-    message — pipeline/reports.py LogSink) via foreachBatch: the
-    reference's `tee -a` log (clone_databases.sh:24-34) generalized to a
-    stream. foreachBatch reuses the BATCH writer per micro-batch, so the
-    sink layout and any future sink (JDBC, Delta) need exactly one
-    implementation for both modes. Returns the DataStreamWriter
-    (caller .start()s it)."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.select(
-            F.date_format("ts", TS_FMT).alias("ts"),
-            F.lit("EVENT").alias("level"),
-            F.concat(
-                F.lit("event_id="),
-                F.col("event_id").cast("string"),
-                F.lit(" type="),
-                F.col("event_type"),
-            ).alias("message"),
-        ).write.mode("append").parquet(path)
-
-    return sdf.writeStream.foreachBatch(write_batch).outputMode("append")
-
-
-RUNNING_TOTALS_SCHEMA = "user_id long, n_events long, sum_value double"
-_RUNNING_STATE_SCHEMA = "n long, s double"
-
-
-def user_running_totals_stream(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: per-user
-    running (event count, value sum) maintained in keyed state across
-    micro-batches; each batch emits the updated totals for the users it
-    touched.
-
-    This is the escape hatch for stateful semantics the built-in
-    windowed aggregations can't express (per-key accumulators, custom
-    eviction, ML feature state). State is one (long, double) pair per
-    user — bounded by key cardinality, not stream length; batches cross
-    the JVM/Python boundary as Arrow frames, never row-at-a-time.
-
-    Batch twin (same result set once the stream is drained):
-    user_running_totals_batch below — that form carries the DuckDB
-    oracle; stream-equals-batch is asserted in tests/test_streaming.py.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].sum())
-        state.update((n, s))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "sum_value": [round(s, 2)]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=RUNNING_TOTALS_SCHEMA,
-        stateStructType=_RUNNING_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def user_running_totals_batch(events: DataFrame) -> DataFrame:
     """Batch twin of user_running_totals_stream (drained-stream state)."""
     return events.groupBy("user_id").agg(
@@ -247,49 +180,6 @@ def purchase_click_interval_join(events: DataFrame) -> DataFrame:
         F.col("p_user").alias("user_id"),
         F.date_format("p_ts", TS_FMT).alias("purchase_ts"),
         F.date_format("c_ts", TS_FMT).alias("click_ts"),
-    )
-
-
-def enrich_with_profile(
-    events: DataFrame, profile: DataFrame, broadcast_profile: bool = True
-) -> DataFrame:
-    """Stream-static enrichment: each micro-batch joins the
-    slowly-changing per-user profile table — the canonical
-    dimension-enrichment shape. For FILE-backed static sides Spark
-    re-resolves the static relation per micro-batch, so a profile
-    rewrite between batches is picked up without restarting the query.
-    Works identically on a batch frame (the oracle twin).
-
-    `broadcast_profile` hints broadcast (stream side never shuffles —
-    right whenever the profile fits in executor memory). The profile is
-    caller-supplied and user-keyed, i.e. UNBOUNDED in general: at a
-    scale where per-user profiles outgrow the broadcast budget, pass
-    False and let the planner shuffle the static side per batch instead
-    of force-broadcasting an arbitrarily large frame (the q18 hint
-    lesson — Spark honors hints regardless of actual size)."""
-    prof = F.broadcast(profile) if broadcast_profile else profile
-    return events.join(prof, "user_id", "left").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "value",
-        F.col("segment"),
-    )
-
-
-def user_profiles(events: DataFrame) -> DataFrame:
-    """Static profile side for enrich_with_profile: per-user historical
-    volume bucketed into segments (computed batch-side, e.g. nightly)."""
-    return (
-        events.groupBy("user_id")
-        .agg(F.count("*").alias("n"))
-        .select(
-            "user_id",
-            F.when(F.col("n") >= 100, "heavy")
-            .when(F.col("n") >= 50, "mid")
-            .otherwise("light")
-            .alias("segment"),
-        )
     )
 
 

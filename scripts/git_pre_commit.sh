@@ -9,8 +9,10 @@
 # test_plans.py OR test_oracle_parity.py RED.
 #
 # Scope: fires only when the STAGED diff touches query/operator code —
-# database_cloner_spark/{queries,functions,llm,streaming}/, registry.py,
-# or __spark_entry__.py (plan + parity gates, ~5 min at sf0.001) — or
+# database_cloner_spark/{queries,functions,llm,streaming,sources}/,
+# registry.py, session.py or __spark_entry__.py (plan + parity gates,
+# ~5 min at sf0.001; every key loads through sources/ and runs in the
+# session.py factory's conf) — or
 # the clone pipeline, database_cloner_spark/pipeline/ (the clone suite,
 # ~1 min). Plain doc/test/bench commits pay nothing. `git commit --no-verify` bypasses for WIP snapshots ONLY —
 # never for a commit that adds or edits a registered key.
@@ -25,7 +27,7 @@ cd "$(git rev-parse --show-toplevel)"
 # (everything the refusal below must also cover — trigger paths plus
 # tests/) both derive from them so the scopes cannot drift apart when a
 # path is added.
-QUERY='database_cloner_spark/(queries|functions|llm|streaming)/|database_cloner_spark/registry\.py|__spark_entry__\.py'
+QUERY='database_cloner_spark/(queries|functions|llm|streaming|sources)/|database_cloner_spark/(registry|session)\.py|__spark_entry__\.py'
 PIPELINE='database_cloner_spark/pipeline/'
 TRIGGER="^($QUERY|$PIPELINE)"
 GATED="^($QUERY|$PIPELINE|tests/)"

@@ -44,18 +44,20 @@ python -m pytest tests/test_survey_registry.py \
 # the budget suite reuses the plan suite's cached plans. The ledger
 # suite (no Spark, ~2 s) rides along because builder edits change
 # content signatures.
+# QUERY and PIPELINE are the base patterns scripts/git_pre_commit.sh
+# uses; keep the two scripts' copies equal.
+QUERY='database_cloner_spark/(queries|functions|llm|streaming|sources)/|database_cloner_spark/(registry|session)\.py|__spark_entry__\.py'
+PIPELINE='database_cloner_spark/pipeline/'
 # capture-then-grep: a `git | grep -q` pipeline under pipefail can
 # exit 141 on SIGPIPE and silently skip the gate
 CHANGED="$(git diff HEAD --name-only)"
-if grep -qE \
-  '^(database_cloner_spark/(queries|functions|llm|streaming)/|database_cloner_spark/registry\.py|__spark_entry__\.py)' \
-  <<<"$CHANGED"; then
+if grep -qE "^($QUERY)" <<<"$CHANGED"; then
   echo "[precommit_check] query/operator diff detected -> plan + parity + shuffle-budget + ledger gates (sf0.001)"
   python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py tests/test_ledger.py -q
 fi
 # A pipeline-only diff changes no key, but it can break the clone,
 # its metadata tables, reports and probes: run the clone suite.
-if grep -qE '^database_cloner_spark/pipeline/' <<<"$CHANGED"; then
+if grep -qE "^$PIPELINE" <<<"$CHANGED"; then
   echo "[precommit_check] clone-pipeline diff detected -> clone suite"
   python -m pytest tests/test_clone_pipeline.py -q
 fi

@@ -41,7 +41,7 @@ def test_clone_content_identical(spark, clone_run):
     src = load(spark, SF, "customer")
     dst = spark.read.parquet(os.path.join(cfg.target_dir, "clone_customer.parquet"))
     assert diff_counts(src, dst) == (0, 0)
-    assert verify_clone(src, dst, deep=True)["match"]
+    assert verify_clone(src, dst)["match"]
 
 
 def test_second_run_is_idempotent_skip(spark, clone_run):
@@ -181,10 +181,10 @@ def test_admission_gate_refuses_then_proceeds(spark, tmp_path):
     # Refusal must not have touched the target.
     assert not os.path.exists(os.path.join(target, "clone_region.parquet"))
 
-    # Registry is queryable metadata (principals-table pattern).
-    writers = admission.active_writers_df(spark, target)
-    assert writers.count() == 1
-    assert writers.collect()[0].holder == "etl-job-7"
+    # The registry names the holder the gate refused on.
+    writers = admission.active_writers(target)
+    assert len(writers) == 1
+    assert writers[0]["holder"] == "etl-job-7"
 
     assert admission.release(target, holder="etl-job-7") == 1
     ok = ClonePipeline(spark, cfg).run()
@@ -238,6 +238,28 @@ def test_passwords_secure_by_default_seeded_on_request():
     s2 = make_principals("clone_db1", "clone_", seed=7)
     assert s1.owner_password == s2.owner_password
     assert s1.app_password == s2.app_password
+
+
+def test_skipped_rerun_keeps_recorded_credentials(spark, tmp_path):
+    """A rerun that skips an existing clone re-provisions it with the
+    passwords the first run recorded, not fresh CSPRNG draws (seed=None)."""
+    from database_cloner_spark.pipeline.reports import read_rows
+
+    cfg = CloneConfig(source_dir=SF, target_dir=str(tmp_path / "t"), tables=["region"])
+
+    def credentials():
+        principals = sorted(
+            tuple(r.values()) for r in read_rows(os.path.join(cfg.target_dir, "_principals"))
+        )
+        path = os.path.join(cfg.target_dir, "_passwords_clone_region")
+        passwords = [r.value for r in spark.read.text(path).collect() if r.value.startswith("Password: ")]
+        return principals, passwords
+
+    assert ClonePipeline(spark, cfg).run().results[0].status == "cloned"
+    first = credentials()
+    assert ClonePipeline(spark, cfg).run().results[0].status == "skipped"
+    assert credentials() == first
+    assert len(first[0]) == 2 and len(first[1]) == 2
 
 
 # -- principal probes (clone_databases.sh:480-551, :880-884) ---------------
@@ -294,7 +316,7 @@ def test_principal_probe_fails_when_grant_row_missing(spark, tmp_path):
     os.rename(gpath + "_new", gpath)
 
     report = probe.test_user_connections(
-        spark, cfg.target_dir, enabled=True, lb_host="pg-lb.internal"
+        cfg.target_dir, enabled=True, lb_host="pg-lb.internal"
     )
     assert not report.ok
     failed = [r for r in report.rows if r.status == "failed"]
@@ -331,7 +353,7 @@ def test_search_path_probe_is_per_database(spark, tmp_path):
     pq.write_table(pa.Table.from_pylist(rows), os.path.join(ppath, "part-00000.parquet"))
 
     report = probe.test_user_connections(
-        spark, cfg.target_dir, enabled=True, lb_host="pg-lb.internal"
+        cfg.target_dir, enabled=True, lb_host="pg-lb.internal"
     )
     search_path = {r.user_name: r.status for r in report.rows if r.probe == "search_path"}
     assert search_path == {"clone_region_user": "failed", "clone_nation_user": "passed"}
@@ -403,7 +425,7 @@ def test_metadata_phase_starts_no_spark_job(spark, seeded_clone):
         log = reports.LogSink(os.path.join(target, "_clone_log"))
         log.info("metadata phase probe")
         log.flush()
-        report = probe.test_user_connections(spark, target, lb_host="pg-lb.internal")
+        report = probe.test_user_connections(target, lb_host="pg-lb.internal")
         assert report.ok and len(report.rows) == 5
         assert jobs() == []
         spark.range(1).count()  # control: jobs from this thread are seen
@@ -431,7 +453,7 @@ def test_principal_probe_skip_semantics(spark, tmp_path):
     log = spark.read.parquet(os.path.join(cfg.target_dir, "_clone_log"))
     assert log.filter("message LIKE '%TEST_USER_CONNECTIONS=false%'").count() == 1
 
-    toggled = probe.test_user_connections(spark, cfg.target_dir, enabled=True, lb_host=None)
+    toggled = probe.test_user_connections(cfg.target_dir, enabled=True, lb_host=None)
     assert toggled.skipped and toggled.ok
     assert "Load balancer not configured" in toggled.skip_reason
 

@@ -122,17 +122,6 @@ def test_schema_drift_classification(spark):
     assert drift["retyped"] == [("k", "int", "bigint")]
 
 
-def test_conform_projects_casts_and_nulls(spark):
-    from database_cloner_spark.pipeline.evolve import conform
-
-    src_schema = spark.createDataFrame([(1, "x", 2.0)], ["k", "s", "w"]).schema
-    dst = spark.createDataFrame([("x", 7, True)], ["s", "k", "extra"])
-    out = conform(dst.withColumn("k", dst.k.cast("int")), src_schema)
-    assert out.schema == src_schema  # order, names, types all conformed
-    row = out.head()
-    assert (row.k, row.s, row.w) == (7, "x", None)
-
-
 def test_incremental_schema_migration_on_drift(spark, sf_dir, tmp_path):
     """A retyped source column triggers ONE declared migration rewrite
     (not a hash-storm of 'changed' chunks); the target afterwards holds

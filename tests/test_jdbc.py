@@ -4,7 +4,8 @@ No database server exists in this environment (SURVEY.md §7), so these
 tests pin the parts that are testable without one: the option
 dictionaries every JDBC read/write must carry, the unpartitioned-read
 refusal, the server-side clone DDL's parity with the reference, the
-ClonePipeline dispatch wiring, and the BSON seam's layout contract.
+ClonePipeline dispatch wiring, and the read of an exported Mongo
+collection.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from database_cloner_spark.pipeline.clone import (
     ClonePipeline,
     _parse_worklist,
 )
-from database_cloner_spark.sources import bson, jdbc
+from database_cloner_spark.sources import jdbc
 
 PG = jdbc.JdbcTarget(
     url="jdbc:postgresql://db.example.test:5432/appdb",
@@ -164,42 +165,18 @@ def test_pipeline_jdbc_target_write_modes(spark, tmp_path, monkeypatch):
         )
 
 
-# -- BSON seam ---------------------------------------------------------------
-
-
-def test_bson_dump_layout_contract(tmp_path):
-    """File discovery matches mongodump's tree exactly:
-    <root>/<db>/<collection>.bson (+ .metadata.json)."""
-    d = tmp_path / "dump" / "appdb"
-    d.mkdir(parents=True)
-    for c in ("users", "orders"):
-        (d / f"{c}.bson").write_bytes(b"")
-        (d / f"{c}.metadata.json").write_text("{}")
-    dump = bson.BsonDump(str(tmp_path / "dump"))
-    assert dump.collections("appdb") == ["orders", "users"]
-    assert dump.collections("nope") == []
-    assert dump.collection_path("appdb", "users").endswith(
-        os.path.join("appdb", "users.bson")
-    )
-    assert dump.metadata_path("appdb", "users").endswith(
-        os.path.join("appdb", "users.metadata.json")
-    )
-
-
-def test_bson_decode_is_a_documented_seam(spark, tmp_path):
-    """Without a BSON decoder on the box, load_collection raises the
-    documented NotImplementedError pointing at the JSON path — never a
-    silent fake."""
-    dump = bson.BsonDump(str(tmp_path))
-    with pytest.raises(NotImplementedError, match="mongoexport"):
-        bson.load_collection(spark, dump, "appdb", "users")
+# -- exported Mongo collection -----------------------------------------------
 
 
 def test_bson_json_fallback_reads_exported_collection(spark, tmp_path):
+    """A mongoexport'd collection (`<root>/<db>/<collection>.json`,
+    line-delimited) reads through the engine's document source."""
+    from database_cloner_spark.sources.json import load_json
+
     d = tmp_path / "dump" / "appdb"
     d.mkdir(parents=True)
     rows = [{"_id": i, "name": f"u{i}"} for i in range(5)]
     (d / "users.json").write_text("\n".join(json.dumps(r) for r in rows))
-    df = bson.load_collection_json(spark, str(tmp_path / "dump"), "appdb", "users")
+    df = load_json(spark, str(d / "users.json"))
     got = sorted((r["_id"], r["name"]) for r in df.collect())
     assert got == [(i, f"u{i}") for i in range(5)]

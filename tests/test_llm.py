@@ -248,14 +248,6 @@ def test_multimodal_assets_and_features(spark):
     }
 
 
-def test_decode_stub_raises(spark):
-    from database_cloner_spark.llm.multimodal import decode_image
-    import pytest as _pytest
-
-    with _pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
-
-
 def test_resize_images_plumbing(spark):
     from database_cloner_spark.llm.multimodal import resize_images
 
@@ -454,40 +446,20 @@ def test_canonical_survivor_prefers_quality_over_min_id(spark):
 def test_shingles_short_docs_yield_empty_not_crash(spark):
     """ADVICE r1: inputs with fewer than n tokens must produce an empty
     shingle array, not INVALID_PARAMETER_VALUE.START."""
-    from database_cloner_spark.llm.textprep import shingles
+    from database_cloner_spark.llm.textprep import shingles_of_tokens, tokens
 
     df = spark.createDataFrame(
         [(1, "one two"), (2, ""), (3, "a b c d")], "doc_id bigint, text string"
-    )
-    rows = {r.doc_id: r.sh for r in df.select("doc_id", shingles(F.col("text"), 3).alias("sh")).collect()}
+    ).select("doc_id", tokens(F.col("text")).alias("toks"))
+    rows = {r.doc_id: r.sh for r in df.select("doc_id", shingles_of_tokens(F.col("toks"), 3).alias("sh")).collect()}
     assert rows[1] == [] and rows[2] == []
     assert rows[3] == ["a b c", "b c d"]
 
 
-def test_ivf_persisted_index_matches_and_prunes(spark, tmp_path):
-    """build_ivf_index + ivf_topk_indexed: same results as the stateless
-    ivf_topk, and the probe's cell filter reaches the scan as partition
-    pruning (the index-reuse story: storage reads ~ nprobe/n_cells)."""
-    embs = load(spark, SF, "embeddings")
-    idx = str(tmp_path / "ivf_index")
-    similarity.build_ivf_index(embs, idx, n_cells=16)
-
-    probe = similarity.probe_vector(embs)
-    stateless = [(r.vec_id, r.cosine) for r in similarity.ivf_topk(embs, probe).collect()]
-    indexed_df = similarity.ivf_topk_indexed(spark, idx, probe, nprobe=4)
-    indexed = [(r.vec_id, r.cosine) for r in indexed_df.collect()]
-    assert indexed == stateless
-
-    plan = indexed_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell_id" in plan.split("PartitionFilters")[1][:200], (
-        f"cell filter not pruning partitions:\n{plan[:1500]}"
-    )
-
-
-def test_kmeans_refined_centroids_valid_and_balancing(spark, tmp_path):
+def test_kmeans_refined_centroids_valid_and_balancing(spark):
     """Lloyd's refinement: schema-compatible with the seed, deterministic,
-    and the refined index still answers probes correctly (the probe's own
-    vector, cosine 1.0, must rank first)."""
+    and IVF search over the refined cells still answers probes correctly
+    (the probe's own vector, cosine 1.0, must rank first)."""
     embs = load(spark, SF, "embeddings")
     seed = similarity.seed_centroids(embs, n_cells=8)
     refined = similarity.kmeans_centroids(embs, n_cells=8, iters=2)
@@ -500,11 +472,9 @@ def test_kmeans_refined_centroids_valid_and_balancing(spark, tmp_path):
     again = {r.cell_id: r.centroid for r in similarity.kmeans_centroids(embs, 8, 2).collect()}
     assert {r.cell_id: r.centroid for r in rows} == again
 
-    # Refinement must not break the index path.
-    idx = str(tmp_path / "kmeans_idx")
-    similarity.build_ivf_index(embs, idx, n_cells=8, centroids=refined)
+    # Refinement must not break the IVF search path.
     probe = similarity.probe_vector(embs)
-    got = similarity.ivf_topk_indexed(spark, idx, probe, k=5, nprobe=3).collect()
+    got = similarity.ivf_topk(embs, probe, k=5, n_cells=8, nprobe=3, centroids=refined).collect()
     assert got[0].vec_id == 0 and got[0].cosine == 1.0
 
     # Balance: refined cells stay in the same ballpark as the seed (the

@@ -92,25 +92,6 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     assert n2 == 100  # replayed duplicates dropped by keyed state
 
 
-def test_stream_to_log_sink(spark, tmp_path):
-    # The streaming log feed must land in the exact LogSink layout and
-    # cover every input row once.
-    log_path = str(tmp_path / "stream_log")
-    stream = events_stream(spark, SF)
-    q = (
-        ops.stream_to_log(stream, log_path)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.read.parquet(log_path)
-    assert got.columns == ["ts", "level", "message"]
-    assert got.count() == load(spark, SF, "events").count()
-    assert got.filter(F.col("level") != "EVENT").count() == 0
-
-
 def _ts_median_split(ev):
     """Time-split halves at the median ts: NULL-ts rows ride batch 1 so
     the op's own NULL filter is exercised mid-stream."""
@@ -157,34 +138,6 @@ def _drain_two_batches(spark, tmp_path, prefix, half1, half2, op, select_sql):
     rows = spark.sql(f"SELECT {select_sql} FROM {name}").collect()
     q.stop()
     return rows
-
-
-def test_stateful_running_totals_across_batches(spark, tmp_path):
-    # Two micro-batches over disjoint row halves: the keyed state must
-    # carry batch-1 counts into batch-2 emissions, and the final totals
-    # must equal the batch twin over the full input.
-    ev = load(spark, SF, "events")
-    rows = _drain_two_batches(
-        spark, tmp_path, "rt",
-        ev.filter(F.col("event_id") % 2 == 0),
-        ev.filter(F.col("event_id") % 2 == 1),
-        ops.user_running_totals_stream,
-        "user_id, n_events, sum_value",
-    )
-    # last emission per user wins (update mode appends each batch's rows
-    # to the memory sink in order)
-    final = {}
-    for r in rows:
-        final[r.user_id] = (r.n_events, r.sum_value)
-    want = {
-        r.user_id: (r.n_events, r.sum_value)
-        for r in ops.user_running_totals_batch(ev).collect()
-    }
-    assert set(final) == set(want)
-    for uid, (n, s) in want.items():
-        gn, gs = final[uid]
-        assert gn == n
-        assert abs(gs - s) < 1e-6
 
 
 def test_streaming_watermark_drops_late_rows(spark, tmp_path):
@@ -355,30 +308,6 @@ def test_cdc_stream_applies_microbatches(spark, tmp_path):
     want[5] = "a5-new"
     want[42] = "a42"
     assert final == want
-
-
-def test_stream_static_enrichment_matches_batch(spark):
-    """Stream-static broadcast join: streamed events enriched with the
-    static per-user profile equal the batch join, including users
-    absent from the profile (left join keeps them with NULL segment)."""
-    ev = load(spark, SF, "events")
-    profile = ops.user_profiles(ev.filter(F.col("user_id") % 2 == 0))
-    stream = events_stream(spark, SF)
-    name = _run_to_memory(
-        ops.enrich_with_profile(stream, profile),
-        f"en_{uuid.uuid4().hex[:8]}",
-        mode="append",
-    )
-    got = {
-        (r.event_id, r.segment)
-        for r in spark.sql(f"SELECT event_id, segment FROM {name}").collect()
-    }
-    want = {
-        (r.event_id, r.segment)
-        for r in ops.enrich_with_profile(ev, profile).collect()
-    }
-    assert got == want
-    assert any(s is None for _, s in want)  # odd users stay, unenriched
 
 
 def test_streaming_total_on_nasty_events(spark, tmp_path):

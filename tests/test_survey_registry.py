@@ -1,4 +1,5 @@
-"""SURVEY.md §2 and the registry must stay in lockstep.
+"""SURVEY.md §2 and the registry must stay in lockstep, and every
+package name must have a caller outside tests.
 
 The judge diffs every `q_*` key in SURVEY.md against registry.specs()
 each round; this test runs the same diff in CI so a new operator (or a
@@ -10,6 +11,8 @@ behavior in Spark; the planner always does it).
 
 from __future__ import annotations
 
+import ast
+import pathlib
 import re
 
 from database_cloner_spark.registry import specs
@@ -83,3 +86,88 @@ def test_rows_only_set_is_exactly_udf_password():
     item 8)."""
     rows_only = {k for k, v in specs().items() if v.oracle is None}
     assert rows_only == {"q_udf_password"}, rows_only
+
+
+# -- every package name has a non-test caller --------------------------------
+
+_ROOT = pathlib.Path(__file__).resolve().parents[1]
+
+# Package names only tests call, kept on purpose: name -> reason.
+_TEST_ONLY_NAMES = {
+    "acquire": "pipeline/admission.py: the writer side of the lock-file "
+    "format the clone's admission gate reads",
+    "release": "pipeline/admission.py: clears a holder's lock files, the "
+    "operator's answer to the gate's kill advice",
+    "server_side_clone_sql": "sources/jdbc.py: the reference's CREATE "
+    "DATABASE ... TEMPLATE DDL, CS:245-246 (SURVEY.md §2.12, clone row)",
+    "keys_reading_only": "registry.py: the adversarial suites' selector "
+    "over tables_used",
+}
+
+
+def _non_test_sources(root: pathlib.Path) -> list[pathlib.Path]:
+    files = [root / "bench.py", root / "__spark_entry__.py"]
+    for d in ("database_cloner_spark", "scripts", "perfbench"):
+        files += sorted((root / d).rglob("*.py"))
+    return files
+
+
+def _used_names(root: pathlib.Path) -> set[str]:
+    """Every identifier non-test code mentions as a Name, an Attribute
+    or an import alias (a dotted import counts each part)."""
+    used: set[str] = set()
+    for path in _non_test_sources(root):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.update(node.name.split("."))
+    return used
+
+
+def _is_registered(node: ast.AST) -> bool:
+    for dec in getattr(node, "decorator_list", ()):
+        fn = dec.func if isinstance(dec, ast.Call) else dec
+        if getattr(fn, "id", getattr(fn, "attr", None)) == "register":
+            return True
+    return False
+
+
+def _defined_names(root: pathlib.Path) -> dict[str, str]:
+    """Top-level functions, classes and assigned names of the package
+    (dunders and @register builders excluded) -> "file:line"."""
+    out: dict[str, str] = {}
+    for path in sorted((root / "database_cloner_spark").rglob("*.py")):
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                names = [] if _is_registered(node) else [node.name]
+            elif isinstance(node, ast.Assign):
+                names = [t.id for t in node.targets if isinstance(t, ast.Name)]
+            elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+                names = [node.target.id]
+            else:
+                continue
+            for name in names:
+                if not name.startswith("__"):
+                    out[name] = f"{path.relative_to(root)}:{node.lineno}"
+    return out
+
+
+def _uncalled(root: pathlib.Path) -> dict[str, str]:
+    used = _used_names(root)
+    return {n: where for n, where in _defined_names(root).items() if n not in used}
+
+
+def test_package_names_have_a_non_test_caller():
+    """A package function, class or constant that only tests reach is
+    dead code with a test attached: delete both, or give it a caller.
+    Keys, pipelines, the CLI, scripts/, bench.py, __spark_entry__.py and
+    perfbench/ are the callers; an AST scan, so prose and SQL text that
+    happen to spell a name do not count."""
+    uncalled = _uncalled(_ROOT)
+    orphans = {n: w for n, w in uncalled.items() if n not in _TEST_ONLY_NAMES}
+    assert not orphans, f"package names only tests reach: {orphans}"
+    stale = set(_TEST_ONLY_NAMES) - set(uncalled)
+    assert not stale, f"allow-listed names now have a caller or are gone: {stale}"
