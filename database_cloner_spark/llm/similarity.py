@@ -530,7 +530,7 @@ def ivfpq_topk(
     vector fetches — neither full-scan nor full-width.
 
     Cells and codebooks are probe-independent (build once, reuse per
-    query — build_ivf_index persists the cell layout the same way)."""
+    query)."""
     unit = quantized_unit(embs).select("vec_id", "embedding")
     unit_valid = quantized_unit(scorable(embs)).select("vec_id", "embedding")
     unit_probe = quantized_unit(probe, "probe")

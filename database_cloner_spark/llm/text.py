@@ -332,7 +332,8 @@ def segment_dedup(
         F.slice(toks, (i - F.lit(1)) * seg_len + F.lit(1), F.lit(seg_len)), " "
     )
     # Guard the empty-doc case: sequence(1, 0) is DESCENDING in Spark,
-    # not empty (see textprep.shingles guard) — emit [] explicitly.
+    # not empty (see the guard in textprep.shingles_of_tokens) — emit []
+    # explicitly.
     segs = F.when(
         F.size(toks) > 0, F.transform(F.sequence(F.lit(1), n_segs), seg_at)
     ).otherwise(F.array().cast("array<string>"))

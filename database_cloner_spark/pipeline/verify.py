@@ -121,7 +121,9 @@ def verify_clone(src: DataFrame, dst: DataFrame) -> dict:
 def write_round_trip(spark, target_dir: str) -> bool:
     """The reference's write-probe (insertOne({test:1}) then deleteOne,
     clone_databases.sh:933-937): write one row into the target namespace,
-    read it back, drop it."""
+    read it back, drop it. The read-back names the schema it just wrote,
+    which saves a schema-inference job and weakens nothing: a column the
+    write lost reads back as NULL and fails the `test == 1` check."""
     import os
     import shutil
 
@@ -129,7 +131,7 @@ def write_round_trip(spark, target_dir: str) -> bool:
     try:
         probe = spark.createDataFrame([(1,)], "test int")
         probe.write.mode("overwrite").parquet(probe_path)
-        back = spark.read.parquet(probe_path).collect()
+        back = spark.read.schema("test int").parquet(probe_path).collect()
         return len(back) == 1 and back[0].test == 1
     finally:
         shutil.rmtree(probe_path, ignore_errors=True)

@@ -2066,8 +2066,8 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature extraction over opaque binary payloads — the
     decode->embed stage of a multimodal ingest, exercised end-to-end
     through the driver: llm/multimodal.fake_features runs a
-    deterministic byte-statistics featurizer (the codec stand-in; see
-    decode_image's documented NotImplementedError) inside mapInPandas —
+    deterministic byte-statistics featurizer (the codec stand-in)
+    inside mapInPandas —
     Arrow batch transfer, binary-in/array-out schema, per-batch NumPy
     work, never a row-at-a-time UDF. The 8-dim feature array explodes
     to one scalar row per (asset, dim) so the driver's hash sees

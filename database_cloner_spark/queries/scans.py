@@ -219,8 +219,8 @@ FROM rec
 def q_scan_delim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parse `:`-separated credential-style records into typed fields
     (the 5-field PG / 3-field Mongo formats, clone_databases.sh:574,:972).
-    The file-based path is sources/delimited.py; here the parse semantics
-    are exercised as codegen'd column expressions over testdata.
+    The parse semantics are exercised as codegen'd column expressions
+    over testdata.
     F.get + try_cast, not getItem + cast: a record with a NULL field is
     SHORTER (concat_ws skips NULLs), and under ANSI an out-of-bounds
     getItem / malformed cast kills the whole scan — short records must

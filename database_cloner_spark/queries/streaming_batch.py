@@ -142,10 +142,9 @@ GROUP BY user_id
 
 @register("q_stream_stateful_totals", oracle=_ORACLE_STATEFUL_TOTALS, tier="X")
 def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running totals — batch twin of the custom
-    applyInPandasWithState operator (streaming/ops.py:
-    user_running_totals_stream); stream-equals-batch is asserted in
-    tests/test_streaming.py."""
+    """Per-user running totals — the state a drained per-user
+    running-totals stream holds, computed as one batch aggregation
+    (streaming/ops.py: user_running_totals_batch)."""
     return ops.user_running_totals_batch(load(spark, sf_dir, "events"))
 
 

@@ -98,7 +98,8 @@ def with_watermark_filter(events: DataFrame, tolerance: str = "10 minutes") -> D
 
 
 def user_running_totals_batch(events: DataFrame) -> DataFrame:
-    """Batch twin of user_running_totals_stream (drained-stream state)."""
+    """Per-user event count and rounded value sum: the state a drained
+    per-user running-totals stream holds."""
     return events.groupBy("user_id").agg(
         F.count("*").alias("n_events"),
         F.round(F.sum("value"), 2).alias("sum_value"),

@@ -11,6 +11,7 @@ import pytest
 from database_cloner_spark.pipeline import CloneConfig, ClonePipeline
 from database_cloner_spark.pipeline.verify import diff_counts, verify_clone
 from database_cloner_spark.sources.parquet import load
+from tests.spark_jobs import jobs_started
 
 SF = "/root/testdata/sf0.001"
 
@@ -402,16 +403,8 @@ def test_metadata_phase_starts_no_spark_job(spark, seeded_clone):
 
     cfg, result = seeded_clone
     ps, target = result.principals, cfg.target_dir
-    sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
-    group = "test-metadata-phase"
 
-    def jobs() -> list:
-        bus.waitUntilEmpty()
-        return list(sc.statusTracker().getJobIdsForGroup(group))
-
-    sc.setJobGroup(group, "metadata phase")
-    try:
+    def metadata_phase() -> None:
         for name, columns, rows in (
             ("_principals", prin.PRINCIPAL_COLUMNS, prin.principal_rows(ps)),
             ("_grants", prin.GRANT_COLUMNS, prin.grant_rows(ps)),
@@ -427,12 +420,22 @@ def test_metadata_phase_starts_no_spark_job(spark, seeded_clone):
         log.flush()
         report = probe.test_user_connections(target, lb_host="pg-lb.internal")
         assert report.ok and len(report.rows) == 5
-        assert jobs() == []
-        spark.range(1).count()  # control: jobs from this thread are seen
-        assert jobs()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+
+    assert jobs_started(spark, metadata_phase) == 0
+    # control: jobs from this thread are seen
+    assert jobs_started(spark, lambda: spark.range(1).count()) >= 1
+
+
+def test_write_round_trip_starts_two_jobs(spark, tmp_path):
+    """The clone pre-flight writes its one-row probe (one job) and reads
+    it back through the schema it wrote (one job): no schema-inference
+    job in between."""
+    from database_cloner_spark.pipeline import verify
+
+    ok = []
+    assert jobs_started(spark, lambda: ok.append(verify.write_round_trip(spark, str(tmp_path)))) == 2
+    assert ok == [True]
+    assert not os.path.exists(tmp_path / "_write_probe.parquet")
 
 
 def test_principal_probe_skip_semantics(spark, tmp_path):

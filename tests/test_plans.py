@@ -17,6 +17,7 @@ import pytest
 
 from database_cloner_spark.registry import all_queries, get_query, tables_used
 from tests.plan_cache import plan_of
+from tests.spark_jobs import jobs_started
 
 # Queries whose plans legitimately contain BroadcastNestedLoopJoin:
 # every one broadcasts a bounded tiny frame (a 1-row scalar — probe
@@ -93,6 +94,38 @@ def test_scanned_tables_within_tables_used(spark):
         if missing:
             offenders[name] = sorted(missing)
     assert not offenders, offenders
+
+
+def _normalized(plan: str) -> str:
+    """A plan string without its per-build counters: expression ids,
+    plan ids and the numbers PySpark appends to lambda variable names."""
+    plan = re.sub(r"#\d+L?", "#", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
+    return re.sub(r"(lambda [A-Za-z]+)_\d+#", r"\1#", plan)
+
+
+def test_schema_memo_leaves_plans_unchanged(spark):
+    """The headline keys build the same optimized plan whether the
+    loader infers each table's schema (cleared memo) or reads through
+    the schema it resolved earlier in the session; the warm build starts
+    no Spark job."""
+    from bench import HEADLINE
+    from database_cloner_spark.sources import parquet as pq_src
+
+    def optimized(name: str) -> str:
+        df = get_query(name).builder(spark, SF_DIR)
+        return _normalized(df._jdf.queryExecution().optimizedPlan().toString())
+
+    differ, warm_jobs = [], {}
+    for name in HEADLINE:
+        pq_src._RESOLVED.pop(spark, None)
+        cold = optimized(name)
+        warm = []
+        warm_jobs[name] = jobs_started(spark, lambda n=name: warm.append(optimized(n)))
+        if warm != [cold]:
+            differ.append(name)
+    assert not differ, differ
+    assert not any(warm_jobs.values()), warm_jobs
 
 
 def test_flagship_pushdown_and_partial_agg(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 from database_cloner_spark.sources.kv_config import read_config, read_kv_df
+from tests.spark_jobs import jobs_started
 
 
 def test_kv_config(spark, tmp_path):
@@ -105,11 +106,12 @@ def test_load_pushes_timestamp_filter_to_scan(spark):
 
     from database_cloner_spark.sources.parquet import load
 
-    df = load(spark, "/root/testdata/sf0.001", "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
+    for _ in range(2):  # the second load reads through the resolved schema
+        df = load(spark, "/root/testdata/sf0.001", "lineitem").filter(
+            F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
+        )
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
 
 
 def test_load_handles_nested_ntz_fields(spark, tmp_path):
@@ -161,9 +163,139 @@ def test_load_tz_pin_is_optout_and_warns_once(spark, sf_dir, caplog):
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
         warns = [r for r in caplog.records if "pinning" in r.message]
         assert len(warns) == 1
+
+        # a UTC alias (the JVM default on many hosts) is pinned silently
+        caplog.clear()
+        pq_src._TZ_WARNED.clear()
+        spark.conf.set("spark.sql.session.timeZone", "Etc/UTC")
+        with caplog.at_level(logging.WARNING, logger=pq_src.__name__):
+            pq_src.load(spark, sf_dir, "region")
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        assert [r for r in caplog.records if "pinning" in r.message] == []
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
         pq_src._TZ_WARNED.clear()
+
+
+# -- per-session schema memo of the parquet loader ---------------------------
+
+
+def test_load_resolves_schema_once_per_session(spark, tmp_path):
+    """The first load of a table runs Spark's schema-inference job; a
+    second load of the unchanged table reads through the resolved schema
+    and starts no job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from database_cloner_spark.sources.parquet import load
+
+    pq.write_table(pa.table({"k": [1, 2, 3]}), str(tmp_path / "t.parquet"))
+    assert jobs_started(spark, lambda: load(spark, str(tmp_path), "t")) == 1
+    assert jobs_started(spark, lambda: load(spark, str(tmp_path), "t")) == 0
+    assert load(spark, str(tmp_path), "t").count() == 3
+
+
+def test_load_sees_rewrite_at_same_path(spark, tmp_path):
+    """A rewrite at the same path is resolved afresh: a pyarrow file
+    rewritten at once with a new column type, a rewrite that keeps the
+    size and mtime (only the footer tells), and a Spark-written
+    directory overwritten in place."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from database_cloner_spark.sources.parquet import load
+
+    d, path = str(tmp_path), str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"v": pa.array([1, 2], pa.int64())}), path)
+    assert dict(load(spark, d, "t").dtypes) == {"v": "bigint"}
+    pq.write_table(pa.table({"v": pa.array(["a", "b"])}), path)
+    assert dict(load(spark, d, "t").dtypes) == {"v": "string"}
+
+    pq.write_table(pa.table({"x": pa.array([1, 2], pa.int64())}), path)
+    st = os.stat(path)
+    assert dict(load(spark, d, "t").dtypes) == {"x": "bigint"}
+    pq.write_table(pa.table({"y": pa.array([1, 2], pa.int64())}), path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(path).st_size == st.st_size  # the stat is unchanged
+    assert dict(load(spark, d, "t").dtypes) == {"y": "bigint"}
+
+    spark.range(3).selectExpr("id AS v").write.parquet(str(tmp_path / "s.parquet"))
+    assert dict(load(spark, d, "s").dtypes) == {"v": "bigint"}
+    spark.range(3).selectExpr("CAST(id AS STRING) AS v").write.mode("overwrite").parquet(
+        str(tmp_path / "s.parquet")
+    )
+    df = load(spark, d, "s")
+    assert dict(df.dtypes) == {"v": "string"}
+    assert sorted(r.v for r in df.collect()) == ["0", "1", "2"]
+
+
+def test_load_memo_follows_schema_confs(spark, tmp_path):
+    """A conf that changes the inferred schema (here binaryAsString) is
+    part of the memo key: flipping it re-resolves the same file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from database_cloner_spark.sources.parquet import load
+
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), str(tmp_path / "t.parquet"))
+    conf = "spark.sql.parquet.binaryAsString"
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "false")
+        assert dict(load(spark, str(tmp_path), "t").dtypes) == {"b": "binary"}
+        spark.conf.set(conf, "true")
+        assert dict(load(spark, str(tmp_path), "t").dtypes) == {"b": "string"}
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def test_load_nanos_column_same_on_miss_and_hit(spark, tmp_path):
+    """A pyarrow TIMESTAMP(NANOS) column arrives as a timestamp with the
+    same microseconds whether the schema is resolved or reused."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from database_cloner_spark.sources.parquet import load
+
+    ns = [1_700_000_000_123_456_789, -86_400_000_000_000]
+    path = str(tmp_path / "ev.parquet")
+    pq.write_table(pa.table({"ts": pa.array(ns, pa.timestamp("ns"))}), path, version="2.6")
+    assert pq.read_schema(path).field("ts").type == pa.timestamp("ns")
+    for _ in ("miss", "hit"):
+        df = load(spark, str(tmp_path), "ev")
+        assert dict(df.dtypes) == {"ts": "timestamp"}
+        got = [r.us for r in df.select(F.unix_micros("ts").alias("us")).collect()]
+        assert got == [n // 1000 for n in ns]
+
+
+def test_load_memo_is_per_session(spark, tmp_path):
+    """A new session starts with a cold memo, and a session no longer
+    referenced releases its entries."""
+    import gc
+    import weakref
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from database_cloner_spark.sources import parquet as pq_src
+
+    from pyspark.sql.session import _monkey_patch_RDD
+
+    pq.write_table(pa.table({"k": [1]}), str(tmp_path / "t.parquet"))
+    pq_src.load(spark, str(tmp_path), "t")
+    other = spark.newSession()
+    # Constructing a session points RDD.toDF at it; point it back so the
+    # new session can be released and later tests keep the fixture's.
+    _monkey_patch_RDD(spark)
+    assert other not in pq_src._RESOLVED
+    assert jobs_started(other, lambda: pq_src.load(other, str(tmp_path), "t")) == 1
+    assert jobs_started(other, lambda: pq_src.load(other, str(tmp_path), "t")) == 0
+    gone = weakref.ref(other)
+    del other
+    gc.collect()
+    assert gone() is None  # and with it its weakly keyed entries
+    assert spark in pq_src._RESOLVED
 
 
 # -- ORC source (mixed-format lake; q_scan_orc) -----------------------------
