@@ -21,7 +21,9 @@ Deliberate improvements over the reference for 100 TB:
   dataset through client disk, :805-818): executors stream source
   row-groups straight to target files.
 - Content verification is a constant-memory distributed reduction, not a
-  row dump.
+  row dump, and it does not re-read the source: the write observes the
+  source's row count and fingerprint in the same pass, and only the
+  target is read back (one source scan per table).
 """
 
 from __future__ import annotations
@@ -240,37 +242,26 @@ class ClonePipeline:
             sort_col = (self.cfg.sort_within_partitions_by or {}).get(table)
             if sort_col:
                 out = out.sortWithinPartitions(sort_col)
+            # The write reports the source's row count and fingerprint:
+            # verification reads only the target back.
+            out, seen = verify.observe_fingerprint(out)
             if self.cfg.jdbc_target is not None:
-                return self._clone_table_to_jdbc(table, tgt_name, src, out)
+                return self._clone_table_to_jdbc(table, tgt_name, src, out, seen)
             writer = out.write.mode("overwrite")
             part_col = (self.cfg.partition_by or {}).get(table)
             if part_col:
                 writer = writer.partitionBy(part_col)
             writer.parquet(tgt_path)
-
-            dst = self.spark.read.parquet(tgt_path)
-            verified: bool | None = None
-            if self.cfg.verify_clone:
-                # NOTE: dst is re-read, and events-style nanos columns were
-                # normalized to micros by load(); fingerprints compare the
-                # written content, so both sides go through the same path.
-                report = verify.verify_clone(src, dst)
-                verified = report["match"]
-                if not verified:
-                    return TableResult(
-                        table, tgt_name, "failed", rows=report["dst_rows"],
-                        verified=False, error=f"fingerprint mismatch: {report}",
-                    )
-                n = report["dst_rows"]
-            else:
-                n = dst.count()
-            self.log.success(f"Successfully cloned {table} -> {tgt_name} ({n} rows)")
-            return TableResult(table, tgt_name, "cloned", rows=n, verified=verified)
+            # NOTE: dst is re-read, and events-style nanos columns were
+            # normalized to micros by load(); fingerprints compare the
+            # written content, so both sides go through the same path.
+            dst = self.spark.read.parquet(tgt_path) if self.cfg.verify_clone else None
+            return self._written(table, tgt_name, src, seen, dst)
         except Exception as ex:  # noqa: BLE001 — per-db error isolation (CS:1057-1059)
             self.log.error(f"Failed to clone {table}: {ex}")
             return TableResult(table, tgt_name, "failed", error=str(ex))
 
-    def _clone_table_to_jdbc(self, table, tgt_name, src, out) -> TableResult:
+    def _clone_table_to_jdbc(self, table, tgt_name, src, out, seen) -> TableResult:
         """Live-server restore half (clone_databases.sh:817-818):
         executors stream straight into batched inserts, one connection
         per partition. The filesystem guards above (skip-if-exists,
@@ -290,19 +281,27 @@ class ClonePipeline:
             mode="overwrite" if self.cfg.overwrite else "error",
         )
         spec = (self.cfg.jdbc_partition or {}).get(table)
-        verified: bool | None = None
+        dst = None
         if self.cfg.verify_clone and spec is not None:
             dst = jdbc.load_table(self.spark, self.cfg.jdbc_target, tgt_name, spec)
-            report = verify.verify_clone(src, dst)
+        return self._written(table, tgt_name, src, seen, dst)
+
+    def _written(self, table, tgt_name, src, seen, dst) -> TableResult:
+        """Result of a table whose write succeeded. Its rows are the count
+        `seen` observed on the write; given `dst`, the target read back,
+        the clone is verified against it first."""
+        src_fp = verify.observed_fingerprint(seen)
+        verified: bool | None = None
+        n = src_fp.n_rows
+        if dst is not None:
+            report = verify.verify_clone(src, dst, src_fp=src_fp)
             verified = report["match"]
             if not verified:
                 return TableResult(
                     table, tgt_name, "failed", rows=report["dst_rows"],
                     verified=False, error=f"fingerprint mismatch: {report}",
                 )
-            n = report["src_rows"]
-        else:
-            n = src.count()
+            n = report["dst_rows"]
         self.log.success(f"Successfully cloned {table} -> {tgt_name} ({n} rows)")
         return TableResult(table, tgt_name, "cloned", rows=n, verified=verified)
 

@@ -22,26 +22,61 @@ Spark-first design:
    (`spark.sql.sources.partitionOverwriteMode=dynamic`): the write
    touches exactly the changed chunk directories; unchanged chunks'
    files are never opened.
+4. The rewrite reports its own row count and the chunks it wrote
+   (`DataFrame.observe` on the write job), and the target's chunk
+   directories are listed on the driver (`read_chunked`): no Spark job
+   runs only to count rows, collect chunk ids or list files.
 
-Cost of a re-sync = 2 fingerprint scans + rewrite of changed chunks.
-With n_chunks sized so a chunk ~ a few GB, a 0.1% drift on 100 TB
-rewrites ~max(changed_rows spread, a few chunks) instead of 100 TB.
-The fingerprint scan of the TARGET side reads parquet that the clone
-itself wrote — at 1000 executors both scans are embarrassingly
-parallel and column-pruned to the key + hashed columns.
+Cost of a re-sync = 2 fingerprint scans + one clustered rewrite of the
+changed chunks (one file per chunk). With n_chunks sized so a chunk ~ a
+few GB, a 0.1% drift on 100 TB rewrites ~max(changed_rows spread, a few
+chunks) instead of 100 TB. The fingerprint scan of the TARGET side reads
+parquet that the clone itself wrote — at 1000 executors both scans are
+embarrassingly parallel and column-pruned to the key + hashed columns.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from database_cloner_spark.pipeline.verify import row_hash
 
 CHUNK_COL = "__chunk"
+
+
+@contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str):
+    """Set one SQL conf for the block, then put back what was set
+    before (or unset it)."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def read_chunked(spark: SparkSession, target_path: str) -> DataFrame:
+    """A chunk-partitioned target this pipeline wrote, with its files
+    listed on the driver. Past `parallelPartitionDiscovery.threshold`
+    (32) directories Spark lists with a distributed job, one task per
+    directory: 256 tasks, about 1 s on 4 cores, for a 256-chunk target.
+    That spreads a remote store's listing latency; the pipeline's
+    targets are local directories (it creates and lists them with `os`),
+    which the driver lists in milliseconds. Only this read is changed:
+    source reads keep Spark's parallel listing."""
+    with _session_conf(
+        spark, "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+    ):
+        return spark.read.parquet(target_path)
 
 
 def with_chunk(df: DataFrame, key_col: str, n_chunks: int) -> DataFrame:
@@ -80,29 +115,31 @@ def changed_chunks(
     return sorted(r[CHUNK_COL] for r in diff.collect())
 
 
-def rewrite_chunks(
-    rows: DataFrame, target_path: str, chunks: list[int], write: bool = True
-) -> None:
+def rewrite_chunks(rows: DataFrame, target_path: str, chunks: list[int]) -> int:
     """Replace the target's `chunks` with `rows` (chunk-tagged, holding
-    rows of those chunks only). mode=overwrite under dynamic partition
-    overwrite replaces ONLY the partitions present in `rows`; a chunk
-    left with no rows stays stale unless its directory is removed
-    explicitly (control-plane op, bytes not rows). `write=False` skips
-    the write for a caller that already knows `rows` is empty."""
-    spark = rows.sparkSession
-    if write:
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            rows.write.mode("overwrite").partitionBy(CHUNK_COL).parquet(target_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    present = {r[CHUNK_COL] for r in rows.select(CHUNK_COL).distinct().collect()}
+    rows of those chunks only) and return how many rows were written.
+    Rows are clustered by chunk first, so each rewritten chunk is one
+    file. mode=overwrite under dynamic partition overwrite replaces ONLY
+    the partitions present in `rows`; a chunk left with no rows stays
+    stale unless its directory is removed explicitly (control-plane op,
+    bytes not rows). The row count and the chunks present are observed
+    on the write itself."""
+    seen = Observation()
+    out = rows.repartition(CHUNK_COL).observe(
+        seen, F.count(F.lit(1)).alias("n"), F.collect_set(CHUNK_COL).alias("chunks")
+    )
+    with _session_conf(
+        rows.sparkSession, "spark.sql.sources.partitionOverwriteMode", "dynamic"
+    ):
+        out.write.mode("overwrite").partitionBy(CHUNK_COL).parquet(target_path)
+    got = seen.get
+    present = set(got["chunks"])
     for c in chunks:
         if c not in present:
             shutil.rmtree(
                 os.path.join(target_path, f"{CHUNK_COL}={c}"), ignore_errors=True
             )
+    return got["n"]
 
 
 def incremental_clone(
@@ -125,7 +162,7 @@ def incremental_clone(
             "rows_rewritten": -1,  # full write; count not re-scanned
         }
 
-    dst = spark.read.parquet(target_path).drop(CHUNK_COL)
+    dst = read_chunked(spark, target_path).drop(CHUNK_COL)
     # Schema drift: a plain-parquet target cannot hold mixed per-chunk
     # physical schemas (Spark refuses to merge int/bigint file schemas),
     # so ANY drift triggers one explicit migration rewrite — detected
@@ -158,8 +195,7 @@ def incremental_clone(
     delta = with_chunk(src, key_col, n_chunks).filter(
         F.col(CHUNK_COL).isin([int(c) for c in chunks])
     )
-    n = delta.count()
-    rewrite_chunks(delta, target_path, chunks, write=n > 0)
+    n = rewrite_chunks(delta, target_path, chunks)
     return {
         "mode": "incremental",
         "n_chunks": n_chunks,

@@ -4,8 +4,10 @@ The reference only existence-checks its clones (clone_databases.sh:791,
 :227-231) and probes connectivity (:480-551). A real engine must verify
 content. Three levels, all distributed (no driver-side row transfer):
 
-1. fingerprint: count + order-insensitive row-hash sum + per-numeric-column
-   checksums — one pass per table.
+1. fingerprint: count + order-insensitive row-hash sum — one pass per
+   table. The clone takes the source side from its own write
+   (`observe_fingerprint`), so the source is scanned once, by the write;
+   only the target is read back for its fingerprint.
 2. diff: exceptAll in both directions — exact row multiset equality, with
    the differing rows available when it fails.
 3. write round-trip: the reference's `insertOne({test:1})` / `deleteOne`
@@ -16,7 +18,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -45,17 +47,34 @@ def row_hash(df: DataFrame) -> Column:
     return F.xxhash64(*_hashable_cols(df)).cast("decimal(38,0)")
 
 
+def _fingerprint_cols(df: DataFrame) -> list[Column]:
+    return [F.count(F.lit(1)).alias("n"), F.sum(row_hash(df)).alias("h")]
+
+
 def fingerprint(df: DataFrame) -> TableFingerprint:
     """One-pass content fingerprint. The row hash is xxhash64 over all
     columns, summed as DECIMAL(38,0): order-insensitive, overflow-free,
     duplicate-sensitive (unlike XOR, two identical rows don't cancel).
     Scales as a single partial-aggregated reduction — constant-size state
     per partition regardless of table size."""
-    row = df.agg(
-        F.count("*").alias("__n"),
-        F.sum(row_hash(df)).alias("__h"),
-    ).collect()[0]
-    return TableFingerprint(n_rows=row["__n"], row_hash_sum=str(row["__h"]))
+    row = df.agg(*_fingerprint_cols(df)).collect()[0]
+    return TableFingerprint(n_rows=row["n"], row_hash_sum=str(row["h"]))
+
+
+def observe_fingerprint(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """`df` with `fingerprint(df)` observed on it: the first action on
+    the returned frame (the clone's write) computes the same count and
+    hash sum in its own pass, so the source is not scanned again. Read
+    it with `observed_fingerprint` once that action has succeeded;
+    before, `Observation.get` blocks."""
+    obs = Observation()
+    return df.observe(obs, *_fingerprint_cols(df)), obs
+
+
+def observed_fingerprint(obs: Observation) -> TableFingerprint:
+    """The fingerprint an `observe_fingerprint` observation holds."""
+    got = obs.get
+    return TableFingerprint(n_rows=got["n"], row_hash_sum=str(got["h"]))
 
 
 def _align_to(src: DataFrame, dst: DataFrame) -> DataFrame:
@@ -85,12 +104,18 @@ def diff_counts(src: DataFrame, dst: DataFrame) -> tuple[int, int]:
     return only_src, only_dst
 
 
-def verify_clone(src: DataFrame, dst: DataFrame) -> dict:
+def verify_clone(
+    src: DataFrame, dst: DataFrame, src_fp: TableFingerprint | None = None
+) -> dict:
     """Fingerprint compare; a deep multiset diff on a mismatch.
 
-    The deep diff is AUTHORITATIVE: a clean two-way exceptAll with equal
-    row counts IS multiset equality, so it overrides a fingerprint-only
-    mismatch."""
+    `src_fp` is the source fingerprint observed on the write that made
+    `dst` (`observe_fingerprint`); without it the source is scanned.
+
+    The deep diff is AUTHORITATIVE: a clean two-way exceptAll IS
+    multiset equality, so it overrides a fingerprint-only mismatch. It
+    does not use the fingerprints' row counts, so a wrong `src_fp` can
+    only cost the diff, never flip the verdict."""
     if set(src.columns) != set(dst.columns):
         return {
             "match": False,
@@ -99,7 +124,8 @@ def verify_clone(src: DataFrame, dst: DataFrame) -> dict:
             "error": f"column sets differ: {sorted(src.columns)} vs {sorted(dst.columns)}",
         }
     dst = _align_to(src, dst)
-    fs, fd = fingerprint(src), fingerprint(dst)
+    fs = src_fp if src_fp is not None else fingerprint(src)
+    fd = fingerprint(dst)
     ok = fs == fd
     result = {
         "match": ok,
@@ -112,9 +138,7 @@ def verify_clone(src: DataFrame, dst: DataFrame) -> dict:
         only_src, only_dst = diff_counts(src, dst)
         result["only_in_src"] = only_src
         result["only_in_dst"] = only_dst
-        result["match"] = (
-            only_src == 0 and only_dst == 0 and fs.n_rows == fd.n_rows
-        )
+        result["match"] = only_src == 0 and only_dst == 0
     return result
 
 

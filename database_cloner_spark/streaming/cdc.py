@@ -14,13 +14,14 @@ key wins (a key may be upserted then deleted in the same batch).
 Scale mechanics, per micro-batch:
 - touched chunk ids = distinct pmod(xxhash64(key), n_chunks) of the
   batch — collected driver-side, bounded by batch size, typically a
-  handful;
+  handful, in the same aggregate as the upsert and delete counts;
 - ONLY those chunk partitions of the target are read (partition
-  pruning on the chunk directory layout from pipeline/incremental.py);
+  pruning on the chunk directory layout from pipeline/incremental.py,
+  whose directories the driver lists);
 - survivors (existing rows whose key is absent from the batch) union
   the batch's final upserts, written back with dynamic partition
-  overwrite — untouched chunks' files are never opened, read, or
-  rewritten;
+  overwrite, one file per touched chunk — untouched chunks' files are
+  never opened, read, or rewritten;
 - a touched chunk left with zero rows is deleted explicitly (dynamic
   overwrite cannot replace a partition with nothing).
 """
@@ -35,6 +36,7 @@ from pyspark.sql import Window as W
 
 from database_cloner_spark.pipeline.incremental import (
     CHUNK_COL,
+    read_chunked,
     rewrite_chunks,
     with_chunk,
 )
@@ -60,11 +62,16 @@ def apply_cdc_batch(
     win = with_chunk(win, key_col, n_chunks)
     payload_cols = [c for c in win.columns if c not in ("op", "seq")]
     upserts = win.filter(F.col("op") == "upsert").select(*payload_cols)
-    touched = sorted(
-        r[CHUNK_COL] for r in win.select(CHUNK_COL).distinct().collect()
-    )
-    n_up = upserts.count()
-    n_del = win.count() - n_up
+    # One action for the touched chunks and both counts: each action
+    # recomputes the per-key window.
+    stats = win.agg(
+        F.collect_set(CHUNK_COL).alias("touched"),
+        F.count_if(F.col("op") == "upsert").alias("n_up"),
+        F.count(F.lit(1)).alias("n"),
+    ).first()
+    touched = sorted(stats["touched"])
+    n_up = stats["n_up"]
+    n_del = stats["n"] - n_up
 
     # Existence = any chunk directory present. NOT the _SUCCESS marker:
     # dynamic-partition-overwrite commits (this writer's own mode) don't
@@ -73,7 +80,7 @@ def apply_cdc_batch(
     import glob
 
     if glob.glob(os.path.join(target_path, f"{CHUNK_COL}=*")):
-        existing = spark.read.parquet(target_path).filter(
+        existing = read_chunked(spark, target_path).filter(
             F.col(CHUNK_COL).isin([int(c) for c in touched])
         )
         survivors = existing.join(

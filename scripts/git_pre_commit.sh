@@ -13,8 +13,8 @@
 # registry.py, session.py or __spark_entry__.py (plan + parity gates,
 # ~5 min at sf0.001; every key loads through sources/ and runs in the
 # session.py factory's conf) — or
-# the clone pipeline, database_cloner_spark/pipeline/ (the clone suite,
-# ~1 min). Plain doc/test/bench commits pay nothing. `git commit --no-verify` bypasses for WIP snapshots ONLY —
+# the clone pipeline, database_cloner_spark/pipeline/ (the clone,
+# incremental and write-path suites, ~2 min). Plain doc/test/bench commits pay nothing. `git commit --no-verify` bypasses for WIP snapshots ONLY —
 # never for a commit that adds or edits a registered key.
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
@@ -55,7 +55,7 @@ if grep -qE "$TRIGGER" <<<"$CHANGED"; then
     python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py tests/test_ledger.py -q
   fi
   if grep -qE "^$PIPELINE" <<<"$CHANGED"; then
-    echo "[pre-commit] staged diff touches the clone pipeline -> running the clone suite (~1 min)"
-    python -m pytest tests/test_clone_pipeline.py -q
+    echo "[pre-commit] staged diff touches the clone pipeline -> running the clone + incremental + write-path suites (~2 min)"
+    python -m pytest tests/test_clone_pipeline.py tests/test_incremental.py tests/test_clone_sync_writes.py -q
   fi
 fi

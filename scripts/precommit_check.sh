@@ -56,8 +56,9 @@ if grep -qE "^($QUERY)" <<<"$CHANGED"; then
   python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py tests/test_ledger.py -q
 fi
 # A pipeline-only diff changes no key, but it can break the clone,
-# its metadata tables, reports and probes: run the clone suite.
+# its metadata tables, reports and probes, the re-sync, or the write
+# paths' job counts: run the clone, incremental and write-path suites.
 if grep -qE "^$PIPELINE" <<<"$CHANGED"; then
-  echo "[precommit_check] clone-pipeline diff detected -> clone suite"
-  python -m pytest tests/test_clone_pipeline.py -q
+  echo "[precommit_check] clone-pipeline diff detected -> clone + incremental + write-path suites"
+  python -m pytest tests/test_clone_pipeline.py tests/test_incremental.py tests/test_clone_sync_writes.py -q
 fi
