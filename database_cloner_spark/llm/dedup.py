@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from database_cloner_spark.functions import ranks
 from database_cloner_spark.functions.partitioning import spread
 from database_cloner_spark.llm.textprep import (
     normalized,
@@ -886,9 +887,7 @@ def embedding_neardup_bucketed(
     # embedding) up to 64-bit hash collisions (the text-dedup tiers'
     # long-standing 8-byte-key posture). vec_id is near-unique at
     # scale, so partition count and shuffle shape are unchanged.
-    w = W.partitionBy("vec_id", F.xxhash64("embedding")).orderBy(
-        F.desc("sim"), F.asc("cell_id")
-    )
+    per_vector = ["vec_id", F.xxhash64("embedding")]
     # r13 execution rewrite (results identical, oracle unchanged): the
     # within-cell self-join + per-pair interpreted cosine fold (2.25M
     # folds at sf0.1 — 6.6s of the key) is replaced by ONE numpy pass
@@ -898,8 +897,7 @@ def embedding_neardup_bucketed(
     # tests' exact-equality contract holds); norms are recomputed
     # inside with the identical fold the carried `nrm` column used.
     assigned = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= nprobe)
+        ranks.top(scored, per_vector, [F.desc("sim"), F.asc("cell_id")], nprobe)
         .select("cell_id", "vec_id", F.col("embedding").alias("v"))
         .withColumn("role", F.lit("b"))
     )

@@ -13,8 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
+from database_cloner_spark.functions import ranks
 from database_cloner_spark.functions.partitioning import spread
 from database_cloner_spark.functions.vector import cosine as _cosine
 from database_cloner_spark.functions.vector import dot as _dot
@@ -50,7 +50,7 @@ def multi_probe_topk(
     amortizes the scan when many probes arrive together (dedup lookup
     batches, eval-set retrieval). The probe set broadcasts (n_probes
     rows); scoring is a map-side JVM fold per (vector, probe); the
-    per-probe ranking is row_number over probe_id filtered to k, which
+    per-probe ranking is functions/ranks.top over probe_id, which
     plans as WindowGroupLimit — per-partition top-k heaps shuffle at
     most k·n_map_partitions rows per probe, never the scored corpus.
     At 100 TB with p probes this is one scan + a k·p-row result; the
@@ -63,16 +63,12 @@ def multi_probe_topk(
         "vec_id",
         _cosine(F.col("embedding"), F.col("probe")).alias("cosine"),
     )
-    w = W.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            "probe_id",
-            "vec_id",
-            F.round("cosine", 4).alias("cosine"),
-            "rn",
-        )
+    order = [F.desc("cosine"), F.asc("vec_id")]
+    return ranks.top(scored, ["probe_id"], order, k, rank="rn").select(
+        "probe_id",
+        "vec_id",
+        F.round("cosine", 4).alias("cosine"),
+        "rn",
     )
 
 
@@ -141,14 +137,9 @@ def kmeans_centroids(
             "cell_id",
             _cosine(F.col("embedding"), F.col("centroid")).alias("sim"),
         )
-        w = W.partitionBy("vec_id", "embedding").orderBy(
-            F.desc("sim"), F.asc("cell_id")
-        )
-        assigned = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("cell_id", "embedding")
-        )
+        assigned = ranks.top(
+            scored, ["vec_id", "embedding"], [F.desc("sim"), F.asc("cell_id")]
+        ).select("cell_id", "embedding")
         dims = assigned.select(
             "cell_id", F.posexplode("embedding").alias("dim", "v")
         ).withColumn("qv", quantize(F.col("v")))
@@ -193,13 +184,9 @@ def ivf_assign(
     # (sim, cell) — e.g. two rows symmetric about a refined centroid —
     # and the surviving row must be the same one the DuckDB oracle
     # keeps (asc_nulls_last = DuckDB's default list ordering)
-    w = W.partitionBy("vec_id").orderBy(
-        F.desc("sim"), F.asc("cell_id"), F.asc_nulls_last("embedding")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("cell_id", "vec_id", "embedding")
+    order = [F.desc("sim"), F.asc("cell_id"), F.asc_nulls_last("embedding")]
+    return ranks.top(scored, ["vec_id"], order).select(
+        "cell_id", "vec_id", "embedding"
     )
 
 
@@ -379,14 +366,11 @@ def pq_codebooks(
             "code",
             _l2sq(F.col("subvec"), F.col("codeword")).alias("d2"),
         )
-        w = W.partitionBy("vec_id", "sub", "subvec").orderBy(
-            F.asc_nulls_last("d2"), F.asc("code")
-        )
-        members = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("sub", "code", "subvec")
-        )
+        members = ranks.top(
+            scored,
+            ["vec_id", "sub", "subvec"],
+            [F.asc_nulls_last("d2"), F.asc("code")],
+        ).select("sub", "code", "subvec")
         dims_ = members.select(
             "sub", "code", F.posexplode("subvec").alias("dim", "v")
         )
@@ -418,7 +402,7 @@ def pq_encode(
     At dim=64/m=8/k=16 that is 8 bytes of codes per vector instead of
     512 bytes of float64 — a 64× compression that lets a 100 TB
     embedding corpus's index fit hot in cluster memory. The argmin is a
-    row_number over a broadcast m×k codebook join; codes are
+    per-row top-1 over a broadcast m×k codebook join; codes are
     re-assembled in subspace order."""
     scored = pq_subvectors(embs, m, dim).join(F.broadcast(codebooks), "sub").select(
         "vec_id",
@@ -430,12 +414,12 @@ def pq_encode(
     # (vec_id, sub, subvec) partition + asc NULLS LAST: per-row argmin
     # determinism under duplicate vec_ids, NULL distances (NULL/garbage
     # vectors) rank after NaN after numbers on both engines
-    w = W.partitionBy("vec_id", "sub", "subvec").orderBy(
-        F.asc_nulls_last("d2"), F.asc("code")
-    )
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        ranks.top(
+            scored,
+            ["vec_id", "sub", "subvec"],
+            [F.asc_nulls_last("d2"), F.asc("code")],
+        )
         .groupBy("vec_id")
         .agg(
             F.transform(

@@ -10,8 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
+from database_cloner_spark.functions import ranks
 from database_cloner_spark.functions.partitioning import spread
 from database_cloner_spark.llm.textprep import tokens
 
@@ -201,33 +201,29 @@ def language_id(docs: DataFrame, profile_size: int = 40) -> DataFrame:
         # Same lineage-cut pattern as the connected-components rounds.
         .localCheckpoint(eager=False)
     )
-    w = W.partitionBy("lang").orderBy(F.desc("n"), F.asc("tg"))
-    profiles = (
-        # NULL-labeled docs cannot TRAIN a profile (no language to
-        # learn) — and a NULL profile_lang would hit the asc tie-break
-        # where Spark sorts it FIRST and DuckDB LAST (r10 adversarial
-        # docs sweep). Unlabeled docs are still classified below.
+    # NULL-labeled docs cannot TRAIN a profile (no language to learn)
+    # — and a NULL profile_lang would hit the asc tie-break where Spark
+    # sorts it FIRST and DuckDB LAST (r10 adversarial docs sweep).
+    # Unlabeled docs are still classified below.
+    counts = (
         tri.filter(F.col("lang").isNotNull())
         .groupBy("lang", "tg")
         .agg(F.count("*").alias("n"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= profile_size)
-        .select(F.col("lang").alias("profile_lang"), "tg")
     )
+    profiles = ranks.top(
+        counts, ["lang"], [F.desc("n"), F.asc("tg")], profile_size
+    ).select(F.col("lang").alias("profile_lang"), "tg")
     scored = (
         tri.join(F.broadcast(profiles), "tg")
         .groupBy("doc_id", "lang", "profile_lang")
         .agg(F.count("*").alias("score"))
     )
-    w2 = W.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("profile_lang"))
-    best = (
-        scored.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") == 1)
-        .select(
-            "doc_id",
-            F.col("profile_lang").alias("predicted_lang"),
-            "score",
-        )
+    best = ranks.top(
+        scored, ["doc_id"], [F.desc("score"), F.asc("profile_lang")]
+    ).select(
+        "doc_id",
+        F.col("profile_lang").alias("predicted_lang"),
+        "score",
     )
     # Restore docs with no classifiable trigrams (shorter than 3 chars,
     # or sharing no trigram with any profile): one row per INPUT doc,

@@ -152,37 +152,35 @@ def incremental_clone(
     """Sync `target_path` to `src`. First run writes the full table
     partitioned by chunk; later runs rewrite only changed chunks.
     Returns {"mode", "n_chunks", "changed", "rows_rewritten"}."""
-    if not os.path.exists(os.path.join(target_path, "_SUCCESS")):
-        out = with_chunk(src, key_col, n_chunks)
+    drift = None
+    if os.path.exists(os.path.join(target_path, "_SUCCESS")):
+        dst = read_chunked(spark, target_path).drop(CHUNK_COL)
+        # Schema drift: a plain-parquet target cannot hold mixed
+        # per-chunk physical schemas (Spark refuses to merge int/bigint
+        # file schemas), so ANY drift triggers one explicit migration
+        # rewrite — detected up front from metadata, never discovered
+        # mid-sync as a hash storm of spuriously-"changed" chunks
+        # (xxhash64 is type-sensitive). Table formats with per-file
+        # schema metadata could instead cast at read time and keep the
+        # rewrite incremental.
+        from database_cloner_spark.pipeline.evolve import schema_drift
+
+        drift = schema_drift(src.schema, dst.schema)
+    if drift is None or drift["added"] or drift["dropped"] or drift["retyped"]:
+        # The full copy: clustered by chunk like rewrite_chunks (one
+        # file per chunk), but a STATIC overwrite, whose commit writes
+        # the _SUCCESS marker the first-run check above reads.
+        out = with_chunk(src, key_col, n_chunks).repartition(CHUNK_COL)
         out.write.mode("overwrite").partitionBy(CHUNK_COL).parquet(target_path)
-        return {
-            "mode": "full",
+        rep = {
+            "mode": "full" if drift is None else "schema_migration",
             "n_chunks": n_chunks,
             "changed": n_chunks,
             "rows_rewritten": -1,  # full write; count not re-scanned
         }
-
-    dst = read_chunked(spark, target_path).drop(CHUNK_COL)
-    # Schema drift: a plain-parquet target cannot hold mixed per-chunk
-    # physical schemas (Spark refuses to merge int/bigint file schemas),
-    # so ANY drift triggers one explicit migration rewrite — detected
-    # up front from metadata, never discovered mid-sync as a hash storm
-    # of spuriously-"changed" chunks (xxhash64 is type-sensitive).
-    # Table formats with per-file schema metadata could instead cast at
-    # read time and keep the rewrite incremental.
-    from database_cloner_spark.pipeline.evolve import schema_drift
-
-    drift = schema_drift(src.schema, dst.schema)
-    if drift["added"] or drift["dropped"] or drift["retyped"]:
-        out = with_chunk(src, key_col, n_chunks)
-        out.write.mode("overwrite").partitionBy(CHUNK_COL).parquet(target_path)
-        return {
-            "mode": "schema_migration",
-            "n_chunks": n_chunks,
-            "changed": n_chunks,
-            "rows_rewritten": -1,
-            "drift": drift,
-        }
+        if drift is not None:
+            rep["drift"] = drift
+        return rep
     chunks = changed_chunks(src, dst, key_col, n_chunks)
     if not chunks:
         return {

@@ -530,25 +530,17 @@ def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic winner. Scale shape: the heavy pass is the ordinary
     two-phase count; the window runs over |groups|x|values| aggregated
     rows (tiny), and plans as WindowGroupLimit under the rank filter."""
-    from pyspark.sql import Window as W
-
     od = load(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus").isNotNull() & F.col("o_orderpriority").isNotNull()
     )
     counts = od.groupBy("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n")
     )
-    w = W.partitionBy("o_orderstatus").orderBy(
-        F.desc("n"), F.asc("o_orderpriority")
-    )
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            "o_orderstatus",
-            F.col("o_orderpriority").alias("mode_priority"),
-            F.col("n").alias("mode_n"),
-        )
+    order = [F.desc("n"), F.asc("o_orderpriority")]
+    return ranks.top(counts, ["o_orderstatus"], order).select(
+        "o_orderstatus",
+        F.col("o_orderpriority").alias("mode_priority"),
+        F.col("n").alias("mode_n"),
     )
 
 

@@ -163,19 +163,15 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    w = W.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select(
-            "doc_id",
-            "term",
-            # rank on the raw double (identical operands both engines);
-            # OUTPUT via integer-exact rounding (llm/text.roundn_ratio)
-            llmtext.round4_ratio(
-                F.col("tf") * (F.col("n_docs") + 1), F.col("df") + 1
-            ).alias("tfidf"),
-        )
+    order = [F.desc("score"), F.asc("term")]
+    return ranks.top(scored, ["doc_id"], order, 3).select(
+        "doc_id",
+        "term",
+        # rank on the raw double (identical operands both engines);
+        # OUTPUT via integer-exact rounding (llm/text.roundn_ratio)
+        llmtext.round4_ratio(
+            F.col("tf") * (F.col("n_docs") + 1), F.col("df") + 1
+        ).alias("tfidf"),
     )
 
 
@@ -2080,20 +2076,11 @@ def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast(_DEC) * F.col("pk") - F.col("k") * F.col("tot")
         ).alias("tk"),
     )
-    r = d.select(
-        "event_type",
-        "hr",
-        "n",
-        "tk",
-        F.abs(F.col("tk")).alias("a"),
-        F.row_number()
-        .over(
-            W.partitionBy("event_type").orderBy(
-                F.desc(F.abs(F.col("tk"))), F.asc("hr")
-            )
-        )
-        .alias("rn"),
-    ).filter(F.col("rn") == 1)
+    r = ranks.top(
+        d.select("event_type", "hr", "n", "tk", F.abs(F.col("tk")).alias("a")),
+        ["event_type"],
+        [F.desc(F.abs(F.col("tk"))), F.asc("hr")],
+    )
     return r.select(
         "event_type",
         F.date_format("hr", "yyyy-MM-dd HH:mm:ss").alias("cp_hr"),

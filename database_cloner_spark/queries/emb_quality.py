@@ -36,7 +36,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from database_cloner_spark.functions import ranks
 from database_cloner_spark.functions.vector import Q_CLAMP, Q_SCALE, quantize
@@ -334,11 +333,9 @@ def q_emb_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         _dist2(F.col("qe"), F.col("c")).alias("dist2"),
     )
-    w = W.partitionBy("label").orderBy(F.desc("dist2"), F.asc("vec_id"))
-    return (
-        scored.withColumn("outlier_rank", F.row_number().over(w))
-        .filter(F.col("outlier_rank") <= 5)
-        .select("label", "vec_id", "dist2", "outlier_rank")
+    order = [F.desc("dist2"), F.asc("vec_id")]
+    return ranks.top(scored, ["label"], order, 5, rank="outlier_rank").select(
+        "label", "vec_id", "dist2", "outlier_rank"
     )
 
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from database_cloner_spark.functions import ranks
 from database_cloner_spark.llm import text as llmtext
 from database_cloner_spark.registry import register
 from database_cloner_spark.sources import load
@@ -393,14 +394,8 @@ def q_sample_pergroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plans as WindowGroupLimit: the rank filter prunes inside each
     partial window, no full per-group sort materializes."""
     docs = load(spark, sf_dir, "documents")
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("lang").orderBy(_split_hash("doc_id"), F.col("doc_id"))
-    return (
-        docs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 20)
-        .select("doc_id", "lang")
-    )
+    order = [_split_hash("doc_id"), F.col("doc_id")]
+    return ranks.top(docs, ["lang"], order, 20).select("doc_id", "lang")
 
 
 _ES_SEED = 7
@@ -528,13 +523,8 @@ def q_sample_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts = d.groupBy("lang").agg(F.count(F.lit(1)).alias("c"))
     min_count = counts.agg(F.min("c")).collect()[0][0] or 0
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("lang").orderBy(F.asc("h"), F.asc("doc_id"))
-    r = d.select("doc_id", "lang", F.row_number().over(w).alias("rn"))
-    return r.filter(F.col("rn") <= F.lit(int(min_count))).select(
-        "doc_id", "lang"
-    )
+    order = [F.asc("h"), F.asc("doc_id")]
+    return ranks.top(d, ["lang"], order, int(min_count)).select("doc_id", "lang")
 
 
 # --- q_sample_temperature: alpha-flattened mixture WEIGHTS ------------------

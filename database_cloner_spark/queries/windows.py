@@ -31,15 +31,11 @@ def q_win_rownum_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern (clone_databases.sh:447,:556) generalized. row_number over a
     desc-ts window, keep rank 1."""
     ev = load(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            "event_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
-        )
+    order = [F.desc("ts"), F.desc("event_id")]
+    return ranks.top(ev, ["user_id"], order).select(
+        "user_id",
+        "event_id",
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
     )
 
 

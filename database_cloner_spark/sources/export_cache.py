@@ -17,27 +17,21 @@ import os
 import tempfile
 from collections.abc import Callable
 
+from database_cloner_spark.sources.parquet import _files
+
 
 def dataset_fingerprint(path: str) -> str:
     """Stable hex digest of a file's (or dataset directory's) identity:
-    absolute path plus every member file's (relative path, mtime_ns,
-    size), walked RECURSIVELY — a partitioned dataset rewritten in
-    place changes only leaf files inside subdirectories, whose parent
-    dir keeps its (mtime, size), so a top-level-only stat would serve a
-    stale export (ADVICE r4). Metadata-only — never reads data bytes."""
+    absolute path plus every member file's (relative path, size,
+    mtime_ns) from the loader's walker, which is RECURSIVE — a
+    partitioned dataset rewritten in place changes only leaf files
+    inside subdirectories, whose parent dir keeps its (mtime, size), so
+    a top-level-only stat would serve a stale export (ADVICE r4).
+    Metadata-only — never reads data bytes. A missing path hashes its
+    absolute path alone."""
     h = hashlib.md5(os.path.abspath(path).encode())
-    if os.path.isdir(path):
-        for root, dirs, files in os.walk(path):
-            dirs.sort()  # deterministic traversal
-            rel_root = os.path.relpath(root, path)
-            for name in sorted(files):
-                st = os.stat(os.path.join(root, name))
-                h.update(
-                    f"{rel_root}/{name}:{st.st_mtime_ns}:{st.st_size}".encode()
-                )
-    elif os.path.exists(path):
-        st = os.stat(path)
-        h.update(f"{st.st_mtime_ns}:{st.st_size}".encode())
+    if os.path.exists(path):
+        h.update(repr(_files(path)).encode())
     return h.hexdigest()[:16]
 
 

@@ -32,8 +32,8 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
+from database_cloner_spark.functions import ranks
 from database_cloner_spark.pipeline.incremental import (
     CHUNK_COL,
     read_chunked,
@@ -44,12 +44,7 @@ from database_cloner_spark.pipeline.incremental import (
 
 def latest_change_per_key(batch: DataFrame, key_col: str) -> DataFrame:
     """Collapse a batch to one winning record per key (max seq)."""
-    w = W.partitionBy(key_col).orderBy(F.desc("seq"))
-    return (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return ranks.top(batch, [key_col], [F.desc("seq")])
 
 
 def apply_cdc_batch(

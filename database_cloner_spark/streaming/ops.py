@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from database_cloner_spark.functions import ranks
 from database_cloner_spark.queries.windows import SESSION_GAP_US
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -128,17 +129,11 @@ def dedup_events(events: DataFrame, within_watermark: bool = False) -> DataFrame
             .dropDuplicatesWithinWatermark(["event_id"])
             .select(*cols)
         )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("event_id").orderBy(
-        F.asc_nulls_last("user_id"), F.asc_nulls_last("event_type")
-    )
-    return (
-        events.select(*cols)
-        .dropDuplicates(cols)  # full-row dups die before the window
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    return ranks.top(
+        # full-row dups die before the window
+        events.select(*cols).dropDuplicates(cols),
+        ["event_id"],
+        [F.asc_nulls_last("user_id"), F.asc_nulls_last("event_type")],
     )
 
 

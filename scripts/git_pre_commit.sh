@@ -13,8 +13,9 @@
 # registry.py, session.py or __spark_entry__.py (plan + parity gates,
 # ~5 min at sf0.001; every key loads through sources/ and runs in the
 # session.py factory's conf) — or
-# the clone pipeline, database_cloner_spark/pipeline/ (the clone,
-# incremental and write-path suites, ~2 min). Plain doc/test/bench commits pay nothing. `git commit --no-verify` bypasses for WIP snapshots ONLY —
+# the clone pipeline, database_cloner_spark/pipeline/ or the CDC batch
+# writer streaming/cdc.py (the clone, incremental and write-path suites,
+# ~2 min). Plain doc/test/bench commits pay nothing. `git commit --no-verify` bypasses for WIP snapshots ONLY —
 # never for a commit that adds or edits a registered key.
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
@@ -28,7 +29,7 @@ cd "$(git rev-parse --show-toplevel)"
 # tests/) both derive from them so the scopes cannot drift apart when a
 # path is added.
 QUERY='database_cloner_spark/(queries|functions|llm|streaming|sources)/|database_cloner_spark/(registry|session)\.py|__spark_entry__\.py'
-PIPELINE='database_cloner_spark/pipeline/'
+PIPELINE='database_cloner_spark/pipeline/|database_cloner_spark/streaming/cdc\.py'
 TRIGGER="^($QUERY|$PIPELINE)"
 GATED="^($QUERY|$PIPELINE|tests/)"
 CHANGED="$(git diff --cached --name-only)"
@@ -54,7 +55,7 @@ if grep -qE "$TRIGGER" <<<"$CHANGED"; then
     echo "[pre-commit] staged diff touches query/operator code -> running plan + parity + shuffle-budget + ledger gates (sf0.001, ~5 min)"
     python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py tests/test_ledger.py -q
   fi
-  if grep -qE "^$PIPELINE" <<<"$CHANGED"; then
+  if grep -qE "^($PIPELINE)" <<<"$CHANGED"; then
     echo "[pre-commit] staged diff touches the clone pipeline -> running the clone + incremental + write-path suites (~2 min)"
     python -m pytest tests/test_clone_pipeline.py tests/test_incremental.py tests/test_clone_sync_writes.py -q
   fi

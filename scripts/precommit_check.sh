@@ -47,7 +47,7 @@ python -m pytest tests/test_survey_registry.py \
 # QUERY and PIPELINE are the base patterns scripts/git_pre_commit.sh
 # uses; keep the two scripts' copies equal.
 QUERY='database_cloner_spark/(queries|functions|llm|streaming|sources)/|database_cloner_spark/(registry|session)\.py|__spark_entry__\.py'
-PIPELINE='database_cloner_spark/pipeline/'
+PIPELINE='database_cloner_spark/pipeline/|database_cloner_spark/streaming/cdc\.py'
 # capture-then-grep: a `git | grep -q` pipeline under pipefail can
 # exit 141 on SIGPIPE and silently skip the gate
 CHANGED="$(git diff HEAD --name-only)"
@@ -57,8 +57,9 @@ if grep -qE "^($QUERY)" <<<"$CHANGED"; then
 fi
 # A pipeline-only diff changes no key, but it can break the clone,
 # its metadata tables, reports and probes, the re-sync, or the write
-# paths' job counts: run the clone, incremental and write-path suites.
-if grep -qE "^$PIPELINE" <<<"$CHANGED"; then
+# paths' job counts (the CDC batch writer in streaming/cdc.py among
+# them): run the clone, incremental and write-path suites.
+if grep -qE "^($PIPELINE)" <<<"$CHANGED"; then
   echo "[precommit_check] clone-pipeline diff detected -> clone + incremental + write-path suites"
   python -m pytest tests/test_clone_pipeline.py tests/test_incremental.py tests/test_clone_sync_writes.py -q
 fi

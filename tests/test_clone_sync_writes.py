@@ -144,6 +144,17 @@ def test_rewrite_chunks_writes_one_file_per_chunk(spark, tmp_path):
     assert rewrite_chunks(rows.filter(F.lit(False)), target, [4]) == 0
     assert not os.path.exists(os.path.join(target, f"{CHUNK_COL}=4"))
 
+    # incremental_clone's full copy is clustered the same way, and its
+    # static overwrite commits the _SUCCESS marker later runs look for.
+    full = str(tmp_path / "full")
+    src = spark.range(2000).withColumnRenamed("id", "k").repartition(6)
+    assert incremental_clone(spark, src, full, "k", n_chunks=8)["mode"] == "full"
+    assert os.path.exists(os.path.join(full, "_SUCCESS"))
+    chunk_dirs = [d for d in os.listdir(full) if d.startswith(f"{CHUNK_COL}=")]
+    assert len(chunk_dirs) == 8
+    for d in chunk_dirs:
+        assert len(_data_files(os.path.join(full, d))) == 1, d
+
 
 # -- job counts ------------------------------------------------------------------
 

@@ -150,10 +150,32 @@ def test_topk_never_global_sorts(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_window_dedup_uses_group_limit(spark):
-    """row_number()<=1 dedup must plan the WindowGroupLimit pushdown
-    (rank filter applied before the full window materializes)."""
-    plan = _plan(spark, "q_win_rownum_dedup")
+# Every key whose builder reaches functions/ranks.top (per-group top-k)
+# and whose plan rides the WindowGroupLimit pushdown.
+GROUP_LIMIT_KEYS = [
+    "q_agg_mode",
+    "q_dedup_embedding_bucketed",
+    "q_emb_outlier",
+    "q_sample_balanced",
+    "q_sample_pergroup",
+    "q_sim_ivf_kmeans_topk",
+    "q_sim_ivf_topk",
+    "q_sim_ivfpq_topk",
+    "q_sim_pq_topk",
+    "q_sim_topk_multi",
+    "q_stream_dedup",
+    "q_text_langid",
+    "q_text_tfidf",
+    "q_ts_changepoint",
+    "q_win_rownum_dedup",
+]
+
+
+@pytest.mark.parametrize("name", GROUP_LIMIT_KEYS)
+def test_window_dedup_uses_group_limit(spark, name):
+    """A row_number() <= k rank filter must plan the WindowGroupLimit
+    pushdown (rank filter applied before the full window materializes)."""
+    plan = _plan(spark, name)
     assert "WindowGroupLimit" in plan
 
 

@@ -171,3 +171,53 @@ def test_package_names_have_a_non_test_caller():
     assert not orphans, f"package names only tests reach: {orphans}"
     stale = set(_TEST_ONLY_NAMES) - set(uncalled)
     assert not stale, f"allow-listed names now have a caller or are gone: {stale}"
+
+
+# -- per-group top-k goes through functions/ranks.top -------------------------
+
+# row_number() calls outside functions/ranks.py, one per enclosing
+# top-level function: "file::function" -> why it is not ranks.top.
+_OTHER_ROW_NUMBERS = {
+    "queries/windows.py::q_win_dist": "tie-break rank added to the "
+    "count-table base, every row kept",
+    "queries/windows.py::q_win_running_distinct": "first-seen 0/1 flag, "
+    "every row kept",
+    "queries/analytics_ext.py::q_ts_changepoint": "running hour index k "
+    "of the CUSUM statistic",
+    "queries/analytics_ext.py::q_ts_seasonality": "is_peak 0/1 flag, "
+    "every row kept",
+    "queries/analytics_ext.py::q_events_pareto": "global rank over all "
+    "users, every row kept",
+    "llm/dedup.py::canonical_survivors": "rank filter whose window pass "
+    "also counts the members; ranks.top would plan the count below the "
+    "rank, a different plan",
+}
+
+
+def _row_number_calls(root: pathlib.Path) -> list[str]:
+    pkg = root / "database_cloner_spark"
+    out = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "functions/ranks.py":
+            continue
+        for top in ast.parse(path.read_text(), str(path)).body:
+            for node in ast.walk(top):
+                fn = getattr(node, "func", None)
+                if getattr(fn, "attr", getattr(fn, "id", None)) == "row_number":
+                    out.append(f"{rel}::{getattr(top, 'name', '<module>')}")
+    return out
+
+
+def test_rank_filters_go_through_ranks_top():
+    """Package code ranks rows with row_number() only inside
+    functions/ranks.py, whose `top` states the per-group top-k contract
+    once; the allow-listed calls are not rank filters. An AST scan, so
+    oracle SQL that spells row_number does not count."""
+    calls = _row_number_calls(_ROOT)
+    unexplained = sorted(
+        c for c in set(calls) if c not in _OTHER_ROW_NUMBERS or calls.count(c) > 1
+    )
+    assert not unexplained, f"row_number outside functions/ranks.py: {unexplained}"
+    stale = set(_OTHER_ROW_NUMBERS) - set(calls)
+    assert not stale, f"allow-listed row_number sites are gone: {stale}"
