@@ -17,9 +17,9 @@ a rank pick. The contract, stated once here:
 - NULL ordering is the caller's choice (pass `F.asc_nulls_last(...)`
   as `order` when the oracle sorts NULLs last).
 
-Every latest-per-key, argmax, per-group sample and per-probe top-k is
-`top`: a row_number within the group, kept where `rank <= k`. Its
-contract:
+Latest-per-key, argmax, per-group sample and per-probe top-k filters
+go through `top`: a row_number within the group, kept where
+`rank <= k`. Its contract:
 
 - the caller's `order` is TOTAL within each group (end it on a unique
   column), so the kept rows are the same on every engine and run;
