@@ -2967,7 +2967,7 @@ def q_events_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (share of sessions containing both, ppm) and lift
     (P(ab)/(P(a)P(b))) — the association signal behind "users who do X
     in a session also do Y". Shape: sessionization is ONE user_id
-    shuffle (q_win_sessionize's windows); each session reduces to its
+    shuffle (windows.session_index); each session reduces to its
     DISTINCT type set (state bounded by |types|, never events); pair
     generation is JOIN-FREE — a sorted-set HOF emits each basket's
     C(k,2) pairs map-side (k <= |types|, so fan-out is bounded by the
@@ -2976,30 +2976,15 @@ def q_events_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Type totals and the session count broadcast back (audited BNLJ for
     the 1-row N). Lift = n_ab*N/(n_a*n_b) is exact integers into
     _rr_dec; support is exact floor-ppm."""
-    from pyspark.sql import Window as W
-
-    from database_cloner_spark.queries.windows import SESSION_GAP_US
+    from database_cloner_spark.queries.windows import session_index
 
     ev = load(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull()
         & F.col("ts").isNotNull()
         & F.col("event_type").isNotNull()
     )
-    w = W.partitionBy("user_id").orderBy(
-        "ts", F.asc_nulls_last("event_id")
-    )
-    us = F.unix_micros("ts")
-    gap = us - F.lag(us).over(w)
-    is_new = F.when(gap.isNull() | (gap > SESSION_GAP_US), 1).otherwise(0)
-    wsum = (
-        W.partitionBy("user_id")
-        .orderBy("ts", F.asc_nulls_last("event_id"))
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
     sess = ev.select(
-        "user_id",
-        "event_type",
-        F.sum(is_new).over(wsum).alias("session_idx"),
+        "user_id", "event_type", session_index().alias("session_idx")
     )
     baskets = sess.groupBy("user_id", "session_idx").agg(
         F.sort_array(F.collect_set("event_type")).alias("types")

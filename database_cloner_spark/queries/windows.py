@@ -10,7 +10,7 @@ Low-cardinality partition keys (e.g. event_type) would funnel 100 TB into
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from database_cloner_spark.functions import ranks
@@ -179,6 +179,25 @@ def q_win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SESSION_GAP_US = 6 * 3600 * 1_000_000  # 6h inactivity ends a session
 
+
+def session_index() -> Column:
+    """Per-event session number within its user, counted from 1: an
+    event more than SESSION_GAP_US after the user's previous event, or
+    the user's first, starts a new session. The gap lag and the running
+    sum share one window order, `ts ASC NULLS LAST, event_id ASC NULLS
+    LAST`, so one Sort under the user_id exchange serves both. A NULL ts
+    has no gap and starts its own session. Tied rows may order either
+    way without moving an event to another session: equal ts values are
+    0 us apart."""
+    w = W.partitionBy("user_id").orderBy(
+        F.asc_nulls_last("ts"), F.asc_nulls_last("event_id")
+    )
+    us = F.unix_micros("ts")
+    gap = us - F.lag(us).over(w)
+    is_new = F.when(gap.isNull() | (gap > SESSION_GAP_US), 1).otherwise(0)
+    return F.sum(is_new).over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
+
+
 _ORACLE_SESSIONIZE = f"""
 WITH flagged AS (
   SELECT user_id, event_id, epoch_us(ts) AS us, value,
@@ -204,26 +223,17 @@ FROM sess GROUP BY user_id, session_idx
 
 @register("q_win_sessionize", oracle=_ORACLE_SESSIONIZE, tier="X")
 def q_win_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch sessionization (gap > 6h starts a new session): the
-    lag-flag + running-sum idiom — the batch twin of the streaming
-    session_window operator (q_stream_session). Both windows share ONE
-    partitioning on user_id (one shuffle total); session stats are a
-    partial-aggregated groupBy on (user, session)."""
+    """Batch sessionization (gap > 6h starts a new session) through
+    session_index — the batch twin of the streaming session_window
+    operator (q_stream_session). Its windows share ONE partitioning on
+    user_id (one shuffle total); session stats are a partial-aggregated
+    groupBy on (user, session)."""
     ev = load(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy(F.asc_nulls_last("ts"), F.asc_nulls_last("event_id"))
-    us = F.unix_micros("ts")
-    gap = us - F.lag(us).over(w)
-    is_new = F.when(gap.isNull() | (gap > SESSION_GAP_US), 1).otherwise(0)
-    wsum = (
-        W.partitionBy("user_id")
-        .orderBy(us.asc_nulls_last(), F.asc_nulls_last("event_id"))
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
     sess = ev.select(
         "user_id",
-        us.alias("us"),
+        F.unix_micros("ts").alias("us"),
         "value",
-        F.sum(is_new).over(wsum).alias("session_idx"),
+        session_index().alias("session_idx"),
     )
     return sess.groupBy("user_id", "session_idx").agg(
         F.count("*").alias("n_events"),
@@ -550,25 +560,14 @@ def q_win_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounce rate — the engagement-quality rollup a product pipeline
     reads after sessionization. The oracle nests q_win_sessionize's
     session definition verbatim so gap semantics cannot drift between
-    the two keys. Scale shape: the lag-flag and running-sum windows
-    share the sessionizer's ONE user_id exchange, the (user, session)
+    the two keys. Scale shape: session_index's windows share the
+    sessionizer's ONE user_id exchange, the (user, session)
     size count partial-aggregates on the same partitioning (no second
     data-sized shuffle — session_idx is a function of the user
     partition), and the final per-user fold is count-table-sized.
     Integer-exact throughout."""
     ev = load(spark, sf_dir, "events")
-    us = F.unix_micros("ts")
-    w = W.partitionBy("user_id").orderBy(us.asc_nulls_last(), F.asc_nulls_last("event_id"))
-    gap = us - F.lag(us).over(w)
-    is_new = F.when(gap.isNull() | (gap > SESSION_GAP_US), 1).otherwise(0)
-    wsum = (
-        W.partitionBy("user_id")
-        .orderBy(us.asc_nulls_last(), F.asc_nulls_last("event_id"))
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    sess = ev.select(
-        "user_id", F.sum(is_new).over(wsum).alias("session_idx")
-    )
+    sess = ev.select("user_id", session_index().alias("session_idx"))
     per = sess.groupBy("user_id", "session_idx").agg(
         F.count(F.lit(1)).alias("n")
     )

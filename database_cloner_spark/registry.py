@@ -85,12 +85,25 @@ def _package_module(dotted: str):
         return None
 
 
+def _const_text(obj) -> str:
+    """repr, but with the elements of every set, nested in tuples too,
+    in sorted order: a set's own repr follows the per-process string
+    hash seed, and the signature must not."""
+    if isinstance(obj, (set, frozenset)) and obj:
+        inner = ", ".join(sorted(_const_text(x) for x in obj))
+        return f"{type(obj).__name__}({{{inner}}})"
+    if type(obj) is tuple:
+        return "(" + ", ".join(map(_const_text, obj)) + ("," if len(obj) == 1 else "") + ")"
+    return repr(obj)
+
+
 def _helper_walk(builder: Callable) -> tuple[list[str], set[str]]:
     """Walk every package-defined function/class the builder reaches
     TRANSITIVELY through module globals or function-local package
     imports, plus every UPPER_CASE constant referenced (simple values by
-    repr; dict/list values as sorted-key JSON when they are plain data,
-    so a registry of objects, whose repr carries addresses, is skipped).
+    repr, sets in sorted order; dict/list values as sorted-key JSON when
+    they are plain data, so a registry of objects, whose repr carries
+    addresses, is skipped).
     Returns (sources sorted by (module, qualname) for determinism,
     defining-file set). Name resolution is static — co_names of the
     function's code object and every nested code object — so dynamic
@@ -157,7 +170,7 @@ def _helper_walk(builder: Callable) -> tuple[list[str], set[str]]:
                     text = (
                         json.dumps(obj, sort_keys=True)
                         if isinstance(obj, (dict, list))
-                        else repr(obj)
+                        else _const_text(obj)
                     )
                 except TypeError:
                     continue

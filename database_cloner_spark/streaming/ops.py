@@ -5,15 +5,38 @@ in batch, tests run them via readStream + memory sink).
 
 Output timestamps are formatted to strings at the edge (UTC session TZ)
 so results hash identically across Spark and DuckDB.
+
+The four stateful per-user operators (user_ewma_stream,
+user_sessions_stream, user_holt_stream, user_running_distinct_stream)
+are one per-user in-order fold, `_fold_per_user`, each giving only its
+schemas and its per-row step. The fold's contract, for all four:
+- Its NULL filter is the batch twin's: rows with a NULL user_id, ts or
+  step input (and a NULL event_id, unless the twin keeps those) are
+  dropped before the Python boundary. A NULL value reaching pandas
+  would become NaN and poison the keyed state for good.
+- Each micro-batch's rows fold in (ts, event_id) order, event_id NULLS
+  LAST, the batch twin's window order, so a drained stream equals its
+  twin exactly (bit-equal for the float recurrences: Python floats are
+  the JVM's IEEE-754 doubles; asserted in tests/test_streaming.py),
+  provided batches arrive in event-time order per user. The tests feed
+  time-split batches; an out-of-order source needs a watermark or
+  reorder stage in front.
+- The keyed state is a few scalars (or the set of types seen) per
+  user: bounded by key cardinality, never by stream length.
+- ts crosses into Python as epoch microseconds computed JVM-side, so
+  pandas never holds a datetime dtype (its nanos-vs-micros drift across
+  Arrow versions stays out of the fold).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from database_cloner_spark.functions import ranks
-from database_cloner_spark.queries.windows import SESSION_GAP_US
+from database_cloner_spark.queries.windows import SESSION_GAP_US, session_index
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -179,63 +202,73 @@ def purchase_click_interval_join(events: DataFrame) -> DataFrame:
     )
 
 
+def _fold_per_user(
+    events: DataFrame,
+    step,
+    emit,
+    init: tuple,
+    out_schema: str,
+    state_schema: str,
+    cols: tuple[str, ...] = (),
+    keep_null_ids: bool = False,
+) -> DataFrame:
+    """The per-user in-order fold behind the four stateful operators
+    (contract in the module docstring). Within a micro-batch, each of a
+    user's rows reaches `step(key, state, row, out)` as
+    `row = (us, event_id, *cols)` in (us, event_id) order; the step
+    returns the next state and may append output rows to `out`. After
+    the batch's last row, `emit(key, state)` gives the rows the batch
+    ends with. The keyed state starts at `init`."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+    from pyspark.sql.types import StructType
+
+    names = StructType.fromDDL(out_schema).names
+    required = ["user_id", "ts", *cols] + ([] if keep_null_ids else ["event_id"])
+    src = events.filter(
+        reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in required])
+    ).select("user_id", F.unix_micros("ts").alias("us"), "event_id", *cols)
+
+    def update(key, pdfs, state):
+        import pandas as pd
+
+        s = state.get if state.exists else init
+        out = []
+        frames = list(pdfs)
+        if frames:
+            rows = pd.concat(frames).sort_values(["us", "event_id"])
+            for row in zip(*(rows[c] for c in ("us", "event_id", *cols))):
+                s = step(key[0], s, row, out)
+        out.extend(emit(key[0], s))
+        state.update(s)
+        yield pd.DataFrame(out, columns=names)
+
+    return src.groupBy("user_id").applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 EWMA_SCHEMA = "user_id long, n_events long, ewma double"
 _EWMA_STATE_SCHEMA = "n long, acc double"
 
 
 def user_ewma_stream(events: DataFrame) -> DataFrame:
-    """Stateful per-user EWMA (alpha = 1/2) across micro-batches — the
-    streaming twin of the batch `q_ts_ewma` operator: keyed state holds
-    (n, accumulator); each batch's rows fold in (ts, event_id) order
-    with acc = (acc + x)/2, the exact recurrence the batch key builds
-    with a JVM `aggregate` HOF. Python's float arithmetic is the same
-    IEEE-754 double as the JVM's, and the fold order is pinned
-    identically, so a drained stream's final state is BIT-EQUAL to the
-    batch answer (asserted in tests/test_streaming.py) provided batches
-    arrive in event-time order per user — the test feeds time-split
-    batches; production fronting needs the watermark/reorder stage,
-    same caveat as every sequence-sensitive stateful op. State is two
-    scalars per user: bounded by key cardinality, not stream length.
-    NULL user_id/value/ts/event_id rows are dropped HERE, matching the
-    batch twin's filter — a NULL value reaching pandas becomes NaN and
-    (acc + NaN)/2 poisons the keyed state forever (r8 self-review);
-    NULL event_id joined the filter in r10 when the batch twin dropped
-    it (engines disagree on NULL tiebreaker placement)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    """Per-user EWMA (alpha = 1/2), the streaming twin of the batch
+    `q_ts_ewma` operator: state (n, acc) folds each value in as
+    acc = (acc + x)/2, the recurrence the batch key builds with a JVM
+    `aggregate` HOF, so the drained state is BIT-EQUAL to it."""
 
-    events = events.filter(
-        F.col("user_id").isNotNull()
-        & F.col("value").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("event_id").isNotNull()
-    )
+    def step(key, state, row, out):
+        n, acc = state
+        x = float(row[2])
+        return n + 1, x if n == 0 else (acc + x) / 2.0
 
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        n, acc = state.get if state.exists else (0, 0.0)
-        frames = [pdf for pdf in pdfs]
-        rows = pd.concat(frames) if frames else pd.DataFrame(
-            {"ts": [], "event_id": [], "value": []}
-        )
-        rows = rows.sort_values(["ts", "event_id"])
-        for x in rows["value"]:
-            if n == 0:
-                acc = float(x)
-            else:
-                acc = (acc + float(x)) / 2.0
-            n += 1
-        state.update((n, acc))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "ewma": [acc]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=EWMA_SCHEMA,
-        stateStructType=_EWMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_per_user(
+        events, step, lambda key, s: [(key, *s)], (0, 0.0),
+        EWMA_SCHEMA, _EWMA_STATE_SCHEMA, cols=("value",),
     )
 
 
@@ -247,103 +280,49 @@ _SESSIONS_STATE_SCHEMA = "idx long, last_us long, n long, mn long, mx long"
 
 
 def user_sessions_stream(events: DataFrame) -> DataFrame:
-    """Stateful sessionizer via applyInPandasWithState — the streaming
-    twin of q_win_sessionize's gap rule (> SESSION_GAP_US of silence
-    starts a new session), with keyed state = ONE open session per user
-    (5 longs; bounded by key cardinality, not stream length, and unlike
-    the built-in session_window the state never holds per-event rows).
-    Each micro-batch folds its rows in (ts, event_id) order: a gap
-    closes the open session (its FINAL row is emitted at close) and
-    opens the next; the still-open session re-emits its running row
-    every batch, so after draining, the latest emission per
-    (user, session_idx) — the one with the largest n_events — equals
-    the batch answer row for row (asserted in tests/test_streaming.py).
-    All outputs are exact integers (counts, epoch-microsecond duration
-    and start), so stream/batch equality is ==, not isclose — float
-    session totals are deliberately NOT in this contract because batch
-    partial-aggregation sums in a different association order.
-    Same in-order-arrival caveat as user_ewma_stream; epoch-us is
-    computed JVM-side before the Python boundary so pandas never
-    touches a datetime dtype (nanos-vs-micros dtype drift across Arrow
-    versions). NULL user_id/ts rows are dropped here — the batch twin
-    applies the identical filter."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    """Stateful sessionizer, the streaming twin of q_win_sessionize's gap
+    rule (> SESSION_GAP_US of silence starts a new session). The keyed
+    state is ONE open session per user (5 longs; unlike the built-in
+    session_window it never holds per-event rows). A gap closes the open
+    session, whose FINAL row is emitted at close, and opens the next;
+    the still-open session re-emits its running row every batch, so
+    after draining, the latest emission per (user, session_idx), the one
+    with the largest n_events, equals user_sessions_batch row for row.
+    Every output is an exact integer (counts, epoch-microsecond duration
+    and start), so the comparison is ==; float session totals stay out
+    of this contract because batch partial aggregation sums in another
+    association order. NULL event_id rows stay, as in the batch twin."""
 
-    src = events.filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    ).select("user_id", F.unix_micros("ts").alias("us"), "event_id")
+    def step(key, state, row, out):
+        idx, last_us, n, mn, mx = state
+        us = int(row[0])
+        if n and us - last_us <= SESSION_GAP_US:
+            return idx, us, n + 1, mn, us
+        if n:
+            out.append((key, idx, n, mx - mn, mn))  # closed: final row
+        return idx + 1, us, 1, us, us
 
-    def update(key, pdfs, state):
-        import pandas as pd
+    def emit(key, state):  # the open session's running row
+        idx, _, n, mn, mx = state
+        return [(key, idx, n, mx - mn, mn)] if n else []
 
-        if state.exists:
-            idx, last_us, n, mn, mx = state.get
-        else:
-            idx, last_us, n, mn, mx = 0, 0, 0, 0, 0
-        frames = [pdf for pdf in pdfs]
-        rows = (
-            pd.concat(frames).sort_values(["us", "event_id"])
-            if frames
-            else pd.DataFrame({"us": [], "event_id": []})
-        )
-        out = []
-        for us in rows["us"]:
-            us = int(us)
-            if n == 0:
-                idx += 1
-                n, mn, mx = 1, us, us
-            elif us - last_us > SESSION_GAP_US:
-                out.append((key[0], idx, n, mx - mn, mn))  # closed: final
-                idx += 1
-                n, mn, mx = 1, us, us
-            else:
-                n += 1
-                mx = us
-            last_us = us
-        if n > 0:
-            out.append((key[0], idx, n, mx - mn, mn))  # open: running row
-        state.update((idx, last_us, n, mn, mx))
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "user_id", "session_idx", "n_events", "duration_us",
-                "start_us",
-            ],
-        )
-
-    return src.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=SESSIONS_SCHEMA,
-        stateStructType=_SESSIONS_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_per_user(
+        events, step, emit, (0, 0, 0, 0, 0),
+        SESSIONS_SCHEMA, _SESSIONS_STATE_SCHEMA, keep_null_ids=True,
     )
 
 
 def user_sessions_batch(events: DataFrame) -> DataFrame:
-    """Drained-stream twin of user_sessions_stream: q_win_sessionize's
-    lag-flag + running-sum idiom (same SESSION_GAP_US) restricted to
-    the integer outputs the stream contract covers, with the stream's
-    NULL filter applied. ONE user_id shuffle serves both windows and
-    the session aggregate."""
-    from pyspark.sql import Window as W
-
-    ev = events.filter(
+    """Drained-stream twin of user_sessions_stream: windows.session_index
+    (q_win_sessionize's sessions) restricted to the integer outputs the
+    stream contract covers, with the stream's NULL filter applied. ONE
+    user_id shuffle serves the windows and the session aggregate."""
+    sess = events.filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    us = F.unix_micros("ts")
-    gap = us - F.lag(us).over(w)
-    is_new = F.when(gap.isNull() | (gap > SESSION_GAP_US), 1).otherwise(0)
-    wsum = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    sess = ev.select(
+    ).select(
         "user_id",
-        us.alias("us"),
-        F.sum(is_new).over(wsum).alias("session_idx"),
+        F.unix_micros("ts").alias("us"),
+        session_index().alias("session_idx"),
     )
     return sess.groupBy("user_id", "session_idx").agg(
         F.count("*").alias("n_events"),
@@ -357,63 +336,28 @@ _HOLT_STATE_SCHEMA = "n long, l double, b double"
 
 
 def user_holt_stream(events: DataFrame) -> DataFrame:
-    """Stateful per-user Holt linear smoothing (alpha = beta = 1/2)
-    across micro-batches — the streaming twin of the batch `q_ts_holt`
-    operator: keyed state holds (n, level, trend); each batch's rows
-    fold in (ts, event_id) order with
+    """Per-user Holt linear smoothing (alpha = beta = 1/2), the
+    streaming twin of the batch `q_ts_holt` operator: state (n, level,
+    trend) folds each value in as
         l' = (l + b + x) / 2;  b' = (b + (l' - l)) / 2
-    the exact recurrence the batch key's JVM `aggregate` HOF builds.
-    Python floats are the same IEEE-754 doubles, the fold order is
-    pinned identically, so a drained stream's final state is BIT-EQUAL
-    to the batch answer (tests/test_streaming.py), with the same
-    in-order-batches caveat as user_ewma_stream. State is three scalars
-    per user — bounded by key cardinality, not stream length. NULL
-    user_id/value/ts/event_id rows are dropped HERE, matching the batch
-    twin's filter (a NaN reaching the fold would poison the state
-    forever; the event_id term mirrors the r10 batch-twin change)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    the recurrence the batch key's JVM `aggregate` HOF builds, so the
+    drained state is BIT-EQUAL to it."""
 
-    events = events.filter(
-        F.col("user_id").isNotNull()
-        & F.col("value").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("event_id").isNotNull()
-    )
+    def step(key, state, row, out):
+        n, l, b = state
+        x = float(row[2])
+        if n == 0:
+            return 1, x, 0.0
+        nl = (l + b + x) / 2.0
+        return n + 1, nl, (b + (nl - l)) / 2.0
 
-    def update(key, pdfs, state):
-        import pandas as pd
+    def emit(key, state):
+        n, l, b = state
+        return [(key, n, l, b, l + b)]
 
-        n, l, b = state.get if state.exists else (0, 0.0, 0.0)
-        frames = [pdf for pdf in pdfs]
-        rows = pd.concat(frames) if frames else pd.DataFrame(
-            {"ts": [], "event_id": [], "value": []}
-        )
-        rows = rows.sort_values(["ts", "event_id"])
-        for x in rows["value"]:
-            if n == 0:
-                l, b = float(x), 0.0
-            else:
-                nl = (l + b + float(x)) / 2.0
-                b = (b + (nl - l)) / 2.0
-                l = nl
-            n += 1
-        state.update((n, l, b))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "level": [l],
-                "trend": [b],
-                "forecast_1": [l + b],
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=HOLT_SCHEMA,
-        stateStructType=_HOLT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_per_user(
+        events, step, emit, (0, 0.0, 0.0),
+        HOLT_SCHEMA, _HOLT_STATE_SCHEMA, cols=("value",),
     )
 
 
@@ -422,53 +366,22 @@ _RUNNING_DISTINCT_STATE_SCHEMA = "types array<string>"
 
 
 def user_running_distinct_stream(events: DataFrame) -> DataFrame:
-    """Stateful per-user running DISTINCT event-type count — the
-    streaming twin of the batch `q_win_running_distinct` window key:
-    keyed state is the SET of types seen (bounded by the type domain,
-    never stream length — the same reason the batch form beats a
-    running collect_set); each batch's rows fold in (ts, event_id)
-    order and every input event emits exactly one output row carrying
-    the count after that event. Integer-exact, so a drained in-order
-    stream equals the batch answer row-for-row (drained-equal contract,
-    tests/test_streaming.py). NULL user_id/event_type/ts/event_id rows
-    are dropped HERE, matching the batch twin's filter."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    """Per-user running DISTINCT event-type count, the streaming twin of
+    the batch `q_win_running_distinct` window key: the state is the
+    sorted set of types seen (bounded by the type domain, the reason
+    the batch form beats a running collect_set), and every input event
+    emits one row carrying the count after that event, so the drained
+    output equals the batch answer row for row."""
 
-    events = events.filter(
-        F.col("user_id").isNotNull()
-        & F.col("event_type").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("event_id").isNotNull()
-    )
+    def step(key, state, row, out):
+        (types,) = state
+        if row[2] not in types:
+            types = sorted([*types, row[2]])
+        out.append((int(row[1]), key, len(types)))
+        return (types,)
 
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        (types,) = state.get if state.exists else ([],)
-        seen = set(types)
-        frames = [pdf for pdf in pdfs]
-        rows = pd.concat(frames) if frames else pd.DataFrame(
-            {"ts": [], "event_id": [], "event_type": []}
-        )
-        rows = rows.sort_values(["ts", "event_id"])
-        out_ids, out_counts = [], []
-        for eid, et in zip(rows["event_id"], rows["event_type"]):
-            seen.add(et)
-            out_ids.append(int(eid))
-            out_counts.append(len(seen))
-        state.update((sorted(seen),))
-        yield pd.DataFrame(
-            {
-                "event_id": out_ids,
-                "user_id": [key[0]] * len(out_ids),
-                "n_types_seen": out_counts,
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=RUNNING_DISTINCT_SCHEMA,
-        stateStructType=_RUNNING_DISTINCT_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_per_user(
+        events, step, lambda key, s: [], ([],),
+        RUNNING_DISTINCT_SCHEMA, _RUNNING_DISTINCT_STATE_SCHEMA,
+        cols=("event_type",),
     )

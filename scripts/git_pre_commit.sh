@@ -15,7 +15,9 @@
 # session.py factory's conf) — or
 # the clone pipeline, database_cloner_spark/pipeline/ or the CDC batch
 # writer streaming/cdc.py (the clone, incremental and write-path suites,
-# ~2 min). Plain doc/test/bench commits pay nothing. `git commit --no-verify` bypasses for WIP snapshots ONLY —
+# ~2 min). A diff to the stateful stream operators, streaming/ops.py, or
+# to queries/windows.py, whose sessionizer their batch twins use, also
+# runs tests/test_streaming.py -k stateful (8 tests, ~1 min). Plain doc/test/bench commits pay nothing. `git commit --no-verify` bypasses for WIP snapshots ONLY —
 # never for a commit that adds or edits a registered key.
 set -euo pipefail
 cd "$(git rev-parse --show-toplevel)"
@@ -24,12 +26,13 @@ cd "$(git rev-parse --show-toplevel)"
 # report 141 (SIGPIPE) when grep exits at the first match, silently
 # skipping the gate this hook exists to enforce
 # ONE pair of base patterns: QUERY (query/operator code) and PIPELINE
-# (the clone pipeline). TRIGGER (what makes a gate fire) and GATED
+# (the clone pipeline); STATEFUL lies inside QUERY. TRIGGER (what makes a gate fire) and GATED
 # (everything the refusal below must also cover — trigger paths plus
 # tests/) both derive from them so the scopes cannot drift apart when a
 # path is added.
 QUERY='database_cloner_spark/(queries|functions|llm|streaming|sources)/|database_cloner_spark/(registry|session)\.py|__spark_entry__\.py'
 PIPELINE='database_cloner_spark/pipeline/|database_cloner_spark/streaming/cdc\.py'
+STATEFUL='database_cloner_spark/streaming/ops\.py|database_cloner_spark/queries/windows\.py'
 TRIGGER="^($QUERY|$PIPELINE)"
 GATED="^($QUERY|$PIPELINE|tests/)"
 CHANGED="$(git diff --cached --name-only)"
@@ -58,5 +61,9 @@ if grep -qE "$TRIGGER" <<<"$CHANGED"; then
   if grep -qE "^($PIPELINE)" <<<"$CHANGED"; then
     echo "[pre-commit] staged diff touches the clone pipeline -> running the clone + incremental + write-path suites (~2 min)"
     python -m pytest tests/test_clone_pipeline.py tests/test_incremental.py tests/test_clone_sync_writes.py -q
+  fi
+  if grep -qE "^($STATEFUL)" <<<"$CHANGED"; then
+    echo "[pre-commit] staged diff touches the stateful stream operators or their sessionizer -> running tests/test_streaming.py -k stateful (8 tests, ~1 min)"
+    python -m pytest tests/test_streaming.py -k stateful -q
   fi
 fi

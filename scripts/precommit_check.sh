@@ -44,10 +44,11 @@ python -m pytest tests/test_survey_registry.py \
 # the budget suite reuses the plan suite's cached plans. The ledger
 # suite (no Spark, ~2 s) rides along because builder edits change
 # content signatures.
-# QUERY and PIPELINE are the base patterns scripts/git_pre_commit.sh
-# uses; keep the two scripts' copies equal.
+# QUERY, PIPELINE and STATEFUL are the base patterns
+# scripts/git_pre_commit.sh uses; keep the two scripts' copies equal.
 QUERY='database_cloner_spark/(queries|functions|llm|streaming|sources)/|database_cloner_spark/(registry|session)\.py|__spark_entry__\.py'
 PIPELINE='database_cloner_spark/pipeline/|database_cloner_spark/streaming/cdc\.py'
+STATEFUL='database_cloner_spark/streaming/ops\.py|database_cloner_spark/queries/windows\.py'
 # capture-then-grep: a `git | grep -q` pipeline under pipefail can
 # exit 141 on SIGPIPE and silently skip the gate
 CHANGED="$(git diff HEAD --name-only)"
@@ -62,4 +63,11 @@ fi
 if grep -qE "^($PIPELINE)" <<<"$CHANGED"; then
   echo "[precommit_check] clone-pipeline diff detected -> clone + incremental + write-path suites"
   python -m pytest tests/test_clone_pipeline.py tests/test_incremental.py tests/test_clone_sync_writes.py -q
+fi
+# The stateful stream operators (streaming/ops.py) and the sessionizer
+# their batch twins use (queries/windows.py): run the stream-equals-
+# batch and kill-and-restart suites, none of which the gates above run.
+if grep -qE "^($STATEFUL)" <<<"$CHANGED"; then
+  echo "[precommit_check] stateful-operator diff detected -> stateful stream suites (8 tests)"
+  python -m pytest tests/test_streaming.py -k stateful -q
 fi

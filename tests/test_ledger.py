@@ -248,3 +248,32 @@ def test_helper_walk_reaches_module_attribute_helpers(monkeypatch):
     base = benford_sig()
     monkeypatch.setitem(dataquality._BENFORD_PPM, 1, dataquality._BENFORD_PPM[1] + 1)
     assert benford_sig() != base
+
+
+def test_content_sig_is_independent_of_the_hash_seed():
+    """Every key's content signature is the same in two processes whose
+    string hash seeds differ: a set-valued constant (the parquet
+    loader's `_UTC_ALIASES`, reached by every key that loads a table)
+    must not hash in its per-process iteration order."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import json\n"
+        "from database_cloner_spark import registry\n"
+        "print(json.dumps({k: registry.content_sig(k) for k in registry.specs()}))\n"
+    )
+
+    def sigs(seed: str) -> dict:
+        env = {**os.environ, "PYTHONHASHSEED": seed}
+        out = subprocess.run(
+            [sys.executable, "-c", script], cwd=repo, env=env,
+            capture_output=True, text=True, check=True,
+        ).stdout
+        return json.loads(out.splitlines()[-1])
+
+    a, b = sigs("1"), sigs("2")
+    assert a, "no registered keys"
+    moved = sorted(k for k in a if a[k] != b.get(k))
+    assert a.keys() == b.keys() and not moved, f"seed-dependent sigs: {moved}"

@@ -1337,3 +1337,16 @@ def test_pq_codebooks_input_filter_stays_off_computed_column(spark, sf_dir):
     assert filters, plan[:800]
     leaked = [f[:100] for f in filters if "8388608" in f]
     assert not leaked, f"quantize lambda re-derived inside Filter: {leaked}"
+
+
+@pytest.mark.parametrize("name", ["q_win_sessionize", "q_win_bounce_rate"])
+def test_sessionizer_windows_share_one_sort(spark, name):
+    """windows.session_index orders its gap lag and its running sum on
+    the same (ts, event_id) order, so ONE Sort over the ONE user_id
+    exchange serves both windows; a second Sort means the two windows
+    ordered on different expressions again."""
+    plan = _plan(spark, name)
+    assert re.findall(r"Exchange hashpartitioning\((\w+)#", plan) == ["user_id"], plan
+    assert re.findall(r"\bSort \[(\w+)#", plan) == ["user_id"], plan
+    # the Sort consumes the exchange's output: it is printed above it
+    assert plan.index("Sort [") < plan.index("Exchange hashpartitioning"), plan

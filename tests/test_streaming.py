@@ -440,28 +440,39 @@ def test_stateful_sessions_stream_equals_batch_twin(spark, tmp_path):
     exact integer (n_events, epoch-us duration, epoch-us start), so the
     comparison is ==. The split lands mid-stream, so sessions that
     straddle the batch boundary exercise the open-session re-emission
-    path (latest emission per (user, session_idx) = largest n_events)."""
-    half1, half2 = _ts_median_split(load(spark, SF, "events"))
-    rows = _drain_two_batches(
-        spark, tmp_path, "sess", half1, half2,
-        ops.user_sessions_stream,
-        "user_id, session_idx, n_events, duration_us, start_us",
+    path (latest emission per (user, session_idx) = largest n_events).
+    The second input truncates ts to the hour, so a user's events tie
+    on ts, and nulls every 7th event_id: session membership must not
+    depend on how tied rows are ordered, nor on where a NULL event_id
+    sorts among them."""
+    events = load(spark, SF, "events")
+    tied = events.withColumn("ts", F.date_trunc("hour", "ts")).withColumn(
+        "event_id", F.when(F.col("event_id") % 7 != 0, F.col("event_id"))
     )
-    final = {}
-    for r in rows:  # latest emission per session: n_events only grows
-        k = (r.user_id, r.session_idx)
-        if k not in final or r.n_events > final[k][0]:
-            final[k] = (r.n_events, r.duration_us, r.start_us)
-    want = {
-        (r.user_id, r.session_idx): (r.n_events, r.duration_us, r.start_us)
-        for r in ops.user_sessions_batch(load(spark, SF, "events")).collect()
-    }
-    assert final == want
-    # straddle check: at least one user's stream state crossed the
-    # split (a session whose start is in half1 but whose batch row has
-    # more events than half1 alone contributed) — guarantees the
-    # open-session path was actually exercised by this fixture
-    assert len(want) > 0
+    assert tied.filter(F.col("event_id").isNull() & F.col("ts").isNotNull()).count()
+    assert tied.groupBy("user_id", "ts").count().filter("count > 1").count()
+    for i, ev in enumerate((events, tied)):
+        half1, half2 = _ts_median_split(ev)
+        rows = _drain_two_batches(
+            spark, tmp_path, f"sess{i}", half1, half2,
+            ops.user_sessions_stream,
+            "user_id, session_idx, n_events, duration_us, start_us",
+        )
+        final = {}
+        for r in rows:  # latest emission per session: n_events only grows
+            k = (r.user_id, r.session_idx)
+            if k not in final or r.n_events > final[k][0]:
+                final[k] = (r.n_events, r.duration_us, r.start_us)
+        want = {
+            (r.user_id, r.session_idx): (r.n_events, r.duration_us, r.start_us)
+            for r in ops.user_sessions_batch(ev).collect()
+        }
+        assert final == want
+        # straddle check: at least one user's stream state crossed the
+        # split (a session whose start is in half1 but whose batch row has
+        # more events than half1 alone contributed) — guarantees the
+        # open-session path was actually exercised by this fixture
+        assert len(want) > 0
 
 
 def test_stateful_holt_stream_bit_equals_batch_twin(spark, tmp_path):

@@ -194,19 +194,22 @@ _OTHER_ROW_NUMBERS = {
 }
 
 
-def _row_number_calls(root: pathlib.Path) -> list[str]:
+def _package_tops(root: pathlib.Path):
+    """(file::top-level-name, AST node) for every top-level statement
+    of package code."""
     pkg = root / "database_cloner_spark"
-    out = []
     for path in sorted(pkg.rglob("*.py")):
         rel = path.relative_to(pkg).as_posix()
-        if rel == "functions/ranks.py":
-            continue
         for top in ast.parse(path.read_text(), str(path)).body:
-            for node in ast.walk(top):
-                fn = getattr(node, "func", None)
-                if getattr(fn, "attr", getattr(fn, "id", None)) == "row_number":
-                    out.append(f"{rel}::{getattr(top, 'name', '<module>')}")
-    return out
+            yield f"{rel}::{getattr(top, 'name', '<module>')}", top
+
+
+def _calls(top: ast.AST, name: str) -> int:
+    """How many calls of `name` (bare or as an attribute) `top` holds."""
+    return sum(
+        getattr(fn, "attr", getattr(fn, "id", None)) == name
+        for fn in (getattr(node, "func", None) for node in ast.walk(top))
+    )
 
 
 def test_rank_filters_go_through_ranks_top():
@@ -214,10 +217,35 @@ def test_rank_filters_go_through_ranks_top():
     functions/ranks.py, whose `top` states the per-group top-k contract
     once; the allow-listed calls are not rank filters. An AST scan, so
     oracle SQL that spells row_number does not count."""
-    calls = _row_number_calls(_ROOT)
+    calls = [
+        site
+        for site, top in _package_tops(_ROOT)
+        if not site.startswith("functions/ranks.py::")
+        for _ in range(_calls(top, "row_number"))
+    ]
     unexplained = sorted(
         c for c in set(calls) if c not in _OTHER_ROW_NUMBERS or calls.count(c) > 1
     )
     assert not unexplained, f"row_number outside functions/ranks.py: {unexplained}"
     stale = set(_OTHER_ROW_NUMBERS) - set(calls)
     assert not stale, f"allow-listed row_number sites are gone: {stale}"
+
+
+# -- one stateful fold and one sessionizer ------------------------------------
+
+
+def test_stateful_fold_and_sessionizer_are_written_once():
+    """The per-user stateful stream operators share ONE
+    applyInPandasWithState call, streaming/ops._fold_per_user, and the
+    lag / gap / running-sum sessionizer is ONE expression,
+    queries/windows.session_index: no other top-level package function
+    calls lag and names SESSION_GAP_US. An AST scan, so oracle SQL that
+    spells lag(...) next to the gap constant does not count."""
+    folds, sessionizers = [], []
+    for site, top in _package_tops(_ROOT):
+        folds += [site] * _calls(top, "applyInPandasWithState")
+        names = {getattr(n, "id", None) for n in ast.walk(top)}
+        if _calls(top, "lag") and "SESSION_GAP_US" in names:
+            sessionizers.append(site)
+    assert folds == ["streaming/ops.py::_fold_per_user"], folds
+    assert sessionizers == ["queries/windows.py::session_index"], sessionizers
