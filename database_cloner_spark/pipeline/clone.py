@@ -23,16 +23,21 @@ Deliberate improvements over the reference for 100 TB:
 - Content verification is a constant-memory distributed reduction, not a
   row dump, and it does not re-read the source: the write observes the
   source's row count and fingerprint in the same pass, and only the
-  target is read back (one source scan per table).
+  target is read back (one source scan per table). The read-back names
+  the source's schema once pyarrow has checked the written files'
+  column names, and its fingerprint is one more Spark job: two jobs per
+  verified table, one unverified. The write probe runs on the driver.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field, replace
 from datetime import datetime, timezone
+from functools import partial
 
 from pyspark.sql import SparkSession
 
@@ -237,6 +242,7 @@ class ClonePipeline:
             if os.path.exists(tgt_path) and self.cfg.create_backup_before_clone:
                 self._backup(tgt_path, table)
 
+            t0 = time.perf_counter()
             src = self._load_source(table)
             out = src
             sort_col = (self.cfg.sort_within_partitions_by or {}).get(table)
@@ -245,23 +251,34 @@ class ClonePipeline:
             # The write reports the source's row count and fingerprint:
             # verification reads only the target back.
             out, seen = verify.observe_fingerprint(out)
+            t1 = time.perf_counter()
             if self.cfg.jdbc_target is not None:
-                return self._clone_table_to_jdbc(table, tgt_name, src, out, seen)
-            writer = out.write.mode("overwrite")
-            part_col = (self.cfg.partition_by or {}).get(table)
-            if part_col:
-                writer = writer.partitionBy(part_col)
-            writer.parquet(tgt_path)
-            # NOTE: dst is re-read, and events-style nanos columns were
-            # normalized to micros by load(); fingerprints compare the
-            # written content, so both sides go through the same path.
-            dst = self.spark.read.parquet(tgt_path) if self.cfg.verify_clone else None
-            return self._written(table, tgt_name, src, seen, dst)
+                check = self._write_jdbc(table, tgt_name, src, out)
+            else:
+                writer = out.write.mode("overwrite")
+                part_col = (self.cfg.partition_by or {}).get(table)
+                if part_col:
+                    writer = writer.partitionBy(part_col)
+                writer.parquet(tgt_path)
+                # load() normalized events-style nanos columns to
+                # micros, so the written files match src.schema, which
+                # verification reads them back through.
+                check = None
+                if self.cfg.verify_clone:
+                    check = partial(verify.verify_written, self.spark, src, tgt_path)
+            t2 = time.perf_counter()
+            result = self._written(table, tgt_name, seen, check)
+            t3 = time.perf_counter()
+            self.log.info(
+                f"Phases of {table} -> {tgt_name}: load {(t1 - t0) * 1e3:.0f} ms, "
+                f"write {(t2 - t1) * 1e3:.0f} ms, verify {(t3 - t2) * 1e3:.0f} ms"
+            )
+            return result
         except Exception as ex:  # noqa: BLE001 — per-db error isolation (CS:1057-1059)
             self.log.error(f"Failed to clone {table}: {ex}")
             return TableResult(table, tgt_name, "failed", error=str(ex))
 
-    def _clone_table_to_jdbc(self, table, tgt_name, src, out, seen) -> TableResult:
+    def _write_jdbc(self, table, tgt_name, src, out):
         """Live-server restore half (clone_databases.sh:817-818):
         executors stream straight into batched inserts, one connection
         per partition. The filesystem guards above (skip-if-exists,
@@ -270,10 +287,11 @@ class ClonePipeline:
         the writer mode: overwrite=False -> mode='error' (an existing
         target table fails THAT table's result — surfaced, never
         silently replaced), overwrite=True -> mode='overwrite'.
-        Verification re-reads the written table through the same
-        partitioned reader when a partition spec exists for the table;
-        without one the re-read would be a single-connection scan, so
-        it is skipped and verified stays None (recorded, not hidden)."""
+        Returns the check `_written` runs: verification re-reads the
+        written table through the same partitioned reader when a
+        partition spec exists for the table; without one the re-read
+        would be a single-connection scan, so it is skipped and verified
+        stays None (recorded, not hidden)."""
         jdbc.save_table(
             out,
             self.cfg.jdbc_target,
@@ -281,20 +299,21 @@ class ClonePipeline:
             mode="overwrite" if self.cfg.overwrite else "error",
         )
         spec = (self.cfg.jdbc_partition or {}).get(table)
-        dst = None
-        if self.cfg.verify_clone and spec is not None:
-            dst = jdbc.load_table(self.spark, self.cfg.jdbc_target, tgt_name, spec)
-        return self._written(table, tgt_name, src, seen, dst)
+        if not self.cfg.verify_clone or spec is None:
+            return None
+        dst = jdbc.load_table(self.spark, self.cfg.jdbc_target, tgt_name, spec)
+        return partial(verify.verify_clone, src, dst)
 
-    def _written(self, table, tgt_name, src, seen, dst) -> TableResult:
+    def _written(self, table, tgt_name, seen, check) -> TableResult:
         """Result of a table whose write succeeded. Its rows are the count
-        `seen` observed on the write; given `dst`, the target read back,
-        the clone is verified against it first."""
+        `seen` observed on the write; given `check`, which verifies the
+        target against that observed source fingerprint and returns
+        `verify_clone`'s report, the clone is verified first."""
         src_fp = verify.observed_fingerprint(seen)
         verified: bool | None = None
         n = src_fp.n_rows
-        if dst is not None:
-            report = verify.verify_clone(src, dst, src_fp=src_fp)
+        if check is not None:
+            report = check(src_fp)
             verified = report["match"]
             if not verified:
                 return TableResult(
@@ -326,7 +345,7 @@ class ClonePipeline:
 
         # Pre-flight: write round-trip on the target namespace — the
         # reference's connectivity/write probe (clone_databases.sh:933-937).
-        if not verify.write_round_trip(self.spark, cfg.target_dir):
+        if not verify.write_round_trip(cfg.target_dir):
             raise RuntimeError(f"target namespace {cfg.target_dir} failed write probe")
 
         # Largest-first scheduling: the long pole starts immediately, so

@@ -2,22 +2,31 @@
 
 The reference only existence-checks its clones (clone_databases.sh:791,
 :227-231) and probes connectivity (:480-551). A real engine must verify
-content. Three levels, all distributed (no driver-side row transfer):
+content. Three levels; the first two are distributed (no driver-side row
+transfer):
 
-1. fingerprint: count + order-insensitive row-hash sum — one pass per
-   table. The clone takes the source side from its own write
+1. fingerprint: count + order-insensitive row-hash sum — one pass and
+   one Spark job per table, observed on the job that scans it. The
+   clone takes the source side from its own write
    (`observe_fingerprint`), so the source is scanned once, by the write;
-   only the target is read back for its fingerprint.
+   only the target is read back for its fingerprint, through the
+   source's schema (`verify_written`).
 2. diff: exceptAll in both directions — exact row multiset equality, with
    the differing rows available when it fails.
 3. write round-trip: the reference's `insertOne({test:1})` / `deleteOne`
-   probe (clone_databases.sh:933-937) against the target namespace.
+   probe (clone_databases.sh:933-937) against the target namespace, one
+   row written, read back and removed on the driver (no Spark job).
 """
 
 from __future__ import annotations
 
+import contextlib
+import os
 from dataclasses import dataclass
+from urllib.parse import unquote
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -47,34 +56,34 @@ def row_hash(df: DataFrame) -> Column:
     return F.xxhash64(*_hashable_cols(df)).cast("decimal(38,0)")
 
 
-def _fingerprint_cols(df: DataFrame) -> list[Column]:
-    return [F.count(F.lit(1)).alias("n"), F.sum(row_hash(df)).alias("h")]
-
-
-def fingerprint(df: DataFrame) -> TableFingerprint:
-    """One-pass content fingerprint. The row hash is xxhash64 over all
-    columns, summed as DECIMAL(38,0): order-insensitive, overflow-free,
-    duplicate-sensitive (unlike XOR, two identical rows don't cancel).
-    Scales as a single partial-aggregated reduction — constant-size state
-    per partition regardless of table size."""
-    row = df.agg(*_fingerprint_cols(df)).collect()[0]
-    return TableFingerprint(n_rows=row["n"], row_hash_sum=str(row["h"]))
-
-
 def observe_fingerprint(df: DataFrame) -> tuple[DataFrame, Observation]:
-    """`df` with `fingerprint(df)` observed on it: the first action on
-    the returned frame (the clone's write) computes the same count and
+    """`df` with its content fingerprint observed on it: the first action
+    on the returned frame (the clone's write) computes the row count and
     hash sum in its own pass, so the source is not scanned again. Read
     it with `observed_fingerprint` once that action has succeeded;
     before, `Observation.get` blocks."""
     obs = Observation()
-    return df.observe(obs, *_fingerprint_cols(df)), obs
+    return df.observe(obs, F.count(F.lit(1)).alias("n"), F.sum(row_hash(df)).alias("h")), obs
 
 
 def observed_fingerprint(obs: Observation) -> TableFingerprint:
     """The fingerprint an `observe_fingerprint` observation holds."""
     got = obs.get
     return TableFingerprint(n_rows=got["n"], row_hash_sum=str(got["h"]))
+
+
+def fingerprint(df: DataFrame) -> TableFingerprint:
+    """One-pass content fingerprint in one Spark job: `observe_fingerprint`
+    on a `noop` write of `df` (a `df.agg(...).collect()` of the same two
+    aggregates is two jobs under AQE, one each side of its shuffle), so
+    both sides of a verification share one code path. The row hash is
+    xxhash64 over all columns, summed as DECIMAL(38,0): order-insensitive,
+    overflow-free, duplicate-sensitive (unlike XOR, two identical rows
+    don't cancel). Constant-size state per partition regardless of table
+    size."""
+    out, obs = observe_fingerprint(df)
+    out.write.format("noop").mode("overwrite").save()
+    return observed_fingerprint(obs)
 
 
 def _align_to(src: DataFrame, dst: DataFrame) -> DataFrame:
@@ -104,6 +113,15 @@ def diff_counts(src: DataFrame, dst: DataFrame) -> tuple[int, int]:
     return only_src, only_dst
 
 
+def _column_mismatch(src_cols, dst_cols) -> dict:
+    return {
+        "match": False,
+        "src_rows": None,
+        "dst_rows": None,
+        "error": f"column sets differ: {sorted(src_cols)} vs {sorted(dst_cols)}",
+    }
+
+
 def verify_clone(
     src: DataFrame, dst: DataFrame, src_fp: TableFingerprint | None = None
 ) -> dict:
@@ -117,12 +135,7 @@ def verify_clone(
     does not use the fingerprints' row counts, so a wrong `src_fp` can
     only cost the diff, never flip the verdict."""
     if set(src.columns) != set(dst.columns):
-        return {
-            "match": False,
-            "src_rows": None,
-            "dst_rows": None,
-            "error": f"column sets differ: {sorted(src.columns)} vs {sorted(dst.columns)}",
-        }
+        return _column_mismatch(src.columns, dst.columns)
     dst = _align_to(src, dst)
     fs = src_fp if src_fp is not None else fingerprint(src)
     fd = fingerprint(dst)
@@ -142,20 +155,54 @@ def verify_clone(
     return result
 
 
-def write_round_trip(spark, target_dir: str) -> bool:
+def _hidden(name: str) -> bool:
+    # Spark's file-index rule: `.` and `_` names are not data, except a
+    # `_`-named hive partition directory (it holds a `=`).
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def written_column_sets(path: str) -> set[frozenset[str]]:
+    """The column set of each parquet data file under `path`: its footer's
+    column names plus the hive partition keys of the directories above
+    it. Read on the driver with pyarrow (footers only, no Spark job)."""
+    found = set()
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        rel = os.path.relpath(root, path).split(os.sep)
+        keys = [unquote(d.split("=", 1)[0]) for d in rel if "=" in d]
+        for f in files:
+            if not _hidden(f):
+                found.add(frozenset(pq.read_schema(os.path.join(root, f)).names + keys))
+    return found
+
+
+def verify_written(
+    spark, src: DataFrame, path: str, src_fp: TableFingerprint | None = None
+) -> dict:
+    """`verify_clone` of the parquet target at `path` written from `src`.
+
+    The target is read through `src`'s schema, so no schema-inference job
+    runs and the hive partition column keeps its source type. Such a read
+    turns a column a file lacks into NULLs, and an int column a file holds
+    as strings fails the read. So every data file must first hold exactly
+    `src`'s column set; if one does not, the report is `verify_clone`'s
+    column-set failure and nothing is read."""
+    for cols in written_column_sets(path):
+        if cols != set(src.columns):
+            return _column_mismatch(src.columns, cols)
+    return verify_clone(src, spark.read.schema(src.schema).parquet(path), src_fp=src_fp)
+
+
+def write_round_trip(target_dir: str) -> bool:
     """The reference's write-probe (insertOne({test:1}) then deleteOne,
     clone_databases.sh:933-937): write one row into the target namespace,
-    read it back, drop it. The read-back names the schema it just wrote,
-    which saves a schema-inference job and weakens nothing: a column the
-    write lost reads back as NULL and fails the `test == 1` check."""
-    import os
-    import shutil
-
+    read it back, remove it. One row needs no Spark job: pyarrow writes
+    and reads it on the driver, as `reports` does for the metadata
+    tables."""
     probe_path = os.path.join(target_dir, "_write_probe.parquet")
     try:
-        probe = spark.createDataFrame([(1,)], "test int")
-        probe.write.mode("overwrite").parquet(probe_path)
-        back = spark.read.schema("test int").parquet(probe_path).collect()
-        return len(back) == 1 and back[0].test == 1
+        pq.write_table(pa.table({"test": pa.array([1], pa.int32())}), probe_path)
+        return pq.read_table(probe_path).to_pylist() == [{"test": 1}]
     finally:
-        shutil.rmtree(probe_path, ignore_errors=True)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(probe_path)

@@ -5,10 +5,14 @@ clone sf0.001 -> verify fingerprints -> idempotent second run -> reports.
 from __future__ import annotations
 
 import os
+import re
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import DataFrameWriter
 
-from database_cloner_spark.pipeline import CloneConfig, ClonePipeline
+from database_cloner_spark.pipeline import CloneConfig, ClonePipeline, reports
 from database_cloner_spark.pipeline.verify import diff_counts, verify_clone
 from database_cloner_spark.sources.parquet import load
 from tests.spark_jobs import jobs_started
@@ -43,6 +47,20 @@ def test_clone_content_identical(spark, clone_run):
     dst = spark.read.parquet(os.path.join(cfg.target_dir, "clone_customer.parquet"))
     assert diff_counts(src, dst) == (0, 0)
     assert verify_clone(src, dst)["match"]
+
+
+def test_clone_logs_phase_times_per_table(clone_run):
+    """One INFO line per cloned table with its load, write and verify
+    milliseconds; a skipped rerun adds none."""
+    cfg, result = clone_run
+    log = reports.read_rows(os.path.join(cfg.target_dir, "_clone_log"))
+    phases = [
+        r["message"] for r in log
+        if r["level"] == "INFO" and r["message"].startswith("Phases of ")
+    ]
+    assert sorted(m.split()[2] for m in phases) == sorted(r.table for r in result.results)
+    for m in phases:
+        assert re.search(r": load \d+ ms, write \d+ ms, verify \d+ ms$", m), m
 
 
 def test_second_run_is_idempotent_skip(spark, clone_run):
@@ -223,6 +241,63 @@ def test_partitioned_clone_bigint_column_verifies(spark, tmp_path):
     result = ClonePipeline(spark, cfg).run()
     assert result.ok
     assert result.results[0].verified is True
+
+
+_GUARD_SOURCE = pa.table({
+    "k": pa.array([1, 2, 3], pa.int32()),
+    "v": pa.array(["a", "b", None], pa.string()),
+    "z": pa.array([None, None, None], pa.int32()),  # all NULL
+})
+
+
+@pytest.mark.parametrize(
+    "written",
+    [
+        pytest.param(_GUARD_SOURCE.drop_columns(["z"]), id="all_null_column_dropped"),
+        pytest.param(
+            _GUARD_SOURCE.append_column("extra", pa.array([0, 0, 0], pa.int64())),
+            id="extra_column",
+        ),
+        pytest.param(
+            _GUARD_SOURCE.set_column(0, "k", _GUARD_SOURCE.column("k").cast(pa.string())),
+            id="int_column_as_digit_strings",
+        ),
+    ],
+)
+def test_read_back_guard_fails_a_differing_target(spark, tmp_path, monkeypatch, written):
+    """The clone's write is replaced by a hand-built target that differs
+    from the source: verification must fail and the table with it. The
+    read-back names the source's schema, so a dropped all-NULL column
+    must not read back as NULLs, nor digit strings cast back to int."""
+    src_dir = tmp_path / "src"
+    src_dir.mkdir()
+    pq.write_table(_GUARD_SOURCE, str(src_dir / "t.parquet"))
+    real_write = DataFrameWriter.parquet
+
+    def write_by_hand(self, path, *args, **kwargs):
+        if not os.path.basename(path).startswith("clone_"):
+            return real_write(self, path, *args, **kwargs)
+        # The real write still runs, elsewhere: it reports the source
+        # fingerprint the target is checked against.
+        real_write(self, str(tmp_path / "discarded"), *args, **kwargs)
+        os.makedirs(path)
+        pq.write_table(written, os.path.join(path, "part-00000.parquet"))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_by_hand)
+    cfg = CloneConfig(
+        source_dir=str(src_dir),
+        target_dir=str(tmp_path / "target"),
+        tables="t",
+        test_user_connections=False,
+    )
+    result = ClonePipeline(spark, cfg).run()
+    (r,) = result.results
+    assert not result.ok
+    assert r.status == "failed" and r.verified is not True, r
+    if set(written.column_names) != set(_GUARD_SOURCE.column_names):
+        assert r.verified is False and "column sets differ" in r.error, r
+    else:  # the read through the source's schema refuses the strings
+        assert "PARQUET_COLUMN_DATA_TYPE_MISMATCH" in r.error, r
 
 
 def test_passwords_secure_by_default_seeded_on_request():
@@ -426,16 +501,31 @@ def test_metadata_phase_starts_no_spark_job(spark, seeded_clone):
     assert jobs_started(spark, lambda: spark.range(1).count()) >= 1
 
 
-def test_write_round_trip_starts_two_jobs(spark, tmp_path):
-    """The clone pre-flight writes its one-row probe (one job) and reads
-    it back through the schema it wrote (one job): no schema-inference
-    job in between."""
+def test_write_round_trip_starts_no_job(spark, tmp_path):
+    """The clone pre-flight writes its one-row probe, reads it back and
+    removes it on the driver: no Spark job."""
     from database_cloner_spark.pipeline import verify
 
     ok = []
-    assert jobs_started(spark, lambda: ok.append(verify.write_round_trip(spark, str(tmp_path)))) == 2
+    assert jobs_started(spark, lambda: ok.append(verify.write_round_trip(str(tmp_path)))) == 0
     assert ok == [True]
     assert not os.path.exists(tmp_path / "_write_probe.parquet")
+
+
+def test_failed_write_probe_refuses_the_clone(spark, tmp_path, monkeypatch):
+    """A target namespace that cannot take the probe's write is refused
+    before any table is cloned."""
+    from database_cloner_spark.pipeline import verify
+
+    def refuse(*args, **kwargs):
+        raise OSError("read-only file system")
+
+    monkeypatch.setattr(verify.pq, "write_table", refuse)
+    target = tmp_path / "refused"
+    cfg = CloneConfig(source_dir=SF, target_dir=str(target), tables="region,nation")
+    with pytest.raises(OSError, match="read-only"):
+        ClonePipeline(spark, cfg).run()
+    assert not [d for d in os.listdir(target) if d.startswith("clone_")]
 
 
 def test_principal_probe_skip_semantics(spark, tmp_path):
