@@ -161,7 +161,7 @@ def _hidden(name: str) -> bool:
     return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
-def written_column_sets(path: str) -> set[frozenset[str]]:
+def _written_column_sets(path: str) -> set[frozenset[str]]:
     """The column set of each parquet data file under `path`: its footer's
     column names plus the hive partition keys of the directories above
     it. Read on the driver with pyarrow (footers only, no Spark job)."""
@@ -179,15 +179,16 @@ def written_column_sets(path: str) -> set[frozenset[str]]:
 def verify_written(
     spark, src: DataFrame, path: str, src_fp: TableFingerprint | None = None
 ) -> dict:
-    """`verify_clone` of the parquet target at `path` written from `src`.
+    """`verify_clone` of the parquet target at `path`, written from `src`.
 
-    The target is read through `src`'s schema, so no schema-inference job
-    runs and the hive partition column keeps its source type. Such a read
-    turns a column a file lacks into NULLs, and an int column a file holds
-    as strings fails the read. So every data file must first hold exactly
-    `src`'s column set; if one does not, the report is `verify_clone`'s
-    column-set failure and nothing is read."""
-    for cols in written_column_sets(path):
+    The target is read through `src`'s schema: no schema-inference job
+    runs, and the hive partition column keeps its source type. That read
+    would turn a column missing from a file into NULLs, so first every
+    data file, with its partition keys, must hold exactly `src`'s
+    columns; if one does not, the report is `verify_clone`'s column-set
+    failure and nothing is read. A column stored with another type fails
+    the read itself."""
+    for cols in _written_column_sets(path):
         if cols != set(src.columns):
             return _column_mismatch(src.columns, cols)
     return verify_clone(src, spark.read.schema(src.schema).parquet(path), src_fp=src_fp)
