@@ -22,7 +22,7 @@ import argparse
 import sys
 
 
-def prompt_password(prompt_text: str, *, reader=None, out=None) -> str:
+def prompt_password(prompt_text: str, *, reader=None) -> str:
     """Interactive credential prompt with confirmation loop
     (clone_databases.sh:264-289): hidden input, empty password rejected,
     must be typed twice identically; loops until both hold.
@@ -31,7 +31,7 @@ def prompt_password(prompt_text: str, *, reader=None, out=None) -> str:
     import getpass
 
     read = reader or getpass.getpass
-    err = out or sys.stderr
+    err = sys.stderr
     while True:
         password = read(f"{prompt_text}: ")
         if not password:
@@ -75,7 +75,7 @@ _DB_TYPE_DEFAULTS = {
 }
 
 
-def validate_db_conf(conf: dict[str, str], *, err=None) -> dict[str, str] | None:
+def validate_db_conf(conf: dict[str, str]) -> dict[str, str] | None:
     """DB_TYPE dispatch parity with the reference's load_config
     (clone_databases.sh:12, :75-130): when the conf declares DB_TYPE,
     validate that type's required keys in reference order (first
@@ -87,7 +87,7 @@ def validate_db_conf(conf: dict[str, str], *, err=None) -> dict[str, str] | None
     (${DB_TYPE}_db_clone.conf); with a single --conf flag the explicit
     key is the carrier. Returns the defaulted conf, or None (caller
     exits 1)."""
-    err = err or sys.stderr
+    err = sys.stderr
     db_type = conf.get("DB_TYPE")
     if db_type is None:
         return dict(conf)
@@ -189,6 +189,10 @@ def main(argv: list[str] | None = None) -> int:
             "TEST_USER_CONNECTIONS", "true"
         ).lower() in truthy,
         lb_host=conf.get("LB_HOST") or None,
+        app_role_prefix=conf.get("APP_ROLE_PREFIX", CloneConfig.app_role_prefix),
+        owner_role_prefix=conf.get(
+            "OWNER_ROLE_PREFIX", CloneConfig.owner_role_prefix
+        ),
     )
     result = ClonePipeline(spark, cfg).run()
 

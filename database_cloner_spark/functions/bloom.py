@@ -37,18 +37,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_M_BITS = 1 << 20
-DEFAULT_K = 5
+BLOOM_K = 5  # hash functions, k
 
 
-def _positions(key: Column, m_bits: int, k: int) -> list[Column]:
-    """k independent bit positions in [0, m_bits). Build and probe both
+def _positions(key: Column, m_bits: int) -> list[Column]:
+    """BLOOM_K independent bit positions in [0, m_bits). Build and probe both
     come through here, so this is where the bitmap's word layout is
     enforced: m_bits/64 whole words, or the tail bits would be dropped
     on build and read past the array end on probe (false negatives)."""
     if m_bits % 64:
         raise ValueError(f"m_bits must be a multiple of 64, got {m_bits}")
     return [
-        F.pmod(F.xxhash64(key, F.lit(i)), F.lit(m_bits)) for i in range(k)
+        F.pmod(F.xxhash64(key, F.lit(i)), F.lit(m_bits)) for i in range(BLOOM_K)
     ]
 
 
@@ -63,12 +63,7 @@ def _bit_mask(p: Column) -> Column:
     )
 
 
-def build_bloom(
-    keys: DataFrame,
-    key_col: str,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-) -> DataFrame:
+def build_bloom(keys: DataFrame, key_col: str, m_bits: int = DEFAULT_M_BITS) -> DataFrame:
     """Aggregate `keys[key_col]` (NULLs ignored — NULL is not a member)
     into a single-row DENSE bitmap: (bloom: array<long>) of exactly
     m_bits/64 words, word i at array position i+1 (1-based `element_at`
@@ -84,7 +79,7 @@ def build_bloom(
     `element_at` instead of a linear map scan."""
     n_words = m_bits // 64
     pos = keys.filter(F.col(key_col).isNotNull()).select(
-        F.explode(F.array(*_positions(F.col(key_col), m_bits, k))).alias("p")
+        F.explode(F.array(*_positions(F.col(key_col), m_bits))).alias("p")
     )
     words = pos.select(
         (F.col("p") / 64).cast("long").alias("w"),
@@ -103,8 +98,8 @@ def build_bloom(
     )
 
 
-def bloom_contains(key: Column, bloom: Column, m_bits: int = DEFAULT_M_BITS, k: int = DEFAULT_K) -> Column:
-    """Map-side membership test: true iff every one of the key's k bits
+def bloom_contains(key: Column, bloom: Column, m_bits: int = DEFAULT_M_BITS) -> Column:
+    """Map-side membership test: true iff every one of the key's BLOOM_K bits
     is set. NULL keys test false (a NULL was never inserted). Each of
     the k word reads is an O(1) array `element_at` (index provably in
     [1, m_bits/64]: positions are pmod(·, m_bits), so ANSI bounds can
@@ -113,7 +108,7 @@ def bloom_contains(key: Column, bloom: Column, m_bits: int = DEFAULT_M_BITS, k: 
         word = F.element_at(bloom, ((p / 64).cast("int") + F.lit(1)))
         return word.bitwiseAND(_bit_mask(p)) != F.lit(0).cast("long")
 
-    tests = [bit_set(p) for p in _positions(key, m_bits, k)]
+    tests = [bit_set(p) for p in _positions(key, m_bits)]
     return F.when(key.isNull(), F.lit(False)).otherwise(
         reduce(lambda a, b: a & b, tests)
     )

@@ -63,9 +63,8 @@ def grid_range_join(
     lo_col: str,
     hi_col: str,
     cell_width: float,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join rows of `points` to rows of `intervals` where
+    """Inner-join rows of `points` to rows of `intervals` where
     lo <= value < hi, as a grid-cell equi-join. Column sets must be
     disjoint (rename beforehand). `hi` is exclusive, matching
     q_join_range's band semantics."""
@@ -78,7 +77,7 @@ def grid_range_join(
         cell_of(F.col(lo_col)), cell_of(F.col(hi_col)), "grid_range_join"
     )
     iv = intervals.withColumn(CELL_COL, F.explode(cells))
-    joined = p.join(iv, CELL_COL, how).filter(
+    joined = p.join(iv, CELL_COL).filter(
         (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col))
     )
     return joined.drop(CELL_COL)

@@ -29,23 +29,21 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_W = 2048
-DEFAULT_D = 5
+CMS_W = 2048  # counters per hash row, w
+CMS_D = 5  # hash rows, d
 
 
-def _cell(key: Column, j: int, w: int) -> Column:
+def _cell(key: Column, j: int) -> Column:
     """Flattened cell index j·w + pos for hash row j."""
-    return F.lit(j * w) + F.pmod(F.xxhash64(key, F.lit(j)), F.lit(w))
+    return F.lit(j * CMS_W) + F.pmod(F.xxhash64(key, F.lit(j)), F.lit(CMS_W))
 
 
-def build_cms(
-    keys: DataFrame, key_col: str, w: int = DEFAULT_W, d: int = DEFAULT_D
-) -> DataFrame:
+def build_cms(keys: DataFrame, key_col: str) -> DataFrame:
     """Aggregate keys[key_col] (NULLs ignored) into a single-row sketch:
     (cms: map<long,long>) of flattened cell → count, zero cells omitted."""
     cells = keys.filter(F.col(key_col).isNotNull()).select(
         F.explode(
-            F.array(*[_cell(F.col(key_col), j, w) for j in range(d)])
+            F.array(*[_cell(F.col(key_col), j) for j in range(CMS_D)])
         ).alias("cell")
     )
     return (
@@ -59,17 +57,14 @@ def build_cms(
     )
 
 
-def cms_estimate(
-    key: Column, cms: Column, w: int = DEFAULT_W, d: int = DEFAULT_D
-) -> Column:
+def cms_estimate(key: Column, cms: Column) -> Column:
     """Point estimate for `key`: min over the d probed cells. NULL keys
     estimate 0 (never inserted)."""
     probes = [
         F.coalesce(
-            F.try_element_at(cms, _cell(key, j, w).cast("long")),
+            F.try_element_at(cms, _cell(key, j).cast("long")),
             F.lit(0).cast("long"),
         )
-        for j in range(d)
+        for j in range(CMS_D)
     ]
-    est = F.least(*probes) if d > 1 else probes[0]
-    return F.when(key.isNull(), F.lit(0).cast("long")).otherwise(est)
+    return F.when(key.isNull(), F.lit(0).cast("long")).otherwise(F.least(*probes))

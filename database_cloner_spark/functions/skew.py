@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _content_salt(df: DataFrame, n_salts: int, salt_cols: Sequence[str] | None) -> Column:
+def _content_salt(df: DataFrame, n_salts: int) -> Column:
     """Salt derived from STABLE row content, never from
     monotonically_increasing_id(): mid-ids depend on partition layout, so
     if a shuffle-map task is recomputed after a partial fetch, rows would
@@ -30,8 +30,7 @@ def _content_salt(df: DataFrame, n_salts: int, salt_cols: Sequence[str] | None) 
     (the determinism-under-retry rule sampling.py follows). Identical
     rows share a salt — harmless for aggregation (their partials merge
     anyway) and bounded for joins by payload diversity."""
-    cols = list(salt_cols) if salt_cols else df.columns
-    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_salts))
+    return F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
 
 
 def salted_agg(
@@ -39,7 +38,6 @@ def salted_agg(
     keys: Sequence[str],
     aggs: Sequence[Column],
     n_salts: int = 16,
-    salt_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Two-phase aggregation with an explicit salt: rows are first
     aggregated on (keys..., salt) — n_salts partial states per hot key,
@@ -62,7 +60,7 @@ def salted_agg(
     aggregates, or inputs already one-row-per-key so partials can't
     reduce); otherwise the extra shuffle is pure cost.
     """
-    salt = _content_salt(df, n_salts, salt_cols)
+    salt = _content_salt(df, n_salts)
     partial = (
         df.withColumn("__salt", salt)
         .groupBy(*keys, "__salt")
@@ -75,14 +73,9 @@ def salted_agg(
 
 
 def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: str,
-    n_salts: int = 16,
-    how: str = "inner",
-    salt_cols: Sequence[str] | None = None,
+    skewed: DataFrame, other: DataFrame, on: str, n_salts: int = 16
 ) -> DataFrame:
-    """Equi-join where `skewed` has hot values of `on` and `other` is
+    """Inner equi-join where `skewed` has hot values of `on` and `other` is
     too big to broadcast: append a random salt to the skewed side's key
     and replicate `other` n_salts times (explode), so one hot key's rows
     land in n_salts different shuffle partitions instead of one.
@@ -96,10 +89,10 @@ def salted_join(
     skew split genuinely does NOT fire on the join->agg-on-the-same-key
     shape (straggler stayed ~1.0s with it enabled), confirming the
     condition above by measurement, not prose."""
-    salt = _content_salt(skewed, n_salts, salt_cols)
+    salt = _content_salt(skewed, n_salts)
     left = skewed.withColumn("__salt", salt.cast("int"))
     right = other.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     )
-    out = left.join(right, [on, "__salt"], how)
+    out = left.join(right, [on, "__salt"])
     return out.drop("__salt")

@@ -90,9 +90,7 @@ def quantize(x: Column) -> Column:
     )
 
 
-def cosine_topk_pandas(
-    embs: DataFrame, probe: list[float], k: int = 10, vec_col: str = "embedding"
-) -> DataFrame:
+def cosine_topk_pandas(embs: DataFrame, probe: list[float], k: int = 10) -> DataFrame:
     """Top-k cosine vs a driver-side probe vector, scored in numpy via
     mapInPandas (one BLAS matvec per Arrow batch), ranked by
     TakeOrderedAndProject. The probe travels as a closure constant —
@@ -143,7 +141,7 @@ def cosine_topk_pandas(
             # uniform shape, so scorables are scored as a sub-matrix and
             # scattered back; one ragged batch must not kill the job
             # (tests/test_adversarial_rows_only.py).
-            vecs = pdf[vec_col].to_numpy()
+            vecs = pdf["embedding"].to_numpy()
             cos = np.full(len(pdf), np.nan)
             idx = [
                 i
@@ -177,7 +175,7 @@ def cosine_topk_pandas(
                 }
             )
 
-    scored = embs.select("vec_id", vec_col).mapInPandas(
+    scored = embs.select("vec_id", "embedding").mapInPandas(
         score, schema="vec_id long, cosine double"
     )
     return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)

@@ -26,30 +26,30 @@ from operator import add
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-DEFAULT_BITS = 8
+Z_BITS = 8  # low bits of each input that the code interleaves
 
 
-def z_value(a: Column, b: Column, bits: int = DEFAULT_BITS) -> Column:
-    """Morton code of the low `bits` bits of each input: a's bit i lands
+def z_value(a: Column, b: Column) -> Column:
+    """Morton code of the low Z_BITS bits of each input: a's bit i lands
     at position 2i, b's at 2i+1. Inputs are long-cast; callers quantize
-    wider domains (rank, bucket, day-number) down to `bits` bits first —
+    wider domains (rank, bucket, day-number) down to Z_BITS bits first —
     & masking keeps only the low bits, so out-of-range values wrap
     rather than error (layout, not semantics)."""
     a, b = a.cast("long"), b.cast("long")
     terms = [
         F.shiftleft(F.shiftright(a, i).bitwiseAND(F.lit(1)), 2 * i)
-        for i in range(bits)
+        for i in range(Z_BITS)
     ] + [
         F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-        for i in range(bits)
+        for i in range(Z_BITS)
     ]
     return reduce(add, terms)
 
 
-def z_value_sql(a: str, b: str, bits: int = DEFAULT_BITS) -> str:
+def z_value_sql(a: str, b: str) -> str:
     """The identical Morton code as ANSI SQL (shift/mask/multiply —
     runs on DuckDB verbatim), so the oracle computes the same longs."""
-    terms = [f"((({a} >> {i}) & 1) * {1 << (2 * i)})" for i in range(bits)] + [
-        f"((({b} >> {i}) & 1) * {1 << (2 * i + 1)})" for i in range(bits)
+    terms = [f"((({a} >> {i}) & 1) * {1 << (2 * i)})" for i in range(Z_BITS)] + [
+        f"((({b} >> {i}) & 1) * {1 << (2 * i + 1)})" for i in range(Z_BITS)
     ]
     return "(" + " + ".join(terms) + ")"

@@ -28,6 +28,7 @@ from pyspark.sql import Window as W
 from database_cloner_spark.functions import ranks
 from database_cloner_spark.functions.partitioning import spread
 from database_cloner_spark.llm.textprep import (
+    SHINGLE_N,
     normalized,
     shingles_of_tokens,
     tokens,
@@ -36,7 +37,7 @@ from database_cloner_spark.llm.textprep import (
 # --- exact -----------------------------------------------------------------
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """One surviving doc_id per normalized text + multiplicity.
 
     The shuffle key is `xxhash64(norm_text)` — 8 bytes — not the
@@ -60,7 +61,7 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # independent hash function (xxhash64's seed is not exposed)
     h2 = F.xxhash64(F.concat(F.col("norm_text"), F.lit("\x01dcs")))
     return (
-        docs.select(F.col("doc_id"), normalized(F.col(text_col)).alias("norm_text"))
+        docs.select(F.col("doc_id"), normalized(F.col("text")).alias("norm_text"))
         .groupBy(h.alias("__h"))
         .agg(
             F.min("doc_id").alias("doc_id"),
@@ -183,15 +184,13 @@ def _jaccard_pairs_from_exploded(
 def shingle_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.4,
-    n: int = 3,
-    text_col: str = "text",
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """All pairs with shingle-Jaccard >= threshold, via the inverted-
     index formulation (no cross product, map side computed once; see
     _jaccard_pairs_from_exploded for the shape and the hot-shingle
     `max_shingle_df` cap semantics)."""
-    sh = _shingle_sets(docs, n, text_col).withColumn("n_sh", F.size("sh"))
+    sh = _shingle_sets(docs).withColumn("n_sh", F.size("sh"))
     exploded = sh.select(
         "doc_id", F.col("n_sh").alias("__n"), F.explode("sh").alias("__key")
     )
@@ -201,8 +200,6 @@ def shingle_jaccard_pairs(
 def shingle_containment_pairs(
     docs: DataFrame,
     threshold: float = 0.6,
-    n: int = 3,
-    text_col: str = "text",
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Asymmetric shingle containment: C(A→B) = |S_A ∩ S_B| / |S_A|.
@@ -220,7 +217,7 @@ def shingle_containment_pairs(
     shuffle, no cross product); the filter compares raw integer-ratio
     doubles and the OUTPUT rounds via integer arithmetic
     (round4_ratio), the cross-engine tie discipline."""
-    sh = _shingle_sets(docs, n, text_col).withColumn("n_sh", F.size("sh"))
+    sh = _shingle_sets(docs).withColumn("n_sh", F.size("sh"))
     exploded = sh.select(
         "doc_id", F.col("n_sh").alias("__n"), F.explode("sh").alias("__key")
     )
@@ -240,15 +237,18 @@ def shingle_containment_pairs(
 
 # --- character n-gram Jaccard ---------------------------------------------
 
+CHAR_GRAM_N = 3  # q_dedup_ngram's oracle reads it too
 
-def char_ngram_sets(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
-    """(doc_id, gs) — distinct lowercase character n-grams per doc.
-    Character grams catch typo/edit-level near-dups that word shingles
-    miss (one changed word kills 3 word-shingles but only ~n char
-    grams). Short texts (< n chars) yield an empty set, same guard as
-    shingles_of_tokens."""
-    t = spread(docs.select("doc_id", F.col(text_col))).select(
-        "doc_id", F.lower(F.trim(F.col(text_col))).alias("__t")
+
+def char_ngram_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, gs) — distinct lowercase character n-grams per doc,
+    n = CHAR_GRAM_N. Character grams catch typo/edit-level near-dups
+    that word shingles miss (one changed word kills 3 word-shingles but
+    only ~n char grams). Short texts (< n chars) yield an empty set,
+    same guard as shingles_of_tokens."""
+    n = CHAR_GRAM_N
+    t = spread(docs.select("doc_id", F.col("text"))).select(
+        "doc_id", F.lower(F.trim(F.col("text"))).alias("__t")
     )
     grams = F.when(
         F.length("__t") >= n,
@@ -262,23 +262,17 @@ def char_ngram_sets(docs: DataFrame, n: int = 3, text_col: str = "text") -> Data
     return t.select("doc_id", grams.alias("gs"))
 
 
-def char_ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    text_col: str = "text",
-    max_ngram_df: int | None = None,
-) -> DataFrame:
+def char_ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """All pairs with char-n-gram Jaccard >= threshold via the same
-    inverted-index skeleton as shingle_jaccard_pairs. Char grams have a
-    SMALL vocabulary, so df skew is worse than for word shingles: at any
-    real scale set `max_ngram_df` (or go through MinHash over the gram
-    sets) — the uncapped form is the correctness oracle."""
-    gs = char_ngram_sets(docs, n, text_col).withColumn("n_g", F.size("gs"))
+    inverted-index skeleton as shingle_jaccard_pairs, uncapped: char
+    grams have a SMALL vocabulary, so df skew is worse than for word
+    shingles, and the scale path is a df cap or MinHash over the gram
+    sets — this form is the correctness oracle."""
+    gs = char_ngram_sets(docs).withColumn("n_g", F.size("gs"))
     exploded = gs.select(
         "doc_id", F.col("n_g").alias("__n"), F.explode("gs").alias("__key")
     )
-    return _jaccard_pairs_from_exploded(exploded, threshold, max_ngram_df)
+    return _jaccard_pairs_from_exploded(exploded, threshold, None)
 
 
 # --- MinHash + LSH ---------------------------------------------------------
@@ -333,11 +327,11 @@ def _word_hash_sql(
     return f"(({terms}) % {mod})"
 
 
-def shingle_hash_sql(shingle_sql: str, split_fn: str = "split_part") -> str:
+def shingle_hash_sql(shingle_sql: str) -> str:
     """SQL text hashing a 3-word shingle string: word-split via
     `split_part(s, ' ', k)` (identical semantics in Spark and DuckDB),
     each word polynomial-hashed, combined positionally."""
-    w = [f"{split_fn}({shingle_sql}, ' ', {k})" for k in (1, 2, 3)]
+    w = [f"split_part({shingle_sql}, ' ', {k})" for k in (1, 2, 3)]
     return (
         f"(({_word_hash_sql(w[0])} * {MH_X2}"
         f" + {_word_hash_sql(w[1])} * {MH_X1}"
@@ -345,7 +339,7 @@ def shingle_hash_sql(shingle_sql: str, split_fn: str = "split_part") -> str:
     )
 
 
-def _shingle_sets(docs: DataFrame, n: int, text_col: str) -> DataFrame:
+def _shingle_sets(docs: DataFrame) -> DataFrame:
     # Two-step projection: tokens materialized BEFORE shingling so the
     # split regex runs once per doc, not once per shingle position.
     # The emptiness filter runs on the TOKEN count, not size(sh):
@@ -355,10 +349,10 @@ def _shingle_sets(docs: DataFrame, n: int, text_col: str) -> DataFrame:
     # spread(): single-split local inputs otherwise run the whole
     # tokenize+shingle map side on one core (identity at scale).
     return (
-        spread(docs.select("doc_id", F.col(text_col)))
-        .select("doc_id", tokens(F.col(text_col)).alias("__toks"))
-        .filter(F.size("__toks") >= n)
-        .select("doc_id", shingles_of_tokens(F.col("__toks"), n).alias("sh"))
+        spread(docs.select("doc_id", F.col("text")))
+        .select("doc_id", tokens(F.col("text")).alias("__toks"))
+        .filter(F.size("__toks") >= SHINGLE_N)
+        .select("doc_id", shingles_of_tokens(F.col("__toks")).alias("sh"))
     )
 
 
@@ -389,7 +383,6 @@ def _minhash_min_columns(sh: DataFrame) -> DataFrame:
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.4,
-    n: int = 3,
     max_band_bucket: int | None = None,
 ) -> DataFrame:
     """LSH banding (32 bands x 2 rows): candidate pairs share at least
@@ -402,7 +395,7 @@ def minhash_lsh_pairs(
     fetched AFTER dedup via two equi-joins back to the signature table,
     so the wide payload is shuffled once per surviving candidate, never
     per band collision."""
-    sh = _shingle_sets(docs, n, text_col="text")
+    sh = _shingle_sets(docs)
     mins = _minhash_min_columns(sh)
     # Band directly off the min columns — the shingle arrays never enter
     # the banding/join branch of the plan.
@@ -514,14 +507,14 @@ def token_hash_sql(tok_sql: str) -> str:
     return f"({th2} * 1073741824 + {th1})"
 
 
-def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """60-bit SimHash per doc: per-token portable polynomial hash, each
     bit votes +-1 weighted by occurrence; sign of the vote is the
     signature bit. Implemented as 60 conditional-sum aggregates after
     an explode — partial aggregation keeps the shuffle at 60 longs per
     doc."""
-    tok = spread(docs.select("doc_id", F.col(text_col))).select(
-        "doc_id", F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok")
+    tok = spread(docs.select("doc_id", F.col("text"))).select(
+        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok")
     ).withColumn("h", F.expr(token_hash_sql("tok")))
     # SQL-text expression batches (one parse per column / one for the
     # whole fold) instead of ~600 Column-API py4j round trips — same
@@ -544,12 +537,12 @@ def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return agg.select("doc_id", sig.alias("simhash"))
 
 
-def simhash_pairs(docs: DataFrame, max_hamming: int = 3, text_col: str = "text") -> DataFrame:
+def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= k via pigeonhole banding:
     split the 60-bit signature into 4 x 15-bit chunks; any pair within
     hamming 3 must agree on >= 1 chunk, so candidates come from an
     equi-join on (chunk_idx, chunk_value)."""
-    sigs = simhash(docs, text_col)
+    sigs = simhash(docs)
     # shiftright needs a literal bit count -> build the 4-chunk array at
     # the Python level, not with a sequence lambda.
     chunks = F.array(
@@ -810,17 +803,16 @@ def embedding_neardup_pairs(embs: DataFrame, threshold: float = 0.35) -> DataFra
 BUCKETED_CELL_TARGET = 125
 BUCKETED_CELL_FLOOR = 16
 BUCKETED_CELL_CEIL = 65536
+# Cells each vector is assigned to; the q_dedup_embedding_bucketed
+# oracle reads it too.
+BUCKETED_NPROBE = 3
 
 
-def embedding_neardup_bucketed(
-    embs: DataFrame,
-    threshold: float = 0.35,
-    n_cells: int | None = None,
-    nprobe: int = 3,
-) -> DataFrame:
+def embedding_neardup_bucketed(embs: DataFrame, threshold: float = 0.35) -> DataFrame:
     """Scale path for semantic near-dup: assign every vector to its
-    `nprobe` nearest IVF cells (multi-assignment recovers pairs that
-    straddle a cell boundary), then compare pairs only WITHIN a cell.
+    nprobe = BUCKETED_NPROBE nearest IVF cells (multi-assignment
+    recovers pairs that straddle a cell boundary), then compare pairs
+    only WITHIN a cell.
     The all-pairs cross product becomes an equi-join on cell_id —
     cost ~ sum(cell_size^2) instead of n^2, recall controlled by
     nprobe/n_cells (fraction of pairwise work ~ (nprobe/n_cells)^2 *
@@ -852,13 +844,12 @@ def embedding_neardup_bucketed(
     # (r10 NaN sweep posture, llm/similarity.seed_centroids).
     from database_cloner_spark.llm.similarity import seed_centroids
 
-    if n_cells is None:
-        # one cheap count job; ceil(n / target) clamped to [floor, ceil]
-        n = embs.count()
-        n_cells = max(
-            BUCKETED_CELL_FLOOR,
-            min(BUCKETED_CELL_CEIL, -(-n // BUCKETED_CELL_TARGET)),
-        )
+    # one cheap count job; ceil(n / target) clamped to [floor, ceil]
+    n = embs.count()
+    n_cells = max(
+        BUCKETED_CELL_FLOOR,
+        min(BUCKETED_CELL_CEIL, -(-n // BUCKETED_CELL_TARGET)),
+    )
     cents = seed_centroids(embs, n_cells)
     from database_cloner_spark.functions.partitioning import spread
     from database_cloner_spark.functions.vector import cosine as _cos
@@ -897,7 +888,9 @@ def embedding_neardup_bucketed(
     # tests' exact-equality contract holds); norms are recomputed
     # inside with the identical fold the carried `nrm` column used.
     assigned = (
-        ranks.top(scored, per_vector, [F.desc("sim"), F.asc("cell_id")], nprobe)
+        ranks.top(
+            scored, per_vector, [F.desc("sim"), F.asc("cell_id")], BUCKETED_NPROBE
+        )
         .select("cell_id", "vec_id", F.col("embedding").alias("v"))
         .withColumn("role", F.lit("b"))
     )
@@ -958,12 +951,11 @@ def _cc_propagate_round(labels: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    src_col: str = "doc_a",
-    dst_col: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
+# Round cap of connected_components' label propagation.
+_CC_MAX_ITER = 25
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Collapse a near-dup PAIR list into per-doc cluster assignments
     (`doc_id`, `cluster_id` = min doc_id of the connected component) —
     the step that turns any pairwise dedup operator's output into
@@ -1000,9 +992,9 @@ def connected_components(
     # the cut, each round re-executes that entire upstream pipeline
     # (measured at sf0.1: q_dedup_cluster 19.9s → 5.6s).
     edges = (
-        pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(
-            pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
+            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
         .distinct()
         .localCheckpoint(eager=True)
@@ -1013,7 +1005,7 @@ def connected_components(
         .withColumn("label", F.col("v"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ITER):
         new_labels = _cc_propagate_round(labels, edges)
         improved = (
             new_labels.filter(F.col("label") < F.col("old")).limit(1).count()
@@ -1026,13 +1018,14 @@ def connected_components(
     )
 
 
-def _canonical_edges(df: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
-    """Distinct (u, v) with u > v — self loops dropped. The canonical
-    orientation both star phases consume and emit."""
+def _canonical_edges(df: DataFrame) -> DataFrame:
+    """Distinct (u, v) with u > v from an (a, b) edge list — self loops
+    dropped. The canonical orientation both star phases consume and
+    emit."""
     return (
         df.select(
-            F.greatest(F.col(a), F.col(b)).alias("u"),
-            F.least(F.col(a), F.col(b)).alias("v"),
+            F.greatest(F.col("a"), F.col("b")).alias("u"),
+            F.least(F.col("a"), F.col("b")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -1042,7 +1035,6 @@ def _canonical_edges(df: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
 def canonical_survivors(
     docs: DataFrame,
     threshold: float = 0.4,
-    n: int = 3,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Quality-aware canonical selection per near-dup cluster: instead
@@ -1061,9 +1053,7 @@ def canonical_survivors(
     NULL-ordering divergence class)."""
     from database_cloner_spark.llm.text import quality_scores
 
-    prs = shingle_jaccard_pairs(
-        docs, threshold, n, max_shingle_df=max_shingle_df
-    )
+    prs = shingle_jaccard_pairs(docs, threshold, max_shingle_df=max_shingle_df)
     cl = connected_components(prs)
     q = quality_scores(docs).select("doc_id", "quality")
     j = cl.join(q, "doc_id")
@@ -1084,12 +1074,7 @@ def canonical_survivors(
     )
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    src_col: str = "doc_a",
-    dst_col: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC 2014) — the adversarial-graph upgrade to
@@ -1117,7 +1102,9 @@ def connected_components_star(
     (threshold transitivity gaps), and at web scale those chains get
     long.
     """
-    edges = _canonical_edges(pairs, src_col, dst_col).localCheckpoint(eager=True)
+    edges = _canonical_edges(
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+    ).localCheckpoint(eager=True)
     for _ in range(max_iter):
         # Large-star: bidirectional view; each node u computes
         # m = min(neighbors ∪ {u}) and re-parents its LARGER neighbors
@@ -1171,15 +1158,11 @@ def connected_components_star(
 
 
 def benchmark_contamination(
-    train: DataFrame,
-    bench: DataFrame,
-    n: int = 3,
-    min_shared: int = 2,
-    text_col: str = "text",
+    train: DataFrame, bench: DataFrame, min_shared: int = 2
 ) -> DataFrame:
     """Training-set contamination check: (train doc, benchmark doc)
-    pairs sharing >= `min_shared` distinct word-`n`-grams. The standard
-    pre-training hygiene step — benchmark items that leak into the
+    pairs sharing >= `min_shared` distinct word-n-grams, n = SHINGLE_N.
+    The standard pre-training hygiene step — benchmark items that leak into the
     corpus inflate evals, so contaminated docs are quarantined before
     training.
 
@@ -1193,11 +1176,11 @@ def benchmark_contamination(
     n-grams exactly.
     """
     t = (
-        _shingle_sets(train, n, text_col)
+        _shingle_sets(train)
         .select(F.col("doc_id").alias("train_id"), F.explode("sh").alias("shingle"))
     )
     b = (
-        _shingle_sets(bench, n, text_col)
+        _shingle_sets(bench)
         .select(F.col("doc_id").alias("bench_id"), F.explode("sh").alias("shingle"))
     )
     return (

@@ -53,7 +53,7 @@ def assets_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def fake_features(assets: DataFrame, batch_hint: int | None = None) -> DataFrame:
+def fake_features(assets: DataFrame) -> DataFrame:
     """Deterministic fake feature extractor over binary payloads via
     mapInPandas: 8 INTEGER fixed-point byte statistics (mean byte value
     per np.array_split chunk, in 1e-4 units, floored). Stands in for
@@ -100,9 +100,7 @@ def fake_features(assets: DataFrame, batch_hint: int | None = None) -> DataFrame
     )
 
 
-def resize_images(
-    assets: DataFrame, target_bytes: int = 256, batch_hint: int | None = None
-) -> DataFrame:
+def resize_images(assets: DataFrame, target_bytes: int = 256) -> DataFrame:
     """'Resize' images over mapInPandas. A real deployment decodes with a
     codec and resamples (PIL.Image.resize); neither codec exists in this
     container, so the transform is a deterministic fake — truncate/pad
@@ -142,7 +140,14 @@ def resize_images(
     )
 
 
-def frame_sample_plan(assets: DataFrame, every_n_bytes: int = 64) -> DataFrame:
+# Frame spacing of the registered frame-sampling key; its oracle reads
+# it too.
+FRAME_EVERY_N_BYTES = 64
+
+
+def frame_sample_plan(
+    assets: DataFrame, every_n_bytes: int = FRAME_EVERY_N_BYTES
+) -> DataFrame:
     """'Frame sampling' on the opaque payload: byte offsets every N bytes
     (the video-frame analogue; a real decoder would seek timestamps).
     Pure column math — shows the plumbing without a codec. Integer `div`
@@ -156,12 +161,12 @@ def frame_sample_plan(assets: DataFrame, every_n_bytes: int = 64) -> DataFrame:
     )
 
 
-def frame_sample_exploded(assets: DataFrame, every_n_bytes: int = 64) -> DataFrame:
+def frame_sample_exploded(assets: DataFrame) -> DataFrame:
     """One row per sampled frame — the all-scalar twin of
     frame_sample_plan (same plan, posexplode on top). This is the shape
     registered with the driver: hash-comparable (no array column) and
     the shape a downstream frame-decode stage would consume anyway."""
-    plan = frame_sample_plan(assets, every_n_bytes)
+    plan = frame_sample_plan(assets)
     return plan.select(
         "asset_id",
         "n_bytes",

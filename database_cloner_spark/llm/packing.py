@@ -55,14 +55,13 @@ def pack_sequences(
     docs: DataFrame,
     ctx_len: int = 512,
     n_shards: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """Assign every doc its (pack_id, offset) in the packed token
     stream: shard-parallel greedy concatenation, deterministic under
     retries (hash order, no monotonically_increasing_id)."""
     h = _knuth_hash(F.col("doc_id"))
     # standard tokenizer (textprep.tokens), NULL text -> 0 tokens
-    n_toks = _n_tokens(F.col(text_col))
+    n_toks = _n_tokens(F.col("text"))
     base = docs.select(
         "doc_id",
         n_toks.alias("n_tokens"),
@@ -94,7 +93,6 @@ def pack_bins(
     docs: DataFrame,
     ctx_len: int = 512,
     n_shards: int = 8,
-    text_col: str = "text",
 ) -> DataFrame:
     """Whole-document bin packing: first-fit-decreasing into bins of
     `ctx_len` tokens, per hash shard — the NO-TRUNCATION complement of
@@ -127,7 +125,7 @@ def pack_bins(
 
     h = _knuth_hash(F.col("doc_id"))
     # standard tokenizer (textprep.tokens), NULL text -> 0 tokens
-    n_toks = _n_tokens(F.col(text_col))
+    n_toks = _n_tokens(F.col("text"))
     base = docs.select(
         "doc_id",
         n_toks.alias("n_tokens"),

@@ -306,13 +306,28 @@ def quantized_unit(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
-def pq_subvectors(embs: DataFrame, m: int = 8, dim: int = 64) -> DataFrame:
-    """Explode each vector into its m contiguous subvectors:
-    (vec_id, sub, subvec). dim must be the embedding length; d_sub =
-    dim // m."""
-    d = dim // m
+# Product-quantization shape of pq_topk and ivfpq_topk, read by their
+# DuckDB oracles too (queries/llm_ops._pq_oracle): PQ_M subspaces of the
+# PQ_DIM-long embedding, PQ_CODES codewords per subspace, an ADC
+# shortlist of PQ_SHORTLIST candidates reranked exactly to the top
+# PQ_TOP_K; ivfpq_topk first routes through IVFPQ_NPROBE of
+# IVFPQ_CELLS seeded cells.
+PQ_M = 8
+PQ_DIM = 64
+PQ_CODES = 16
+PQ_SHORTLIST = 50
+PQ_TOP_K = 10
+IVFPQ_CELLS = 16
+IVFPQ_NPROBE = 8
+
+
+def pq_subvectors(embs: DataFrame) -> DataFrame:
+    """Explode each vector into its PQ_M contiguous subvectors:
+    (vec_id, sub, subvec). The embedding length must be PQ_DIM; d_sub =
+    PQ_DIM // PQ_M."""
+    d = PQ_DIM // PQ_M
     pieces = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
+        F.sequence(F.lit(0), F.lit(PQ_M - 1)),
         lambda j: F.slice(F.col("embedding"), j * d + F.lit(1), F.lit(d)),
     )
     # downstream consumers (codebook refinement, encoding) do per-row
@@ -331,11 +346,10 @@ def _l2sq(a, b):
     )
 
 
-def pq_codebooks(
-    embs: DataFrame, m: int = 8, k: int = 16, dim: int = 64, iters: int = 1
-) -> DataFrame:
-    """Per-subspace codebooks for product quantization: k codewords per
-    subspace, seeded from the first k vectors' subvectors and refined
+def pq_codebooks(embs: DataFrame, iters: int = 1) -> DataFrame:
+    """Per-subspace codebooks for product quantization: PQ_CODES
+    codewords per subspace, seeded from the first PQ_CODES vectors'
+    subvectors and refined
     with `iters` rounds of Lloyd's — ALL subspaces refined jointly in
     one DataFrame per round (subspace is just a grouping column), so
     the job count is O(iters), not O(m × iters).
@@ -354,8 +368,8 @@ def pq_codebooks(
     partition by (vec_id, sub, subvec) — duplicate vec_ids resolve
     per-row — and order d2 asc NULLS LAST (DuckDB's default; Spark's
     bare asc is nulls-FIRST, the r9 divergence class)."""
-    subs = pq_subvectors(embs, m, dim)
-    cb = subs.filter(F.col("vec_id") < k).select(
+    subs = pq_subvectors(embs)
+    cb = subs.filter(F.col("vec_id") < PQ_CODES).select(
         "sub", F.col("vec_id").alias("code"), F.col("subvec").alias("codeword")
     )
     for _ in range(iters):
@@ -395,16 +409,14 @@ def pq_codebooks(
     return cb
 
 
-def pq_encode(
-    embs: DataFrame, codebooks: DataFrame, m: int = 8, dim: int = 64
-) -> DataFrame:
-    """Quantize every vector to m small codes: (vec_id, codes:array<int>).
+def pq_encode(embs: DataFrame, codebooks: DataFrame) -> DataFrame:
+    """Quantize every vector to PQ_M small codes: (vec_id, codes:array<int>).
     At dim=64/m=8/k=16 that is 8 bytes of codes per vector instead of
     512 bytes of float64 — a 64× compression that lets a 100 TB
     embedding corpus's index fit hot in cluster memory. The argmin is a
     per-row top-1 over a broadcast m×k codebook join; codes are
     re-assembled in subspace order."""
-    scored = pq_subvectors(embs, m, dim).join(F.broadcast(codebooks), "sub").select(
+    scored = pq_subvectors(embs).join(F.broadcast(codebooks), "sub").select(
         "vec_id",
         "sub",
         "subvec",
@@ -430,21 +442,15 @@ def pq_encode(
     )
 
 
-def pq_adc_topk(
-    codes: DataFrame,
-    codebooks: DataFrame,
-    probe: DataFrame,
-    m: int = 8,
-    dim: int = 64,
-    k: int = 10,
-) -> DataFrame:
-    """Asymmetric-distance top-k: the probe is compared to CODEWORDS
-    once (an m×k_codes distance table, tiny, broadcast), then every
+def pq_adc_topk(codes: DataFrame, codebooks: DataFrame, probe: DataFrame) -> DataFrame:
+    """Asymmetric-distance top-k, k = PQ_SHORTLIST: the probe is
+    compared to CODEWORDS once (an m×k_codes distance table, tiny,
+    broadcast), then every
     database vector's approximate distance is the sum of m table
     lookups over its codes — no float vector is touched at query time.
     Plan: explode codes (m rows/vector of 12 bytes), broadcast-join the
     table, one partial-aggregated sum per vec_id, TakeOrdered k."""
-    d = dim // m
+    d = PQ_DIM // PQ_M
     probe_sub = F.slice(F.col("probe"), F.col("sub") * d + F.lit(1), F.lit(d))
     table = (
         codebooks.crossJoin(F.broadcast(probe))
@@ -463,24 +469,17 @@ def pq_adc_topk(
         # asc NULLS LAST (DuckDB's default): an unscorable vector's
         # NULL distance must rank behind every real candidate
         .orderBy(F.asc_nulls_last("adc_dist"), F.asc("vec_id"))
-        .limit(k)
+        .limit(PQ_SHORTLIST)
     )
 
 
-def pq_topk(
-    embs: DataFrame,
-    probe: DataFrame,
-    m: int = 8,
-    dim: int = 64,
-    k: int = 10,
-    shortlist: int = 50,
-    iters: int = 1,
-) -> DataFrame:
+def pq_topk(embs: DataFrame, probe: DataFrame) -> DataFrame:
     """PQ pipeline as deployed in practice: unit-normalize (cosine ≡ L2
-    on the sphere), build codebooks, encode, ADC-score a `shortlist` of
-    candidates from codes alone, then exact-cosine RERANK only the
-    shortlist. Query-time cost at scale: one scan of 8-byte code rows
-    (64× smaller than the vectors) + `shortlist` exact distances — the
+    on the sphere), build codebooks, encode, ADC-score a shortlist of
+    PQ_SHORTLIST candidates from codes alone, then exact-cosine RERANK
+    only the shortlist to the top PQ_TOP_K. Query-time cost at scale:
+    one scan of 8-byte code rows (64× smaller than the vectors) +
+    PQ_SHORTLIST exact distances — the
     float vectors are fetched for the shortlist only. On this synthetic
     fixture the ADC shortlist at 5× k holds 8/10 of the exact top-10
     (random vectors are PQ's worst case; clustered real embeddings do
@@ -488,27 +487,16 @@ def pq_topk(
     unit = quantized_unit(embs).select("vec_id", "embedding")
     unit_valid = quantized_unit(scorable(embs)).select("vec_id", "embedding")
     unit_probe = quantized_unit(probe, "probe")
-    cb = pq_codebooks(unit_valid, m=m, dim=dim, iters=iters)
-    codes = pq_encode(unit, cb, m=m, dim=dim)
-    cand = pq_adc_topk(codes, cb, unit_probe, m=m, dim=dim, k=shortlist).select(
-        "vec_id"
-    )
-    return brute_force_topk(embs.join(cand, "vec_id"), probe, k=k)
+    cb = pq_codebooks(unit_valid)
+    codes = pq_encode(unit, cb)
+    cand = pq_adc_topk(codes, cb, unit_probe).select("vec_id")
+    return brute_force_topk(embs.join(cand, "vec_id"), probe, k=PQ_TOP_K)
 
 
-def ivfpq_topk(
-    embs: DataFrame,
-    probe: DataFrame,
-    n_cells: int = 16,
-    nprobe: int = 8,
-    m: int = 8,
-    dim: int = 64,
-    k: int = 10,
-    shortlist: int = 50,
-) -> DataFrame:
+def ivfpq_topk(embs: DataFrame, probe: DataFrame) -> DataFrame:
     """The composed ANN system (FAISS IVF-PQ shape) as DataFrame ops:
-    IVF cells prune WHICH code rows are scanned (~nprobe/n_cells of the
-    corpus), PQ codes shrink WHAT is scanned (8 bytes/vector), and the
+    IVF cells prune WHICH code rows are scanned (~IVFPQ_NPROBE /
+    IVFPQ_CELLS of the corpus), PQ codes shrink WHAT is scanned (8 bytes/vector), and the
     exact rerank touches float vectors only for the shortlist. Query
     cost at 100 TB ≈ (nprobe/n_cells) × n × 12 bytes of code rows + k'
     vector fetches — neither full-scan nor full-width.
@@ -524,13 +512,15 @@ def ivfpq_topk(
     # 0.1s); scorable() pre-filters on the RAW column instead, which is
     # the exact same row set under quantized_unit's whole-vector gate.
     cents = quantized_unit(
-        scorable(embs.filter(F.col("vec_id") < n_cells))
+        scorable(embs.filter(F.col("vec_id") < IVFPQ_CELLS))
     ).select(
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid")
     )
-    inverted = ivf_assign(unit, n_cells, centroids=cents).select("cell_id", "vec_id")
-    cb = pq_codebooks(unit_valid, m=m, k=16, dim=dim, iters=1)
-    codes = pq_encode(unit, cb, m=m, dim=dim)
+    inverted = ivf_assign(unit, IVFPQ_CELLS, centroids=cents).select(
+        "cell_id", "vec_id"
+    )
+    cb = pq_codebooks(unit_valid)
+    codes = pq_encode(unit, cb)
 
     ranked_cells = (
         cents.crossJoin(F.broadcast(unit_probe))
@@ -539,12 +529,10 @@ def ivfpq_topk(
             _cosine(F.col("centroid"), F.col("probe")).alias("sim"),
         )
         .orderBy(F.desc("sim"), F.asc("cell_id"))
-        .limit(nprobe)
+        .limit(IVFPQ_NPROBE)
         .select("cell_id")
     )
     cand_ids = inverted.join(F.broadcast(ranked_cells), "cell_id").select("vec_id")
     cand_codes = codes.join(cand_ids, "vec_id")
-    short = pq_adc_topk(cand_codes, cb, unit_probe, m=m, dim=dim, k=shortlist).select(
-        "vec_id"
-    )
-    return brute_force_topk(embs.join(short, "vec_id"), probe, k=k)
+    short = pq_adc_topk(cand_codes, cb, unit_probe).select("vec_id")
+    return brute_force_topk(embs.join(short, "vec_id"), probe, k=PQ_TOP_K)

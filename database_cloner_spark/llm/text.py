@@ -57,14 +57,19 @@ def bpe_token_counts(docs: DataFrame) -> DataFrame:
     )
 
 
-def token_stats(docs: DataFrame, top_n: int = 20) -> DataFrame:
-    """Corpus token frequencies, top-N (deterministic tie-break on token)."""
+# Tokens token_stats keeps; the q_text_tokens oracle reads it too.
+TOKEN_STATS_TOP_N = 20
+
+
+def token_stats(docs: DataFrame) -> DataFrame:
+    """Corpus token frequencies, top TOKEN_STATS_TOP_N (deterministic
+    tie-break on token)."""
     return (
         docs.select(F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("token"))
-        .limit(top_n)
+        .limit(TOKEN_STATS_TOP_N)
     )
 
 
@@ -155,7 +160,11 @@ def quality_scores(docs: DataFrame) -> DataFrame:
     )
 
 
-def language_id(docs: DataFrame, profile_size: int = 40) -> DataFrame:
+# Trigrams per language profile; the q_text_langid oracle reads it too.
+LANG_PROFILE_SIZE = 40
+
+
+def language_id(docs: DataFrame) -> DataFrame:
     """N-gram-heuristic language ID: build per-language character-trigram
     profiles from a labeled corpus (here: the documents table itself),
     then classify each doc by profile overlap. Two phases, both set
@@ -211,7 +220,7 @@ def language_id(docs: DataFrame, profile_size: int = 40) -> DataFrame:
         .agg(F.count("*").alias("n"))
     )
     profiles = ranks.top(
-        counts, ["lang"], [F.desc("n"), F.asc("tg")], profile_size
+        counts, ["lang"], [F.desc("n"), F.asc("tg")], LANG_PROFILE_SIZE
     ).select(F.col("lang").alias("profile_lang"), "tg")
     scored = (
         tri.join(F.broadcast(profiles), "tg")
@@ -290,17 +299,17 @@ def fingerprints(docs: DataFrame) -> DataFrame:
     )
 
 
-def segment_dedup(
-    docs: DataFrame,
-    seg_len: int = 8,
-    max_df: int = 1,
-    text_col: str = "text",
-) -> DataFrame:
+# Tokens per segment of segment_dedup and segment_boilerplate_census;
+# the q_text_line_dedup and q_text_boilerplate oracles read it too.
+SEG_LEN = 8
+
+
+def segment_dedup(docs: DataFrame) -> DataFrame:
     """Cross-corpus boilerplate-segment removal (the CCNet/RefinedWeb
     paragraph-dedup step, adapted to the flat-token testdata: a "line"
-    is a fixed non-overlapping run of `seg_len` tokens). Segments whose
-    document frequency exceeds `max_df` — headers, footers, license
-    blurbs repeated across crawls — are cut from every document; the
+    is a fixed non-overlapping run of SEG_LEN tokens). Segments found
+    in more than one document — headers, footers, license blurbs
+    repeated across crawls — are cut from every document; the
     remainder is reassembled in order.
 
     Output: (doc_id, clean_text, n_kept) for EVERY input doc (fully
@@ -320,12 +329,12 @@ def segment_dedup(
     # the same O(n²) class in quantized_unit), so an unbound split()
     # here would re-tokenize the document once per segment.
     docs = docs.select(
-        "doc_id", F.split(F.trim(F.col(text_col)), " ").alias("__toks")
+        "doc_id", F.split(F.trim(F.col("text")), " ").alias("__toks")
     )
     toks = F.col("__toks")
-    n_segs = F.ceil(F.size(toks) / F.lit(seg_len)).cast("int")
+    n_segs = F.ceil(F.size(toks) / F.lit(SEG_LEN)).cast("int")
     seg_at = lambda i: F.array_join(  # noqa: E731
-        F.slice(toks, (i - F.lit(1)) * seg_len + F.lit(1), F.lit(seg_len)), " "
+        F.slice(toks, (i - F.lit(1)) * SEG_LEN + F.lit(1), F.lit(SEG_LEN)), " "
     )
     # Guard the empty-doc case: sequence(1, 0) is DESCENDING in Spark,
     # not empty (see the guard in textprep.shingles_of_tokens) — emit []
@@ -341,7 +350,7 @@ def segment_dedup(
     )
     kept = (
         seg_rows.join(seg_df, "seg_h")
-        .filter(F.col("df") <= max_df)
+        .filter(F.col("df") <= 1)
         .groupBy("doc_id")
         .agg(
             F.array_join(
@@ -365,10 +374,10 @@ def segment_dedup(
     )
 
 
-def repetition_scores(docs: DataFrame, n: int = 3) -> DataFrame:
+def repetition_scores(docs: DataFrame) -> DataFrame:
     """Within-document repetition signals (the Gopher/MassiveText
     repetition filters): fraction of duplicate tokens and duplicate
-    word-`n`-grams inside each doc. Degenerate looping text — a failure
+    word-n-grams (n = SHINGLE_N) inside each doc. Degenerate looping text — a failure
     mode of both crawls and model-generated data — scores high and is
     flagged.
 
@@ -376,15 +385,15 @@ def repetition_scores(docs: DataFrame, n: int = 3) -> DataFrame:
     whole-stage codegen, trivially linear at 100 TB. Rational
     arithmetic + explicit rounding keeps it oracle-reproducible.
     """
-    from database_cloner_spark.llm.textprep import shingles_of_tokens
+    from database_cloner_spark.llm.textprep import SHINGLE_N, shingles_of_tokens
 
     docs = spread(docs.select("doc_id", "text")).select(
         "doc_id", tokens(F.col("text")).alias("__toks")
     )
     toks = F.col("__toks")
     n_tokens = F.size(toks)
-    grams = shingles_of_tokens(toks, n)  # distinct n-grams
-    n_gram_pos = F.greatest(n_tokens - (n - 1), F.lit(0))
+    grams = shingles_of_tokens(toks)  # distinct n-grams
+    n_gram_pos = F.greatest(n_tokens - (SHINGLE_N - 1), F.lit(0))
     # integer-exact rounding (roundn_ratio) — the ROUND-tie class
     dup_tok = round4_ratio(n_tokens - F.size(F.array_distinct(toks)), n_tokens)
     dup_gram = F.when(
@@ -400,10 +409,7 @@ def repetition_scores(docs: DataFrame, n: int = 3) -> DataFrame:
 
 
 def chunk_documents(
-    docs: DataFrame,
-    chunk_tokens: int = 32,
-    stride: int = 16,
-    text_col: str = "text",
+    docs: DataFrame, chunk_tokens: int = 32, stride: int = 16
 ) -> DataFrame:
     """Overlapping-window chunking for retrieval indexing (the
     doc→passage step before embedding): windows of `chunk_tokens`
@@ -415,7 +421,7 @@ def chunk_documents(
     ~len/stride per doc, each chunk carrying its provenance
     (doc_id, chunk_id) for dedup-aware retrieval joins back to the
     corpus."""
-    docs = docs.select("doc_id", tokens(F.col(text_col)).alias("__toks"))
+    docs = docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
     toks = F.col("__toks")
     n = F.size(toks)
     n_chunks = F.when(
@@ -439,19 +445,19 @@ def chunk_documents(
     )
 
 
-def segment_boilerplate_census(
-    docs: DataFrame,
-    seg_len: int = 8,
-    bp_df: int = 3,
-    text_col: str = "text",
-) -> DataFrame:
+# Documents a segment must appear in to count as boilerplate; the
+# q_text_boilerplate oracle reads it too.
+BOILERPLATE_DF = 3
+
+
+def segment_boilerplate_census(docs: DataFrame) -> DataFrame:
     """Boilerplate EXPOSURE census — segment_dedup's read-only sibling:
     instead of cutting high-df segments, report per document how much
-    of it IS boilerplate (segments appearing in >= bp_df docs): the
-    triage signal that decides whether a source needs the dedup pass at
-    all, and the per-doc feature a quality model consumes. Same segment
-    definition as segment_dedup (fixed non-overlapping seg_len-token
-    runs), same scale shape: df is one map-combined groupBy keyed on
+    of it IS boilerplate (segments appearing in >= BOILERPLATE_DF docs):
+    the triage signal that decides whether a source needs the dedup
+    pass at all, and the per-doc feature a quality model consumes. Same
+    segment definition as segment_dedup (fixed non-overlapping
+    SEG_LEN-token runs), same scale shape: df is one map-combined groupBy keyed on
     xxhash64(segment) (8-byte shuffle keys), the join back is an
     equi-join on that hash, and the per-doc fold is one more compact
     groupBy — no corpus-wide window anywhere. bp_ppm is exact
@@ -459,13 +465,13 @@ def segment_boilerplate_census(
     # Same bound-tokens discipline as segment_dedup: an unbound split()
     # inside the transform lambda would re-tokenize per segment (O(n²)
     # per doc).
-    docs = docs.filter(F.col(text_col).isNotNull()).select(
-        "doc_id", F.split(F.trim(F.col(text_col)), " ").alias("__toks")
+    docs = docs.filter(F.col("text").isNotNull()).select(
+        "doc_id", F.split(F.trim(F.col("text")), " ").alias("__toks")
     )
     toks = F.col("__toks")
-    n_segs = F.ceil(F.size(toks) / F.lit(seg_len)).cast("int")
+    n_segs = F.ceil(F.size(toks) / F.lit(SEG_LEN)).cast("int")
     seg_at = lambda i: F.array_join(  # noqa: E731
-        F.slice(toks, (i - F.lit(1)) * seg_len + F.lit(1), F.lit(seg_len)), " "
+        F.slice(toks, (i - F.lit(1)) * SEG_LEN + F.lit(1), F.lit(SEG_LEN)), " "
     )
     segs = F.when(
         F.size(toks) > 0, F.transform(F.sequence(F.lit(1), n_segs), seg_at)
@@ -481,7 +487,7 @@ def segment_boilerplate_census(
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_segs"),
-            F.sum(F.when(F.col("df") >= bp_df, 1).otherwise(0)).alias("n_bp"),
+            F.sum(F.when(F.col("df") >= BOILERPLATE_DF, 1).otherwise(0)).alias("n_bp"),
         )
     )
     return per.select(

@@ -39,7 +39,11 @@ def n_tokens(text: Column) -> Column:
     return F.coalesce(F.size(tokens(text)), F.lit(0)).cast("long")
 
 
-def shingles_of_tokens(toks: Column, n: int = 3) -> Column:
+# Words per shingle; the DuckDB oracles' shingle CTE reads it too.
+SHINGLE_N = 3
+
+
+def shingles_of_tokens(toks: Column, n: int = SHINGLE_N) -> Column:
     """Distinct n-word shingles from an ALREADY-MATERIALIZED token-array
     column. `toks` must be a plain column reference, not the split
     expression itself: an expression inlined into the transform lambda

@@ -62,9 +62,9 @@ def acquire(target_dir: str, holder: str, table: str) -> str:
     return path
 
 
-def release(target_dir: str, holder: str, table: str | None = None) -> int:
-    """Remove `holder`'s lock entries (all of them, or one table's).
-    Returns the number of entries removed."""
+def release(target_dir: str, holder: str) -> int:
+    """Remove all of `holder`'s lock entries. Returns the number of
+    entries removed."""
     root = _locks_path(target_dir)
     if not os.path.isdir(root):
         return 0
@@ -76,7 +76,7 @@ def release(target_dir: str, holder: str, table: str | None = None) -> int:
                 e = json.load(f)
         except (OSError, json.JSONDecodeError):
             continue
-        if e.get("holder") == holder and (table is None or e.get("table") == table):
+        if e.get("holder") == holder:
             os.remove(full)
             removed += 1
     return removed

@@ -44,7 +44,7 @@ from pyspark.sql import SparkSession
 from database_cloner_spark.pipeline import admission
 from database_cloner_spark.pipeline import principals as prin
 from database_cloner_spark.pipeline import probe, reports, verify
-from database_cloner_spark.sources import jdbc
+from database_cloner_spark.sources import jdbc, parquet
 from database_cloner_spark.sources.parquet import load, table_names
 
 
@@ -114,6 +114,11 @@ class CloneConfig:
     # Password seed: None (default) => OS CSPRNG, like the reference's
     # /dev/urandom. Set ONLY for reproducible test fixtures.
     seed: int | None = None
+    # Role-name prefixes of the provisioned principals: the conf's
+    # APP_ROLE_PREFIX / OWNER_ROLE_PREFIX, which the CLI's postgresql
+    # check defaults to r_rw_ / r_rc_ (clone_databases.sh:86-89).
+    app_role_prefix: str = "app_role_"
+    owner_role_prefix: str = "owner_role_"
 
 
 @dataclass
@@ -145,6 +150,15 @@ class CloneRunResult:
         return self.success_count == self.total_count and self.total_count > 0
 
 
+# At-rest file extension of a source table per source_format (parquet
+# for any other format).
+_EXT = {"orc": ".orc", "mongoexport": ".json"}
+
+
+def _source_ext(source_format: str) -> str:
+    return _EXT.get(source_format, ".parquet")
+
+
 def _parse_worklist(
     tables: str | list[str] | None, source_dir: str, source_format: str = "parquet"
 ) -> list[str]:
@@ -156,10 +170,7 @@ def _parse_worklist(
             raise ValueError(
                 "source_format='jdbc' requires an explicit tables work list"
             )
-        ext = {"orc": ".orc", "mongoexport": ".json"}.get(
-            source_format, ".parquet"
-        )
-        return table_names(source_dir, ext=ext)
+        return table_names(source_dir, ext=_source_ext(source_format))
     if isinstance(tables, str):
         return [t.strip() for t in tables.split(",") if t.strip()]
     return [t.strip() for t in tables]
@@ -173,15 +184,18 @@ class ClonePipeline:
 
     # -- single table ------------------------------------------------------
 
+    def _source_path(self, table: str) -> str:
+        return os.path.join(
+            self.cfg.source_dir, f"{table}{_source_ext(self.cfg.source_format)}"
+        )
+
     def _load_source(self, table: str):
         """Read one source table in the configured at-rest format. The
         target side is parquet unless cfg.jdbc_target redirects it."""
         if self.cfg.source_format == "orc":
             from database_cloner_spark.sources.orc import load_orc
 
-            return load_orc(
-                self.spark, os.path.join(self.cfg.source_dir, f"{table}.orc")
-            )
+            return load_orc(self.spark, self._source_path(table))
         if self.cfg.source_format == "mongoexport":
             from database_cloner_spark.sources.bson import mongoexport_scan
 
@@ -189,10 +203,7 @@ class ClonePipeline:
             # the clone pass, so the landed parquet is typed — the
             # restore half of the reference's mongodump path without a
             # BSON decoder dependency (CS:817-818).
-            return mongoexport_scan(
-                self.spark,
-                os.path.join(self.cfg.source_dir, f"{table}.json"),
-            )
+            return mongoexport_scan(self.spark, self._source_path(table))
         if self.cfg.source_format == "jdbc":
             if self.cfg.jdbc_source is None:
                 raise ValueError(
@@ -350,15 +361,11 @@ class ClonePipeline:
 
         # Largest-first scheduling: the long pole starts immediately, so
         # wall-clock ~ max(table) instead of sum(tail) (fixes CS:1029).
-        ext = ".orc" if cfg.source_format == "orc" else ".parquet"
-
         def size_of(t: str) -> int:
-            p = os.path.join(cfg.source_dir, f"{t}{ext}")
-            if os.path.isdir(p):
-                return sum(
-                    os.path.getsize(os.path.join(p, f)) for f in os.listdir(p)
-                )
-            return os.path.getsize(p) if os.path.exists(p) else 0
+            p = self._source_path(t)
+            if not os.path.exists(p):
+                return 0
+            return sum(size for _name, size, _mtime in parquet._files(p))
 
         work = sorted(work, key=size_of, reverse=True)
 
@@ -374,7 +381,13 @@ class ClonePipeline:
         recorded = self._recorded_passwords(result.results)
         for r in result.results:
             if r.status in ("cloned", "skipped"):
-                p = prin.make_principals(r.target_table, cfg.db_prefix, seed=cfg.seed)
+                p = prin.make_principals(
+                    r.target_table,
+                    cfg.db_prefix,
+                    app_role_prefix=cfg.app_role_prefix,
+                    owner_role_prefix=cfg.owner_role_prefix,
+                    seed=cfg.seed,
+                )
                 if r.status == "skipped" and r.target_table in recorded:
                     p = replace(p, **recorded[r.target_table])
                 result.principals.append(p)

@@ -82,7 +82,7 @@ class DbPrincipals:
     app_password: str
 
 
-def generate_password(seed: int | None = None, length: int = 16) -> str:
+def generate_password(seed: int | None = None) -> str:
     """Twin of `tr -dc 'A-Za-z0-9' < /dev/urandom | head -c 16`
     (clone_databases.sh:256-261). SECURE BY DEFAULT: seed=None draws
     from the OS CSPRNG like the reference does; a seed is an explicit
@@ -93,11 +93,11 @@ def generate_password(seed: int | None = None, length: int = 16) -> str:
     if seed is None:
         import secrets
 
-        return "".join(secrets.choice(_CHARSET) for _ in range(length))
+        return "".join(secrets.choice(_CHARSET) for _ in range(16))
     import numpy as np
 
     rng = np.random.RandomState(seed & 0x7FFFFFFF)
-    idx = rng.randint(0, len(_CHARSET), size=length)
+    idx = rng.randint(0, len(_CHARSET), size=16)
     return "".join(_CHARSET[i] for i in idx)
 
 

@@ -30,6 +30,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from database_cloner_spark.sources import parquet
+
 
 @dataclass(frozen=True)
 class TableFingerprint:
@@ -155,24 +157,15 @@ def verify_clone(
     return result
 
 
-def _hidden(name: str) -> bool:
-    # Spark's file-index rule: `.` and `_` names are not data, except a
-    # `_`-named hive partition directory (it holds a `=`).
-    return name.startswith(".") or (name.startswith("_") and "=" not in name)
-
-
 def _written_column_sets(path: str) -> set[frozenset[str]]:
     """The column set of each parquet data file under `path`: its footer's
     column names plus the hive partition keys of the directories above
     it. Read on the driver with pyarrow (footers only, no Spark job)."""
     found = set()
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not _hidden(d)]
-        rel = os.path.relpath(root, path).split(os.sep)
-        keys = [unquote(d.split("=", 1)[0]) for d in rel if "=" in d]
-        for f in files:
-            if not _hidden(f):
-                found.add(frozenset(pq.read_schema(os.path.join(root, f)).names + keys))
+    for rel in parquet.data_files(parquet._files(path)):
+        dirs = rel.split(os.sep)[:-1]
+        keys = [unquote(d.split("=", 1)[0]) for d in dirs if "=" in d]
+        found.add(frozenset(pq.read_schema(os.path.join(path, rel)).names + keys))
     return found
 
 

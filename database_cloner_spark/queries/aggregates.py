@@ -395,7 +395,7 @@ def q_freq_sketch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     from database_cloner_spark.functions.sketch import (
-        DEFAULT_W,
+        CMS_W,
         build_cms,
         cms_estimate,
     )
@@ -424,7 +424,7 @@ def q_freq_sketch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             # failure probability is (1/(5e))^5 ~ 2e-6 — the same
             # generous-bound convention the bloom FP check uses
             # (5% asserted vs ~0.2% theoretical). Review r6.
-            F.ceil(F.col("__n") * F.lit(5 * math.e / DEFAULT_W)).alias("__bound"),
+            F.ceil(F.col("__n") * F.lit(5 * math.e / CMS_W)).alias("__bound"),
         )
     )
     return probed.select(

@@ -691,9 +691,10 @@ def q_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ppm keys (SCALE.md pitfall 11).
 _PR_SCALE = 10**12
 _PR_TELEPORT = 15 * _PR_SCALE // 100  # 0.15 in rank units
+_PR_ITERS = 5  # fixed iterations of q_graph_pagerank and its oracle
 
 
-def _pagerank_ranks(edges: DataFrame, iters: int = 5) -> DataFrame:
+def _pagerank_ranks(edges: DataFrame, iters: int) -> DataFrame:
     """Iterate r <- 0.15 + 0.85 * sum_in(r/deg) over an already-
     SYMMETRIZED directed edge list (src, dst), returning (src, deg,
     rank). Ranks are FIXED-POINT bigints scaled by 10^12: every step is
@@ -759,8 +760,8 @@ def _pagerank_ranks(edges: DataFrame, iters: int = 5) -> DataFrame:
     return ranks.join(deg, "src").select("src", "deg", "rank")
 
 
-def _oracle_pagerank(iters: int = 5) -> str:
-    """Unroll the `iters` fixed-point iterations as DuckDB CTEs. Exact
+def _oracle_pagerank() -> str:
+    """Unroll the _PR_ITERS fixed-point iterations as DuckDB CTEs. Exact
     twin of _pagerank_ranks: same edge build, same scaled-bigint floor
     arithmetic (`//` == Spark `div` on non-negative bigints), each
     iteration's rank cast back to BIGINT so a DuckDB HUGEINT overflow
@@ -776,7 +777,7 @@ r{i} AS (
   FROM deg d LEFT JOIN c{i} c USING (src)
 )"""
     iter_ctes = ",".join(
-        it.format(i=i, p=i - 1, tele=_PR_TELEPORT) for i in range(1, iters + 1)
+        it.format(i=i, p=i - 1, tele=_PR_TELEPORT) for i in range(1, _PR_ITERS + 1)
     )
     return f"""
 WITH cs AS (
@@ -791,7 +792,7 @@ ed AS (SELECT e.src, e.dst, d.deg FROM e JOIN deg d USING (src)),
 r0 AS (SELECT src, deg, CAST({_PR_SCALE} AS BIGINT) AS rank FROM deg),
 {iter_ctes}
 SELECT src AS vertex, rank AS pagerank_fp, deg AS degree
-FROM r{iters} ORDER BY rank DESC, src ASC LIMIT 20
+FROM r{_PR_ITERS} ORDER BY rank DESC, src ASC LIMIT 20
 """
 
 
@@ -853,7 +854,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = cs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionAll(
         cs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
-    ranks = _pagerank_ranks(edges, iters=5)
+    ranks = _pagerank_ranks(edges, iters=_PR_ITERS)
     vertex = F.expr(
         "CASE WHEN src % 2 = 0 THEN concat('c:', src div 2) "
         "ELSE concat('s:', (src - 1) div 2) END"

@@ -17,7 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from database_cloner_spark.llm import dedup, similarity, text as llmtext
-from database_cloner_spark.llm.multimodal import assets_from_documents
+from database_cloner_spark.llm.multimodal import (
+    FRAME_EVERY_N_BYTES,
+    assets_from_documents,
+)
+from database_cloner_spark.llm.textprep import SHINGLE_N
 from database_cloner_spark.queries.oracle_fragments import (
     n_tokens_sql,
     normalized_sql,
@@ -30,6 +34,13 @@ from database_cloner_spark.sources import load
 # oracle_fragments so engine and oracles cannot drift
 # (tests/test_adversarial_docs.py).
 _TOKS_SQL = tokens_sql()
+
+# DuckDB mirror of dedup._shingle_sets over a `toks` CTE: the distinct
+# SHINGLE_N-word shingles of every doc with at least SHINGLE_N tokens.
+_SHINGLES_SQL = f"""  SELECT doc_id,
+         list_distinct([list_aggregate(ts[i:i+{SHINGLE_N - 1}], 'string_agg', ' ')
+                        for i in range(1, len(ts) - {SHINGLE_N - 2})]) AS shingles
+  FROM toks WHERE len(ts) >= {SHINGLE_N}"""
 
 
 # The re-crawl copy's synthetic id pmods into [0, 2^62) before the
@@ -72,10 +83,7 @@ WITH toks AS (
   SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
 ),
 sh AS (
-  SELECT doc_id,
-         list_distinct([list_aggregate(ts[i:i+2], 'string_agg', ' ')
-                        for i in range(1, len(ts) - 1)]) AS shingles
-  FROM toks WHERE len(ts) >= 3
+{_SHINGLES_SQL}
 )
 ,
 pairs AS (
@@ -116,10 +124,7 @@ WITH toks AS (
   SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
 ),
 sh AS (
-  SELECT doc_id,
-         list_distinct([list_aggregate(ts[i:i+2], 'string_agg', ' ')
-                        for i in range(1, len(ts) - 1)]) AS shingles
-  FROM toks WHERE len(ts) >= 3
+{_SHINGLES_SQL}
 )
 ,
 pairs AS (
@@ -154,6 +159,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is explicitly input-capped, with the df-cap + MinHash-over-grams as the
 # scale path (see char_ngram_jaccard_pairs docstring).
 NGRAM_BRUTE_CAP = 64
+_GRAM_N = dedup.CHAR_GRAM_N
 
 _ORACLE_DEDUP_NGRAM = f"""
 WITH capped AS (
@@ -162,8 +168,8 @@ WITH capped AS (
 ),
 g AS (
   SELECT doc_id,
-         list_distinct([t[i:i+2] for i in range(1, len(t) - 1)]) AS gs
-  FROM capped WHERE len(t) >= 3
+         list_distinct([t[i:i+{_GRAM_N - 1}] for i in range(1, len(t) - {_GRAM_N - 2})]) AS gs
+  FROM capped WHERE len(t) >= {_GRAM_N}
 )
 ,
 pairs AS (
@@ -215,10 +221,7 @@ WITH toks AS (
   SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
 ),
 sh AS (
-  SELECT doc_id,
-         list_distinct([list_aggregate(ts[i:i+2], 'string_agg', ' ')
-                        for i in range(1, len(ts) - 1)]) AS shingles
-  FROM toks WHERE len(ts) >= 3
+{_SHINGLES_SQL}
 ),
 hashed AS (
   SELECT doc_id, shingles,
@@ -699,8 +702,8 @@ WITH cents AS MATERIALIZED (
   -- BUCKETED_CELL_TARGET)
   SELECT vec_id AS cell_id, embedding AS centroid
   FROM embeddings
-  WHERE vec_id < (SELECT GREATEST(16, LEAST(65536,
-                         CEIL(COUNT(*) / 125.0))) FROM embeddings)
+  WHERE vec_id < (SELECT GREATEST({dedup.BUCKETED_CELL_FLOOR}, LEAST({dedup.BUCKETED_CELL_CEIL},
+                         CEIL(COUNT(*) / {dedup.BUCKETED_CELL_TARGET}.0))) FROM embeddings)
     AND len(list_filter(embedding,
                         v -> isnan(v) OR NOT isfinite(v))) = 0
     -- inner-NULL elements: list_filter DROPS NULL-predicate elements
@@ -719,7 +722,7 @@ assigned AS MATERIALIZED (
              ORDER BY {_cos_sql("e.embedding", "c.centroid")} DESC, c.cell_id
            ) AS rn
     FROM embeddings e CROSS JOIN cents c
-  ) WHERE rn <= 3
+  ) WHERE rn <= {dedup.BUCKETED_NPROBE}
 ),
 pairs AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -862,7 +865,7 @@ SELECT token, COUNT(*) AS cnt
 FROM (SELECT unnest({_TOKS_SQL}) AS token FROM documents)
 GROUP BY token
 ORDER BY cnt DESC, token
-LIMIT 20
+LIMIT {llmtext.TOKEN_STATS_TOP_N}
 """
 
 
@@ -949,7 +952,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Determinism hinges on identical tie-breaks, which both engines give:
 # ROW_NUMBER over (n DESC, tg ASC) — string order is raw UTF-8 bytes on
 # both (= codepoint order) — and (score DESC, profile_lang ASC).
-_ORACLE_LANGID = """
+_ORACLE_LANGID = f"""
 WITH tri AS (
   SELECT DISTINCT doc_id, lang, tg
   FROM (
@@ -972,7 +975,7 @@ profiles AS (
                ROW_NUMBER() OVER (PARTITION BY lang
                                   ORDER BY n DESC, tg ASC) AS rn
         FROM counts)
-  WHERE rn <= 40
+  WHERE rn <= {llmtext.LANG_PROFILE_SIZE}
 ),
 scored AS (
   SELECT t.doc_id, p.profile_lang, COUNT(*) AS score
@@ -1160,10 +1163,7 @@ WITH RECURSIVE toks AS (
   SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
 ),
 sh AS (
-  SELECT doc_id,
-         list_distinct([list_aggregate(ts[i:i+2], 'string_agg', ' ')
-                        for i in range(1, len(ts) - 1)]) AS shingles
-  FROM toks WHERE len(ts) >= 3
+{_SHINGLES_SQL}
 ),
 pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1224,10 +1224,7 @@ WITH RECURSIVE toks AS (
   SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
 ),
 sh AS (
-  SELECT doc_id,
-         list_distinct([list_aggregate(ts[i:i+2], 'string_agg', ' ')
-                        for i in range(1, len(ts) - 1)]) AS shingles
-  FROM toks WHERE len(ts) >= 3
+{_SHINGLES_SQL}
 ),
 pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1294,14 +1291,19 @@ def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixed 8-token segments; a segment present in >= 2 documents is
 # boilerplate and removed everywhere. At sf0.01 that's 153 of 3434
 # distinct segments — non-trivial but far from degenerate.
-_ORACLE_LINE_DEDUP = """
-WITH toks AS (SELECT doc_id, string_split(trim(text), ' ') AS ts FROM documents),
-seglists AS (
+# DuckDB mirror of llm/text's fixed SEG_LEN-token segments over a
+# `toks` CTE (segment_dedup, segment_boilerplate_census).
+_SEG = llmtext.SEG_LEN
+_SEGLISTS_SQL = f"""seglists AS (
   SELECT doc_id,
-         [list_aggregate(ts[(i-1)*8+1:i*8], 'string_agg', ' ')
-          for i in range(1, CAST(ceil(len(ts)/8.0) AS INT) + 1)] AS segs
+         [list_aggregate(ts[(i-1)*{_SEG}+1:i*{_SEG}], 'string_agg', ' ')
+          for i in range(1, CAST(ceil(len(ts)/{_SEG}.0) AS INT) + 1)] AS segs
   FROM toks
-),
+)"""
+
+_ORACLE_LINE_DEDUP = f"""
+WITH toks AS (SELECT doc_id, string_split(trim(text), ' ') AS ts FROM documents),
+{_SEGLISTS_SQL},
 seg_rows AS (
   SELECT doc_id, unnest(segs) AS seg, generate_subscripts(segs, 1) AS pos
   FROM seglists
@@ -1337,10 +1339,7 @@ WITH toks AS (
   SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
 ),
 sh AS (
-  SELECT doc_id,
-         list_distinct([list_aggregate(ts[i:i+2], 'string_agg', ' ')
-                        for i in range(1, len(ts) - 1)]) AS shingles
-  FROM toks WHERE len(ts) >= 3
+{_SHINGLES_SQL}
 ),
 t AS (SELECT doc_id AS train_id, unnest(shingles) AS shingle FROM sh
       WHERE doc_id % 20 <> 0),
@@ -1569,9 +1568,9 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_oracle(ivf: bool) -> str:
-    """Full replay of llm/similarity's PQ pipeline (pq_topk defaults:
-    m=8, d_sub=8, 16 codes, 1 Lloyd round, shortlist 50, k 10; the ivf
-    variant adds seeded 16-cell routing with nprobe=8). Every stage is
+    """Full replay of llm/similarity's PQ pipeline (its PQ_* and
+    IVFPQ_* constants, 1 Lloyd round; the ivf variant adds seeded cell
+    routing). Every stage is
     deterministic on the exact integer grid (round 11, VERDICT r10
     item 4): quantized unit vectors, lip-identity subvector distances
     (_l2q_sql), FLOOR(sum/count + 0.5) codebook means, integer ADC
@@ -1579,17 +1578,18 @@ def _pq_oracle(ivf: bool) -> str:
     (posexplode of the (sub,code)-sorted list) — under duplicate
     vec_ids the merged array deliberately mislabels trailing subs and
     drops them at the codebook join, exactly as the engine does."""
-    sl = "s.sub * 8 + 1 : s.sub * 8 + 8"
+    d_sub = similarity.PQ_DIM // similarity.PQ_M
+    sl = f"s.sub * {d_sub} + 1 : s.sub * {d_sub} + {d_sub}"
     cells = (
         f""",
 qcents AS MATERIALIZED (
   SELECT vec_id AS cell_id, qe AS centroid FROM qunit
-  WHERE vec_id < 16 AND qe IS NOT NULL
+  WHERE vec_id < {similarity.IVFPQ_CELLS} AND qe IS NOT NULL
 ),
 icell_rank AS (
   SELECT cell_id FROM qcents CROSS JOIN qprobe
   ORDER BY {_cos_sql('centroid', 'p')} DESC, cell_id
-  LIMIT 8
+  LIMIT {similarity.IVFPQ_NPROBE}
 ),
 iassigned AS (
   SELECT vec_id, cell_id FROM (
@@ -1647,7 +1647,7 @@ subs AS MATERIALIZED (
   SELECT vec_id, s.sub,
          CASE WHEN qe IS NULL THEN NULL ELSE qe[{sl}] END AS subvec,
          qe IS NOT NULL AS ok
-  FROM qunit CROSS JOIN (SELECT unnest(range(8)) AS sub) s
+  FROM qunit CROSS JOIN (SELECT unnest(range({similarity.PQ_M})) AS sub) s
 ),
 -- vsubs/qprobe_ok: lip only ever sees MATERIALIZED all-finite lists
 -- (DuckDB 1.0 validates lists behind a selection — the r10 lesson);
@@ -1659,7 +1659,7 @@ vsubs AS MATERIALIZED (
 ),
 seed AS MATERIALIZED (
   SELECT sub, vec_id AS code, subvec AS codeword
-  FROM vsubs WHERE vec_id < 16
+  FROM vsubs WHERE vec_id < {similarity.PQ_CODES}
 ),
 m_best AS (
   SELECT sub, code, subvec FROM (
@@ -1716,7 +1716,7 @@ qprobe_ok AS MATERIALIZED (
 ),
 adct AS MATERIALIZED (
   SELECT c.sub, c.code,
-         {_l2q_sql('(pr.p[c.sub * 8 + 1 : c.sub * 8 + 8])', 'c.codeword')}
+         {_l2q_sql(f'(pr.p[c.sub * {d_sub} + 1 : c.sub * {d_sub} + {d_sub}])', 'c.codeword')}
            AS d2
   FROM cb c CROSS JOIN qprobe_ok pr
   UNION ALL
@@ -1731,7 +1731,7 @@ adc AS (
   GROUP BY e.vec_id
 ),
 short AS MATERIALIZED (
-  SELECT vec_id FROM adc ORDER BY adc_dist ASC, vec_id LIMIT 50
+  SELECT vec_id FROM adc ORDER BY adc_dist ASC, vec_id LIMIT {similarity.PQ_SHORTLIST}
 ),
 rprobe AS MATERIALIZED (
   SELECT embedding AS p FROM embeddings WHERE vec_id = 0
@@ -1741,7 +1741,7 @@ rer AS (
   FROM embeddings e JOIN short s USING (vec_id) CROSS JOIN rprobe pr
 )
 SELECT vec_id, ROUND(c, 4) AS cosine
-FROM rer ORDER BY c DESC, vec_id LIMIT 10
+FROM rer ORDER BY c DESC, vec_id LIMIT {similarity.PQ_TOP_K}
 """
 
 
@@ -1768,18 +1768,18 @@ def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in SQL (real decoders would seek timestamps; the container has no
 # codec, so the PLAN is the testable contract). The array-producing
 # frame_sample_plan stays the library API; this derives from it.
-_ORACLE_MULTIMODAL_FRAMES = """
+_ORACLE_MULTIMODAL_FRAMES = f"""
 WITH base AS (
   SELECT doc_id AS asset_id,
          CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
   FROM documents WHERE doc_id % 3 = 2
 ), exploded AS (
   SELECT asset_id, n_bytes,
-         unnest(range(n_bytes // 64 + 1)) AS frame_idx
+         unnest(range(n_bytes // {FRAME_EVERY_N_BYTES} + 1)) AS frame_idx
   FROM base
 )
 SELECT asset_id, n_bytes, frame_idx,
-       64 * frame_idx AS frame_offset
+       {FRAME_EVERY_N_BYTES} * frame_idx AS frame_offset
 FROM exploded
 """
 
@@ -1819,10 +1819,7 @@ WITH RECURSIVE toks AS (
   SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
 ),
 sh AS (
-  SELECT doc_id,
-         list_distinct([list_aggregate(ts[i:i+2], 'string_agg', ' ')
-                        for i in range(1, len(ts) - 1)]) AS shingles
-  FROM toks WHERE len(ts) >= 3
+{_SHINGLES_SQL}
 ),
 pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2157,20 +2154,15 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MEASURES df>=3 exposure so a pipeline can triage sources before
 # paying for the cut). Same segment CTEs as _ORACLE_LINE_DEDUP so the
 # two keys' segment semantics cannot drift.
-_ORACLE_BOILERPLATE = """
+_ORACLE_BOILERPLATE = f"""
 WITH toks AS (SELECT doc_id, string_split(trim(text), ' ') AS ts
               FROM documents WHERE text IS NOT NULL),
-seglists AS (
-  SELECT doc_id,
-         [list_aggregate(ts[(i-1)*8+1:i*8], 'string_agg', ' ')
-          for i in range(1, CAST(ceil(len(ts)/8.0) AS INT) + 1)] AS segs
-  FROM toks
-),
+{_SEGLISTS_SQL},
 seg_rows AS (SELECT doc_id, unnest(segs) AS seg FROM seglists),
 seg_df AS (SELECT seg, COUNT(DISTINCT doc_id) AS df FROM seg_rows GROUP BY seg),
 per AS (
   SELECT r.doc_id, COUNT(*) AS n_segs,
-         SUM(CASE WHEN d.df >= 3 THEN 1 ELSE 0 END) AS n_bp
+         SUM(CASE WHEN d.df >= {llmtext.BOILERPLATE_DF} THEN 1 ELSE 0 END) AS n_bp
   FROM seg_rows r JOIN seg_df d ON r.seg = d.seg
   GROUP BY r.doc_id
 )

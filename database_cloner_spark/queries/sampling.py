@@ -267,8 +267,8 @@ WHERE ((d.doc_id % {_MOD}) * {_KNUTH}) % {_MOD} % 1000000
 """
 
 
-def mixture_sample(docs: DataFrame, group_col: str = "source") -> DataFrame:
-    """Temperature-based mixture resampling (the data-mixing step of
+def mixture_sample(docs: DataFrame) -> DataFrame:
+    """Per-source temperature-based mixture resampling (the data-mixing step of
     pre-training: downweight dominant sources toward a sqrt-flattened
     distribution). Per-source acceptance rate = sqrt(n_min / n_src), so
     the rarest source is kept whole and a source k times larger keeps
@@ -281,18 +281,18 @@ def mixture_sample(docs: DataFrame, group_col: str = "source") -> DataFrame:
     correctly rounded, so Spark and DuckDB agree bit-for-bit (the
     engine rule banning transcendentals allows sqrt for exactly this
     reason)."""
-    counts = docs.groupBy(group_col).agg(F.count("*").alias("n_src"))
+    counts = docs.groupBy("source").agg(F.count("*").alias("n_src"))
     n_min = counts.agg(F.min("n_src").alias("n_min"))
     rates = counts.crossJoin(F.broadcast(n_min)).select(
-        group_col,
+        "source",
         (F.sqrt(F.col("n_min").cast("double") / F.col("n_src")) * 1000000.0).alias(
             "__cut"
         ),
     )
     return (
-        docs.join(F.broadcast(rates), group_col)
+        docs.join(F.broadcast(rates), "source")
         .filter(_split_hash("doc_id") % 1000000 < F.col("__cut"))
-        .select("doc_id", group_col)
+        .select("doc_id", "source")
     )
 
 
@@ -425,10 +425,11 @@ SELECT doc_id FROM (
 """
 
 
-def es_sample(df, key_col: str, weight_col: str, k: int, seed: int = _ES_SEED):
+def es_sample(df, key_col: str, weight_col: str, k: int):
     """Efraimidis–Spirakis weighted sample WITHOUT replacement: the k
     rows with the largest hash-derived priorities u^(1/w) (compared in
-    the monotone-equivalent ln(u)/w form). Deterministic in (key, seed);
+    the monotone-equivalent ln(u)/w form). Deterministic in the key
+    (seeded by _ES_SEED, which the oracle reads too);
     rows with NULL keys or non-positive/NULL weights are excluded."""
     eligible = df.filter(
         F.col(key_col).isNotNull()
@@ -440,7 +441,7 @@ def es_sample(df, key_col: str, weight_col: str, k: int, seed: int = _ES_SEED):
     # in (0,1) for negative keys too (the raw `%` made ln(u) NaN there).
     # Identical to the old value for every key the old form didn't
     # overflow/poison (same congruence; extreme-id probe, r10).
-    x = F.pmod(F.pmod(F.col(key_col), F.lit(_MOD)) + F.lit(seed), F.lit(_MOD))
+    x = F.pmod(F.pmod(F.col(key_col), F.lit(_MOD)) + F.lit(_ES_SEED), F.lit(_MOD))
     h = (x * F.lit(_KNUTH)) % F.lit(_MOD)
     u = (h + F.lit(0.5)) / F.lit(_MOD)
     es_key = F.log(u) / F.col(weight_col)

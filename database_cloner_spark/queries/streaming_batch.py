@@ -16,10 +16,11 @@ from database_cloner_spark.sources import load
 from database_cloner_spark.streaming import ops
 
 
-_ORACLE_TUMBLING = """
+_W = ops.WINDOW_WIDTH
+_ORACLE_TUMBLING = f"""
 SELECT
-  strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-  strftime(time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour', '%Y-%m-%d %H:%M:%S') AS window_end,
+  strftime(time_bucket(INTERVAL '{_W}', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
+  strftime(time_bucket(INTERVAL '{_W}', ts) + INTERVAL '{_W}', '%Y-%m-%d %H:%M:%S') AS window_end,
   event_type,
   COUNT(*) AS n,
   ROUND(SUM(value), 2) AS sum_value
@@ -36,9 +37,9 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ops.tumbling_counts(load(spark, sf_dir, "events"))
 
 
-_ORACLE_SLIDING = """
+_ORACLE_SLIDING = f"""
 SELECT
-  strftime(time_bucket(INTERVAL '15 minutes', ts) - k.k * INTERVAL '15 minutes',
+  strftime(time_bucket(INTERVAL '{ops.WINDOW_SLIDE}', ts) - k.k * INTERVAL '{ops.WINDOW_SLIDE}',
            '%Y-%m-%d %H:%M:%S') AS window_start,
   event_type,
   COUNT(*) AS n
@@ -56,14 +57,14 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ops.sliding_counts(load(spark, sf_dir, "events"))
 
 
-_ORACLE_SESSION = """
+_ORACLE_SESSION = f"""
 WITH seq AS (
   SELECT user_id, ts, value,
          -- STRICT >: Spark's session_window MERGES an event landing
          -- exactly at the session end (start + gap), so a gap of
          -- exactly 30 minutes continues the session on both engines.
          CASE WHEN lag(ts) OVER w IS NULL
-              OR ts - lag(ts) OVER w > INTERVAL '30 minutes'
+              OR ts - lag(ts) OVER w > INTERVAL '{ops.SESSION_WINDOW_GAP}'
               THEN 1 ELSE 0 END AS new_sess
   FROM events
   WHERE ts IS NOT NULL  -- Spark session_window() drops NULL event times
@@ -76,7 +77,7 @@ sess AS (
 )
 SELECT user_id,
        strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       strftime(MAX(ts) + INTERVAL '30 minutes', '%Y-%m-%d %H:%M:%S') AS session_end,
+       strftime(MAX(ts) + INTERVAL '{ops.SESSION_WINDOW_GAP}', '%Y-%m-%d %H:%M:%S') AS session_end,
        COUNT(*) AS n_events,
        ROUND(SUM(value), 2) AS sum_value
 FROM sess

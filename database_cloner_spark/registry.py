@@ -254,13 +254,13 @@ def tables_used(name: str) -> frozenset[str]:
     return _TABLES_CACHE[name]
 
 
-def keys_reading_only(tables: set[str], oracled_only: bool = True) -> list[str]:
-    """Registered keys whose table set is a non-empty subset of `tables`
-    — a fixture dir providing exactly `tables` satisfies every input the
-    key (builder AND oracle) needs."""
+def keys_reading_only(tables: set[str]) -> list[str]:
+    """Oracled registered keys whose table set is a non-empty subset of
+    `tables` — a fixture dir providing exactly `tables` satisfies every
+    input the key (builder AND oracle) needs."""
     out = []
     for name, spec in specs().items():
-        if oracled_only and spec.oracle is None:
+        if spec.oracle is None:
             continue
         used = tables_used(name)
         if used and used <= tables:
@@ -334,14 +334,14 @@ class QuerySpec:
 _REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None, tier: str = "C", doc: str = ""):
+def register(name: str, oracle: str | None, tier: str = "C"):
     """Decorator: register a query builder under `name`."""
 
     def deco(fn: Builder) -> Builder:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query key: {name}")
         _REGISTRY[name] = QuerySpec(
-            name=name, builder=fn, oracle=oracle, tier=tier, doc=doc or (fn.__doc__ or "")
+            name=name, builder=fn, oracle=oracle, tier=tier, doc=fn.__doc__ or ""
         )
         return fn
 

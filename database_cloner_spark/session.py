@@ -48,11 +48,8 @@ def get_spark(app_name: str = "database_cloner_spark", cpus: str | None = None) 
         # noise under interleaved isolated A/B). Scale posture: this is
         # planner ELIGIBILITY, not a forced hint — per-partition build
         # sides must still pass Spark's size checks, and AQE skew
-        # splitting stays on; env-overridable for cluster tuning.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # splitting stays on.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # Driver testdata stores events.ts as TIMESTAMP(NANOS), which Spark's
         # parquet reader rejects. Read nanos as raw longs; sources/parquet.py
         # converts them back to timestamps (footer-driven, lossless at us).

@@ -31,7 +31,6 @@ def write_bucketed(
     table: str,
     key: str,
     n_buckets: int = 32,
-    sort: bool = True,
     path: str | None = None,
 ) -> None:
     """Persist df hash-bucketed (and bucket-sorted) by `key`.
@@ -41,9 +40,7 @@ def write_bucketed(
     `spark.sql.warehouse.dir`, so it works in a plain foreign session
     (e.g. the correctness driver's) whose warehouse location we don't
     control."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
+    writer = df.write.mode("overwrite").bucketBy(n_buckets, key).sortBy(key)
     if path is not None:
         writer = writer.option("path", path)
     writer.format("parquet").saveAsTable(table)
@@ -95,9 +92,9 @@ def bucketed_table_for(
 
 
 def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner"
+    spark: SparkSession, left_table: str, right_table: str, key: str
 ) -> DataFrame:
-    """Join two same-bucketed catalog tables on their bucket key —
+    """Inner-join two same-bucketed catalog tables on their bucket key —
     shuffle-free by construction."""
     lt = spark.table(left_table)
     rt = spark.table(right_table)
@@ -115,4 +112,4 @@ def bucketed_join(
             f"co-located join needs matching bucket counts; "
             f"{left_table}={nl}, {right_table}={nr}"
         )
-    return lt.join(rt, key, how)
+    return lt.join(rt, key)

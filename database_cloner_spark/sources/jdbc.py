@@ -90,17 +90,15 @@ def read_options(
     }
 
 
-def write_options(
-    target: JdbcTarget, table: str, batchsize: int = 10000
-) -> dict[str, str]:
+def write_options(target: JdbcTarget, table: str) -> dict[str, str]:
     """Option dict for a parallel JDBC write: one connection per input
-    partition, `batchsize`-row batched inserts (the bulk-restore
+    partition, 10000-row batched inserts (the bulk-restore
     analogue of the reference's mongorestore/pg_restore path,
     clone_databases.sh:817-818)."""
     return {
         **target.options(),
         "dbtable": table,
-        "batchsize": str(batchsize),
+        "batchsize": "10000",
     }
 
 

@@ -10,13 +10,12 @@ themselves — this module wraps it with the engine's defaults.
 Scale notes (100 TB):
 - Newline-delimited JSON is SPLITTABLE: every file chunk is an
   independent input split, so a 1000-executor cluster parallelizes a
-  single huge file. `multiLine=True` (one document spanning lines) is
-  NOT splittable — one file = one task — so keep collection exports
-  line-delimited, mirroring mongoexport's default.
-- Schema inference costs one extra pass over the data. At scale either
-  (a) pass `sampling_ratio < 1` so inference reads a sample of the
-  input, or (b) infer once, persist the schema, and pass it explicitly
-  on subsequent reads (`schema=`) — then the read is single-pass.
+  single huge file. Spark's `multiLine` reader (one document spanning
+  lines) is NOT splittable — one file = one task — so the reader keeps
+  its line-delimited default, mirroring mongoexport's.
+- Schema inference costs one extra pass over the data. At scale infer
+  once, persist the schema, and pass it explicitly on subsequent reads
+  (`schema=`) — then the read is single-pass.
 - Malformed documents: PERMISSIVE mode (default) routes unparseable
   lines into `_corrupt_record` instead of failing the job — at web
   scale some corrupt lines are a certainty, and a 10-hour job must not
@@ -43,24 +42,14 @@ EVENTS_DOC_SCHEMA = (
 )
 
 
-def load_json(
-    spark: SparkSession,
-    path: str,
-    schema=None,
-    sampling_ratio: float | None = None,
-    multiline: bool = False,
-) -> DataFrame:
+def load_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
     """Read newline-delimited JSON documents with inferred (or given)
     nested schema — the engine's `mongodump`-collection analogue."""
-    reader = (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("multiLine", "true" if multiline else "false")
+    reader = spark.read.option("mode", "PERMISSIVE").option(
+        "columnNameOfCorruptRecord", CORRUPT_COL
     )
     if schema is not None:
         reader = reader.schema(schema)
-    elif sampling_ratio is not None:
-        reader = reader.option("samplingRatio", str(sampling_ratio))
     return reader.json(path)
 
 

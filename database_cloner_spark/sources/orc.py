@@ -31,13 +31,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def load_orc(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """Read an ORC table. Schema optional — ORC files self-describe;
-    pass one to pin column types on heterogeneous-file directories."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
+def load_orc(spark: SparkSession, path: str) -> DataFrame:
+    """Read an ORC table; ORC files self-describe their schema."""
+    return spark.read.orc(path)
 
 
 def export_orc(df: DataFrame, path: str) -> None:

@@ -97,14 +97,27 @@ def _files(path: str) -> tuple:
     return tuple(sorted(out))
 
 
+def _hidden(name: str) -> bool:
+    # Spark's file-index rule: `.` and `_` names are not data, except a
+    # `_`-named hive partition directory (it holds a `=`).
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def data_files(files: tuple) -> list[str]:
+    """The relative names in a `_files` listing that Spark reads as
+    data: no component of the path is hidden, so a killed write's
+    `_temporary/` or `.spark-staging-*` leftovers are not data."""
+    return [
+        n for n, _size, _mtime in files
+        if not any(_hidden(c) for c in n.split(os.sep))
+    ]
+
+
 def _footer(path: str, files: tuple) -> pa.Schema | None:
     """Footer schema of the file itself, or of a directory's first data
-    part (hidden `_`/`.` names skipped); None when there is no part."""
+    part; None when there is no part."""
     if os.path.isdir(path):
-        parts = [
-            n for n, _size, _mtime in files
-            if n.endswith(".parquet") and not os.path.basename(n).startswith(("_", "."))
-        ]
+        parts = [n for n in data_files(files) if n.endswith(".parquet")]
         if not parts:
             return None
         path = os.path.join(path, parts[0])

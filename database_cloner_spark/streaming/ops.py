@@ -36,15 +36,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from database_cloner_spark.functions import ranks
-from database_cloner_spark.queries.windows import SESSION_GAP_US, session_index
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
+# Window shapes of the batch-twinned operators below; the
+# queries/streaming_batch.py oracles read them too. Bound before the
+# queries/ import below: importing this module first imports queries/,
+# whose streaming_batch reads them from this module while it loads.
+WINDOW_WIDTH = "1 hour"
+WINDOW_SLIDE = "15 minutes"
+SESSION_WINDOW_GAP = "30 minutes"
 
-def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
+from database_cloner_spark.queries.windows import SESSION_GAP_US, session_index  # noqa: E402
+
+
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """Tumbling-window counts + sums per event type."""
     return (
-        events.groupBy(F.window("ts", width).alias("w"), "event_type")
+        events.groupBy(F.window("ts", WINDOW_WIDTH).alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(
             F.date_format("w.start", TS_FMT).alias("window_start"),
@@ -79,10 +88,12 @@ def windowed_heavy_hitters(
     )
 
 
-def sliding_counts(events: DataFrame, width: str = "1 hour", slide: str = "15 minutes") -> DataFrame:
+def sliding_counts(events: DataFrame) -> DataFrame:
     """Sliding-window counts: each event lands in width/slide windows."""
     return (
-        events.groupBy(F.window("ts", width, slide).alias("w"), "event_type")
+        events.groupBy(
+            F.window("ts", WINDOW_WIDTH, WINDOW_SLIDE).alias("w"), "event_type"
+        )
         .agg(F.count("*").alias("n"))
         .select(
             F.date_format("w.start", TS_FMT).alias("window_start"),
@@ -92,11 +103,14 @@ def sliding_counts(events: DataFrame, width: str = "1 hour", slide: str = "15 mi
     )
 
 
-def session_aggregate(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_aggregate(events: DataFrame) -> DataFrame:
     """Gap-based session windows per user: merged while consecutive
-    events are < gap apart; session end = last event + gap."""
+    events are < SESSION_WINDOW_GAP apart; session end = last event +
+    gap."""
     return (
-        events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.groupBy(
+            F.session_window("ts", SESSION_WINDOW_GAP).alias("w"), "user_id"
+        )
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
         .select(
             "user_id",

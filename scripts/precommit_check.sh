@@ -37,37 +37,9 @@ python -m pytest tests/test_survey_registry.py \
   tests/test_table_usage.py::test_every_key_reads_known_tables -q
 
 # r7 lesson (q_text_bm25): a key that lands without the deterministic
-# plan/parity suites can ship a red test into the snapshot. If the
-# working tree touches query/operator code, run the plan, parity and
-# shuffle-budget gates here too (the installed git pre-commit hook
-# enforces the same bar at commit time — scripts/install_hooks.sh);
-# the budget suite reuses the plan suite's cached plans. The ledger
-# suite (no Spark, ~2 s) rides along because builder edits change
-# content signatures.
-# QUERY, PIPELINE and STATEFUL are the base patterns
-# scripts/git_pre_commit.sh uses; keep the two scripts' copies equal.
-QUERY='database_cloner_spark/(queries|functions|llm|streaming|sources)/|database_cloner_spark/(registry|session)\.py|__spark_entry__\.py'
-PIPELINE='database_cloner_spark/pipeline/|database_cloner_spark/streaming/cdc\.py'
-STATEFUL='database_cloner_spark/streaming/ops\.py|database_cloner_spark/queries/windows\.py'
-# capture-then-grep: a `git | grep -q` pipeline under pipefail can
-# exit 141 on SIGPIPE and silently skip the gate
-CHANGED="$(git diff HEAD --name-only)"
-if grep -qE "^($QUERY)" <<<"$CHANGED"; then
-  echo "[precommit_check] query/operator diff detected -> plan + parity + shuffle-budget + ledger gates (sf0.001)"
-  python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py tests/test_ledger.py -q
-fi
-# A pipeline-only diff changes no key, but it can break the clone,
-# its metadata tables, reports and probes, the re-sync, or the write
-# paths' job counts (the CDC batch writer in streaming/cdc.py among
-# them): run the clone, incremental and write-path suites.
-if grep -qE "^($PIPELINE)" <<<"$CHANGED"; then
-  echo "[precommit_check] clone-pipeline diff detected -> clone + incremental + write-path suites"
-  python -m pytest tests/test_clone_pipeline.py tests/test_incremental.py tests/test_clone_sync_writes.py -q
-fi
-# The stateful stream operators (streaming/ops.py) and the sessionizer
-# their batch twins use (queries/windows.py): run the stream-equals-
-# batch and kill-and-restart suites, none of which the gates above run.
-if grep -qE "^($STATEFUL)" <<<"$CHANGED"; then
-  echo "[precommit_check] stateful-operator diff detected -> stateful stream suites (8 tests)"
-  python -m pytest tests/test_streaming.py -k stateful -q
-fi
+# plan/parity suites can ship a red test into the snapshot. The working
+# tree's diff runs the gate table's suites here too (scripts/gates.sh;
+# the installed git pre-commit hook enforces the same bar at commit
+# time — scripts/install_hooks.sh).
+source scripts/gates.sh
+run_gates "$(git diff HEAD --name-only)" "[precommit_check]"

@@ -127,6 +127,12 @@ def test_cli_db_type_postgresql_validates_and_runs(spark, tmp_path, capsys):
     assert rc == 0
     assert "1/1 successful" in capsys.readouterr().out
     assert os.path.exists(os.path.join(target, "clone_region.parquet"))
+    # the conf check's role-prefix defaults (r_rw_ / r_rc_) name the
+    # provisioned roles
+    from database_cloner_spark.pipeline.reports import read_rows
+
+    roles = {r["role_name"] for r in read_rows(os.path.join(target, "_grants"))}
+    assert roles == {"r_rw_clone_region", "r_rc_clone_region"}
 
     conf.write_text(complete.replace("PG_SUPERUSER=postgres\n", ""))
     rc = main([

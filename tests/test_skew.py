@@ -56,10 +56,10 @@ def test_salt_is_content_deterministic(spark):
     from database_cloner_spark.functions.skew import _content_salt
 
     orders = load(spark, SF, "orders").select("o_orderkey", "o_custkey")
-    s1 = orders.withColumn("__salt", _content_salt(orders, 16, None))
+    s1 = orders.withColumn("__salt", _content_salt(orders, 16))
     # Same content, radically different partitioning => same salts.
     reparted = orders.repartition(13)
-    s2 = reparted.withColumn("__salt", _content_salt(reparted, 16, None))
+    s2 = reparted.withColumn("__salt", _content_salt(reparted, 16))
     m1 = {r["o_orderkey"]: r["__salt"] for r in s1.collect()}
     m2 = {r["o_orderkey"]: r["__salt"] for r in s2.collect()}
     assert m1 == m2

@@ -269,6 +269,31 @@ def test_load_nanos_column_same_on_miss_and_hit(spark, tmp_path):
         assert got == [n // 1000 for n in ns]
 
 
+def test_load_skips_hidden_directories_for_the_footer(spark, tmp_path):
+    """A killed write's leftover part under `_temporary/` sorts before
+    `part-*` but is not data to Spark: the nanos footer is read from the
+    real part, so `ts` still arrives as a timestamp."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from database_cloner_spark.sources.parquet import load
+
+    table = tmp_path / "ev.parquet"
+    leftover = table / "_temporary" / "0"
+    leftover.mkdir(parents=True)
+    ns = [1_700_000_000_123_456_789]
+    pq.write_table(
+        pa.table({"ts": pa.array(ns, pa.timestamp("ns"))}),
+        str(table / "part-00001.parquet"),
+        version="2.6",
+    )
+    pq.write_table(
+        pa.table({"ts": pa.array([n // 1000 for n in ns], pa.timestamp("us"))}),
+        str(leftover / "part-00000.parquet"),
+    )
+    assert dict(load(spark, str(tmp_path), "ev").dtypes) == {"ts": "timestamp"}
+
+
 def test_load_memo_is_per_session(spark, tmp_path):
     """A new session starts with a cold memo, and a session no longer
     referenced releases its entries."""

@@ -30,6 +30,21 @@ def _run_to_memory(sdf, name: str, mode: str = "complete"):
     return name
 
 
+def test_ops_imports_before_queries():
+    """A process whose first package import is streaming.ops (the
+    benchmark's clone_sync does this) loads: queries/, which ops
+    imports, reads ops' window constants while ops is still loading."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run(
+        [sys.executable, "-c", "import database_cloner_spark.streaming.ops"],
+        cwd=root,
+        check=True,
+    )
+
+
 def test_streaming_tumbling_matches_batch(spark):
     stream = events_stream(spark, SF)
     name = _run_to_memory(ops.tumbling_counts(stream), f"t_{uuid.uuid4().hex[:8]}")

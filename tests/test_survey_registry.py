@@ -249,3 +249,99 @@ def test_stateful_fold_and_sessionizer_are_written_once():
             sessionizers.append(site)
     assert folds == ["streaming/ops.py::_fold_per_user"], folds
     assert sessionizers == ["queries/windows.py::session_index"], sessionizers
+
+
+# -- every defaulted parameter has a setter -----------------------------------
+
+# Defaulted package parameters no call site passes, kept on purpose:
+# "file::function(parameter)" -> reason.
+_UNSET_PARAMETERS: dict[str, str] = {}
+
+
+def _defaulted_parameters(root: pathlib.Path):
+    """(file::function(parameter), callee name, position) for every
+    defaulted parameter of every package function, methods and nested
+    functions included. The position counts the arguments a call
+    passes (a method's self is not one of them); keyword-only
+    parameters have none. A constructor is called by its class name."""
+    for site, top in _package_tops(root):
+        methods = set()
+        if isinstance(top, ast.ClassDef):
+            methods = {id(n) for n in top.body if isinstance(n, ast.FunctionDef)}
+        for fn in ast.walk(top):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            callee = top.name if fn.name == "__init__" else fn.name
+            a = fn.args
+            positional = a.posonlyargs + a.args
+            skip = 1 if id(fn) in methods else 0
+            first = len(positional) - len(a.defaults)
+            params = [
+                (p.arg, i - skip) for i, p in enumerate(positional) if i >= first
+            ]
+            params += [
+                (p.arg, None)
+                for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is not None
+            ]
+            file = site.split("::")[0]
+            for name, pos in params:
+                yield f"{file}::{fn.name}({name})", callee, pos
+
+
+def _setters(root: pathlib.Path):
+    """Every call anywhere (package, scripts, perfbench, entry points,
+    tests) as callee name -> [(positional count, keywords, passes
+    *args or **kwargs)], and the names referenced other than as a
+    callee (a partial, a callback, a value)."""
+    calls: dict[str, list] = {}
+    referenced: set[str] = set()
+    for path in _non_test_sources(root) + sorted((root / "tests").rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        callees = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                callees.add(id(node.func))
+                name = getattr(node.func, "attr", getattr(node.func, "id", None))
+                calls.setdefault(name, []).append(
+                    (
+                        sum(not isinstance(x, ast.Starred) for x in node.args),
+                        {k.arg for k in node.keywords},
+                        any(isinstance(x, ast.Starred) for x in node.args)
+                        or any(k.arg is None for k in node.keywords),
+                    )
+                )
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Name, ast.Attribute)) and id(node) not in callees:
+                referenced.add(getattr(node, "attr", getattr(node, "id", None)))
+    return calls, referenced
+
+
+def _unset_parameters(root: pathlib.Path) -> set[str]:
+    calls, referenced = _setters(root)
+    unset = set()
+    for site, callee, pos in _defaulted_parameters(root):
+        name = site[site.index("(") + 1 : -1]
+        if callee in referenced or any(
+            name in kws or star or (pos is not None and n > pos)
+            for n, kws, star in calls.get(callee, ())
+        ):
+            continue
+        unset.add(site)
+    return unset
+
+
+def test_package_parameters_have_a_setter():
+    """A defaulted parameter that no call site passes, by position or by
+    keyword, is an option nothing uses: its default is the only value
+    the code ever runs with, and any branch only another value reaches
+    is dead. Make the default a constant, or allow-list the parameter
+    with a reason. Calls match by name (bare or attribute), so a
+    same-named function elsewhere counts as a setter; a function
+    referenced other than as a callee counts as setting every
+    parameter."""
+    unset = _unset_parameters(_ROOT)
+    orphans = sorted(unset - set(_UNSET_PARAMETERS))
+    assert not orphans, f"defaulted parameters no call site sets: {orphans}"
+    stale = set(_UNSET_PARAMETERS) - unset
+    assert not stale, f"allow-listed parameters now have a setter or are gone: {stale}"
