@@ -27,6 +27,7 @@ from pyspark.sql import Window as W
 
 from database_cloner_spark.functions import ranks
 from database_cloner_spark.functions.partitioning import spread
+from database_cloner_spark.functions.rational import ratio
 from database_cloner_spark.llm.textprep import (
     SHINGLE_N,
     normalized,
@@ -170,14 +171,13 @@ def _jaccard_pairs_from_exploded(
     inter = _pair_intersections(exploded, max_df, min_size_ratio=threshold)
     union = F.col("na") + F.col("nb") - F.col("inter")
     # filter on the raw ratio (identical int operands -> identical double
-    # on both engines); OUTPUT via integer-exact rounding (round4_ratio)
-    # so a 4th-decimal tie cannot split across engines.
-    from database_cloner_spark.llm.text import round4_ratio
-
+    # on both engines); OUTPUT via integer-exact rounding
+    # (functions/rational.ratio) so a 4th-decimal tie cannot split
+    # across engines.
     return (
         inter.withColumn("jaccard", F.col("inter") / union)
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", round4_ratio(F.col("inter"), union).alias("jaccard"))
+        .select("doc_a", "doc_b", ratio(F.col("inter"), union, 4).alias("jaccard"))
     )
 
 
@@ -216,22 +216,20 @@ def shingle_containment_pairs(
     shingle_jaccard_pairs (one posting-list shuffle, one pair-count
     shuffle, no cross product); the filter compares raw integer-ratio
     doubles and the OUTPUT rounds via integer arithmetic
-    (round4_ratio), the cross-engine tie discipline."""
+    (functions/rational.ratio), the cross-engine tie discipline."""
     sh = _shingle_sets(docs).withColumn("n_sh", F.size("sh"))
     exploded = sh.select(
         "doc_id", F.col("n_sh").alias("__n"), F.explode("sh").alias("__key")
     )
     inter = _pair_intersections(exploded, max_shingle_df)
-    from database_cloner_spark.llm.text import round4_ratio
-
     keep = F.greatest(
         F.col("inter") / F.col("na"), F.col("inter") / F.col("nb")
     ) >= threshold
     return inter.filter(keep).select(
         "doc_a",
         "doc_b",
-        round4_ratio(F.col("inter"), F.col("na")).alias("cont_a"),
-        round4_ratio(F.col("inter"), F.col("nb")).alias("cont_b"),
+        ratio(F.col("inter"), F.col("na"), 4).alias("cont_a"),
+        ratio(F.col("inter"), F.col("nb"), 4).alias("cont_b"),
     )
 
 
@@ -472,12 +470,10 @@ def minhash_lsh_pairs(
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
-    from database_cloner_spark.llm.text import round4_ratio
-
     return (
         verified.withColumn("jaccard", inter / union)
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", round4_ratio(inter, union).alias("jaccard"))
+        .select("doc_a", "doc_b", ratio(inter, union, 4).alias("jaccard"))
     )
 
 
@@ -803,6 +799,24 @@ def embedding_neardup_pairs(embs: DataFrame, threshold: float = 0.35) -> DataFra
 BUCKETED_CELL_TARGET = 125
 BUCKETED_CELL_FLOOR = 16
 BUCKETED_CELL_CEIL = 65536
+
+
+def bucketed_cells(n: int) -> int:
+    """Cell count for n vectors: ceil(n / BUCKETED_CELL_TARGET) clamped
+    to [BUCKETED_CELL_FLOOR, BUCKETED_CELL_CEIL]."""
+    return max(
+        BUCKETED_CELL_FLOOR,
+        min(BUCKETED_CELL_CEIL, -(-n // BUCKETED_CELL_TARGET)),
+    )
+
+
+def bucketed_cells_sql(n: str) -> str:
+    """DuckDB mirror of bucketed_cells over a count expression."""
+    return (
+        f"GREATEST({BUCKETED_CELL_FLOOR}, LEAST({BUCKETED_CELL_CEIL},"
+        f" CEIL({n} / {BUCKETED_CELL_TARGET}.0)))"
+    )
+
 # Cells each vector is assigned to; the q_dedup_embedding_bucketed
 # oracle reads it too.
 BUCKETED_NPROBE = 3
@@ -844,12 +858,7 @@ def embedding_neardup_bucketed(embs: DataFrame, threshold: float = 0.35) -> Data
     # (r10 NaN sweep posture, llm/similarity.seed_centroids).
     from database_cloner_spark.llm.similarity import seed_centroids
 
-    # one cheap count job; ceil(n / target) clamped to [floor, ceil]
-    n = embs.count()
-    n_cells = max(
-        BUCKETED_CELL_FLOOR,
-        min(BUCKETED_CELL_CEIL, -(-n // BUCKETED_CELL_TARGET)),
-    )
+    n_cells = bucketed_cells(embs.count())  # one cheap count job
     cents = seed_centroids(embs, n_cells)
     from database_cloner_spark.functions.partitioning import spread
     from database_cloner_spark.functions.vector import cosine as _cos

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from database_cloner_spark.functions import ranks
 from database_cloner_spark.functions.partitioning import spread
+from database_cloner_spark.functions.rational import ratio
 from database_cloner_spark.llm.textprep import tokens
 
 STOPWORDS = ("the", "a", "of", "and", "in")
@@ -53,7 +54,7 @@ def bpe_token_counts(docs: DataFrame) -> DataFrame:
         "doc_id",
         ws.alias("n_tokens_ws"),
         bpe.alias("n_tokens_bpe"),
-        round4_ratio(bpe, ws).alias("bpe_per_word"),
+        ratio(bpe, ws, 4).alias("bpe_per_word"),
     )
 
 
@@ -75,7 +76,7 @@ def token_stats(docs: DataFrame) -> DataFrame:
 
 def lang_stats(docs: DataFrame) -> DataFrame:
     """Per-language document stats. Averages of integers are rounded in
-    integer arithmetic (roundn_ratio): the sums are exact on both
+    integer arithmetic (functions/rational.ratio): the sums are exact on both
     engines, so the ROUND-tie divergence class cannot fire."""
     agg = docs.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -85,55 +86,9 @@ def lang_stats(docs: DataFrame) -> DataFrame:
     return agg.select(
         "lang",
         "n_docs",
-        roundn_ratio(F.col("__chars"), F.col("n_docs"), 2).alias("avg_chars"),
-        roundn_ratio(F.col("__toks"), F.col("n_docs"), 2).alias("avg_tokens"),
+        ratio(F.col("__chars"), F.col("n_docs"), 2).alias("avg_chars"),
+        ratio(F.col("__toks"), F.col("n_docs"), 2).alias("avg_tokens"),
     )
-
-
-def roundn_ratio(num, den, digits: int = 4):
-    """round-half-up(10^digits * num/den) / 10^digits computed in
-    INTEGER arithmetic: floor((2*10^d*num + den) / (2*den)) / 10^d.
-
-    Why not ROUND(num/den, d): when the true ratio sits exactly on a
-    d-th-decimal tie (e.g. 6690/8000 = 0.83625 at d=4), the two engines
-    round their nearest-doubles through different decimal paths and
-    split the tie differently — Spark emitted 0.8362 where DuckDB said
-    0.8363 at sf0.1 (found by the sf0.1 parity sweep; invisible at
-    smaller sfs where no value hits a tie). The integer form never
-    rounds a double at all, so both engines produce the bit-identical
-    k/10^d. The quotient itself is SQL integral `div` (64-bit long
-    division, bit-identical to DuckDB's `//` for non-negative
-    operands), NOT floor-of-double-division: once 2*10^d*num exceeds
-    2^53 the double loses integer precision and floor(double) silently
-    diverges from exact division (e.g. num=2e16, den=3: exact
-    ...666 vs ...667 via double) — per-doc ratios never get there,
-    but corpus-sum consumers (lang_stats avg_chars, winsorize mean,
-    vocab coverage) do at the 100 TB target. The final /10^d stays a
-    double op: q ≈ 10^d*ratio << 2^53, and IEEE division is correctly
-    rounded, so both engines emit the identical double.
-
-    Domain: |2*10^d*num + den| must fit int64 (ANSI mode raises on
-    overflow rather than wrapping — loud, like DuckDB's BIGINT). That
-    bounds num < ~4.6e14 at d=4 / ~4.6e16 at d=2: ample for sums of
-    per-doc counts at 100 TB (25T tokens ≈ 2.5e13); a consumer beyond
-    it should pre-reduce (e.g. average of per-group averages) rather
-    than widen to int128, which Spark lacks.
-    Use for every cross-engine-hashed ratio of exact integers.
-
-    Total on den = 0/NULL: the CASE guard yields NULL instead of the
-    ANSI `div` DIVIDE_BY_ZERO — exactly DuckDB's `x // 0` → NULL, so
-    oracles need no special-casing (an EMPTY events table drove
-    q_funnel's denominator to 0; tests/test_adversarial_empty.py)."""
-    scale = 10 ** digits
-    d = den.cast("long")
-    a = F.lit(2 * scale).cast("long") * num.cast("long") + d
-    q = F.when(d != 0, F.call_function("div", a, 2 * d))
-    return q / F.lit(float(scale))
-
-
-def round4_ratio(num, den):
-    """roundn_ratio at 4 digits (the common score precision)."""
-    return roundn_ratio(num, den, 4)
 
 
 def quality_scores(docs: DataFrame) -> DataFrame:
@@ -141,7 +96,7 @@ def quality_scores(docs: DataFrame) -> DataFrame:
     diversity) — rational arithmetic only, reproducible everywhere:
     quality = 0.5*min(n,50)/50 + 0.3*(n-s)/n + 0.2*d/n is carried as
     the single integer fraction (n*min(n,50) + 30*(n-s) + 20*d)/(100n)
-    and rounded with round4_ratio, so no engine ever rounds a tie-
+    and rounded with functions/rational.ratio, so no engine ever rounds a tie-
     adjacent double. Tokens are projected first so the split runs once
     per doc, not once per derived metric (textprep.shingles_of_tokens)."""
     docs = docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
@@ -154,9 +109,9 @@ def quality_scores(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id",
         n.alias("n_tokens"),
-        round4_ratio(s, n).alias("stopword_ratio"),
-        round4_ratio(d, n).alias("distinct_ratio"),
-        round4_ratio(q_num, q_den).alias("quality"),
+        ratio(s, n, 4).alias("stopword_ratio"),
+        ratio(d, n, 4).alias("distinct_ratio"),
+        ratio(q_num, q_den, 4).alias("quality"),
     )
 
 
@@ -394,10 +349,10 @@ def repetition_scores(docs: DataFrame) -> DataFrame:
     n_tokens = F.size(toks)
     grams = shingles_of_tokens(toks)  # distinct n-grams
     n_gram_pos = F.greatest(n_tokens - (SHINGLE_N - 1), F.lit(0))
-    # integer-exact rounding (roundn_ratio) — the ROUND-tie class
-    dup_tok = round4_ratio(n_tokens - F.size(F.array_distinct(toks)), n_tokens)
+    # integer-exact rounding (functions/rational.ratio) — the ROUND-tie class
+    dup_tok = ratio(n_tokens - F.size(F.array_distinct(toks)), n_tokens, 4)
     dup_gram = F.when(
-        n_gram_pos > 0, round4_ratio(n_gram_pos - F.size(grams), n_gram_pos)
+        n_gram_pos > 0, ratio(n_gram_pos - F.size(grams), n_gram_pos, 4)
     ).otherwise(F.lit(0.0))
     return docs.select(
         "doc_id",

@@ -80,7 +80,6 @@ class CloneConfig:
     # Comma-separated work list (DATABASES_TO_CLONE, PC:22) or explicit list.
     tables: str | list[str] | None = None
     create_backup_before_clone: bool = False
-    backup_dir: str | None = None
     # table -> partition column: clones written partitionBy(col) so
     # downstream reads get partition pruning (PartitionFilters at the
     # scan). The 100 TB lever the reference's byte-copy can't offer:
@@ -224,7 +223,7 @@ class ClonePipeline:
     def _backup(self, target_path: str, table: str) -> None:
         """Timestamped snapshot before mutation (clone_databases.sh:203-217)."""
         ts = datetime.now(timezone.utc).strftime("%Y%m%d_%H%M%S")
-        backup_dir = self.cfg.backup_dir or os.path.join(self.cfg.target_dir, "_backups")
+        backup_dir = os.path.join(self.cfg.target_dir, "_backups")
         dst = os.path.join(backup_dir, f"{self.cfg.db_prefix}{table}_{ts}.parquet")
         os.makedirs(backup_dir, exist_ok=True)
         shutil.copytree(target_path, dst)

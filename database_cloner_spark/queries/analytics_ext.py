@@ -18,7 +18,15 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from database_cloner_spark.functions import ranks
-from database_cloner_spark.llm import text as llmtext
+from database_cloner_spark.functions.rational import (
+    DEC,
+    pearson,
+    pearson_sql,
+    ratio,
+    ratio_dec,
+    ratio_dec_sql,
+    ratio_sql,
+)
 from database_cloner_spark.registry import register
 from database_cloner_spark.sources import load
 
@@ -103,7 +111,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Rational idf (N+1)/(df+1) instead of log-idf: identical bit-for-bit in
 # any engine (no libm), so ranking ties resolve the same way everywhere.
 # Swap in log() at production — ranking semantics are unchanged.
-_ORACLE_TFIDF = """
+_ORACLE_TFIDF = f"""
 WITH terms AS (
   SELECT doc_id, UNNEST(string_split(lower(text), ' ')) AS term
   FROM documents
@@ -125,7 +133,7 @@ ranked AS (
   -- integer-exact round-half-up of tf*(N+1)/(df+1): ROUND on the
   -- computed double can split 4th-decimal ties differently per engine
   SELECT doc_id, term,
-         ((20000*(tf*(n_docs+1)) + (df+1)) // (2*(df+1))) / 10000.0 AS tfidf,
+         {ratio_sql("tf*(n_docs+1)", "df+1", 4)} AS tfidf,
          ROW_NUMBER() OVER (PARTITION BY doc_id
                             ORDER BY score DESC, term ASC) AS rn
   FROM scored
@@ -168,9 +176,9 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "term",
         # rank on the raw double (identical operands both engines);
-        # OUTPUT via integer-exact rounding (llm/text.roundn_ratio)
-        llmtext.round4_ratio(
-            F.col("tf") * (F.col("n_docs") + 1), F.col("df") + 1
+        # OUTPUT via integer-exact rounding (functions/rational.ratio)
+        ratio(
+            F.col("tf") * (F.col("n_docs") + 1), F.col("df") + 1, 4
         ).alias("tfidf"),
     )
 
@@ -376,7 +384,7 @@ def q_text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Winsorization: clamp per-group outliers to the [p05, p95] band before
 # computing robust statistics — standard pre-training corpus hygiene
 # (one pathological 10 MB doc otherwise dominates a source's mean).
-_ORACLE_WINSORIZE = """
+_ORACLE_WINSORIZE = f"""
 WITH cuts AS (
   SELECT lang,
          quantile_cont(n_chars, 0.05) AS lo,
@@ -387,8 +395,7 @@ SELECT d.lang,
        COUNT(*) AS n_docs,
        CAST(SUM(CASE WHEN d.n_chars < c.lo OR d.n_chars > c.hi THEN 1 ELSE 0 END)
             AS BIGINT) AS n_clamped,
-       ((2000*CAST(SUM(d.n_chars) AS BIGINT) + COUNT(*)) // (2*COUNT(*))) / 1000.0
-         AS mean_raw,
+       {ratio_sql("CAST(SUM(d.n_chars) AS BIGINT)", "COUNT(*)", 3)} AS mean_raw,
        ROUND(AVG(LEAST(GREATEST(d.n_chars::DOUBLE, c.lo), c.hi)), 3)
          AS mean_winsorized
 FROM documents d JOIN cuts c USING (lang)
@@ -424,7 +431,7 @@ def q_agg_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
             # integer-exact rounding for the int ratio; the winsorized
             # mean mixes quantile doubles and keeps plain ROUND (its
             # operands are identical on both engines by construction)
-            llmtext.roundn_ratio(F.sum("n_chars"), F.count("*"), 3).alias(
+            ratio(F.sum("n_chars"), F.count("*"), 3).alias(
                 "mean_raw"
             ),
             F.round(F.avg(clamped), 3).alias("mean_winsorized"),
@@ -436,7 +443,7 @@ def q_agg_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Each stage's cutoff depends on the previous stage's result, so the
 # funnel is two user-keyed join rounds — every join and agg shares ONE
 # partitioning on user_id (no re-shuffle between stages under AQE).
-_ORACLE_FUNNEL = """
+_ORACLE_FUNNEL = f"""
 WITH v AS (
   SELECT user_id, MIN(epoch_us(ts)) AS v_us FROM events
   WHERE event_type = 'view' GROUP BY user_id
@@ -456,8 +463,8 @@ p AS (
 SELECT (SELECT COUNT(*) FROM v) AS n_view,
        (SELECT COUNT(*) FROM c) AS n_click_after_view,
        (SELECT COUNT(*) FROM p) AS n_purchase_after_click,
-       ((20000*(SELECT COUNT(*) FROM p)::BIGINT + (SELECT COUNT(*) FROM v))
-        // (2*(SELECT COUNT(*) FROM v)::BIGINT)) / 10000.0 AS view_to_purchase
+       {ratio_sql("(SELECT COUNT(*) FROM p)::BIGINT",
+                  "(SELECT COUNT(*) FROM v)::BIGINT", 4)} AS view_to_purchase
 """
 
 
@@ -499,8 +506,8 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_view",
             "n_click_after_view",
             "n_purchase_after_click",
-            llmtext.round4_ratio(
-                F.col("n_purchase_after_click"), F.col("n_view")
+            ratio(
+                F.col("n_purchase_after_click"), F.col("n_view"), 4
             ).alias("view_to_purchase"),
         )
     )
@@ -592,7 +599,7 @@ def q_ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_TS_INTERPOLATE = _TS_DENSE_CTES.rstrip() + """,
+_ORACLE_TS_INTERPOLATE = _TS_DENSE_CTES.rstrip() + f""",
 carried AS (
   SELECT h, event_type, n,
     last_value(n IGNORE NULLS) OVER
@@ -614,11 +621,13 @@ SELECT strftime(h, '%Y-%m-%d %H:%M:%S') AS hour,
        CASE
          WHEN n IS NOT NULL THEN CAST(n AS DOUBLE)
          WHEN prev_n IS NULL OR next_n IS NULL THEN NULL
-         ELSE ((20000 * (prev_n * (date_diff('hour', prev_h, next_h)
-                                   - date_diff('hour', prev_h, h))
-                         + next_n * date_diff('hour', prev_h, h))
-                + date_diff('hour', prev_h, next_h))
-              // (2 * date_diff('hour', prev_h, next_h))) / 10000.0
+         ELSE {ratio_sql(
+             "prev_n * (date_diff('hour', prev_h, next_h)"
+             " - date_diff('hour', prev_h, h))"
+             " + next_n * date_diff('hour', prev_h, h)",
+             "date_diff('hour', prev_h, next_h)",
+             4,
+         )}
        END AS filled,
        (n IS NULL AND prev_n IS NOT NULL AND next_n IS NOT NULL)
          AS is_interpolated
@@ -636,10 +645,8 @@ def q_ts_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid (span-bounded, from a 1-row min/max agg), then per-type carry
     windows — last/first non-null value AND its hour — which are ONE
     shuffle on event_type; the interpolated value is integer-exact
-    (counts × hour-weights through roundn_ratio, never a rounded
+    (counts × hour-weights through rational.ratio, never a rounded
     double), so every filled cell hash-matches the DuckDB oracle."""
-    from database_cloner_spark.llm.text import roundn_ratio
-
     dense = _events_hourly_dense(spark, sf_dir)
     # Both carries are RUNNING frames (unboundedPreceding..currentRow):
     # "next" uses a DESCENDING running carry instead of the textbook
@@ -670,7 +677,7 @@ def q_ts_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = F.expr("timestampdiff(HOUR, prev_h, next_h)")
     k = F.expr("timestampdiff(HOUR, prev_h, h)")
-    interp = roundn_ratio(
+    interp = ratio(
         F.col("prev_n") * (m - k) + F.col("next_n") * k, m, 4
     )
     filled = (
@@ -877,8 +884,9 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (Python / Java BigDecimal / Spark decimal->double) is ...738e19 — a
 # 1-ulp r2 divergence that broke parity at sf0.001 (r7 judge repro).
 # Each ratio is instead rounded half-away-from-zero at d digits in
-# exact integer arithmetic — sign(N) * ((2*10^d*|N| + D) // (2*D)) —
-# where // is truncating integral division (Spark `div` and DuckDB `//`
+# exact integer arithmetic (functions/rational.ratio_dec and its mirror
+# ratio_dec_sql: sign(N) times the half-up quotient of |N| by D), the
+# quotient a truncating integral division (Spark `div` and DuckDB `//`
 # both truncate toward zero, verified identical for signed operands);
 # the small quotient (<< 2^53) then casts exactly on both engines.
 # intercept uses the exact rational identity
@@ -916,137 +924,12 @@ d AS (
   WHERE n * sxx - sx * sx <> 0 AND n * syy - sy * sy <> 0
 )
 SELECT priority, n,
-       {_rr_sql("num", "denx", 6)} AS slope_cents_per_day,
-       {_rr_sql("inum", "denx", 4)} AS intercept_cents,
-       ({_rr_sql("num", "denx", 8, signed=False)}
-        * {_rr_sql("num", "deny", 12, signed=False)}) AS r2
+       {ratio_dec_sql("num", "denx", 6)} AS slope_cents_per_day,
+       {ratio_dec_sql("inum", "denx", 4)} AS intercept_cents,
+       ({ratio_dec_sql("num", "denx", 8, signed=False)}
+        * {ratio_dec_sql("num", "deny", 12, signed=False)}) AS r2
 FROM d
 """
-
-
-_DEC = "decimal(38,0)"
-
-
-def _rr_dec(num, den, digits: int, signed: bool = True):
-    """round-half-away-from-zero(num/den) at `digits` decimals, computed
-    entirely in exact decimal(38,0) integer arithmetic; den must be > 0.
-
-    The decimal(38,0) sibling of llm.text.roundn_ratio (long-domain) for
-    sufficient-statistic ratios whose operands exceed 2^53 — where a raw
-    int->double cast is engine-dependent (DuckDB's HUGEINT->DOUBLE
-    double-rounds, see _ORACLE_REGRESSION). SPLIT FORM: the ratio's
-    integer part ip = |num| div den and its fraction fq =
-    round-half-up(rem/den * 10^d) are computed as two separate int64
-    quotients — the r8 nasty-twin sweep proved the one-shot
-    (2*10^d*|num| + den) div (2*den) quotient can exceed int64 on
-    high-variance fixtures, and Spark's decimal `div` WRAPS SILENTLY
-    there (no ANSI error; verified: 3.3e26 div 3 returned a negative
-    long). ip is therefore re-verified exactly (ip*den == |num| - rem,
-    all decimal — a wrapped quotient cannot pass) with an in-plan
-    raise_error; fq <= 10^d always fits. The result double
-    ip + fq/10^d is built from a correctly-rounded int64 cast (single
-    64-bit conversion — exact below 2^53 and correctly rounded above,
-    on BOTH engines, unlike the 128-bit cast) plus one IEEE add: bit-
-    identical cross-engine. The SQL mirror is _rr_sql. The sign gate
-    returns +0.0 (never -0.0) when the magnitude rounds to zero."""
-    scale = 10 ** digits
-    mag = F.abs(num)
-
-    def _fq(rem):
-        return F.call_function(
-            "div",
-            F.lit(2 * scale).cast(_DEC) * rem + den,
-            F.lit(2).cast(_DEC) * den,
-        )
-
-    # Two domains, branched on den so every intermediate provably fits
-    # (CASE branches evaluate lazily on both engines):
-    # - den >= 2e19: the ratio is at most ~1e38/2e19 < 5e18 — the
-    #   single-word quotient cannot wrap int64, and den*1e18 (which the
-    #   other branch needs) might not fit decimal(38,0).
-    # - den < 2e19: ip can exceed int64 (the r8 moments key's 4th
-    #   powers did, on the high-magnitude nasty fixture), so split
-    #   ip = hi*10^18 + lo; den*1e18 < 2e37 fits, every word quotient
-    #   fits int64, and hi is exact-verified (a wrapped quotient cannot
-    #   pass ip*den == mag - rem) with an in-plan raise_error — the
-    #   residual loud-failure domain is ratio > ~9.2e36.
-    # hi == 0 reproduces the single-word double BIT-EXACTLY
-    # (0.0*1e18 + lo adds exactly), so previously-green oracles are
-    # unchanged in either branch.
-    # string literal: 2e19 exceeds int64, py4j cannot ship it as a long
-    big_den = den >= F.lit(str(2 * 10 ** 19)).cast(_DEC)
-    ip_a = F.call_function("div", mag, den)
-    comp_a = ip_a.cast("double") + _fq(mag % den) / F.lit(float(scale))
-
-    den18 = F.lit(10 ** 18).cast(_DEC) * den
-    hi = F.call_function("div", mag, den18)
-    rem_hi = mag % den18
-    hi = F.when(hi.cast(_DEC) * den18 == mag - rem_hi, hi).otherwise(
-        F.raise_error(
-            F.lit(
-                "_rr_dec: ratio exceeds ~9.2e36 "
-                "(decimal div wraps silently past int64) — rescale"
-            )
-        )
-    )
-    lo = F.call_function("div", rem_hi, den)  # < 10^18, always fits
-    comp_b = (
-        hi.cast("double") * F.lit(1.0e18)
-        + lo.cast("double")
-        + _fq(rem_hi % den) / F.lit(float(scale))
-    )
-    comp = F.when(big_den, comp_a).otherwise(comp_b)
-    if not signed:
-        return comp
-    return F.when(
-        num < 0, F.when(comp == 0, F.lit(0.0)).otherwise(-comp)
-    ).otherwise(comp)
-
-
-def _rr_sql(num: str, den: str, digits: int, signed: bool = True) -> str:
-    """DuckDB mirror of _rr_dec over HUGEINT expressions: same two-word
-    split form — hi/lo BIGINT-cast integer words (the hi cast raises
-    loudly past int64, exactly where the Spark side raise_errors) +
-    <=10^d fractional quotient — so every int->double conversion is a
-    correctly-rounded 64-bit one and the add order matches _rr_dec."""
-    s = 10 ** digits
-    d18 = f"(CAST(({den}) AS HUGEINT) * 1000000000000000000)"
-    comp_a = (
-        f"(CAST(CAST(ABS({num}) // ({den}) AS BIGINT) AS DOUBLE)"
-        f" + ((2 * {s} * (ABS({num}) % ({den})) + ({den}))"
-        f" // (2 * ({den}))) / {s}.0)"
-    )
-    comp_b = (
-        f"(CAST(CAST(ABS({num}) // {d18} AS BIGINT) AS DOUBLE) * 1.0e18"
-        f" + CAST(CAST((ABS({num}) % {d18}) // ({den}) AS BIGINT) AS DOUBLE)"
-        f" + ((2 * {s} * ((ABS({num}) % {d18}) % ({den})) + ({den}))"
-        f" // (2 * ({den}))) / {s}.0)"
-    )
-    comp = (
-        f"(CASE WHEN ({den}) >= 20000000000000000000 THEN {comp_a}"
-        f" ELSE {comp_b} END)"
-    )
-    if not signed:
-        return comp
-    return (
-        f"(CASE WHEN ({num}) < 0 THEN"
-        f" (CASE WHEN {comp} = 0 THEN 0.0 ELSE -{comp} END)"
-        f" ELSE {comp} END)"
-    )
-
-
-def _pearson_r(num, denx, deny):
-    """sign(num) * sqrt(rr(num/denx, 8) * rr(num/deny, 12)) — the
-    Pearson-r closed form over exact integer sufficient statistics,
-    shared by q_ts_autocorr and q_stats_corr_matrix so the rounding
-    digits cannot drift between them (their oracles mirror it inline
-    via _rr_sql). mag == 0 only when num == 0, so the sign gate never
-    produces -0.0."""
-    mag = F.sqrt(
-        _rr_dec(num, denx, 8, signed=False)
-        * _rr_dec(num, deny, 12, signed=False)
-    )
-    return F.when(num < 0, -mag).otherwise(mag)
 
 
 _ORACLE_REGRESSION = _regression_oracle("o_orderpriority")
@@ -1066,7 +949,7 @@ def q_stats_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     regr_slope/regr_r2 build the same partials but accumulate in
     non-portable double order (see _ORACLE_REGRESSION's note), so the
     sums here are exact decimal(38,0) integers and the three outputs
-    are RATIONALLY ROUNDED via _rr_dec (slope@6, intercept@4, r2 =
+    are RATIONALLY ROUNDED via ratio_dec (slope@6, intercept@4, r2 =
     product of 8- and 12-digit factors) — no >2^53 integer is ever
     cast to double raw, which is what broke r7's parity (DuckDB's
     HUGEINT->DOUBLE double-rounds above 2^53). The datediff epoch and
@@ -1088,9 +971,9 @@ def _regression_build(
     pts = o.select(
         F.col(group_col).alias("priority"),
         F.datediff(F.col("o_orderdate").cast("date"), F.lit("1992-01-01").cast("date"))
-        .cast(_DEC)
+        .cast(DEC)
         .alias("x"),
-        F.floor(F.col("o_totalprice") * 100).cast(_DEC).alias("y"),
+        F.floor(F.col("o_totalprice") * 100).cast(DEC).alias("y"),
     )
     s = pts.groupBy("priority").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1100,7 +983,7 @@ def _regression_build(
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
     )
-    n_d = F.col("n").cast(_DEC)
+    n_d = F.col("n").cast(DEC)
     d = s.select(
         "priority",
         "n",
@@ -1113,16 +996,16 @@ def _regression_build(
     # defined trend — exclude them on the exact integer denominators
     # (ANSI Spark raises on /0 where DuckDB would NULL: same filter
     # both sides keeps the outputs identical AND meaningful); the
-    # surviving denominators are > 0 by Cauchy-Schwarz, as _rr_dec needs
+    # surviving denominators are > 0 by Cauchy-Schwarz, as ratio_dec needs
     d = d.filter((F.col("denx") != 0) & (F.col("deny") != 0))
     return d.select(
         "priority",
         "n",
-        _rr_dec(F.col("num"), F.col("denx"), 6).alias("slope_cents_per_day"),
-        _rr_dec(F.col("inum"), F.col("denx"), 4).alias("intercept_cents"),
+        ratio_dec(F.col("num"), F.col("denx"), 6).alias("slope_cents_per_day"),
+        ratio_dec(F.col("inum"), F.col("denx"), 4).alias("intercept_cents"),
         (
-            _rr_dec(F.col("num"), F.col("denx"), 8, signed=False)
-            * _rr_dec(F.col("num"), F.col("deny"), 12, signed=False)
+            ratio_dec(F.col("num"), F.col("denx"), 8, signed=False)
+            * ratio_dec(F.col("num"), F.col("deny"), 12, signed=False)
         ).alias("r2"),
     )
 
@@ -1184,7 +1067,7 @@ def q_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Welch one-vs-rest t-test per event type. Everything up to the final
 # divide/sqrt is exact integer arithmetic (fixed-point 1e-4 values,
 # decimal(38,0) <-> HUGEINT sums); the mean difference and the two
-# variance-over-n terms are rationally rounded at 1e-8 (_rr_dec — no
+# variance-over-n terms are rationally rounded at 1e-8 (ratio_dec — no
 # >2^53 raw casts, see _ORACLE_REGRESSION), and the final
 # t = dmean / sqrt(va + vb) is a fixed shape of correctly-rounded IEEE
 # ops (+, /, sqrt) over identical doubles — bit-identical cross-engine
@@ -1207,9 +1090,9 @@ d AS (
 ),
 r AS (
   SELECT event_type, n, n2,
-         {_rr_sql("s * n2 - s2 * n", "n * n2", 8)} AS dmean,
-         {_rr_sql("q * n - s * s", "n * n * (n - 1)", 8, signed=False)} AS va,
-         {_rr_sql("q2 * n2 - s2 * s2", "n2 * n2 * (n2 - 1)", 8, signed=False)}
+         {ratio_dec_sql("s * n2 - s2 * n", "n * n2", 8)} AS dmean,
+         {ratio_dec_sql("q * n - s * s", "n * n * (n - 1)", 8, signed=False)} AS va,
+         {ratio_dec_sql("q2 * n2 - s2 * s2", "n2 * n2 * (n2 - 1)", 8, signed=False)}
            AS vb
   FROM d WHERE n >= 2 AND n2 >= 2
 )
@@ -1231,7 +1114,7 @@ def q_stats_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     TOTAL minus GROUP, where the total comes from a global window over
     the 5-row group table (aggregated input — no second scan, no join,
     no crossJoin/BNLJ). The t pieces are rationally rounded at 1e-8
-    (_rr_dec: dmean = (s·n2 - s2·n)/(n·n2), va = (q·n - s²)/(n²(n-1)),
+    (ratio_dec: dmean = (s·n2 - s2·n)/(n·n2), va = (q·n - s²)/(n²(n-1)),
     same for the rest) and t = dmean/sqrt(va+vb) is correctly-rounded
     IEEE ops on identical doubles — cross-engine bit-identical without
     any output rounding. Degenerate groups (n < 2 on either side, zero
@@ -1242,9 +1125,9 @@ def q_stats_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isNotNull() & F.col("value").isNotNull()
         & ~F.isnan("value") & (F.abs("value") < F.lit(float("inf")))
     )
-    y = F.floor(F.col("value") * 10000).cast(_DEC)
+    y = F.floor(F.col("value") * 10000).cast(DEC)
     g = ev.select("event_type", y.alias("y")).groupBy("event_type").agg(
-        F.count(F.lit(1)).cast(_DEC).alias("n"),
+        F.count(F.lit(1)).cast(DEC).alias("n"),
         F.sum("y").alias("s"),
         F.sum(F.col("y") * F.col("y")).alias("q"),
     )
@@ -1258,18 +1141,18 @@ def q_stats_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("s").over(w_all) - F.col("s")).alias("s2"),
         (F.sum("q").over(w_all) - F.col("q")).alias("q2"),
     ).filter((F.col("n") >= 2) & (F.col("n2") >= 2))
-    dmean = _rr_dec(
+    dmean = ratio_dec(
         F.col("s") * F.col("n2") - F.col("s2") * F.col("n"),
         F.col("n") * F.col("n2"),
         8,
     )
-    va = _rr_dec(
+    va = ratio_dec(
         F.col("q") * F.col("n") - F.col("s") * F.col("s"),
         F.col("n") * F.col("n") * (F.col("n") - 1),
         8,
         signed=False,
     )
-    vb = _rr_dec(
+    vb = ratio_dec(
         F.col("q2") * F.col("n2") - F.col("s2") * F.col("s2"),
         F.col("n2") * F.col("n2") * (F.col("n2") - 1),
         8,
@@ -1322,9 +1205,7 @@ d AS (
   FROM s WHERE n * sxx - sx * sx <> 0 AND n * syy - sy * sy <> 0
 )
 SELECT user_id, CAST(n AS BIGINT) AS n_pairs,
-       (CASE WHEN num < 0 THEN -1 ELSE 1 END)
-       * sqrt({_rr_sql("num", "denx", 8, signed=False)}
-              * {_rr_sql("num", "deny", 12, signed=False)})
+       {pearson_sql("num", "denx", "deny")}
          AS r_lag1
 FROM d
 """
@@ -1351,7 +1232,7 @@ def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         & ~F.isnan("value") & (F.abs("value") < F.lit(float("inf")))
         & F.col("ts").isNotNull()
     )
-    y = F.floor(F.col("value") * 10000).cast(_DEC)
+    y = F.floor(F.col("value") * 10000).cast(DEC)
     w = W.partitionBy("user_id").orderBy(
         F.asc_nulls_last("ts"), F.asc_nulls_last("event_id")
     )
@@ -1359,7 +1240,7 @@ def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", y.alias("y"), F.lag(y).over(w).alias("x")
     ).filter(F.col("x").isNotNull())
     s = pairs.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast(_DEC).alias("n"),
+        F.count(F.lit(1)).cast(DEC).alias("n"),
         F.sum("x").alias("sx"),
         F.sum("y").alias("sy"),
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
@@ -1376,7 +1257,7 @@ def q_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "user_id",
         "n_pairs",
-        _pearson_r(F.col("num"), F.col("denx"), F.col("deny")).alias("r_lag1"),
+        pearson(F.col("num"), F.col("denx"), F.col("deny")).alias("r_lag1"),
     )
 
 
@@ -1436,29 +1317,29 @@ def q_stats_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang").isNotNull() & F.col("source").isNotNull()
     )
     c = docs.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).cast(_DEC).alias("o")
+        F.count(F.lit(1)).cast(DEC).alias("o")
     )
-    r = c.groupBy("lang").agg(F.sum("o").cast(_DEC).alias("rt"))
-    s = c.groupBy("source").agg(F.sum("o").cast(_DEC).alias("ct"))
-    tot = c.agg(F.sum("o").cast(_DEC).alias("n"))
+    r = c.groupBy("lang").agg(F.sum("o").cast(DEC).alias("rt"))
+    s = c.groupBy("source").agg(F.sum("o").cast(DEC).alias("ct"))
+    tot = c.agg(F.sum("o").cast(DEC).alias("n"))
     grid = (
         r.crossJoin(F.broadcast(s))
         .crossJoin(F.broadcast(tot))
         .join(F.broadcast(c), ["lang", "source"], "left")
         .select(
-            "rt", "ct", "n", F.coalesce(F.col("o"), F.lit(0).cast(_DEC)).alias("o")
+            "rt", "ct", "n", F.coalesce(F.col("o"), F.lit(0).cast(DEC)).alias("o")
         )
     )
     dev = F.col("o") * F.col("n") - F.col("rt") * F.col("ct")
     den = F.col("n") * F.col("rt") * F.col("ct")
-    a = F.lit(200000000).cast(_DEC) * (dev * dev) + den
-    b = F.lit(2).cast(_DEC) * den
+    a = F.lit(200000000).cast(DEC) * (dev * dev) + den
+    b = F.lit(2).cast(DEC) * den
     q = F.call_function("div", a, b)
-    # same silent-wrap guard as _rr_dec: a cell contribution is bounded
+    # same silent-wrap guard as ratio_dec: a cell contribution is bounded
     # by N, so q <= 1e8*N wraps int64 around N ~ 9.2e10 rows — verify
     # the quotient exactly and fail loudly there instead of corrupting
     # the statistic (the long SUM over cells already raises under ANSI)
-    q = F.when(q.cast(_DEC) * b == a - (a % b), q).otherwise(
+    q = F.when(q.cast(DEC) * b == a - (a % b), q).otherwise(
         F.raise_error(
             F.lit(
                 "q_stats_chi2: cell quotient overflows int64 "
@@ -1586,9 +1467,7 @@ d AS (
   FROM s WHERE n * sxx - sx * sx <> 0 AND n * syy - sy * sy <> 0
 )
 SELECT type_a, type_b, CAST(n AS BIGINT) AS n_hours,
-       (CASE WHEN num < 0 THEN -1 ELSE 1 END)
-       * sqrt({_rr_sql("num", "denx", 8, signed=False)}
-              * {_rr_sql("num", "deny", 12, signed=False)})
+       {pearson_sql("num", "denx", "deny")}
          AS pearson_r
 FROM d
 """
@@ -1621,16 +1500,16 @@ def q_stats_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = h.select(
         F.col("event_type").alias("type_a"),
         F.col("hr"),
-        F.col("c").cast(_DEC).alias("x"),
+        F.col("c").cast(DEC).alias("x"),
     )
     b = h.select(
         F.col("event_type").alias("type_b"),
         F.col("hr"),
-        F.col("c").cast(_DEC).alias("y"),
+        F.col("c").cast(DEC).alias("y"),
     )
     p = a.join(b, "hr").filter(F.col("type_a") < F.col("type_b"))
     s = p.groupBy("type_a", "type_b").agg(
-        F.count(F.lit(1)).cast(_DEC).alias("n"),
+        F.count(F.lit(1)).cast(DEC).alias("n"),
         F.sum("x").alias("sx"),
         F.sum("y").alias("sy"),
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
@@ -1649,7 +1528,7 @@ def q_stats_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "type_a",
         "type_b",
         "n_hours",
-        _pearson_r(F.col("num"), F.col("denx"), F.col("deny")).alias(
+        pearson(F.col("num"), F.col("denx"), F.col("deny")).alias(
             "pearson_r"
         ),
     )
@@ -1686,7 +1565,7 @@ d AS (
   FROM w
 )
 SELECT event_id, user_id, n_window,
-       CASE WHEN denx <> 0 THEN {_rr_sql("num", "denx", 6)} END
+       CASE WHEN denx <> 0 THEN {ratio_dec_sql("num", "denx", 6)} END
          AS slope_cents_per_sec
 FROM d
 """
@@ -1701,7 +1580,7 @@ def q_win_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: ONE user_id shuffle (high-cardinality key); the five
     sufficient sums are bounded-frame window aggregates — O(1) state
     per row, each sum exact decimal(38,0) over integer fixed-point
-    inputs — and the slope is the usual _rr_dec rational rounding,
+    inputs — and the slope is the usual ratio_dec rational rounding,
     NULL where the frame has no x-variance (single event or identical
     timestamps: the CASE guards the zero denominator identically on
     both engines, and CASE short-circuits so the division never
@@ -1721,8 +1600,8 @@ def q_win_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        x.cast(_DEC).alias("x"),
-        F.floor(F.col("value") * 100).cast(_DEC).alias("y"),
+        x.cast(DEC).alias("x"),
+        F.floor(F.col("value") * 100).cast(DEC).alias("y"),
     )
     win = (
         W.partitionBy("user_id")
@@ -1732,7 +1611,7 @@ def q_win_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = pts.select(
         "event_id",
         "user_id",
-        F.count(F.lit(1)).over(win).cast(_DEC).alias("k"),
+        F.count(F.lit(1)).over(win).cast(DEC).alias("k"),
         F.sum("x").over(win).alias("sx"),
         F.sum("y").over(win).alias("sy"),
         F.sum(F.col("x") * F.col("y")).over(win).alias("sxy"),
@@ -1750,7 +1629,7 @@ def q_win_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "n_window",
         F.when(
-            F.col("denx") != 0, _rr_dec(F.col("num"), F.col("denx"), 6)
+            F.col("denx") != 0, ratio_dec(F.col("num"), F.col("denx"), 6)
         ).alias("slope_cents_per_sec"),
     )
 
@@ -1780,10 +1659,10 @@ g AS (
 ),
 m AS (
   SELECT event_type, CAST(n AS BIGINT) AS n,
-         {_rr_sql("n * q2 - s * s", "n * n", 6)} AS m2,
-         {_rr_sql("n * n * q3 - 3 * n * s * q2 + 2 * s * s * s",
+         {ratio_dec_sql("n * q2 - s * s", "n * n", 6)} AS m2,
+         {ratio_dec_sql("n * n * q3 - 3 * n * s * q2 + 2 * s * s * s",
                   "n * n * n", 2)} AS m3,
-         {_rr_sql("n * n * n * q4 - 4 * n * n * s * q3"
+         {ratio_dec_sql("n * n * n * q4 - 4 * n * n * s * q3"
                   " + 6 * n * s * s * q2 - 3 * s * s * s * s",
                   "n * n * n * n", 0)} AS m4
   FROM g WHERE n >= 2
@@ -1804,7 +1683,7 @@ def q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (non-portable, like regr_*); here the ONE two-phase aggregate ships
     five exact decimal(38,0) power sums (n, Σy..Σy⁴ over floor-cents),
     the central moments come out of the standard raw-to-central
-    expansion as rationally-rounded doubles (_rr_dec; see
+    expansion as rationally-rounded doubles (ratio_dec; see
     _ORACLE_MOMENTS for the digit choices and the ~sf1 ANSI-loud
     domain), and skew/kurtosis are correctly-rounded IEEE chains —
     bit-identical cross-engine, no output rounding. Zero-variance-to-
@@ -1814,27 +1693,27 @@ def q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isNotNull() & F.col("value").isNotNull()
         & ~F.isnan("value") & (F.abs("value") < F.lit(float("inf")))
     )
-    y = F.floor(F.col("value") * 100).cast(_DEC)
+    y = F.floor(F.col("value") * 100).cast(DEC)
     g = ev.select("event_type", y.alias("y")).groupBy("event_type").agg(
-        F.count(F.lit(1)).cast(_DEC).alias("n"),
+        F.count(F.lit(1)).cast(DEC).alias("n"),
         F.sum("y").alias("s"),
         F.sum(F.col("y") * F.col("y")).alias("q2"),
         F.sum(F.col("y") * F.col("y") * F.col("y")).alias("q3"),
         F.sum(F.col("y") * F.col("y") * F.col("y") * F.col("y")).alias("q4"),
     ).filter(F.col("n") >= 2)
     n, s = F.col("n"), F.col("s")
-    m2 = _rr_dec(n * F.col("q2") - s * s, n * n, 6)
-    m3 = _rr_dec(
-        n * n * F.col("q3") - F.lit(3).cast(_DEC) * n * s * F.col("q2")
-        + F.lit(2).cast(_DEC) * s * s * s,
+    m2 = ratio_dec(n * F.col("q2") - s * s, n * n, 6)
+    m3 = ratio_dec(
+        n * n * F.col("q3") - F.lit(3).cast(DEC) * n * s * F.col("q2")
+        + F.lit(2).cast(DEC) * s * s * s,
         n * n * n,
         2,
     )
-    m4 = _rr_dec(
+    m4 = ratio_dec(
         n * n * n * F.col("q4")
-        - F.lit(4).cast(_DEC) * n * n * s * F.col("q3")
-        + F.lit(6).cast(_DEC) * n * s * s * F.col("q2")
-        - F.lit(3).cast(_DEC) * s * s * s * s,
+        - F.lit(4).cast(DEC) * n * n * s * F.col("q3")
+        + F.lit(6).cast(DEC) * n * s * s * F.col("q2")
+        - F.lit(3).cast(DEC) * s * s * s * s,
         n * n * n * n,
         0,
     )
@@ -1912,9 +1791,7 @@ d AS (
   FROM s WHERE n * sxx - sx * sx <> 0 AND n * syy - sy * sy <> 0
 )
 SELECT CAST(lag AS BIGINT) AS lag_hours, CAST(n AS BIGINT) AS n_hours,
-       (CASE WHEN num < 0 THEN -1 ELSE 1 END)
-       * sqrt({_rr_sql("num", "denx", 8, signed=False)}
-              * {_rr_sql("num", "deny", 12, signed=False)})
+       {pearson_sql("num", "denx", "deny")}
          AS pearson_r
 FROM d
 """
@@ -1935,7 +1812,7 @@ def q_ts_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     BNLJ) and series B joins on the exact epoch-microsecond shifted
     key — an equi-join, never a non-equi time comparison. Counts are
     exact integers -> exact decimal sufficient statistics -> the shared
-    _pearson_r rational-rounding pipeline: bit-identical cross-engine."""
+    pearson rational-rounding pipeline: bit-identical cross-engine."""
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
         & F.col("ts").isNotNull()
@@ -1960,7 +1837,7 @@ def q_ts_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         side = h.filter(F.col("event_type") == etype).select("hr", "c")
         return spine.join(side, "hr", "left").select(
             F.unix_micros(F.col("hr")).alias(f"us_{val}"),
-            F.coalesce(F.col("c"), F.lit(0)).cast(_DEC).alias(val),
+            F.coalesce(F.col("c"), F.lit(0)).cast(DEC).alias(val),
         )
 
     a = dense("click", "x")
@@ -1974,7 +1851,7 @@ def q_ts_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         == F.col("us_x") + F.col("lag").cast("long") * F.lit(3600000000),
     )
     s = p.groupBy("lag").agg(
-        F.count(F.lit(1)).cast(_DEC).alias("n"),
+        F.count(F.lit(1)).cast(DEC).alias("n"),
         F.sum("x").alias("sx"),
         F.sum("y").alias("sy"),
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
@@ -1991,7 +1868,7 @@ def q_ts_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "lag_hours",
         "n_hours",
-        _pearson_r(F.col("num"), F.col("denx"), F.col("deny")).alias(
+        pearson(F.col("num"), F.col("denx"), F.col("deny")).alias(
             "pearson_r"
         ),
     )
@@ -2031,7 +1908,7 @@ r AS (
 )
 SELECT event_type, strftime(hr, '%Y-%m-%d %H:%M:%S') AS cp_hr,
        CAST(n AS BIGINT) AS n_hours,
-       {_rr_sql("a", "n", 6, signed=False)} AS cusum_max,
+       {ratio_dec_sql("a", "n", 6, signed=False)} AS cusum_max,
        CASE WHEN tk < 0 THEN -1 WHEN tk > 0 THEN 1 ELSE 0 END AS cusum_sign
 FROM r WHERE rn = 1
 """
@@ -2058,13 +1935,13 @@ def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = ev.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
     ).agg(F.count(F.lit(1)).alias("c"))
-    pk, tot = ranks.running(F.col("c").cast(_DEC), ["event_type"], "hr")
+    pk, tot = ranks.running(F.col("c").cast(DEC), ["event_type"], "hr")
     k = F.row_number().over(ranks.cumulative(["event_type"], "hr"))
     t = h.select(
         "event_type",
         "hr",
         pk.alias("pk"),
-        k.cast(_DEC).alias("k"),
+        k.cast(DEC).alias("k"),
         tot.alias("tot"),
         F.count(F.lit(1)).over(ranks.whole(["event_type"])).alias("n"),
     )
@@ -2073,7 +1950,7 @@ def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hr",
         "n",
         (
-            F.col("n").cast(_DEC) * F.col("pk") - F.col("k") * F.col("tot")
+            F.col("n").cast(DEC) * F.col("pk") - F.col("k") * F.col("tot")
         ).alias("tk"),
     )
     r = ranks.top(
@@ -2085,7 +1962,7 @@ def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.date_format("hr", "yyyy-MM-dd HH:mm:ss").alias("cp_hr"),
         F.col("n").cast("long").alias("n_hours"),
-        _rr_dec(F.col("a"), F.col("n").cast(_DEC), 6, signed=False).alias(
+        ratio_dec(F.col("a"), F.col("n").cast(DEC), 6, signed=False).alias(
             "cusum_max"
         ),
         F.when(F.col("tk") < 0, -1)
@@ -2127,7 +2004,7 @@ j AS (
   CROSS JOIN tot t
 )
 SELECT w1, w2, CAST(cxy AS BIGINT) AS n_pairs,
-       {_rr_sql("cxy * nt", "cx * cy", 9, signed=False)} AS pmi_ratio
+       {ratio_dec_sql("cxy * nt", "cx * cy", 9, signed=False)} AS pmi_ratio
 FROM j
 ORDER BY pmi_ratio DESC, w1, w2
 LIMIT 20
@@ -2163,11 +2040,11 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("w1").isNotNull())
     bc = (
         big.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).cast(_DEC).alias("cxy"))
+        .agg(F.count(F.lit(1)).cast(DEC).alias("cxy"))
         .filter(F.col("cxy") >= 5)
     )
-    uni = toks.groupBy("w").agg(F.count(F.lit(1)).cast(_DEC).alias("cw"))
-    tot = uni.agg(F.sum("cw").cast(_DEC).alias("nt"))
+    uni = toks.groupBy("w").agg(F.count(F.lit(1)).cast(DEC).alias("cw"))
+    tot = uni.agg(F.sum("cw").cast(DEC).alias("nt"))
     j = (
         bc.join(
             uni.select(F.col("w").alias("w1"), F.col("cw").alias("cx")), "w1"
@@ -2181,7 +2058,7 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "w1",
         "w2",
         F.col("cxy").cast("long").alias("n_pairs"),
-        _rr_dec(
+        ratio_dec(
             F.col("cxy") * F.col("nt"),
             F.col("cx") * F.col("cy"),
             9,
@@ -2416,7 +2293,7 @@ best AS (
   FROM d
 )
 SELECT hod, CAST(n1 AS BIGINT) AS n_click, CAST(n2 AS BIGINT) AS n_purchase,
-       {_rr_sql("dnum", "CAST(n1 AS HUGEINT) * n2", 9, signed=False)}
+       {ratio_dec_sql("dnum", "CAST(n1 AS HUGEINT) * n2", 9, signed=False)}
          AS d_stat,
        v + 0.0 AS d_at_value
 FROM best WHERE rk = 1
@@ -2433,7 +2310,7 @@ def q_stats_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     running sums over the (hod, value) conditional count table. D's
     numerator |cum1*n2 - cum2*n1| stays an exact decimal integer, so
     the argmax is an exact comparison (value ties break low via
-    MAX(struct(dnum, -v))), and ONE rational rounding (_rr_dec, 9
+    MAX(struct(dnum, -v))), and ONE rational rounding (ratio_dec, 9
     digits) produces the bit-identical double. Hours with either sample
     empty are omitted (D is undefined), identically on both engines."""
     e = load(spark, sf_dir, "events").filter(
@@ -2447,10 +2324,10 @@ def q_stats_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = e.groupBy("hod", "v").agg(
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast(_DEC)
+        .cast(DEC)
         .alias("c1"),
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast(_DEC)
+        .cast(DEC)
         .alias("c2"),
     )
     cum1, n1 = ranks.running("c1", ["hod"], "v")
@@ -2481,7 +2358,7 @@ def q_stats_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hod",
         F.col("n1").cast("long").alias("n_click"),
         F.col("n2").cast("long").alias("n_purchase"),
-        _rr_dec(
+        ratio_dec(
             F.col("m.dnum"), F.col("n1") * F.col("n2"), 9, signed=False
         ).alias("d_stat"),
         (-F.col("m.negv") + F.lit(0.0)).alias("d_at_value"),
@@ -2518,7 +2395,7 @@ t AS (
   FROM w GROUP BY prio
 )
 SELECT prio, CAST(n AS BIGINT) AS n,
-       {_rr_sql("(tsum - (n + 1) * sx)", "CAST(n AS HUGEINT) * sx", 9, signed=False)}
+       {ratio_dec_sql("(tsum - (n + 1) * sx)", "CAST(n AS HUGEINT) * sx", 9, signed=False)}
          AS gini
 FROM t WHERE sx > 0
 """
@@ -2553,20 +2430,20 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = cts.groupBy("prio", "cents").agg(F.count(F.lit(1)).alias("cnt"))
     cum, n = ranks.running("cnt", ["prio"], "cents")
-    sx = F.sum(F.col("cents").cast(_DEC) * F.col("cnt"))
+    sx = F.sum(F.col("cents").cast(DEC) * F.col("cnt"))
     w = c.select(
         "prio",
-        F.col("cents").cast(_DEC).alias("cents_d"),
-        F.col("cnt").cast(_DEC).alias("cnt_d"),
-        cum.cast(_DEC).alias("cum"),
-        n.cast(_DEC).alias("n"),
+        F.col("cents").cast(DEC).alias("cents_d"),
+        F.col("cnt").cast(DEC).alias("cnt_d"),
+        cum.cast(DEC).alias("cum"),
+        n.cast(DEC).alias("n"),
         sx.over(ranks.whole(["prio"])).alias("sx"),
     )
     term = F.col("cents_d") * F.col("cnt_d") * (
-        F.lit(2).cast(_DEC) * F.col("cum") - F.col("cnt_d") + F.lit(1)
+        F.lit(2).cast(DEC) * F.col("cum") - F.col("cnt_d") + F.lit(1)
     )
     # sx = 0 (every total in the group rounds to 0 cents — legal under
-    # the > 0 filter) makes den = 0, and _rr_dec requires den > 0: drop
+    # the > 0 filter) makes den = 0, and ratio_dec requires den > 0: drop
     # the degenerate group on both engines (oracle: WHERE sx > 0)
     t = w.groupBy("prio").agg(
         F.max("n").alias("n"),
@@ -2578,7 +2455,7 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.select(
         "prio",
         F.col("n").cast("long").alias("n"),
-        _rr_dec(num, den, 9, signed=False).alias("gini"),
+        ratio_dec(num, den, 9, signed=False).alias("gini"),
     )
 
 
@@ -2716,7 +2593,7 @@ FROM s
 
 def _mwu_oracle() -> str:
     return _ORACLE_MANNWHITNEY.format(
-        cles=_rr_sql(
+        cles=ratio_dec_sql(
             "(r1x2 - CAST(n1 AS HUGEINT) * (n1 + 1))",
             "2 * CAST(n1 AS HUGEINT) * n2",
             9,
@@ -2749,10 +2626,10 @@ def q_stats_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = e.groupBy("dow", "v").agg(
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast(_DEC)
+        .cast(DEC)
         .alias("c1"),
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast(_DEC)
+        .cast(DEC)
         .alias("c2"),
     )
     run = F.col("c1") + F.col("c2")
@@ -2773,7 +2650,7 @@ def q_stats_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.col("c1")
                 * (
-                    F.lit(2).cast(_DEC) * F.col("cumprev")
+                    F.lit(2).cast(DEC) * F.col("cumprev")
                     + (F.col("c1") + F.col("c2"))
                     + F.lit(1)
                 )
@@ -2784,9 +2661,9 @@ def q_stats_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dow",
         F.col("n1").cast("long").alias("n_click"),
         F.col("n2").cast("long").alias("n_purchase"),
-        _rr_dec(
+        ratio_dec(
             F.col("r1x2") - F.col("n1") * (F.col("n1") + F.lit(1)),
-            F.lit(2).cast(_DEC) * F.col("n1") * F.col("n2"),
+            F.lit(2).cast(DEC) * F.col("n1") * F.col("n2"),
             9,
             signed=False,
         ).alias("cles"),
@@ -2797,7 +2674,7 @@ def q_stats_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Pearson on midranks. Doubled midranks stay exact integers —
 # midrank2 = 2*min_rank + tie_count - 1 (a tie run at positions
 # p..p+c-1 averages p + (c-1)/2) — so the whole statistic is exact
-# integer sufficient statistics into the shared _pearson_r rational
+# integer sufficient statistics into the shared pearson rational
 # rounding. Pearson (q_stats_corr_matrix) sees linear co-movement;
 # Spearman sees any monotone relation and shrugs at outlier hours.
 _ORACLE_SPEARMAN = f"""
@@ -2830,9 +2707,7 @@ d AS (
   WHERE n * sxx - sx * sx <> 0 AND n * syy - sy * sy <> 0
 )
 SELECT CAST(n AS BIGINT) AS n_hours,
-       (CASE WHEN num < 0 THEN -1 ELSE 1 END)
-       * sqrt({_rr_sql("num", "denx", 8, signed=False)}
-              * {_rr_sql("num", "deny", 12, signed=False)})
+       {pearson_sql("num", "denx", "deny")}
          AS spearman_rho
 FROM d
 """
@@ -2850,7 +2725,7 @@ def q_stats_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     span-bounded, and tiny at any event volume). Ties fold exactly:
     doubled midranks 2*min_rank + ties - 1 are exact integers, so the
     sufficient statistics are exact decimals into the shared
-    _pearson_r rational-rounding pipeline — bit-identical
+    pearson rational-rounding pipeline — bit-identical
     cross-engine, no libm beyond one sqrt of identical doubles."""
     from pyspark.sql import Window as W
 
@@ -2869,14 +2744,14 @@ def q_stats_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(2) * F.rank().over(W.orderBy(col))
             + F.count(F.lit(1)).over(W.partitionBy(col))
             - F.lit(1)
-        ).cast(_DEC)
+        ).cast(DEC)
 
     r = h.select(
         midrank2("x").alias("rx"),
         midrank2("y").alias("ry"),
     )
     s = r.agg(
-        F.count(F.lit(1)).cast(_DEC).alias("n"),
+        F.count(F.lit(1)).cast(DEC).alias("n"),
         F.sum("rx").alias("sx"),
         F.sum("ry").alias("sy"),
         F.sum(F.col("rx") * F.col("ry")).alias("sxy"),
@@ -2895,7 +2770,7 @@ def q_stats_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter((F.col("denx") != 0) & (F.col("deny") != 0))
     return d.select(
         "n_hours",
-        _pearson_r(F.col("num"), F.col("denx"), F.col("deny")).alias(
+        pearson(F.col("num"), F.col("denx"), F.col("deny")).alias(
             "spearman_rho"
         ),
     )
@@ -2954,7 +2829,7 @@ def _cooccurrence_oracle() -> str:
 
     return _ORACLE_COOCCURRENCE.format(
         gap=SESSION_GAP_US,
-        lift=_rr_sql(
+        lift=ratio_dec_sql(
             "(pr.n_ab * n.n_sessions)", "(a.n_t * b.n_t)", 6, signed=False
         ),
     )
@@ -2975,7 +2850,7 @@ def q_events_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     readable spec); pair counts two-phase into a <= |types|^2 exchange.
     Type totals and the session count broadcast back (audited BNLJ for
     the 1-row N). Lift = n_ab*N/(n_a*n_b) is exact integers into
-    _rr_dec; support is exact floor-ppm."""
+    ratio_dec; support is exact floor-ppm."""
     from database_cloner_spark.queries.windows import session_index
 
     ev = load(spark, sf_dir, "events").filter(
@@ -2989,11 +2864,11 @@ def q_events_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = sess.groupBy("user_id", "session_idx").agg(
         F.sort_array(F.collect_set("event_type")).alias("types")
     ).localCheckpoint(eager=False)
-    n = baskets.agg(F.count(F.lit(1)).cast(_DEC).alias("n_sessions"))
+    n = baskets.agg(F.count(F.lit(1)).cast(DEC).alias("n_sessions"))
     # checkpointed: ta joins BOTH pair sides — without it each side
     # re-runs the explode+agg over the basket table
     ta = baskets.select(F.explode("types").alias("t")).groupBy("t").agg(
-        F.count(F.lit(1)).cast(_DEC).alias("n_t")
+        F.count(F.lit(1)).cast(DEC).alias("n_t")
     ).localCheckpoint(eager=False)
     pairs = baskets.select(
         F.explode(
@@ -3005,7 +2880,7 @@ def q_events_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("p")
     ).select("p.type_a", "p.type_b")
     pr = pairs.groupBy("type_a", "type_b").agg(
-        F.count(F.lit(1)).cast(_DEC).alias("n_ab")
+        F.count(F.lit(1)).cast(DEC).alias("n_ab")
     )
     joined = (
         pr.join(
@@ -3028,7 +2903,7 @@ def q_events_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cast((cast(n_ab AS decimal(38,0)) * 1000000) div n_sessions"
             " AS long)"
         ).alias("support_ppm"),
-        _rr_dec(
+        ratio_dec(
             F.col("n_ab") * F.col("n_sessions"),
             F.col("n_a") * F.col("n_b"),
             6,

@@ -23,6 +23,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from database_cloner_spark.functions.rational import (
+    DEC,
+    ratio,
+    ratio_dec,
+    ratio_dec_sql,
+    ratio_sql,
+)
 from database_cloner_spark.llm.textprep import n_tokens, tokens
 from database_cloner_spark.queries.oracle_fragments import (
     n_tokens_sql,
@@ -108,8 +115,7 @@ cum AS (
 )
 SELECT term, n, cum_n,
        -- integer-exact round-half-up (ROUND-tie portability class)
-       ((2000000*cum_n + total_tokens) // (2*total_tokens)) / 1000000.0
-         AS coverage
+       {ratio_sql("cum_n", "total_tokens", 6)} AS coverage
 FROM cum CROSS JOIN total
 """
 
@@ -136,8 +142,6 @@ def q_text_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         W.orderBy(F.desc("n"), F.asc("term"))
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    from database_cloner_spark.llm.text import roundn_ratio
-
     return (
         top.crossJoin(F.broadcast(total))
         .withColumn("cum_n", F.sum("n").over(w))
@@ -145,9 +149,7 @@ def q_text_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
             "term",
             "n",
             "cum_n",
-            roundn_ratio(F.col("cum_n"), F.col("total_tokens"), 6).alias(
-                "coverage"
-            ),
+            ratio(F.col("cum_n"), F.col("total_tokens"), 6).alias("coverage"),
         )
     )
 
@@ -176,8 +178,8 @@ agg AS (
 )
 SELECT doc_id, n_tokens, n_rare,
        -- integer-exact round-half-up (ROUND-tie portability class)
-       ((20000*n_rare + n_tokens) // (2*n_tokens)) / 10000.0 AS rare_frac,
-       ((20000*sum_cnt + n_tokens) // (2*n_tokens)) / 10000.0 AS mean_count
+       {ratio_sql("n_rare", "n_tokens", 4)} AS rare_frac,
+       {ratio_sql("sum_cnt", "n_tokens", 4)} AS mean_count
 FROM agg
 """
 
@@ -201,8 +203,6 @@ def q_text_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(tokens(F.lower("text"))).alias("term")
     ).filter(F.col("term") != "")
     counts = toks.groupBy("term").agg(F.count("*").alias("cnt"))
-    from database_cloner_spark.llm.text import round4_ratio
-
     joined = toks.join(counts, "term")
     is_rare = F.when(F.col("cnt") < RARE_MAX, 1).otherwise(0)
     agg = joined.groupBy("doc_id").agg(
@@ -214,8 +214,8 @@ def q_text_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_tokens",
         "n_rare",
-        round4_ratio(F.col("n_rare"), F.col("n_tokens")).alias("rare_frac"),
-        round4_ratio(F.col("__sum_cnt"), F.col("n_tokens")).alias("mean_count"),
+        ratio(F.col("n_rare"), F.col("n_tokens"), 4).alias("rare_frac"),
+        ratio(F.col("__sum_cnt"), F.col("n_tokens"), 4).alias("mean_count"),
     )
 
 
@@ -252,7 +252,8 @@ agg AS (
 SELECT CAST(tot.n_terms AS BIGINT) AS n_terms,
        CAST(tot.n1 AS BIGINT) AS tokens_a,
        CAST(tot.n2 AS BIGINT) AS tokens_b,
-       {{tv}} AS tv_distance,
+       {ratio_dec_sql("agg.tvnum", "2 * tot.n1 * tot.n2", 9, signed=False)}
+         AS tv_distance,
        (SELECT term FROM d ORDER BY dnum DESC, term DESC LIMIT 1)
          AS drift_term
 FROM tot, agg
@@ -260,15 +261,7 @@ WHERE tot.n1 > 0 AND tot.n2 > 0
 """
 
 
-def _tv_oracle() -> str:
-    from database_cloner_spark.queries.analytics_ext import _rr_sql
-
-    return _ORACLE_TV_DIVERGENCE.format(
-        tv=_rr_sql("agg.tvnum", "2 * tot.n1 * tot.n2", 9, signed=False)
-    )
-
-
-@register("q_text_tv_divergence", oracle=_tv_oracle(), tier="X")
+@register("q_text_tv_divergence", oracle=_ORACLE_TV_DIVERGENCE, tier="X")
 def q_text_tv_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Total-variation distance between the token distributions of two
     ingest batches (doc_id parity as the batch key) — the corpus-drift
@@ -288,7 +281,6 @@ def q_text_tv_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").filter(
         F.col("doc_id").isNotNull()
     )
-    _DEC = "decimal(38,0)"
     terms = docs.select(
         (F.col("doc_id") % 2).alias("batch"),
         F.explode(tokens(F.lower("text"))).alias("term"),
@@ -299,10 +291,10 @@ def q_text_tv_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q_graph_triangles lesson; the plan guard pins ONE explode)
     c = terms.groupBy("term").agg(
         F.sum(F.when(F.col("batch") == 0, 1).otherwise(0))
-        .cast(_DEC)
+        .cast(DEC)
         .alias("c1"),
         F.sum(F.when(F.col("batch") == 1, 1).otherwise(0))
-        .cast(_DEC)
+        .cast(DEC)
         .alias("c2"),
     ).localCheckpoint(eager=False)
     tot = c.agg(
@@ -328,15 +320,13 @@ def q_text_tv_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("dnum").alias("tvnum"),
         F.max(F.struct(F.col("dnum"), F.col("term"))).alias("m"),
     )
-    from database_cloner_spark.queries.analytics_ext import _rr_dec
-
     return agg.filter((F.col("n1") > 0) & (F.col("n2") > 0)).select(
         F.col("n_terms").cast("long").alias("n_terms"),
         F.col("n1").cast("long").alias("tokens_a"),
         F.col("n2").cast("long").alias("tokens_b"),
-        _rr_dec(
+        ratio_dec(
             F.col("tvnum"),
-            F.lit(2).cast("decimal(38,0)") * F.col("n1") * F.col("n2"),
+            F.lit(2).cast(DEC) * F.col("n1") * F.col("n2"),
             9,
             signed=False,
         ).alias("tv_distance"),

@@ -21,9 +21,10 @@ Float discipline: every cross-engine-hashed number is either an exact
 integer on the functions/vector.py quantization grid (sums/distances
 fold in LONG, so even adversarial clamp-magnitude vectors — where
 per-term squares reach 2^48 and sums 2^54, past float64's exact-integer
-range — stay exact) or a roundn_ratio rational. Neighbor selection uses
-squared L2 on the grid, NOT cosine: distances are exact integers, so
-the argmin is bit-deterministic with no sqrt/division in the ORDER BY.
+range — stay exact) or a functions/rational.ratio rational. Neighbor
+selection uses squared L2 on the grid, NOT cosine: distances are exact
+integers, so the argmin is bit-deterministic with no sqrt/division in
+the ORDER BY.
 
 Vector scorability here gates inner-NULL elements EXPLICITLY
 (`v IS NULL OR isnan OR inf` on both engines): Spark's three-valued
@@ -39,7 +40,7 @@ from pyspark.sql import functions as F
 
 from database_cloner_spark.functions import ranks
 from database_cloner_spark.functions.vector import Q_CLAMP, Q_SCALE, quantize
-from database_cloner_spark.llm.text import round4_ratio
+from database_cloner_spark.functions.rational import ratio, ratio_sql
 from database_cloner_spark.registry import register
 from database_cloner_spark.sources import load
 
@@ -359,8 +360,8 @@ SELECT d.source,
        COUNT(CASE WHEN ec.n_rows IS NOT NULL AND ec.n_scor = 0 THEN 1 END)
          ::BIGINT AS n_degraded,
        COUNT(CASE WHEN ec.n_rows >= 2 THEN 1 END)::BIGINT AS n_multi,
-       ((20000 * COUNT(CASE WHEN ec.n_scor >= 1 THEN 1 END) + COUNT(*))
-        // (2 * COUNT(*))) / 10000.0 AS coverage_rate
+       {ratio_sql("COUNT(CASE WHEN ec.n_scor >= 1 THEN 1 END)", "COUNT(*)", 4)}
+         AS coverage_rate
 FROM documents d LEFT JOIN ec ON d.doc_id = ec.vec_id
 GROUP BY d.source
 """
@@ -373,7 +374,7 @@ def q_emb_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id == vec_id), is at least one SCORABLE (finite, non-empty,
     no NULL elements), and is the mapping 1:1? Buckets per source:
     missing (no row) / covered (>=1 scorable) / degraded (rows exist,
-    none scorable), plus the multi-row count and a roundn_ratio
+    none scorable), plus the multi-row count and a rational.ratio
     coverage rate. NULL doc_ids never equi-match (both engines) and
     land in missing; NULL sources group as their own row. Shape:
     embeddings pre-aggregate to (vec_id, 2 counts) — the join ships
@@ -401,7 +402,7 @@ def q_emb_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_degraded"
         ),
         _cnt(F.col("n_rows") >= 2).alias("n_multi"),
-        round4_ratio(covered, total).alias("coverage_rate"),
+        ratio(covered, total, 4).alias("coverage_rate"),
     )
 
 
@@ -446,8 +447,8 @@ nn AS (
 SELECT albl AS label,
        COUNT(*)::BIGINT AS n_eval,
        COUNT(CASE WHEN blbl = albl THEN 1 END)::BIGINT AS n_agree,
-       ((20000 * COUNT(CASE WHEN blbl = albl THEN 1 END) + COUNT(*))
-        // (2 * COUNT(*))) / 10000.0 AS agree_rate
+       {ratio_sql("COUNT(CASE WHEN blbl = albl THEN 1 END)", "COUNT(*)", 4)}
+         AS agree_rate
 FROM nn WHERE rn = 1
 GROUP BY albl
 """
@@ -685,7 +686,7 @@ def _nn_agree_rates(nn: DataFrame) -> DataFrame:
     return nn.groupBy(F.col("albl").alias("label")).agg(
         total.alias("n_eval"),
         agree.alias("n_agree"),
-        round4_ratio(agree, total).alias("agree_rate"),
+        ratio(agree, total, 4).alias("agree_rate"),
     )
 
 
@@ -697,7 +698,7 @@ def q_sim_knn_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     L2; ties broken by neighbor vec_id then label, so selection is
     bit-deterministic with no sqrt in the ORDER BY) and score whether
     the labels agree. Capped brute-force baseline (KNN_CAP on both
-    engines, q_dedup_embedding posture). agree_rate is a roundn_ratio
+    engines, q_dedup_embedding posture). agree_rate is a rational.ratio
     rational of two exact counts.
 
     r13 execution rewrite (results identical, oracle unchanged): the
@@ -753,9 +754,8 @@ def q_sim_knn_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bucketed dedup's 10x-data ratio from 60.6x to 4.55x), and retuning the
 # dedup constants retunes this key with them.
 from database_cloner_spark.llm.dedup import (  # noqa: E402
-    BUCKETED_CELL_CEIL,
-    BUCKETED_CELL_FLOOR,
-    BUCKETED_CELL_TARGET,
+    bucketed_cells,
+    bucketed_cells_sql,
 )
 
 _KNN_NPROBE = 3
@@ -776,10 +776,7 @@ cents AS MATERIALIZED (
   -- nprobe slots, collapsing the index into one n^2 cell.
   SELECT vec_id AS cell_id, {_QE_SQL} AS cq
   FROM embeddings
-  WHERE vec_id < (SELECT GREATEST({BUCKETED_CELL_FLOOR}, LEAST(
-                    {BUCKETED_CELL_CEIL},
-                    CEIL(COUNT(*) / {BUCKETED_CELL_TARGET}.0)))
-                  FROM embeddings)
+  WHERE vec_id < (SELECT {bucketed_cells_sql("COUNT(*)")} FROM embeddings)
     AND embedding IS NOT NULL AND len(embedding) > 0 AND NOT {_BAD_SQL}
 ),
 asg AS MATERIALIZED (
@@ -812,8 +809,8 @@ nn AS (
 SELECT albl AS label,
        COUNT(*)::BIGINT AS n_eval,
        COUNT(CASE WHEN blbl = albl THEN 1 END)::BIGINT AS n_agree,
-       ((20000 * COUNT(CASE WHEN blbl = albl THEN 1 END) + COUNT(*))
-        // (2 * COUNT(*))) / 10000.0 AS agree_rate
+       {ratio_sql("COUNT(CASE WHEN blbl = albl THEN 1 END)", "COUNT(*)", 4)}
+         AS agree_rate
 FROM nn WHERE rn = 1
 GROUP BY albl
 """
@@ -852,11 +849,7 @@ def knn_nn_bucketed(
     dist2 over cell_id-sorted centroids (== the oracle's ORDER BY dist2
     ASC, cell_id ASC) — no window, no BNLJ cross in the plan."""
     if n_cells is None:
-        n = embs.count()
-        n_cells = max(
-            BUCKETED_CELL_FLOOR,
-            min(BUCKETED_CELL_CEIL, -(-n // BUCKETED_CELL_TARGET)),
-        )
+        n_cells = bucketed_cells(embs.count())
     scor = (
         F.col("embedding").isNotNull()
         & (F.size("embedding") > 0)
@@ -918,6 +911,6 @@ def q_sim_knn_agreement_bucketed(
     Assignment, neighbor selection, and tie-breaks are all exact
     integer-grid arithmetic, so DuckDB replays the ENTIRE bucketed
     search (assignment ranks included) and the agree_rate is a
-    roundn_ratio rational of two exact counts. The recall floor vs the
+    rational.ratio of two exact counts. The recall floor vs the
     capped exact form is pinned in tests/test_emb_quality.py."""
     return _nn_agree_rates(knn_nn_bucketed(load(spark, sf_dir, "embeddings")))

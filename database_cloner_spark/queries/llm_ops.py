@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from database_cloner_spark.functions.rational import ratio, ratio_sql
 from database_cloner_spark.llm import dedup, similarity, text as llmtext
 from database_cloner_spark.llm.multimodal import (
     FRAME_EVERY_N_BYTES,
@@ -94,7 +95,7 @@ pairs AS (
   FROM sh a JOIN sh b ON a.doc_id < b.doc_id
 )
 SELECT doc_a, doc_b,
-       ((20000*i + u) // (2*u)) / 10000.0 AS jaccard
+       {ratio_sql("i", "u", 4)} AS jaccard
 FROM pairs WHERE i::DOUBLE / u >= 0.4
 """
 
@@ -135,8 +136,8 @@ pairs AS (
   FROM sh a JOIN sh b ON a.doc_id < b.doc_id
 )
 SELECT doc_a, doc_b,
-       ((20000*i + na) // (2*na)) / 10000.0 AS cont_a,
-       ((20000*i + nb) // (2*nb)) / 10000.0 AS cont_b
+       {ratio_sql("i", "na", 4)} AS cont_a,
+       {ratio_sql("i", "nb", 4)} AS cont_b
 FROM pairs WHERE GREATEST(i::DOUBLE / na, i::DOUBLE / nb) >= 0.6
 """
 
@@ -179,7 +180,7 @@ pairs AS (
   FROM g a JOIN g b ON a.doc_id < b.doc_id
 )
 SELECT doc_a, doc_b,
-       ((20000*i + u) // (2*u)) / 10000.0 AS jaccard
+       {ratio_sql("i", "u", 4)} AS jaccard
 FROM pairs WHERE i::DOUBLE / u >= 0.6
 """
 
@@ -251,7 +252,7 @@ p AS (
   JOIN sh sb ON sb.doc_id = cand.doc_b
 )
 SELECT doc_a, doc_b,
-       ((20000*i + u) // (2*u)) / 10000.0 AS jaccard
+       {ratio_sql("i", "u", 4)} AS jaccard
 FROM p WHERE i::DOUBLE / u >= 0.4
 """
 
@@ -702,8 +703,7 @@ WITH cents AS MATERIALIZED (
   -- BUCKETED_CELL_TARGET)
   SELECT vec_id AS cell_id, embedding AS centroid
   FROM embeddings
-  WHERE vec_id < (SELECT GREATEST({dedup.BUCKETED_CELL_FLOOR}, LEAST({dedup.BUCKETED_CELL_CEIL},
-                         CEIL(COUNT(*) / {dedup.BUCKETED_CELL_TARGET}.0))) FROM embeddings)
+  WHERE vec_id < (SELECT {dedup.bucketed_cells_sql("COUNT(*)")} FROM embeddings)
     AND len(list_filter(embedding,
                         v -> isnan(v) OR NOT isfinite(v))) = 0
     -- inner-NULL elements: list_filter DROPS NULL-predicate elements
@@ -876,14 +876,13 @@ def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BPE_SQL = llmtext.BPE_PATTERN.replace("'", "''")
+_BPE_LEN_SQL = f"len(regexp_extract_all(text, '{_BPE_SQL}'))"
 
 _ORACLE_TOKENS_RE = f"""
 SELECT doc_id,
        len({_TOKS_SQL}) AS n_tokens_ws,
-       len(regexp_extract_all(text, '{_BPE_SQL}')) AS n_tokens_bpe,
-       ((20000*len(regexp_extract_all(text, '{_BPE_SQL}'))::BIGINT
-         + len({_TOKS_SQL})::BIGINT)
-        // (2*len({_TOKS_SQL})::BIGINT)) / 10000.0
+       {_BPE_LEN_SQL} AS n_tokens_bpe,
+       {ratio_sql(f"{_BPE_LEN_SQL}::BIGINT", f"len({_TOKS_SQL})::BIGINT", 4)}
          AS bpe_per_word
 FROM documents
 """
@@ -904,8 +903,8 @@ WITH m AS (
   FROM documents GROUP BY lang
 )
 SELECT lang, n_docs,
-       ((200*cs + n_docs) // (2*n_docs)) / 100.0 AS avg_chars,
-       ((200*ts + n_docs) // (2*n_docs)) / 100.0 AS avg_tokens
+       {ratio_sql("cs", "n_docs", 2)} AS avg_chars,
+       {ratio_sql("ts", "n_docs", 2)} AS avg_tokens
 FROM m
 """
 
@@ -916,10 +915,10 @@ def q_text_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return llmtext.lang_stats(load(spark, sf_dir, "documents"))
 
 
-# Integer-arithmetic rounding (llm/text.py round4_ratio): ROUND() on a
+# Integer-arithmetic rounding (functions/rational.ratio): ROUND() on a
 # computed double split 4th-decimal ties differently per engine at
-# sf0.1 (0.8362 vs 0.8363 on quality = 6690/8000); floor((20000a+b) //
-# (2b)) / 1e4 is the bit-portable round-half-up of a/b.
+# sf0.1 (0.8362 vs 0.8363 on quality = 6690/8000); ratio_sql is the
+# bit-portable round-half-up of a/b.
 _ORACLE_TEXT_QUALITY = f"""
 WITH t AS (
   SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
@@ -933,10 +932,9 @@ m AS (
 )
 SELECT doc_id,
   n AS n_tokens,
-  ((20000*s + n) // (2*n)) / 10000.0 AS stopword_ratio,
-  ((20000*d + n) // (2*n)) / 10000.0 AS distinct_ratio,
-  ((20000*(n*least(n, 50) + 30*(n-s) + 20*d) + 100*n) // (200*n)) / 10000.0
-    AS quality
+  {ratio_sql("s", "n", 4)} AS stopword_ratio,
+  {ratio_sql("d", "n", 4)} AS distinct_ratio,
+  {ratio_sql("n*least(n, 50) + 30*(n-s) + 20*d", "100*n", 4)} AS quality
 FROM m
 """
 
@@ -1110,10 +1108,11 @@ def q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     sw_re = "(?<=^| )(" + "|".join(STOPWORDS) + ")(?= |$)"
     s = F.regexp_count("norm_text", F.lit(sw_re))
     d = F.size(F.array_distinct(t))
-    # integer-arithmetic round-half-up — see llm/text.py round4_ratio
-    quality = llmtext.round4_ratio(
+    # integer-arithmetic round-half-up — see functions/rational.ratio
+    quality = ratio(
         n_tokens * F.least(n_tokens, F.lit(50)) + 30 * (n_tokens - s) + 20 * d,
         100 * n_tokens,
+        4,
     )
     clean = F.regexp_replace(
         F.regexp_replace("norm_text", _CURATE_EMAIL_RE, "[EMAIL]"),
@@ -1544,13 +1543,16 @@ WITH toks AS (
 fr AS (
   SELECT doc_id,
          len(ts) AS n_tokens,
-         ((20000*(len(ts) - len(list_distinct(ts)))::BIGINT + len(ts))
-          // (2*len(ts)::BIGINT)) / 10000.0 AS dup_token_frac,
+         {ratio_sql("(len(ts) - len(list_distinct(ts)))::BIGINT",
+                    "len(ts)::BIGINT", 4)} AS dup_token_frac,
          CASE WHEN len(ts) >= 3 THEN
-           ((20000*(len(ts) - 2 - len(list_distinct(
-               [list_aggregate(ts[i:i+2], 'string_agg', ' ')
-                for i in range(1, len(ts) - 1)])))::BIGINT
-             + (len(ts) - 2)) // (2*(len(ts) - 2)::BIGINT)) / 10000.0
+           {ratio_sql(
+               "(len(ts) - 2 - len(list_distinct("
+               "[list_aggregate(ts[i:i+2], 'string_agg', ' ')"
+               " for i in range(1, len(ts) - 1)])))::BIGINT",
+               "(len(ts) - 2)::BIGINT",
+               4,
+           )}
          ELSE 0.0 END AS dup_ngram_frac
   FROM toks
 )
@@ -1948,8 +1950,7 @@ SELECT b.doc_id,
        COALESCE(s.n, 0) AS n_tokens,
        COALESCE(s.u, 0) AS n_unique,
        CASE WHEN s.n IS NOT NULL
-            THEN ((20000 * (s.n * s.n - s.ssq) + s.n * s.n)
-                  // (2 * s.n * s.n)) / 10000.0
+            THEN {ratio_sql("s.n * s.n - s.ssq", "s.n * s.n", 4)}
        END AS gini
 FROM base b LEFT JOIN s USING (doc_id)
 """
@@ -1966,7 +1967,7 @@ def q_text_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the scan: ZERO shuffles at any corpus size (the oracle's
     unnest+groupBy is the toy-scale mirror, not the plan). The index is
     exact integer arithmetic per doc — gini = (n^2 - sum(c^2))/n^2
-    through roundn_ratio (round-half-up at 1e-4, no float ratio) — and
+    through rational.ratio (round-half-up at 1e-4, no float ratio) — and
     the tokenizer is the shared textprep/tokens_sql contract, so counts
     cannot drift from the rest of the text tier. NULL text degrades to
     (0, 0, NULL) identically on both engines."""
@@ -1991,7 +1992,7 @@ def q_text_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s -> s.acc + s.run * s.run)"
     )
     n = F.size(F.col("__toks")).cast("long")
-    gini = llmtext.roundn_ratio(n * n - F.col("__ssq"), n * n, 4)
+    gini = ratio(n * n - F.col("__ssq"), n * n, 4)
     return (
         docs.select("doc_id", "text", toks.alias("__toks"))
         .select(

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from database_cloner_spark.functions import ranks
-from database_cloner_spark.llm import text as llmtext
+from database_cloner_spark.functions.rational import ratio, ratio_sql
 from database_cloner_spark.registry import register
 from database_cloner_spark.sources import load
 
@@ -52,8 +52,7 @@ WITH assigned AS (
   FROM documents
 )
 SELECT split, lang, COUNT(*) AS n_docs,
-       ((200*CAST(SUM(n_chars) AS BIGINT) + COUNT(*)) // (2*COUNT(*)))
-         / 100.0 AS avg_chars
+       {ratio_sql("CAST(SUM(n_chars) AS BIGINT)", "COUNT(*)", 2)} AS avg_chars
 FROM assigned GROUP BY split, lang
 """
 
@@ -80,10 +79,8 @@ def q_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             "split",
             "lang",
             "n_docs",
-            # integer-exact rounding (llm/text.roundn_ratio) — ROUND-tie class
-            llmtext.roundn_ratio(F.col("__chars"), F.col("n_docs"), 2).alias(
-                "avg_chars"
-            ),
+            # integer-exact rounding (functions/rational) — ROUND-tie class
+            ratio(F.col("__chars"), F.col("n_docs"), 2).alias("avg_chars"),
         )
     )
 

@@ -328,7 +328,6 @@ class QuerySpec:
     builder: Builder
     oracle: str | None  # DuckDB ANSI SQL; None => driver does rows-only check
     tier: str  # 'C' | 'V' | 'X'
-    doc: str
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
@@ -340,9 +339,7 @@ def register(name: str, oracle: str | None, tier: str = "C"):
     def deco(fn: Builder) -> Builder:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query key: {name}")
-        _REGISTRY[name] = QuerySpec(
-            name=name, builder=fn, oracle=oracle, tier=tier, doc=fn.__doc__ or ""
-        )
+        _REGISTRY[name] = QuerySpec(name=name, builder=fn, oracle=oracle, tier=tier)
         return fn
 
     return deco

@@ -23,9 +23,10 @@ run_gates() {
   if grep -qE "^($QUERY)" <<<"$changed"; then
     # builder edits change content signatures, so the (no-Spark, ~2 s)
     # ledger suite rides along; the budget suite reuses the plan
-    # suite's cached plans
-    echo "$tag query/operator diff -> plan + parity + shuffle-budget + ledger gates (sf0.001, ~5 min)"
-    python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py tests/test_ledger.py -q
+    # suite's cached plans; the rounding rule's cross-engine suite
+    # (functions/rational.py, ~18 s) guards every ratio key's hash
+    echo "$tag query/operator diff -> plan + parity + shuffle-budget + ledger + rational-rounding gates (sf0.001, ~5 min)"
+    python -m pytest tests/test_plans.py tests/test_oracle_parity.py tests/test_shuffle_budget.py tests/test_ledger.py tests/test_rational_rounding.py -q
   fi
   if grep -qE "^($PIPELINE)" <<<"$changed"; then
     # a pipeline-only diff changes no key, but it can break the clone,

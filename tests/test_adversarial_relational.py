@@ -275,7 +275,8 @@ def test_regression_parity_above_2p53(spark, tmp_path):
     21154864837852735588 -> ...733e19 in DuckDB, correct ...738e19).
     This fixture is ENGINEERED so deny = n*syy - sy^2 is exactly such a
     value: the r7 raw-cast formulation diverges on it by construction;
-    the rational-rounding form (_rr_dec) must stay bit-identical.
+    the rational-rounding form (rational.ratio_dec) must stay
+    bit-identical.
     Prices are quarter-dollar dyadics so FLOOR(price*100) reconstructs
     the engineered integer cents exactly on both engines."""
     import duckdb
@@ -297,7 +298,7 @@ def test_regression_parity_above_2p53(spark, tmp_path):
     assert deny == 24416857545013081875 and deny > 2**64
     # The fixture only bites while DuckDB's wide cast actually double-
     # rounds this value; if a DuckDB upgrade fixes the cast, this assert
-    # fires so the fixture (and the _rr_dec rationale) get re-evaluated.
+    # fires so the fixture (and the ratio_dec rationale) get re-evaluated.
     con = duckdb.connect()
     duck_cast = con.execute(
         f"SELECT CAST(CAST({deny} AS HUGEINT) AS DOUBLE)"

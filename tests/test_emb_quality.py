@@ -71,7 +71,7 @@ def test_knn_agreement_detects_planted_imposter(spark, knn_dir):
         .collect()
     }
     assert got[0]["n_eval"] == 3 and got[0]["n_agree"] == 1
-    assert got[0]["agree_rate"] == 0.3333  # roundn_ratio(1, 3)
+    assert got[0]["agree_rate"] == 0.3333  # rational.ratio(1, 3, 4)
     assert got[1]["n_eval"] == 4 and got[1]["n_agree"] == 3
     assert got[1]["agree_rate"] == 0.75
 

@@ -25,11 +25,11 @@ def _docs(spark):
 
 
 def test_roundn_ratio_exact_past_double_precision(spark):
-    """roundn_ratio must equal exact integer round-half-up even when
+    """rational.ratio must equal exact integer round-half-up even when
     2*10^d*num exceeds 2^53 (corpus-sum consumers get there at 100 TB).
     The old floor-of-double path returns ...376 where exact arithmetic
     says ...367 for num=1e16, d=2 — this pins the SQL `div` fix."""
-    from database_cloner_spark.llm.text import roundn_ratio
+    from database_cloner_spark.functions.rational import ratio
 
     cases = [  # (num, den, digits)
         (10_000_000_000_000_000, 3, 2),       # past 2^53 after 2*10^d*num
@@ -45,7 +45,7 @@ def test_roundn_ratio_exact_past_double_precision(spark):
     for i, (n, d, digits) in enumerate(cases):
         got = (
             rows.filter(F.col("i") == i)
-            .select(roundn_ratio(F.col("num"), F.col("den"), digits).alias("r"))
+            .select(ratio(F.col("num"), F.col("den"), digits).alias("r"))
             .collect()[0]["r"]
         )
         scale = 10 ** digits

@@ -251,11 +251,65 @@ def test_stateful_fold_and_sessionizer_are_written_once():
     assert sessionizers == ["queries/windows.py::session_index"], sessionizers
 
 
+# -- one exact-ratio rounding rule -------------------------------------------
+
+# The half-up quotient's "// (2 * den)" written out in package source
+# outside functions/rational.py: "file::top-level name" -> reason.
+_OTHER_HALF_UP_QUOTIENTS = {
+    "queries/analytics_ext.py::_ORACLE_CHI2": "each cell's quotient is "
+    "an integer multiple of 1e-8 that is summed before the one scaling, "
+    "so it is not a ratio_sql value",
+}
+_HALF_UP_QUOTIENT = re.compile(r"//\s*\(\s*2\s*\*")
+
+
+def _half_up_quotients(root: pathlib.Path) -> list[str]:
+    """"file::top-level name" of every half-up quotient spelled out in
+    package source outside functions/rational.py, one per match."""
+    pkg = root / "database_cloner_spark"
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        text = path.read_text()
+        if rel == "functions/rational.py":
+            continue
+        spans = []
+        for top in ast.parse(text, str(path)).body:
+            name = getattr(top, "name", None)
+            if name is None and isinstance(top, (ast.Assign, ast.AnnAssign)):
+                target = top.targets[0] if isinstance(top, ast.Assign) else top.target
+                name = getattr(target, "id", None)
+            spans.append((top.lineno, top.end_lineno, name or "<module>"))
+        for m in _HALF_UP_QUOTIENT.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            name = next((n for a, b, n in spans if a <= line <= b), "<module>")
+            sites.append(f"{rel}::{name}")
+    return sites
+
+
+def test_ratio_rounding_lives_in_functions_rational():
+    """Every cross-engine-hashed ratio rounds through
+    functions/rational.py, whose Spark helpers and DuckDB mirrors state
+    the half-up rule once: no other package source spells out its
+    quotient. A text scan, not an AST scan, because the copies it
+    catches are SQL text inside oracle strings."""
+    sites = _half_up_quotients(_ROOT)
+    copies = sorted(s for s in sites if s not in _OTHER_HALF_UP_QUOTIENTS)
+    assert not copies, f"half-up quotients outside functions/rational.py: {copies}"
+    stale = set(_OTHER_HALF_UP_QUOTIENTS) - set(sites)
+    assert not stale, f"allow-listed quotient sites are gone: {stale}"
+
+
 # -- every defaulted parameter has a setter -----------------------------------
 
-# Defaulted package parameters no call site passes, kept on purpose:
-# "file::function(parameter)" -> reason.
-_UNSET_PARAMETERS: dict[str, str] = {}
+# Defaulted package parameters and dataclass fields no call site sets,
+# kept on purpose: "file::function(parameter)" or "file::Class.field"
+# -> reason.
+_UNSET_PARAMETERS: dict[str, str] = {
+    "sources/jdbc.py::JdbcTarget.driver": "a deployment setting: the "
+    "server's JDBC driver class, which a deployment against another "
+    "database server sets",
+}
 
 
 def _defaulted_parameters(root: pathlib.Path):
@@ -289,31 +343,115 @@ def _defaulted_parameters(root: pathlib.Path):
                 yield f"{file}::{fn.name}({name})", callee, pos
 
 
+def _is_dataclass(cls: ast.ClassDef) -> bool:
+    for dec in cls.decorator_list:
+        fn = dec.func if isinstance(dec, ast.Call) else dec
+        if getattr(fn, "attr", getattr(fn, "id", None)) == "dataclass":
+            return True
+    return False
+
+
+def _defaulted_fields(root: pathlib.Path):
+    """(file::Class.field, class name, position) for every defaulted
+    field of every package @dataclass. The position is the field's
+    place in the generated constructor's arguments."""
+    for site, top in _package_tops(root):
+        for cls in ast.walk(top):
+            if not isinstance(cls, ast.ClassDef) or not _is_dataclass(cls):
+                continue
+            fields = [
+                n
+                for n in cls.body
+                if isinstance(n, ast.AnnAssign)
+                and isinstance(n.target, ast.Name)
+                and "ClassVar" not in ast.unparse(n.annotation)
+            ]
+            file = site.split("::")[0]
+            for pos, f in enumerate(fields):
+                if f.value is not None:
+                    yield f"{file}::{cls.name}.{f.target.id}", cls.name, pos
+
+
+_FILLING_METHODS = {"append", "extend", "insert", "add", "update", "setdefault"}
+
+
+def _assigned_attributes(root: pathlib.Path) -> set[str]:
+    """Every attribute name any code anywhere assigns (`x.attr = ...`,
+    augmented or annotated too) or fills in place (`x.attr.append(...)`,
+    `x.attr[k] = ...`): a container field that starts empty and is
+    filled is state, not an option."""
+    out: set[str] = set()
+    for path in _non_test_sources(root) + sorted((root / "tests").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _FILLING_METHODS
+                and isinstance(node.func.value, ast.Attribute)
+            ):
+                out.add(node.func.value.attr)
+                continue
+            if isinstance(node, ast.Subscript) and isinstance(node.ctx, ast.Store):
+                if isinstance(node.value, ast.Attribute):
+                    out.add(node.value.attr)
+                continue
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+                targets = [node.target]
+            else:
+                continue
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Store):
+                        out.add(n.attr)
+    return out
+
+
 def _setters(root: pathlib.Path):
     """Every call anywhere (package, scripts, perfbench, entry points,
     tests) as callee name -> [(positional count, keywords, passes
     *args or **kwargs)], and the names referenced other than as a
-    callee (a partial, a callback, a value)."""
+    callee (a partial, a callback, a value). A call that forwards its
+    enclosing function's own **kwargs passes what the calls of that
+    function pass by keyword."""
     calls: dict[str, list] = {}
     referenced: set[str] = set()
+    forwards: list[tuple[str, str]] = []  # (callee, forwarding function)
     for path in _non_test_sources(root) + sorted((root / "tests").rglob("*.py")):
         tree = ast.parse(path.read_text(), str(path))
+        forwarding = {}  # id(call) -> name of the function it forwards
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) and fn.args.kwarg:
+                for node in ast.walk(fn):
+                    if isinstance(node, ast.Call) and any(
+                        k.arg is None and getattr(k.value, "id", None) == fn.args.kwarg.arg
+                        for k in node.keywords
+                    ):
+                        forwarding[id(node)] = fn.name
         callees = set()
         for node in ast.walk(tree):
             if isinstance(node, ast.Call):
                 callees.add(id(node.func))
                 name = getattr(node.func, "attr", getattr(node.func, "id", None))
+                if id(node) in forwarding:
+                    forwards.append((name, forwarding[id(node)]))
                 calls.setdefault(name, []).append(
                     (
                         sum(not isinstance(x, ast.Starred) for x in node.args),
-                        {k.arg for k in node.keywords},
+                        {k.arg for k in node.keywords if k.arg},
                         any(isinstance(x, ast.Starred) for x in node.args)
-                        or any(k.arg is None for k in node.keywords),
+                        or (
+                            id(node) not in forwarding
+                            and any(k.arg is None for k in node.keywords)
+                        ),
                     )
                 )
         for node in ast.walk(tree):
             if isinstance(node, (ast.Name, ast.Attribute)) and id(node) not in callees:
                 referenced.add(getattr(node, "attr", getattr(node, "id", None)))
+    for callee, fn in forwards:
+        calls[callee] += [(0, kws, star) for _, kws, star in calls.get(fn, ())]
     return calls, referenced
 
 
@@ -328,6 +466,14 @@ def _unset_parameters(root: pathlib.Path) -> set[str]:
         ):
             continue
         unset.add(site)
+    assigned = _assigned_attributes(root)
+    for site, cls, pos in _defaulted_fields(root):
+        name = site.rsplit(".", 1)[1]
+        if name in assigned or any(
+            name in kws or star or n > pos for n, kws, star in calls.get(cls, ())
+        ) or any(name in kws for _, kws, _ in calls.get("replace", ())):
+            continue
+        unset.add(site)
     return unset
 
 
@@ -339,7 +485,10 @@ def test_package_parameters_have_a_setter():
     with a reason. Calls match by name (bare or attribute), so a
     same-named function elsewhere counts as a setter; a function
     referenced other than as a callee counts as setting every
-    parameter."""
+    parameter. A defaulted @dataclass field is set when a constructor
+    call passes it by position or keyword, a replace(...) call passes
+    it by keyword, or any code assigns the attribute or fills it in
+    place."""
     unset = _unset_parameters(_ROOT)
     orphans = sorted(unset - set(_UNSET_PARAMETERS))
     assert not orphans, f"defaulted parameters no call site sets: {orphans}"
