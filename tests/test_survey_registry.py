@@ -264,8 +264,8 @@ _HALF_UP_QUOTIENT = re.compile(r"//\s*\(\s*2\s*\*")
 
 
 def _half_up_quotients(root: pathlib.Path) -> list[str]:
-    """"file::top-level name" of every half-up quotient spelled out in
-    package source outside functions/rational.py, one per match."""
+    """The "file::top-level name" of every half-up quotient spelled out
+    in package source outside functions/rational.py, one per match."""
     pkg = root / "database_cloner_spark"
     sites = []
     for path in sorted(pkg.rglob("*.py")):
