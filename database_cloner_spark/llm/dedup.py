@@ -939,94 +939,6 @@ def embedding_neardup_bucketed(embs: DataFrame, threshold: float = 0.35) -> Data
 # --- connected components (pair list -> cluster assignment) ----------------
 
 
-def _cc_propagate_round(labels: DataFrame, edges: DataFrame) -> DataFrame:
-    """One min-label propagation round, CHECKPOINTED: (v, label, old).
-
-    The previous label rides through the SAME aggregation as `old`
-    (exactly one non-null per v — min() drops the message-row NULLs),
-    so the caller's convergence probe is a plain filter over the
-    checkpointed partitions: no join, no shuffle, plan-asserted in
-    tests/test_llm.py::test_cc_convergence_probe_is_shuffle_free."""
-    msgs = edges.join(labels, edges["src"] == labels["v"]).select(
-        F.col("dst").alias("v"), F.col("label")
-    )
-    tagged = labels.select(
-        "v", "label", F.col("label").alias("old")
-    ).union(msgs.select("v", "label", F.lit(None).cast("long").alias("old")))
-    return (
-        tagged.groupBy("v")
-        .agg(F.min("label").alias("label"), F.min("old").alias("old"))
-        .localCheckpoint(eager=True)
-    )
-
-
-# Round cap of connected_components' label propagation.
-_CC_MAX_ITER = 25
-
-
-def connected_components(pairs: DataFrame) -> DataFrame:
-    """Collapse a near-dup PAIR list into per-doc cluster assignments
-    (`doc_id`, `cluster_id` = min doc_id of the connected component) —
-    the step that turns any pairwise dedup operator's output into
-    actionable keep/drop decisions (keep `doc_id == cluster_id`).
-
-    Algorithm: iterative min-label propagation as pure DataFrame ops.
-    Each round every vertex adopts the smallest label among itself and
-    its neighbors (one equi-join + one min-groupBy = two shuffles on
-    the vertex id); rounds needed = graph diameter. Dedup components
-    are near-cliques (a cluster of copies of one document), so the
-    loop converges in 2-3 rounds regardless of corpus size; for
-    adversarial long-path graphs use `connected_components_star`
-    (same output contract, O(log² n) rounds on any topology).
-
-    Scale notes: `localCheckpoint` after every round truncates the
-    lineage (an iterative plan otherwise doubles per round and
-    re-executes the whole history on each action). Each round is ONE
-    shuffled job: the previous label rides through the same min-groupBy
-    as an extra `old` column (min ignores the NULLs on message rows),
-    so the convergence probe needs no join — it is a `limit(1).count()`
-    filter over the already-checkpointed partitions, short-circuiting
-    on the first improved label (r3 ADVICE: the old probe JOINED new
-    vs old labels, a second shuffle per round — at diameter-D graphs
-    that doubled the blocking work). Labels are 8-byte ids, so each
-    round shuffles ~24 bytes/edge regardless of document size.
-
-    Reference parity: the reference has no graph step (its bash surface
-    clones whole databases); this is part of the §2.11 training-data
-    tier (dedup outputs must end in one-survivor-per-cluster).
-    """
-    # Checkpoint the edge list ONCE: `pairs` is typically the output of
-    # a whole near-dup pipeline (shingle joins, LSH banding, Jaccard
-    # verify) and every propagation round joins against edges — without
-    # the cut, each round re-executes that entire upstream pipeline
-    # (measured at sf0.1: q_dedup_cluster 19.9s → 5.6s).
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select(F.col("src").alias("v"))
-        .distinct()
-        .withColumn("label", F.col("v"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(_CC_MAX_ITER):
-        new_labels = _cc_propagate_round(labels, edges)
-        improved = (
-            new_labels.filter(F.col("label") < F.col("old")).limit(1).count()
-        )
-        labels = new_labels.select("v", "label")
-        if improved == 0:
-            break
-    return labels.select(
-        F.col("v").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
 def _canonical_edges(df: DataFrame) -> DataFrame:
     """Distinct (u, v) with u > v from an (a, b) edge list — self loops
     dropped. The canonical orientation both star phases consume and
@@ -1039,6 +951,113 @@ def _canonical_edges(df: DataFrame) -> DataFrame:
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
+
+
+def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+    """Collapse a near-dup PAIR list into per-doc cluster assignments
+    (`doc_id`, `cluster_id` = min doc_id of the connected component) —
+    the step that turns any pairwise dedup operator's output into
+    actionable keep/drop decisions (keep `doc_id == cluster_id`).
+
+    Algorithm: alternating large-star/small-star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014), which
+    converges in O(log² n) rounds on ANY graph shape. Chain-shaped
+    components arise in real dedup when doc A~B and B~C but A≁C
+    (threshold transitivity gaps), and at web scale those chains get
+    long: a scheme whose rounds grow with the diameter would need one
+    blocking job per hop.
+
+    Per round, both phases are ONE window-min shuffle each over the
+    edge list (no posting lists, no joins): large-star hangs every
+    larger neighbor of u onto min(Γ(u) ∪ {u}), small-star hangs every
+    smaller neighbor and u itself onto min(N(u)); edge count never
+    grows above the input edge count + |V| and 8-byte ids keep each
+    round's shuffle at ~16 bytes/edge. Convergence = the canonical edge
+    set reached a fixed point: an exact probe over the checkpointed
+    frames (two counts, then one exceptAll only when they agree).
+
+    The edge list is checkpointed once: `pairs` is typically the output
+    of a whole near-dup pipeline (shingle joins, LSH banding, Jaccard
+    verify), which every round would otherwise re-execute.
+
+    Reference parity: the reference has no graph step (its bash surface
+    clones whole databases); this is part of the §2.11 training-data
+    tier (dedup outputs must end in one-survivor-per-cluster).
+    """
+    edges = _canonical_edges(
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+    ).localCheckpoint(eager=True)
+    for _ in range(max_iter):
+        # Large-star: bidirectional view; each node u computes
+        # m = min(neighbors ∪ {u}) and re-parents its LARGER neighbors
+        # onto m. (v > u ≥ m ⇒ no self loops emitted.)
+        bidir = edges.union(
+            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        wl = W.partitionBy("u")
+        m_large = F.least(F.min("v").over(wl), F.col("u"))
+        large = _canonical_edges(
+            bidir.withColumn("m", m_large)
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("a"), F.col("m").alias("b"))
+        )
+        # Small-star: canonical orientation (u > v); each node u hangs
+        # its smaller neighbors AND itself onto m = min(smaller
+        # neighbors). (u, m) rows cover u itself.
+        ws = W.partitionBy("u")
+        m_small = F.min("v").over(ws)
+        # Checkpoint: the union below reads `tagged` twice; without the
+        # cut each branch re-executes the large-star phase.
+        tagged = large.withColumn("m", m_small).localCheckpoint(eager=True)
+        small = _canonical_edges(
+            tagged.select(F.col("v").alias("a"), F.col("m").alias("b")).union(
+                tagged.select(F.col("u").alias("a"), F.col("m").alias("b"))
+            )
+        ).localCheckpoint(eager=True)
+        # Both frames are distinct edge sets, so equal sizes plus one
+        # containment is equality.
+        converged = small.count() == edges.count() and not (
+            small.exceptAll(edges).limit(1).count()
+        )
+        edges = small
+        if converged:
+            break
+    # At the fixed point the edge set is a star per component: every
+    # non-root points at the component min. min() is defensive for the
+    # max_iter-exhausted case; roots label themselves.
+    members = edges.groupBy("u").agg(F.min("v").alias("cluster_id")).select(
+        F.col("u").alias("doc_id"), "cluster_id"
+    )
+    roots = (
+        edges.select("v")
+        .distinct()
+        .join(edges.select(F.col("u").alias("v")).distinct(), "v", "left_anti")
+        .select(F.col("v").alias("doc_id"), F.col("v").alias("cluster_id"))
+    )
+    return members.union(roots)
+
+
+def connected_components_sql(pairs: str) -> str:
+    """DuckDB mirror of connected_components over the pair query
+    `pairs` (columns doc_a, doc_b): a recursive-CTE transitive closure,
+    brute force at oracle scale. Returns (doc_id, cluster_id)."""
+    return f"""
+WITH RECURSIVE pairs AS (
+{pairs}
+),
+edges AS (
+  SELECT doc_a AS src, doc_b AS dst FROM pairs
+  UNION
+  SELECT doc_b, doc_a FROM pairs
+),
+walk(src, dst) AS (
+  SELECT src, dst FROM edges
+  UNION
+  SELECT w.src, e.dst FROM walk w JOIN edges e ON w.dst = e.src
+)
+SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
+FROM walk GROUP BY src
+"""
 
 
 def canonical_survivors(
@@ -1081,86 +1100,6 @@ def canonical_survivors(
             "n_members",
         )
     )
-
-
-def connected_components_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — the adversarial-graph upgrade to
-    `connected_components`: min-label propagation needs diameter-many
-    rounds (a 100k-node path graph = 100k blocking jobs), the star
-    scheme converges in O(log² n) rounds on ANY graph shape. Same
-    output contract: (doc_id, cluster_id = component min) for every
-    vertex of the pair graph.
-
-    Per round, both phases are ONE window-min shuffle each over the
-    edge list (no posting lists, no joins): large-star hangs every
-    larger neighbor of u onto min(Γ(u) ∪ {u}), small-star hangs every
-    smaller neighbor and u itself onto min(N(u)); edge count never
-    grows above the input edge count + |V| and 8-byte ids keep each
-    round's shuffle at ~16 bytes/edge. Convergence = the canonical edge
-    set reached a fixed point (exact exceptAll probe on the
-    checkpointed frame, one cheap job per round — rounds are log-many,
-    unlike propagation where a per-round probe multiplies diameter-many
-    rounds).
-
-    Use `connected_components` for near-clique dedup graphs (2-3
-    propagation rounds beat the star scheme's constant factors);
-    use this for unknown/adversarial topologies — chain-shaped
-    components arise in real dedup when doc A~B and B~C but A≁C
-    (threshold transitivity gaps), and at web scale those chains get
-    long.
-    """
-    edges = _canonical_edges(
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    ).localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        # Large-star: bidirectional view; each node u computes
-        # m = min(neighbors ∪ {u}) and re-parents its LARGER neighbors
-        # onto m. (v > u ≥ m ⇒ no self loops emitted.)
-        bidir = edges.union(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        wl = W.partitionBy("u")
-        m_large = F.least(F.min("v").over(wl), F.col("u"))
-        large = _canonical_edges(
-            bidir.withColumn("m", m_large)
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-        )
-        # Small-star: canonical orientation (u > v); each node u hangs
-        # its smaller neighbors AND itself onto m = min(smaller
-        # neighbors). (u, m) rows cover u itself.
-        ws = W.partitionBy("u")
-        m_small = F.min("v").over(ws)
-        # Checkpoint: the union below reads `tagged` twice; without the
-        # cut each branch re-executes the large-star phase.
-        tagged = large.withColumn("m", m_small).localCheckpoint(eager=True)
-        small = _canonical_edges(
-            tagged.select(F.col("v").alias("a"), F.col("m").alias("b")).union(
-                tagged.select(F.col("u").alias("a"), F.col("m").alias("b"))
-            )
-        ).localCheckpoint(eager=True)
-        changed = (
-            small.exceptAll(edges).limit(1).count()
-            + edges.exceptAll(small).limit(1).count()
-        )
-        edges = small
-        if changed == 0:
-            break
-    # At the fixed point the edge set is a star per component: every
-    # non-root points at the component min. min() is defensive for the
-    # max_iter-exhausted case; roots label themselves.
-    members = edges.groupBy("u").agg(F.min("v").alias("cluster_id")).select(
-        F.col("u").alias("doc_id"), "cluster_id"
-    )
-    roots = (
-        edges.select("v")
-        .distinct()
-        .join(edges.select(F.col("u").alias("v")).distinct(), "v", "left_anti")
-        .select(F.col("v").alias("doc_id"), F.col("v").alias("cluster_id"))
-    )
-    return members.union(roots)
 
 
 # --- benchmark contamination -----------------------------------------------

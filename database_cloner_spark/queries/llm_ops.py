@@ -260,23 +260,9 @@ FROM p WHERE i::DOUBLE / u >= 0.4
 _ORACLE_DEDUP_MINHASH = _minhash_oracle()
 
 
-_ORACLE_DEDUP_MINHASH_CLUSTER = f"""
-WITH RECURSIVE pairs AS (
-{_ORACLE_DEDUP_MINHASH}
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-walk(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT w.src, e.dst FROM walk w JOIN edges e ON w.dst = e.src
+_ORACLE_DEDUP_MINHASH_CLUSTER = dedup.connected_components_sql(
+    _ORACLE_DEDUP_MINHASH
 )
-SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
-FROM walk GROUP BY src
-"""
 
 
 @register(
@@ -292,7 +278,7 @@ def q_dedup_minhash_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes the pair graph with a recursive CTE — both engines must
     agree on every doc's component."""
     prs = dedup.minhash_lsh_pairs(load(spark, sf_dir, "documents"))
-    return dedup.connected_components_star(prs)
+    return dedup.connected_components(prs)
 
 
 @register("q_dedup_minhash", oracle=_ORACLE_DEDUP_MINHASH, tier="X")
@@ -1054,8 +1040,7 @@ q AS (
   -- integer-arithmetic round-half-up (see _ORACLE_TEXT_QUALITY note)
   SELECT doc_id, lang, norm_text, n_copies,
          n AS n_tokens,
-         ((20000*(n*least(n, 50) + 30*(n-s) + 20*d) + 100*n) // (200*n))
-           / 10000.0 AS quality
+         {ratio_sql("n*least(n, 50) + 30*(n-s) + 20*d", "100*n", 4)} AS quality
   FROM m
 )
 SELECT doc_id, lang, n_copies, n_tokens, quality,
@@ -1156,34 +1141,8 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Transitive closure of the fuzzy-dup pair graph: DuckDB brute-forces it
 # with a recursive CTE (fine at oracle scale); the Spark side runs the
-# distributed min-label-propagation loop in dedup.connected_components.
-_ORACLE_DEDUP_CLUSTER = f"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
-),
-sh AS (
-{_SHINGLES_SQL}
-),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-  WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE
-        / (len(a.shingles) + len(b.shingles)
-           - len(list_intersect(a.shingles, b.shingles))) >= 0.4
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-walk(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT w.src, e.dst FROM walk w JOIN edges e ON w.dst = e.src
-)
-SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
-FROM walk GROUP BY src
-"""
+# distributed large-star/small-star loop in dedup.connected_components.
+_ORACLE_DEDUP_CLUSTER = dedup.connected_components_sql(_ORACLE_DEDUP_FUZZY)
 
 
 @register("q_dedup_cluster", oracle=_ORACLE_DEDUP_CLUSTER, tier="X")
@@ -1191,65 +1150,28 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs -> connected components: per-doc cluster_id (min
     doc_id of the component), the keep/drop decision layer above every
     pairwise dedup op (keep doc_id == cluster_id). Distributed
-    min-label propagation vs the oracle's recursive-CTE closure."""
+    large-star/small-star vs the oracle's recursive-CTE closure."""
     prs = dedup.shingle_jaccard_pairs(
         load(spark, sf_dir, "documents"), max_shingle_df=10_000
     )
     return dedup.connected_components(prs)
 
 
-@register("q_dedup_cluster_star", oracle=_ORACLE_DEDUP_CLUSTER, tier="X")
-def q_dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same component assignments as q_dedup_cluster (identical oracle),
-    computed with the alternating large-star/small-star scheme (Kiveris
-    et al., SoCC 2014) instead of min-label propagation. Propagation
-    needs diameter-many rounds — chain-shaped components (A~B, B~C,
-    A≁C threshold gaps) make that unbounded at web scale; the star
-    scheme is O(log² n) rounds on any topology (pinned in
-    tests/test_llm.py::test_cc_star_path_graph_within_log_rounds)."""
-    prs = dedup.shingle_jaccard_pairs(
-        load(spark, sf_dir, "documents"), max_shingle_df=10_000
-    )
-    return dedup.connected_components_star(prs)
-
-
-# Canonical selection = the cluster oracle's walk + the quality oracle's
+# Canonical selection = the cluster oracle's closure + the quality oracle's
 # rational score + one ROW_NUMBER per cluster (quality DESC — NULLS LAST
 # is DuckDB's DESC default, matching the engine's pinned
 # desc_nulls_last — tie to lowest doc_id). Docs in the pair graph always
 # carry >= 3 tokens (shingles exist), so the quality divisor n > 0.
 _ORACLE_DEDUP_CANONICAL = f"""
-WITH RECURSIVE toks AS (
+WITH cl AS (
+{_ORACLE_DEDUP_CLUSTER}
+),
+toks AS (
   SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
-),
-sh AS (
-{_SHINGLES_SQL}
-),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-  WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE
-        / (len(a.shingles) + len(b.shingles)
-           - len(list_intersect(a.shingles, b.shingles))) >= 0.4
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-walk(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT w.src, e.dst FROM walk w JOIN edges e ON w.dst = e.src
-),
-cl AS (
-  SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
-  FROM walk GROUP BY src
 ),
 q AS (
   SELECT doc_id,
-         ((20000*(n*least(n, 50) + 30*(n-s) + 20*d) + 100*n) // (200*n))
-           / 10000.0 AS quality
+         {ratio_sql("n*least(n, 50) + 30*(n-s) + 20*d", "100*n", 4)} AS quality
   FROM (
     SELECT doc_id,
            len(ts)::BIGINT AS n,
@@ -1817,32 +1739,8 @@ def q_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The deduplicated-corpus deliverable: drop every non-canonical member
 # of each near-dup cluster, keep everything else.
 _ORACLE_DEDUP_APPLY = f"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id, {_TOKS_SQL} AS ts FROM documents
-),
-sh AS (
-{_SHINGLES_SQL}
-),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-  WHERE len(list_intersect(a.shingles, b.shingles))::DOUBLE
-        / (len(a.shingles) + len(b.shingles)
-           - len(list_intersect(a.shingles, b.shingles))) >= 0.4
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-walk(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT w.src, e.dst FROM walk w JOIN edges e ON w.dst = e.src
-),
-clusters AS (
-  SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
-  FROM walk GROUP BY src
+WITH clusters AS (
+{_ORACLE_DEDUP_CLUSTER}
 )
 SELECT d.doc_id, d.lang, d.source
 FROM documents d LEFT JOIN clusters c USING (doc_id)

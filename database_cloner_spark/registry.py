@@ -268,17 +268,15 @@ def keys_reading_only(tables: set[str]) -> list[str]:
     return sorted(out)
 
 
-def _driver_green() -> dict[str, dict]:
-    """Ledger entries: key -> {"round": last-verified round, "mode":
-    "hash" | "rows"}. A legacy flat-list ledger loads as round-0 hash
-    entries (maximally stale)."""
+def load_ledger(path: str | None = None) -> dict[str, dict]:
+    """Ledger entries from `path` (default: the package's
+    driver_ledger.json): key -> {"round": last-verified round, "mode":
+    "hash" | "rows"}. A missing or unreadable ledger loads empty."""
     try:
-        with open(_LEDGER_PATH) as f:
+        with open(path or _LEDGER_PATH) as f:
             raw = json.load(f)
     except (OSError, json.JSONDecodeError):
         return {}
-    if isinstance(raw, list):
-        return {k: {"round": 0, "mode": "hash"} for k in raw}
     # migrate entries from any legacy dict shape (values without
     # round/mode load as maximally-stale hash entries instead of
     # KeyError-ing every rotation consumer)
@@ -305,7 +303,7 @@ def _rotation_order(keys: list[str]) -> list[str]:
     (VERDICT r10 item 3 — rotation staleness). Within each green group:
     ascending last-verified round, registration order breaking ties, so
     the driver's ~50-key sample rotates true full coverage over rounds."""
-    green = _driver_green()
+    green = load_ledger()
 
     def _pending(k: str) -> bool:
         entry = green.get(k)

@@ -9,9 +9,13 @@
 # - STATEFUL (inside QUERY): the stateful stream operators
 #   (streaming/ops.py) and queries/windows.py, whose sessionizer their
 #   batch twins use.
+# - SOURCE_TEXT: everything the source-text guards of
+#   tests/test_survey_registry.py read (the registry against SURVEY.md
+#   and README.md, rounding, options, non-test callers).
 QUERY='database_cloner_spark/(queries|functions|llm|streaming|sources)/|database_cloner_spark/(registry|session)\.py|__spark_entry__\.py'
 PIPELINE='database_cloner_spark/pipeline/|database_cloner_spark/streaming/cdc\.py'
 STATEFUL='database_cloner_spark/streaming/ops\.py|database_cloner_spark/queries/windows\.py'
+SOURCE_TEXT='database_cloner_spark/|scripts/|bench\.py|__spark_entry__\.py|README\.md|SURVEY\.md'
 
 # run_gates CHANGED TAG: run the suites the newline-separated paths in
 # CHANGED fire, each announced on a line starting with TAG. Callers
@@ -40,5 +44,10 @@ run_gates() {
     # which the gates above run
     echo "$tag stateful-operator diff -> tests/test_streaming.py -k stateful (8 tests, ~1 min)"
     python -m pytest tests/test_streaming.py -k stateful -q
+  fi
+  if grep -qE "^($SOURCE_TEXT)" <<<"$changed"; then
+    # text scans and registry lockstep, no Spark session
+    echo "$tag source-text diff -> tests/test_survey_registry.py (~5 s)"
+    python -m pytest tests/test_survey_registry.py -q
   fi
 }

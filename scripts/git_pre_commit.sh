@@ -10,8 +10,9 @@
 #
 # Scope: fires only when the STAGED diff touches a path of the gate
 # table in scripts/gates.sh (query/operator code, the clone pipeline,
-# the stateful stream operators) and runs the suites that table names.
-# Plain doc/test/bench commits pay nothing. `git commit --no-verify`
+# the stateful stream operators, the sources of the text guards) and
+# runs the suites that table names.
+# Other doc, test and bench commits pay nothing. `git commit --no-verify`
 # bypasses for WIP snapshots ONLY — never for a commit that adds or
 # edits a registered key.
 set -euo pipefail
@@ -19,7 +20,7 @@ cd "$(git rev-parse --show-toplevel)"
 source scripts/gates.sh
 
 CHANGED="$(git diff --cached --name-only)"
-if grep -qE "^($QUERY|$PIPELINE)" <<<"$CHANGED"; then
+if grep -qE "^($QUERY|$PIPELINE|$SOURCE_TEXT)" <<<"$CHANGED"; then
   # The gate runs pytest against the WORKING TREE, so a partially
   # staged gated file would validate code that is not being committed
   # (an unstaged fix can green-light a broken staged snapshot, and
@@ -30,7 +31,7 @@ if grep -qE "^($QUERY|$PIPELINE)" <<<"$CHANGED"; then
   # import-breaks-after-commit hole).
   UNSTAGED="$( { git diff --name-only; \
                  git ls-files --others --exclude-standard; } \
-               | grep -E "^($QUERY|$PIPELINE|tests/)" || true)"
+               | grep -E "^($QUERY|$PIPELINE|$SOURCE_TEXT|tests/)" || true)"
   if [ -n "$UNSTAGED" ]; then
     echo "[pre-commit] REFUSING: gated files have unstaged changes, so the"
     echo "plan+parity gate would validate a tree that differs from this commit:"

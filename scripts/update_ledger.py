@@ -35,8 +35,9 @@ untouched green keys oldest-round-first, so successive driver rounds
 rotate true least-recently-verified coverage
 (VERDICT.md round 1 item 2; round 8 "Next round" item 2).
 
-An earlier plain-list ledger format (key names only) also loads: each
-listed key is treated as hash-verified in round 0, i.e. maximally stale.
+The ledger loads through registry.load_ledger, the reader the rotation
+uses: an entry of an older dict shape (no round or mode) loads as
+hash-verified in round 0, i.e. maximally stale.
 
 Usage: python scripts/update_ledger.py CORRECTNESS_r01.json [more...]
 """
@@ -56,21 +57,9 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+from database_cloner_spark.registry import load_ledger  # noqa: E402
+
 LEDGER = os.path.join(_REPO, "database_cloner_spark", "driver_ledger.json")
-
-
-def load_ledger(path: str = LEDGER) -> dict[str, dict]:
-    if not os.path.exists(path):
-        return {}
-    with open(path) as f:
-        raw = json.load(f)
-    if isinstance(raw, list):  # legacy: flat list of green key names
-        return {k: {"round": 0, "mode": "hash"} for k in raw}
-    return {
-        k: (v if isinstance(v, dict) and "round" in v and "mode" in v
-            else {"round": 0, "mode": "hash"})
-        for k, v in raw.items()
-    }
 
 
 def _round_of(path: str) -> int:

