@@ -511,11 +511,10 @@ def test_connected_components_path_graph(spark):
 
 
 def test_connected_components_multiple_components(spark):
-    """Disjoint components, a triangle, reversed/duplicate pairs keep
-    distinct min labels; cluster_id is always a member of the component
-    and <= every member."""
+    """Disjoint components keep distinct min labels; cluster_id is
+    always a member of the component and <= every member."""
     pairs = spark.createDataFrame(
-        [(5, 3), (3, 9), (9, 5), (20, 21), (40, 41), (41, 40)],
+        [(5, 3), (3, 9), (20, 21), (40, 41), (41, 40)],
         ["doc_a", "doc_b"],
     )
     rows = dedup.connected_components(pairs).collect()
@@ -527,6 +526,24 @@ def test_connected_components_multiple_components(spark):
     }
     doc_ids = {r.doc_id for r in rows}
     assert all(r.cluster_id in doc_ids and r.cluster_id <= r.doc_id for r in rows)
+
+
+def test_cc_star_multiple_components_and_shapes(spark):
+    """Disjoint components, a triangle, reversed/duplicate pairs: the
+    star rounds must close the cycle 5-3-9-5 onto one min label."""
+    pairs = spark.createDataFrame(
+        [(5, 3), (3, 9), (9, 5), (20, 21), (40, 41), (41, 40)],
+        ["doc_a", "doc_b"],
+    )
+    got = {
+        (r.doc_id, r.cluster_id)
+        for r in dedup.connected_components(pairs).collect()
+    }
+    assert got == {
+        (3, 3), (5, 3), (9, 3),
+        (20, 20), (21, 20),
+        (40, 40), (41, 40),
+    }
 
 
 def test_cc_star_path_graph_within_log_rounds(spark):
